@@ -202,7 +202,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Evidence-chain hygiene (r9 ask: no unexplained [error] lines in the
     // captured tail): every StreamingQuery.stop() cancels its run's job
-    // group AFTER processAllAvailable() drained it, so the DAGScheduler
+    // group AFTER graft.streaming.Drain finished it, so the DAGScheduler
     // always WARNs "Cancel job group <uuid>. Cannot find active jobs for
     // it." — benign by construction here, but it lands on stderr mid-tail
     // and reads like a failure. Streaming keys repeat 4+ times each, so

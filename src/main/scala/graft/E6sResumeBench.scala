@@ -49,13 +49,9 @@ object E6sResumeBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // stage once (side effect of building the stream), then reuse the
-    // bucket files directly for the phased-arrival landing dirs
-    DocStreams.docsStreamBucketed(spark, sfDir, nBuckets)
-    val staged = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed",
-      graft.util.PathKeys.keyedName(sfDir) + s"-$nBuckets")
+    // stage once, then reuse the bucket files directly for the
+    // phased-arrival landing dirs
+    val staged = DocStreams.bucketedLanding(spark, sfDir, nBuckets)
     import scala.jdk.CollectionConverters._
     val parts = scala.util.Using.resource(Files.list(staged)) { st =>
       st.iterator().asScala

@@ -55,6 +55,7 @@ object FoldDecadeBench {
 
     /** Replay one side; returns (per-batch secs, per-batch dir listings). */
     def replay(root: java.nio.file.Path, sub: String,
+        schema: org.apache.spark.sql.types.StructType,
         merge: DataFrame => DataFrame,
         fold: (DataFrame, Long) => Unit): (Vector[Double], Vector[Int]) = {
       var times = Vector.empty[Double]
@@ -62,7 +63,8 @@ object FoldDecadeBench {
       (0 until nBatches).foreach { id =>
         val b = delta.where(col("__b") === id).drop("__b")
         val t0 = System.nanoTime()
-        EventStreams.maybeCompactFolds(spark, root.resolve(sub), id.toLong, merge)
+        EventStreams.maybeCompactFolds(spark, root.resolve(sub), id.toLong,
+          schema, merge)
         fold(b, id.toLong)
         times :+= (System.nanoTime() - t0) / 1e9
         dirs :+= EventStreams.foldDirsToRead(root.resolve(sub)).length
@@ -71,10 +73,12 @@ object FoldDecadeBench {
     }
 
     val w63 = base.resolve("e63")
-    val (t63, d63) = replay(w63, "partials", EventStreams.e63sMerge,
+    val (t63, d63) = replay(w63, "partials", EventStreams.partialsSchema,
+      EventStreams.e63sMerge,
       (df, id) => EventStreams.e63sFoldBatch(df, id, w63))
     val w61 = base.resolve("e61")
-    val (t61, d61) = replay(w61, "pairs", _.distinct(),
+    val (t61, d61) = replay(w61, "pairs", EventStreams.pairsSchema,
+      _.distinct(),
       (df, id) => EventStreams.e61sFoldBatch(df, id, w61))
 
     def rowsOf(df: DataFrame): Set[String] =

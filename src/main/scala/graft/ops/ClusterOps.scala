@@ -23,8 +23,7 @@ object ClusterOps {
   def ensureCheckpointDir(s: SparkSession): String = synchronized {
     s.sparkContext.getCheckpointDir.getOrElse {
       val dir = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
-          + "/checkpoints")
+        graft.util.PathKeys.fixtureRoot + "/checkpoints")
       s.sparkContext.setCheckpointDir(dir)
       s.sparkContext.getCheckpointDir.get
     }

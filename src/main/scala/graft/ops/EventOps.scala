@@ -404,30 +404,30 @@ object EventOps {
     graft.Tables.materializeAndRelease(out, active)
   }
 
+  /** The incremental-refresh states (e61b/e63/e66/e68) stage under the
+    * events' exact (size, mtime) signature — the suite-wide `ensure`
+    * contract, [[graft.util.Staged.ensure]]. */
+  private def stageState(s: SparkSession, d: String, root: String)(
+      build: => Unit): Unit = {
+    import java.nio.file.Paths
+    graft.util.Staged.ensure(Paths.get(root),
+      graft.util.Staged.sourceSig(Paths.get(d, "events.parquet")),
+      Seq("_SUCCESS"))(build)
+  }
+
   /** Staged distinct-activity state for [[e61bIncrRetention]]. */
   def e61bStateDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_retention_state/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("events_retention_state", d)
 
-  def e61bEnsure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(e61bStateDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${e61bStateDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def e61bEnsure(s: SparkSession, d: String): Unit =
+    stageState(s, d, e61bStateDir(d)) {
       events(s, d)
         .where(col("ts") < lit(e63Boundary).cast("timestamp"))
         .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
         .distinct()
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(e61bStateDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E61b: INCREMENTAL maintenance of a JOIN-SHAPED view (r10 verdict
     * ask #5) — the refresh trilogy (e63 algebraic partials, e66 sketch
@@ -464,8 +464,7 @@ object EventOps {
     * touching base rows. Staleness signature matches
     * [[graft.sources.PartitionedLayout.ensure]]. */
   def e63StateDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_agg_state/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("events_agg_state", d)
 
   /** Refresh boundary between the maintained base and the fresh delta:
     * a plain `ts` comparison — the predicate parquet can prune on
@@ -481,23 +480,13 @@ object EventOps {
         min(round(col("value") * 100).cast("long")).as("min_cents"),
         max(round(col("value") * 100).cast("long")).as("max_cents"))
 
-  def e63Ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(e63StateDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${e63StateDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def e63Ensure(s: SparkSession, d: String): Unit =
+    stageState(s, d, e63StateDir(d)) {
       e63Partials(events(s, d)
         .where(col("ts") < lit(e63Boundary).cast("timestamp")))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(e63StateDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E63: INCREMENTAL aggregate maintenance — the refresh never rescans
     * the base: it unions the stored partial-aggregate state (a few
@@ -542,30 +531,19 @@ object EventOps {
     * DataSketches HLL registers union by max, so state ∪ delta equals
     * the sketch of the whole history, bit-for-bit, in O(groups) bytes. */
   def e66StateDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_hll_state/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("events_hll_state", d)
 
   private def e66Sketches(df: DataFrame): DataFrame =
     df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
 
-  def e66Ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(e66StateDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${e66StateDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def e66Ensure(s: SparkSession, d: String): Unit =
+    stageState(s, d, e66StateDir(d)) {
       e66Sketches(events(s, d)
         .where(col("ts") < lit(e63Boundary).cast("timestamp")))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(e66StateDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E66: incremental DISTINCT-count maintenance — the sketch-valued
     * sibling of e63: per-type all-history unique users refreshed by
@@ -611,8 +589,7 @@ object EventOps {
     * function of the merged counts (so unlike e66 there is no
     * probabilistic gate: the oracle recomputes the identical answer). */
   def e68StateDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_hist_state/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("events_hist_state", d)
 
   /** 40 bins of 1000 cents: deterministic, clamped top bin. */
   private def e68Bin: org.apache.spark.sql.Column =
@@ -623,23 +600,13 @@ object EventOps {
         e68Bin.as("bin"))
       .agg(count(lit(1)).as("n"))
 
-  def e68Ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(e68StateDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${e68StateDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def e68Ensure(s: SparkSession, d: String): Unit =
+    stageState(s, d, e68StateDir(d)) {
       e68Partials(events(s, d)
         .where(col("ts") < lit(e63Boundary).cast("timestamp")))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(e68StateDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E68: incremental PERCENTILE maintenance — merged histogram state +
     * delta bins, quantiles read off the cumulative distribution with

@@ -265,10 +265,8 @@ object RetrievalOps {
     import graft.streaming.{LexStreams, SnapshotFolds, VecStreams}
     LexStreams.ensureFoldBase(s, d)
     VecStreams.ensureFoldBase(s, d)
-    val fixRoot = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
-    val key = graft.util.PathKeys.keyedName(d)
-    val lexWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-lex", key + "-4")
-    val vecWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-vec", key + "-4")
+    val lexWork = graft.util.PathKeys.fixturePath("stream-e71v-lex", d, "-4")
+    val vecWork = graft.util.PathKeys.fixturePath("stream-e71v-vec", d, "-4")
     graft.streaming.DocStreams.deleteTree(lexWork)
     graft.streaming.DocStreams.deleteTree(vecWork)
     LexStreams.drain(s, d, lexWork)

@@ -1307,8 +1307,7 @@ object SimOps {
   }
 
   private def pqBooksDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/pq_books/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("pq_books", d)
 
   /** e65b's TRAINED codebooks, persisted under the suite-wide `ensure`
     * staleness contract (r11 verdict ask #6 — the e2v build/serve
@@ -1319,34 +1318,28 @@ object SimOps {
     * a served PQ index actually has, with the oracle still replaying
     * the training trajectory so a stale or drifted book is a hash
     * miss. */
-  private[graft] def ensurePqBooks(s: SparkSession, d: String): Seq[(Int, Int, Array[Double])] =
-    synchronized {
-      import java.nio.file.{Files, Paths}
-      val mSub = 4; val kCodes = 4
-      val dim = 64; val w = dim / mSub
-      val srcPath = Paths.get(d, "embeddings.parquet")
-      val sig = s"pq1:m=$mSub:k=$kCodes:" +
-        s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-      val root = pqBooksDir(d)
-      val marker = Paths.get(root, "_STAGED_SIG")
-      if (Files.exists(marker) &&
-          new String(Files.readAllBytes(marker), "UTF-8") == sig) {
-        s.read.parquet(s"$root/books")
-          .collect().toSeq
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-          .sortBy(t => (t._1, t._2))
-      } else {
-        graft.streaming.DocStreams.deleteTree(Paths.get(root))
-        val e = vectors(graft.Tables.spreadIfNarrow(embeddings(s, d), col("vec_id")))
-          .select(col("vec_id"), col("v"))
-        val trained = trainPqBooks(s, e, mSub, kCodes, dim)
-        import s.implicits._
-        trained.map(t => (t._1, t._2, t._3.toSeq)).toDF("m", "j", "cw")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/books")
-        Files.write(marker, sig.getBytes("UTF-8"))
-        trained
-      }
+  private[graft] def ensurePqBooks(s: SparkSession, d: String): Seq[(Int, Int, Array[Double])] = {
+    import java.nio.file.Paths
+    val mSub = 4; val kCodes = 4
+    val dim = 64
+    val root = pqBooksDir(d)
+    // a rebuild keeps its trained books; a fresh root reads them back
+    var trained = Option.empty[Seq[(Int, Int, Array[Double])]]
+    graft.util.Staged.ensure(Paths.get(root), graft.util.Staged.sourceSig(
+        Paths.get(d, "embeddings.parquet"), s"pq1:m=$mSub:k=$kCodes:")) {
+      val e = vectors(graft.Tables.spreadIfNarrow(embeddings(s, d), col("vec_id")))
+        .select(col("vec_id"), col("v"))
+      val books = trainPqBooks(s, e, mSub, kCodes, dim)
+      import s.implicits._
+      books.map(t => (t._1, t._2, t._3.toSeq)).toDF("m", "j", "cw")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/books")
+      trained = Some(books)
     }
+    trained.getOrElse(s.read.parquet(s"$root/books")
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .sortBy(t => (t._1, t._2)))
+  }
 
   /** The shared PQ codebook TRAINER — e65b's one-Lloyd-round
     * trajectory, parameterized in (M, k, dim) so the composed IVF-PQ

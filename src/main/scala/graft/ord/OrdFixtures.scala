@@ -73,8 +73,7 @@ case class OrdRaw(file: String, dataset_id: String, reaction_id: String, raw: St
   */
 object OrdFixtures {
 
-  val fixtureDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
+  val fixtureDir: String = graft.util.PathKeys.fixtureRoot
   // _v2: fixture schema is versioned in the path so a stale on-disk
   // fixture from an older schema can never be silently read
   def nestedPath: String = s"$fixtureDir/ord_nested_v2.parquet"

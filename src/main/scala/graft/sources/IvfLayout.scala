@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.{PathKeys, Staged}
+import java.nio.file.Paths
 
 /** PERSISTED IVF index layout: the vector table written as
   * cell-partitioned parquet inverted lists — the ANN-side sibling of
@@ -32,29 +34,21 @@ import graft.Tables
   * (size, mtime) signature, the suite-wide `ensure` contract. */
 object IvfLayout {
 
-  def layoutDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/embeddings_ivf/${graft.util.PathKeys.keyedName(d)}"
+  def layoutDir(d: String): String = PathKeys.fixtureDir("embeddings_ivf", d)
+
+  /** The (size, mtime) signature of `d`'s embeddings, behind `prefix`. */
+  private def embSig(d: String, prefix: String = ""): String =
+    Staged.sourceSig(Paths.get(d, "embeddings.parquet"), prefix)
 
   /** One-time cell-partitioned write of the inverted lists. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "embeddings.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(layoutDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${layoutDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def ensure(s: SparkSession, d: String): Unit =
+    Staged.ensure(Paths.get(layoutDir(d)), embSig(d), Seq("_SUCCESS")) {
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label").as("cell"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("cell")
         .parquet(layoutDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** The probed cells for the declared query set (vec_id < 8): the
     * driver-side cell assignment every IVF probe starts with. Bounded
@@ -66,8 +60,7 @@ object IvfLayout {
       .collect().map(_.getInt(0)).sorted
 
   def trainedLayoutDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/embeddings_ivf_trained/${graft.util.PathKeys.keyedName(d)}"
+    PathKeys.fixtureDir("embeddings_ivf_trained", d)
 
   /** The trained coarse centroids, rebuilt from e40's DECLARED output
     * rows (cluster, pos, centroid_val — k × dim rows, bounded by the
@@ -89,16 +82,9 @@ object IvfLayout {
     * inverted lists partitioned by that cell. The "t1:" signature
     * prefix versions the build transform itself. */
   def ensureTrained(s: SparkSession, d: String,
-      cents: Seq[(Int, Seq[Double])]): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "embeddings.parquet")
-    val sig =
-      s"t1:${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(trainedLayoutDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${trainedLayoutDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+      cents: Seq[(Int, Seq[Double])]): Unit =
+    Staged.ensure(Paths.get(trainedLayoutDir(d)), embSig(d, "t1:"),
+        Seq("_SUCCESS")) {
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           graft.ops.SimOps.bestCentroid(
@@ -107,9 +93,7 @@ object IvfLayout {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("cell")
         .parquet(trainedLayoutDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
-  }
 
   /** E2t: the full production ANN chain as ONE declared key —
     * TRAIN (e40's oracle-gated Lloyd loop) → PERSIST (trained-cell

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.SimOps
+import graft.util.Staged
 
 /** The TRAINED IVF index with its BUILD split from its SERVE — the r11
   * verdict's one weak, closed: e2i/e2t proved the layout and the
@@ -88,8 +89,7 @@ object IvfServe {
   val InFilterThresholdPin = 600
 
   def serveDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/embeddings_ivf_serve/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("embeddings_ivf_serve", d)
 
   /** The corpus with its double view beside the original float column
     * (the floats land in the lists byte-identical; every cosine/d2
@@ -106,18 +106,13 @@ object IvfServe {
     * arrives WITH the request; re-scanning the corpus for it would
     * charge the probe a cost serving never pays). The marker is
     * written LAST so a partial build re-stages. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "embeddings.parquet")
-    val sig = // s7: +staged recall curve; s6: residual PQ codes
-      s"s7:k=$K:pq=m${PqM}k$PqK:sw=$SweepMax:" +
-        s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
+  def ensure(s: SparkSession, d: String): Unit = {
+    import java.nio.file.Paths
     val root = serveDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      graft.streaming.DocStreams.deleteTree(Paths.get(root))
+    // s7: +staged recall curve; s6: residual PQ codes
+    Staged.ensure(Paths.get(root), Staged.sourceSig(
+        Paths.get(d, "embeddings.parquet"),
+        s"s7:k=$K:pq=m${PqM}k$PqK:sw=$SweepMax:")) {
       val cents = buildTrainedLayout(s, root, corpus(s, d))
       stageQueries(s, root, d)
       // the recall/cost CURVE is staged AT BUILD TIME (r14): its exact
@@ -128,7 +123,6 @@ object IvfServe {
       // a hash miss); e2y reads it and serves.
       sweepCurve(s, d, root, cents.map { case (c, v) => (c, v.toArray) })
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/curve")
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 
@@ -258,10 +252,9 @@ object IvfServe {
   private val centCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Double])]]()
 
-  private def stagedSig(root: String): String = {
-    val p = java.nio.file.Paths.get(root, "_STAGED_SIG")
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-  }
+  private def stagedSig(root: String): String =
+    Staged.stagedSig(java.nio.file.Paths.get(root))
+      .getOrElse(sys.error(s"$root is not a staged layout"))
 
   private[graft] def centroidsCached(s: SparkSession, root: String): Seq[(Int, Array[Double])] =
     centCache.computeIfAbsent(root + "|" + stagedSig(root), _ =>

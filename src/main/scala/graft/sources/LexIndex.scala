@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Staged
 
 /** The PERSISTED INVERTED TEXT INDEX — the build/serve split the r12
   * verdict gave the vector leg (IvfServe), applied to the LEXICAL leg
@@ -72,8 +73,7 @@ object LexIndex {
   val QDocBound = 8L
 
   def serveDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/documents_lex_serve/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("documents_lex_serve", d)
 
   /** The term's bucket, DRIVER-SIDE — bit-parity with [[bucketCol]]
     * (crc32 over UTF-8 bytes is engine-independent, unlike Murmur3
@@ -138,20 +138,13 @@ object LexIndex {
   }
 
   /** One-time BUILD under the suite-wide staleness contract. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "documents.parquet")
-    val sig = // l4: term positions ride on the posting rows (e35p)
-      s"l4:nb=$NBuckets:q=$QDocBound:" +
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
+  def ensure(s: SparkSession, d: String): Unit = {
     val root = serveDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      graft.streaming.DocStreams.deleteTree(Paths.get(root))
+    // l4: term positions ride on the posting rows (e35p)
+    Staged.ensure(java.nio.file.Paths.get(root), Staged.sourceSig(
+        java.nio.file.Paths.get(d, "documents.parquet"),
+        s"l4:nb=$NBuckets:q=$QDocBound:")) {
       buildIndex(s, root, d)
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 

@@ -22,27 +22,20 @@ object PartitionedLayout {
     * one SF and test at another. Keyed by basename PLUS a hash of the
     * full source path so two roots with the same basename never collide. */
   def layoutDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/orders_by_status/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("orders_by_status", d)
 
   /** One-time: write orders partitioned by status. Staleness is the
     * source's exact (size, mtime) signature, not just _SUCCESS — a
     * regenerated orders.parquet at the same path must invalidate the
     * derived layout, or the pruned scan silently serves old data. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "orders.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(layoutDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${layoutDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def ensure(s: SparkSession, d: String): Unit = {
+    import java.nio.file.Paths
+    graft.util.Staged.ensure(Paths.get(layoutDir(d)),
+        graft.util.Staged.sourceSig(Paths.get(d, "orders.parquet")),
+        Seq("_SUCCESS")) {
       orders(s, d).write.mode(SaveMode.Overwrite)
         .partitionBy("o_orderstatus")
         .parquet(layoutDir(d))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 

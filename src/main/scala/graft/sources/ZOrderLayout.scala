@@ -56,23 +56,17 @@ object ZOrderLayout {
   }
 
   def layoutDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/events_zorder/${graft.util.PathKeys.keyedName(d)}"
+    graft.util.PathKeys.fixtureDir("events_zorder", d)
 
   /** One-time z-clustered write: rows carry their z-value, the exchange
     * is a range-repartition ON z and each output task sorts its slice,
     * so every row group's (user, hour) bounding box is a compact tile.
     * Staleness signature matches [[PartitionedLayout.ensure]]. */
-  def ensure(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "events.parquet")
-    val sig =
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
-    val marker = Paths.get(layoutDir(d), "_STAGED_SIG")
-    val stale = !new java.io.File(s"${layoutDir(d)}/_SUCCESS").exists() ||
-      !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
+  def ensure(s: SparkSession, d: String): Unit = {
+    import java.nio.file.Paths
+    graft.util.Staged.ensure(Paths.get(layoutDir(d)),
+        graft.util.Staged.sourceSig(Paths.get(d, "events.parquet")),
+        Seq("_SUCCESS")) {
       // INT64-micros timestamps: INT96 (the compat default) carries no
       // usable column stats, which would kill both the ts pushdown and
       // the row-group pruning this layout exists for. The conf is
@@ -98,7 +92,6 @@ object ZOrderLayout {
           case None    => s.conf.unset(key)
         }
       }
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.SimOps
+import graft.util.{PathKeys, Staged}
 
 /** Structured-Streaming similarity INGEST — the one LLM-pipeline
   * capability whose batch forms (e6/e7b/e8) had no streaming analogue:
@@ -54,68 +55,27 @@ object DocStreams {
     * parquet split once into `nBuckets` contiguous doc_id-range files,
     * mtimes staggered so the file source replays them in ARRIVAL ORDER
     * one per micro-batch — the landing shape of an incremental corpus
-    * ingest. Same staleness protocol as the events staging: (size,
-    * mtime) signature marker AND every expected bucket file present
-    * (a surviving marker over deleted buckets must not pass as fresh). */
-  def docsStreamBucketed(s: SparkSession, dir: String, nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"docs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val bounds = raw.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (idMin, idMax) = (bounds.getLong(0), bounds.getLong(1))
-        val span = math.max(1L, idMax - idMin + 1)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = idMin + span * i / nBuckets
-          val hi = idMin + span * (i + 1) / nBuckets
-          raw.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"doc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"docs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          // staggered mtimes: the file source replays oldest-first
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+    * ingest, staged under [[graft.util.Staged.landing]]. */
+  def docsStreamBucketed(s: SparkSession, dir: String, nBuckets: Int): DataFrame =
+    Drain.Landing(bucketedLanding(s, dir, nBuckets), docsSchema).stream(s)
+
+  /** Stage (if stale) and return the bucketed documents landing. */
+  private[graft] def bucketedLanding(s: SparkSession, dir: String,
+      nBuckets: Int): java.nio.file.Path = {
+    val src = java.nio.file.Paths.get(dir, "documents.parquet")
+    Staged.landing(PathKeys.fixturePath("stream-docs-bucketed", dir, s"-$nBuckets"),
+        Staged.sourceSig(src), Staged.partNames("docs", nBuckets)) {
+      val raw = s.read.schema(docsSchema).parquet(src.toString)
+      val bounds = raw.agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val (idMin, idMax) = (bounds.getLong(0), bounds.getLong(1))
+      val span = math.max(1L, idMax - idMin + 1)
+      (i: Int) => raw.where(Staged.rangePart(col("doc_id"), idMin, span, i, nBuckets))
     }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
   }
 
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(root))
-      scala.util.Using.resource(Files.walk(root)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      }
-  }
+  /** Recursive delete ([[graft.util.Staged.deleteTree]]). */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
+    Staged.deleteTree(root)
 
   /** Number of uncompacted per-batch index dirs that triggers a merge
     * into a single `compact=<c>` dir. Small enough that the declared
@@ -228,49 +188,42 @@ object DocStreams {
     val matchRoot = work.resolve("matches")
     Files.createDirectories(indexRoot)
     Files.createDirectories(matchRoot)
-    val q = SimOps.perRowBands(docsStream).where(col("bh").isNotNull)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // probed twice (self-pairs + index probe) and written once —
-        // cache for the batch's scope only
-        val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // fold accumulated per-batch index dirs into one compact dir
-          // BEFORE probing — compaction only ever covers batches ≤ id-1,
-          // so a replayed batch still never sees its own rows
-          maybeCompact(s, indexRoot, id)
-          val newSide = batch
-            .select(col("doc_id").as("d_new"), col("band"), col("bh"))
-          // within-batch collisions once per (pair, band): d_new < d_idx
-          val within = newSide.join(
-              batch.select(col("doc_id").as("d_idx"), col("band"), col("bh")),
-              Seq("band", "bh"))
-            .where(col("d_new") < col("d_idx"))
-          val prior = priorIndexDirs(indexRoot, id)
-          val matches = (if (prior.isEmpty) within
-          else {
-            val idx = s.read.schema(bandSchema).parquet(prior: _*)
-              .select(col("doc_id").as("d_idx"), col("band"), col("bh"))
-            within.unionByName(
-              newSide.join(idx, Seq("band", "bh"))
-                .where(col("d_new") =!= col("d_idx")))
-          })
-            .select(least(col("d_new"), col("d_idx")).as("d1"),
-              greatest(col("d_new"), col("d_idx")).as("d2"), col("band"))
-          matches.write.mode("overwrite")
-            .parquet(matchRoot.resolve(s"batch=$id").toString)
-          // index append AFTER the probe: the batch joins prior batches
-          // only, never its own index rows
-          batch.write.mode("overwrite")
-            .parquet(indexRoot.resolve(s"batch=$id").toString)
-        } finally batch.unpersist(blocking = false)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q) // busy-vs-wall split for the bench
-    } finally q.stop()
+    Drain.foreachBatch(SimOps.perRowBands(docsStream).where(col("bh").isNotNull),
+        work) { (df, id) =>
+      // probed twice (self-pairs + index probe) and written once —
+      // cache for the batch's scope only
+      val batch = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // fold accumulated per-batch index dirs into one compact dir
+        // BEFORE probing — compaction only ever covers batches ≤ id-1,
+        // so a replayed batch still never sees its own rows
+        maybeCompact(s, indexRoot, id)
+        val newSide = batch
+          .select(col("doc_id").as("d_new"), col("band"), col("bh"))
+        // within-batch collisions once per (pair, band): d_new < d_idx
+        val within = newSide.join(
+            batch.select(col("doc_id").as("d_idx"), col("band"), col("bh")),
+            Seq("band", "bh"))
+          .where(col("d_new") < col("d_idx"))
+        val prior = priorIndexDirs(indexRoot, id)
+        val matches = (if (prior.isEmpty) within
+        else {
+          val idx = s.read.schema(bandSchema).parquet(prior: _*)
+            .select(col("doc_id").as("d_idx"), col("band"), col("bh"))
+          within.unionByName(
+            newSide.join(idx, Seq("band", "bh"))
+              .where(col("d_new") =!= col("d_idx")))
+        })
+          .select(least(col("d_new"), col("d_idx")).as("d1"),
+            greatest(col("d_new"), col("d_idx")).as("d2"), col("band"))
+        matches.write.mode("overwrite")
+          .parquet(matchRoot.resolve(s"batch=$id").toString)
+        // index append AFTER the probe: the batch joins prior batches
+        // only, never its own index rows
+        batch.write.mode("overwrite")
+          .parquet(indexRoot.resolve(s"batch=$id").toString)
+      } finally batch.unpersist(blocking = false)
+    }
   }
 
   /** All collision rows a drain (or a sequence of resumed drains over
@@ -332,22 +285,15 @@ object DocStreams {
     Files.createDirectories(dead)
     val flagged = graft.ops.CurationOps.repetitionMetrics(docsStream)
       .select(col("doc_id"), col("source"), col("passes_repetition"))
-    val q = flagged.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        val b = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          b.where(col("passes_repetition"))
-            .write.mode("overwrite").parquet(admitted.resolve(s"batch=$id").toString)
-          b.where(!col("passes_repetition"))
-            .write.mode("overwrite").parquet(dead.resolve(s"batch=$id").toString)
-        } finally b.unpersist(blocking = false)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
+    Drain.foreachBatch(flagged, work) { (df, id) =>
+      val b = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        b.where(col("passes_repetition"))
+          .write.mode("overwrite").parquet(admitted.resolve(s"batch=$id").toString)
+        b.where(!col("passes_repetition"))
+          .write.mode("overwrite").parquet(dead.resolve(s"batch=$id").toString)
+      } finally b.unpersist(blocking = false)
+    }
   }
 
   /** The concrete `batch=N` directories under `root`, sorted. Passing
@@ -385,9 +331,7 @@ object DocStreams {
   }
 
   def e10sQualityStream(s: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e10s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e10s", dir, "-4")
     deleteTree(work)
     val src = java.nio.file.Paths.get(dir, "documents.parquet")
     val perTrigger = StreamTune.sourceBytes(src) / 4
@@ -407,9 +351,7 @@ object DocStreams {
     val rel = SimOps.minhashRelations(s, dir,
       mh = (h, sh) => md5(concat(lit(s"$h:"), sh)),
       bandHash = (a, b) => md5(concat(a, b)))
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e6s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e6s", dir, "-4")
     // a fresh ingest per invocation: leftover checkpoint + index from a
     // previous drain would resume an already-finished stream and emit
     // nothing (the fixture-staleness analogue of drainToTable's wipe)

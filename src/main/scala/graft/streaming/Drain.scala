@@ -1,0 +1,102 @@
+package graft.streaming
+
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
+
+/** The ONE micro-batch drain lifecycle every drained stream runs:
+  * start → drain everything available → record busy time → stop.
+  * Drained declared keys replay a bounded landing, so "everything
+  * available" is the whole replay; the stop runs on every exit path.
+  *
+  * On top of the runner sit the two drain shapes the suite uses:
+  *
+  *  - [[foreachBatch]] — per-batch folds into a work dir whose
+  *    checkpoint lives at `work/ckpt` (restart-safe: the checkpoint owns
+  *    offsets, the fold's `batch=<id>` overwrite owns idempotence);
+  *  - [[manifested]] — the index/snapshot lifecycle: per batch, compact
+  *    every fold tree (dirs a retained snapshot manifest references are
+  *    spared), fold, then stamp a manifest of each tree's live read set.
+  *    The lexical, vector and e72 lifecycles differ only in their fold
+  *    functions and probes. */
+object Drain {
+
+  /** Start `writer`, drain all available input, add the query's busy
+    * time to [[StreamBusy]], and stop it. */
+  def run(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.start()
+    try {
+      q.processAllAvailable()
+      StreamBusy.addQuery(q) // busy-vs-wall split for the bench
+    } finally q.stop()
+  }
+
+  /** Drain `stream` through `fold` with its checkpoint at `work/ckpt`. */
+  def foreachBatch(stream: DataFrame, work: Path)(
+      fold: (DataFrame, Long) => Unit): Unit =
+    run(stream.writeStream.foreachBatch(fold)
+      .option("checkpointLocation", work.resolve("ckpt").toString))
+
+  /** A fold tree under a drain's work dir with its statically known row
+    * schema — compaction reads the tree with it, never by footer
+    * inference. */
+  final case class Tree(name: String, schema: StructType)
+
+  /** The manifested-fold drain: every batch compacts each tree (via
+    * `merge`; concatenation for keyed-set trees), runs `fold`, then
+    * writes each tree's snapshot manifest — after the fold, so a
+    * manifest names only durable dirs. */
+  def manifested(s: SparkSession, stream: DataFrame, work: Path,
+      trees: Seq[Tree], merge: DataFrame => DataFrame = identity)(
+      fold: (DataFrame, Long) => Unit): Unit = {
+    val roots = trees.map(t => (work.resolve(t.name), t.schema))
+    roots.foreach(r => Files.createDirectories(r._1))
+    foreachBatch(stream, work) { (df, id) =>
+      roots.foreach { case (root, schema) =>
+        EventStreams.maybeCompactFolds(s, root, id, schema, merge,
+          spare = SnapshotFolds.retainedRefs(root))
+      }
+      fold(df, id)
+      roots.foreach(r => SnapshotFolds.writeManifest(r._1, id))
+    }
+  }
+
+  /** A staged landing — the path [[graft.util.Staged.landing]] returned
+    * — and the row schema its parts carry. */
+  final case class Landing(path: Path, schema: StructType) {
+
+    /** The file-source replay: one landing part per micro-batch. */
+    def stream(s: SparkSession): DataFrame =
+      s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(path.toString)
+  }
+
+  /** [[manifested]] over a staged landing, with the bounded-batch guard
+    * ([[StreamTune.boundedLanding]]) decided from the STAGED bytes —
+    * a `Landing` exists only once staging ran, so the guard can never
+    * read a missing or about-to-be-replaced landing. `fold` receives
+    * the verdict. */
+  def manifestedLanding(s: SparkSession, landing: Landing, work: Path,
+      trees: Seq[Tree], maxBytes: Long = StreamTune.BoundedLandingBytes)(
+      fold: (DataFrame, Long, Boolean) => Unit): Unit = {
+    val bounded = StreamTune.boundedLanding(landing.path, maxBytes)
+    manifested(s, landing.stream(s), work, trees)(fold(_, _, bounded))
+  }
+
+  /** The CDC landing shape shared by the text and vector lifecycles:
+    * parts 0..3 are the arrivals (`key` < `bound`, four contiguous
+    * ranges of `raw`); parts 4 and 5 are `changes` split at key 24, so
+    * the change records land as two micro-batches and a snapshot can
+    * pin between them. */
+  private[graft] val CdcParts = 6
+
+  private[graft] def cdcPart(raw: DataFrame, changes: DataFrame, key: String,
+      bound: Long)(i: Int): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (i < 4) raw.where(graft.util.Staged.rangePart(col(key), 0L, bound, i, 4))
+    else if (i == 4) changes.where(col(key) < 24)
+    else changes.where(col(key) >= 24)
+  }
+}

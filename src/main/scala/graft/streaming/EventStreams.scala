@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.{PathKeys, Staged}
+import graft.util.Staged.deleteTree
+
 /** Structured Streaming forms of the event-time operators (SURVEY.md
   * §2.10 C1-C5, E4-E5) — the engine-level analogue of the reference's
   * incremental page-at-a-time ingestion with progress state
@@ -43,29 +46,16 @@ object EventStreams {
     * parquet file, so it is staged (hard-linked/copied once) into a
     * landing directory — the layout a production file stream reads. */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(dir, "events.parquet")
+    import java.nio.file.{Files, StandardCopyOption}
     // Landing dir keyed by the FULL source path (hashed) plus basename, so
-    // /a/sf0.1 and /b/sf0.1 never collide; staged copy is refreshed when
-    // the source's (size, mtime) changes — no silently-stale stream input.
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events", graft.util.PathKeys.keyedName(dir))
-    synchronized {
-      val dst = landing.resolve("events.parquet")
-      val marker = landing.resolve("_STAGED")
-      // exact (size, mtime) signature equality, same protocol as the
-      // bucketed staging: an mtime-ordering check misses a source
-      // replaced by mv with an older-or-equal timestamp
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val stale = !Files.exists(dst) || !Files.exists(marker) ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        Files.createDirectories(landing)
-        Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.COPY_ATTRIBUTES)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+    // /a/sf0.1 and /b/sf0.1 never collide; the staged copy is refreshed
+    // under the Staged protocol — no silently-stale stream input.
+    val landing = PathKeys.fixturePath("stream-events", dir)
+    Staged.ensure(landing, Staged.sourceSig(evSrc(dir)), Seq("events.parquet"),
+        Staged.LandingMarker) {
+      Files.createDirectories(landing)
+      Files.copy(evSrc(dir), landing.resolve("events.parquet"),
+        StandardCopyOption.COPY_ATTRIBUTES)
     }
     streamOver(s, landing.toString)
   }
@@ -220,18 +210,6 @@ object EventStreams {
     s.read.parquet(path).orderBy("click_id", "purchase_id")
   }
 
-  /** Recursive delete; Files.walk streams hold a directory descriptor
-    * until closed, hence Using.resource. */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(root))
-      scala.util.Using.resource(Files.walk(root)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-      }
-  }
-
   /** Drain a streaming DataFrame into a memory-sink table and return the
     * table name. The checkpoint is a THROWAWAY (a memory sink cannot
     * resume across processes anyway): it lives on the scratch root
@@ -251,9 +229,7 @@ object EventStreams {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
       java.nio.file.Paths.get("/dev/shm/graft-stream-ckpt")
-    else java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-ckpt")
+    else java.nio.file.Paths.get(PathKeys.fixtureRoot, "stream-ckpt")
   }
 
   private[graft] def drainToTable(
@@ -265,18 +241,11 @@ object EventStreams {
     // against a fresh memory sink silently under-reports rows, which is
     // exactly the failure the wipe exists to prevent)
     deleteTree(ckpt)
-    val q = df.writeStream
+    try Drain.run(df.writeStream
       .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q) // busy-vs-wall split for the bench
-    } finally {
-      q.stop()
-      // best-effort: the checkpoint has no further use
-      scala.util.Try(deleteTree(ckpt))
-    }
+      .option("checkpointLocation", ckpt.toString))
+    // best-effort: the checkpoint has no further use
+    finally scala.util.Try(deleteTree(ckpt))
     name
   }
 
@@ -294,23 +263,14 @@ object EventStreams {
     // checkpoint on scratch (throwaway, see scratchRoot); OUTPUT stays
     // on the fixture root — it is the declared result the caller reads
     val ckpt = scratchRoot.resolve(s"$name-ckpt")
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-drain", name, "out")
+    val out = java.nio.file.Paths.get(PathKeys.fixtureRoot, "stream-drain", name, "out")
     deleteTree(ckpt)
     deleteTree(out)
-    val q = df.writeStream
+    try Drain.run(df.writeStream
       .format("parquet").outputMode("append")
       .option("path", out.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally {
-      q.stop()
-      scala.util.Try(deleteTree(ckpt))
-    }
+      .option("checkpointLocation", ckpt.toString))
+    finally scala.util.Try(deleteTree(ckpt))
     out.toString
   }
 
@@ -437,73 +397,39 @@ object EventStreams {
     * (`eventsStream`) can never demonstrate eviction because the whole
     * timeline lands in one batch. */
   def eventsStreamBucketed(s: SparkSession, dir: String, nBuckets: Int,
-      filesPerTrigger: Int = 1, replayOrder: Seq[Int] = Nil): DataFrame = {
-    require(replayOrder.isEmpty || replayOrder.sorted == (0 until nBuckets),
-      s"replayOrder must be a permutation of 0 until $nBuckets: $replayOrder")
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "events.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets" +
-        (if (replayOrder.nonEmpty) "-o" + replayOrder.mkString("") else ""))
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      // the "v2:" prefix versions the STAGING TRANSFORM itself (buckets
-      // now always land with a µs TimestampType ts): a source-only
-      // signature would keep buckets staged by an older code version
-      // whose column semantics differ — e.g. micros stored as raw longs,
-      // which the nanos branch of normalizeEventTs would then misread
-      val sig = s"v2:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      // like eventsStream's !Files.exists(dst) clause: a surviving marker
-      // over deleted bucket files must not pass as fresh — require every
-      // expected events-*.parquet alongside the signature match
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"events-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) deleteTree(landing)
-        Files.createDirectories(landing)
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // normalize ts at staging time: buckets always land with a µs
-        // TimestampType column, so the stream side needs no per-fixture
-        // branching and old/new driver fixtures stage identically
-        val raw = graft.Tables.normalizeEventTs(s.read.parquet(src.toString))
-          .withColumn("_ts_us", expr("unix_micros(ts)"))
-        val bounds = raw.agg(min(col("_ts_us")), max(col("_ts_us"))).head()
-        val (tsMin, tsMax) = (bounds.getLong(0), bounds.getLong(1))
-        val span = math.max(1L, tsMax - tsMin + 1)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = tsMin + span * i / nBuckets
-          val hi = tsMin + span * (i + 1) / nBuckets
-          raw.where(col("_ts_us") >= lo && col("_ts_us") < hi).drop("_ts_us")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"events-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          // staggered mtimes: the file source replays oldest-first. The
-          // default places bucket i at replay position i (timeline
-          // order); a replayOrder permutation stages an OUT-OF-ORDER
-          // landing — bucket replayOrder(p) arrives at position p — the
-          // late-data shape e4l's watermark-drop demonstration needs.
-          val pos = if (replayOrder.nonEmpty) replayOrder.indexOf(i) else i
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + pos * 60_000L))
-        }
-        deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
+      filesPerTrigger: Int = 1, replayOrder: Seq[Int] = Nil): DataFrame =
+    streamOver(s, bucketedLanding(s, dir, nBuckets, replayOrder).toString,
+      filesPerTrigger)
+
+  /** Stage (if stale) and return the time-bucketed landing. The "v2:"
+    * signature prefix versions the STAGING TRANSFORM itself (buckets
+    * now always land with a µs TimestampType ts): a source-only
+    * signature would keep buckets staged by an older code version whose
+    * column semantics differ — e.g. micros stored as raw longs, which
+    * the nanos branch of normalizeEventTs would then misread. The
+    * default replay places bucket i at position i (timeline order); a
+    * `replayOrder` permutation stages an OUT-OF-ORDER landing — bucket
+    * replayOrder(p) arrives at position p — the late-data shape e4l's
+    * watermark-drop demonstration needs. */
+  private[graft] def bucketedLanding(s: SparkSession, dir: String,
+      nBuckets: Int, replayOrder: Seq[Int] = Nil): java.nio.file.Path =
+    Staged.landing(
+      PathKeys.fixturePath("stream-events-bucketed", dir, s"-$nBuckets" +
+        (if (replayOrder.nonEmpty) "-o" + replayOrder.mkString("") else "")),
+      Staged.sourceSig(evSrc(dir), "v2:"),
+      Staged.partNames("events", nBuckets), replayOrder) {
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // normalize ts at staging time: buckets always land with a µs
+      // TimestampType column, so the stream side needs no per-fixture
+      // branching and old/new driver fixtures stage identically
+      val raw = graft.Tables.normalizeEventTs(s.read.parquet(evSrc(dir).toString))
+        .withColumn("_ts_us", expr("unix_micros(ts)"))
+      val bounds = raw.agg(min(col("_ts_us")), max(col("_ts_us"))).head()
+      val (tsMin, tsMax) = (bounds.getLong(0), bounds.getLong(1))
+      val span = math.max(1L, tsMax - tsMin + 1)
+      (i: Int) => raw.where(Staged.rangePart(col("_ts_us"), tsMin, span, i, nBuckets))
+        .drop("_ts_us")
     }
-    streamOver(s, landing.toString, filesPerTrigger)
-  }
 
   /** The bounded-state streaming dedup pipeline (shared by the declared
     * e1sb query and StreamBoundedDedupSpec, which drives it directly to
@@ -594,9 +520,7 @@ object EventStreams {
     * answer provably cannot move; nothing ever rescans the base. */
   def e63sStreamIncrAgg(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e63s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e63s", dir, "-4")
     // fresh fold per invocation (the e6s stance): a leftover checkpoint
     // would resume a finished stream and fold nothing
     deleteTree(work)
@@ -648,9 +572,11 @@ object EventStreams {
     * change the answer), keeping refresh listings O(CompactEvery)
     * instead of O(batches). Crash-safe exactly as e6s: tmp + atomic
     * rename, covered dirs deleted only after, [[foldDirsToRead]]'s
-    * `> c` filter makes a half-finished cleanup harmless. */
+    * `> c` filter makes a half-finished cleanup harmless. The tree is
+    * read with its statically known row `schema` (the writer's), never
+    * by footer inference. */
   private[graft] def maybeCompactFolds(s: SparkSession,
-      root: java.nio.file.Path, id: Long,
+      root: java.nio.file.Path, id: Long, schema: StructType,
       merge: DataFrame => DataFrame,
       spare: Set[String] = Set.empty): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
@@ -672,7 +598,7 @@ object EventStreams {
         .++(pending).map(_.toString)
       val tmp = root.resolve("_tmp-compact")
       deleteTree(tmp)
-      merge(s.read.parquet(sources: _*))
+      merge(s.read.schema(schema).parquet(sources: _*))
         .write.mode("overwrite").parquet(tmp.toString)
       val dst = root.resolve(s"compact=${id - 1}")
       deleteTree(dst)
@@ -714,15 +640,15 @@ object EventStreams {
     }.max
     val spare = SnapshotFolds.retainedRefs(root)
     val tmp = root.resolve("_tmp-tier")
-    DocStreams.deleteTree(tmp)
+    deleteTree(tmp)
     s.read.parquet(dirs: _*).write.mode("overwrite").parquet(tmp.toString)
     val dst = root.resolve(s"compact=$maxId")
-    DocStreams.deleteTree(dst)
+    deleteTree(dst)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     dirs.map(java.nio.file.Paths.get(_))
       .filterNot(p => p.getFileName.toString == s"compact=$maxId" ||
         spare.contains(p.getFileName.toString))
-      .foreach(DocStreams.deleteTree)
+      .foreach(deleteTree)
   }
 
   /** The tier policy: merge when the read set exceeds [[TierFanout]]
@@ -734,6 +660,16 @@ object EventStreams {
     if (trip) tierMerge(s, root)
     trip
   }
+
+  /** Row schemas of the e63s/e72 day-partials tree ([[e63sFoldBatch]]
+    * over `EventOps.e63Partials`) and the e61s activity-pairs tree
+    * ([[e61sFoldBatch]]) — what compaction reads them with. */
+  private[graft] val partialsSchema: StructType = StructType(Seq(
+    StructField("event_type", StringType), StructField("d", DateType),
+    StructField("n", LongType), StructField("sum_cents", LongType),
+    StructField("min_cents", LongType), StructField("max_cents", LongType)))
+  private[graft] val pairsSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType), StructField("wk", TimestampType)))
 
   /** e63s's re-merge: batch partials back to day grain — algebraic, so
     * compacting is the same operation the result fold runs. */
@@ -748,25 +684,19 @@ object EventStreams {
     * checkpoints so listings stay bounded. */
   private[graft] def e63sDrain(s: SparkSession, dir: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, evSrc(dir)) { e63sDrainBody(s, dir, work) }
-
-  private def e63sDrainBody(s: SparkSession, dir: String,
-      work: java.nio.file.Path): Unit = {
-    val delta = eventsStreamBucketed(s, dir, nBuckets = 4)
-      .where(col("ts") >=
-        lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        maybeCompactFolds(s, work.resolve("partials"), id, e63sMerge)
+    StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
+      Drain.foreachBatch(postBoundaryDelta(s, dir), work) { (df, id) =>
+        maybeCompactFolds(s, work.resolve("partials"), id, partialsSchema,
+          e63sMerge)
         e63sFoldBatch(df, id, work)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
+
+  /** The refresh keys' delta stream: the 4-bucket replay past the
+    * e63 state boundary. */
+  private[graft] def postBoundaryDelta(s: SparkSession, dir: String): DataFrame =
+    eventsStreamBucketed(s, dir, nBuckets = 4)
+      .where(col("ts") >= lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
 
   /** One micro-batch fold — exposed so the replay spec can invoke a
     * duplicate id directly and prove overwrite idempotence. */
@@ -812,9 +742,7 @@ object EventStreams {
     * the base is never rescanned. */
   def e61sStreamRetention(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e61bEnsure(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e61s", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e61s", dir, "-4")
     deleteTree(work) // fresh fold per invocation (the e6s stance)
     e61sDrain(s, dir, work)
     e61sResult(s, dir, work)
@@ -822,25 +750,13 @@ object EventStreams {
 
   private[graft] def e61sDrain(s: SparkSession, dir: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, evSrc(dir)) { e61sDrainBody(s, dir, work) }
-
-  private def e61sDrainBody(s: SparkSession, dir: String,
-      work: java.nio.file.Path): Unit = {
-    val delta = eventsStreamBucketed(s, dir, nBuckets = 4)
-      .where(col("ts") >=
-        lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        maybeCompactFolds(s, work.resolve("pairs"), id, _.distinct())
+    StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
+      Drain.foreachBatch(postBoundaryDelta(s, dir), work) { (df, id) =>
+        maybeCompactFolds(s, work.resolve("pairs"), id, pairsSchema,
+          _.distinct())
         e61sFoldBatch(df, id, work)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   /** One micro-batch fold: the batch's distinct activity pairs. */
   private[graft] def e61sFoldBatch(df: DataFrame, id: Long,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.LexIndex
+import graft.util.{PathKeys, Staged}
 
 /** INCREMENTAL MAINTENANCE of the inverted text index — the Lucene
   * SEGMENT model, unasked sibling of e2f/e6s: [[LexIndex]] made BM25 a
@@ -90,31 +91,25 @@ object LexStreams {
     StructField("qid", IntegerType), StructField("term", StringType)))
 
   private[graft] def foldBaseDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/documents_lex_fold/${graft.util.PathKeys.keyedName(d)}"
+    PathKeys.fixtureDir("documents_lex_fold", d)
+
+  private def docsSrc(d: String): java.nio.file.Path =
+    java.nio.file.Paths.get(d, "documents.parquet")
 
   /** One-time BASE build (doc_id ≥ [[ArrivalDocBound]] only): postings
     * `(tb, term, doc_id, tf, dl)` bucket-partitioned and term-sorted as
     * [[LexIndex]] (dl denormalized, df NOT — see scaladoc), the base df
     * dim, base `(n_docs, sum_dl)` (sum, not avg — additive under
     * arrival merge), and the FROZEN query set ranked by base df. */
-  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "documents.parquet")
-    val sig = // lf3: +per-doc lens dim (tombstone dl resolution, e35d)
-      s"lf3:nb=${LexIndex.NBuckets}:b=$ArrivalDocBound:" +
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
+  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = {
     val root = foldBaseDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      DocStreams.deleteTree(Paths.get(root))
+    // lf3: +per-doc lens dim (tombstone dl resolution, e35d)
+    Staged.ensure(java.nio.file.Paths.get(root), Staged.sourceSig(docsSrc(d),
+        s"lf3:nb=${LexIndex.NBuckets}:b=$ArrivalDocBound:")) {
       buildBaseLayout(s, root,
         graft.Tables.spreadIfNarrow(graft.Tables.documents(s, d),
             col("doc_id"))
           .where(col("doc_id") >= ArrivalDocBound))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 
@@ -156,89 +151,51 @@ object LexStreams {
     } finally tf.unpersist(blocking = false)
   }
 
-  /** Landing dirs of the three staged streams — shared by the stagers
-    * and the drains' bounded-batch guard. */
-  private[graft] def arrivalLanding(dir: String, nBuckets: Int): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-arrivals",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
+  /** The three staged landings (the [[graft.util.Staged.landing]]
+    * protocol), each returned only once staged — the drains' bounded-batch
+    * guard reads these paths. */
+  private[graft] def arrivalLanding(s: SparkSession, dir: String,
+      nBuckets: Int): Drain.Landing = Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-docs-arrivals", dir, s"-$nBuckets"),
+      Staged.sourceSig(docsSrc(dir)), Staged.partNames("docs", nBuckets)) {
+      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+      (i: Int) => raw.where(
+        Staged.rangePart(col("doc_id"), 0L, ArrivalDocBound, i, nBuckets))
+    }, docsSchema)
 
-  private[graft] def cdcLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-cdc", graft.util.PathKeys.keyedName(dir) + "-4")
+  /** CDC landing for the delete lifecycle: the 4 arrival buckets plus 2
+    * DELETE buckets — CDC-style delete records (key present, payload
+    * NULL), landing as micro-batches 4 and 5 ([[Drain.cdcPart]]). */
+  private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
+    Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-docs-cdc", dir, "-4"),
+      Staged.sourceSig(docsSrc(dir), "c1:"),
+      Staged.partNames("cdc", Drain.CdcParts)) {
+      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+      val dels = raw.where(tombPred(col("doc_id")))
+        .select(col("doc_id"),
+          lit(null).cast("string").as("text"),
+          lit(null).cast("string").as("lang"),
+          lit(null).cast("string").as("source"),
+          lit(null).cast("long").as("n_chars"))
+      Drain.cdcPart(raw, dels, "doc_id", ArrivalDocBound)
+    }, docsSchema)
 
-  private[graft] def upsertLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-upsert", graft.util.PathKeys.keyedName(dir) + "-4")
-
-  /** Arrival stream: doc_id < [[ArrivalDocBound]] split into id-range
-    * buckets with staggered mtimes (the vecStreamBucketed protocol). */
-  private[graft] def docsArrivalStream(s: SparkSession, dir: String,
-      nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = arrivalLanding(dir, nBuckets)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"docs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-          .where(col("doc_id") < ArrivalDocBound)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = ArrivalDocBound * i / nBuckets
-          val hi = ArrivalDocBound * (i + 1) / nBuckets
-          raw.where(col("doc_id") >= lo && col("doc_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"doc arrival bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"docs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
-
-  /** BOUNDED-BATCH GUARD (r15 verdict "what's wrong" #1 / ask #5): the
-    * driver-side (doc_id, dl) collects in the fold paths are O(|batch|)
-    * rows on the driver — fine for the declared CDC fixtures (bounded
-    * by declaration), unacceptable for a production trigger carrying
-    * millions of keys. The guard is decided from file METADATA before
-    * any job runs: a landing whose total compressed bytes stay under
-    * this bound (with maxFilesPerTrigger=1, an upper bound on any one
-    * trigger) takes the fused driver-collect paths; a larger landing
-    * falls back to the fully distributed forms
-    * ([[LexStreamSpec]] pins fallback ≡ bounded row equality). */
-  val BoundedLandingBytes: Long =
-    sys.env.get("SPARK_GRAFT_CDC_COLLECT_MAX_BYTES")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(32L << 20)
-
-  private[graft] def boundedLanding(paths: java.nio.file.Path*): Boolean =
-    StreamTune.sourceBytes(paths: _*) <= BoundedLandingBytes
+  /** CDC-U landing for the upsert lifecycle: the 4 arrival buckets
+    * (original text) plus 2 UPDATE buckets — re-arrivals of the declared
+    * update set carrying the NEW payload (n_chars rides unchanged — the
+    * fold never reads it), landing as micro-batches 4 and 5 so a
+    * snapshot can pin BETWEEN them (batch-4 updates applied, batch-5
+    * docs still at their original version). */
+  private[graft] def upsertLanding(s: SparkSession, dir: String): Drain.Landing =
+    Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-docs-upsert", dir, "-4"),
+      Staged.sourceSig(docsSrc(dir), "u1:"),
+      Staged.partNames("upd", Drain.CdcParts)) {
+      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
+      Drain.cdcPart(raw, raw.where(updPred(col("doc_id")))
+        .withColumn("text", updatedText(col("text"))), "doc_id", ArrivalDocBound)
+    }, docsSchema)
 
   /** Write a lens fold from driver rows — the bounded-batch fast path
     * (the rows came off the batch's one bounded collect, so no second
@@ -302,37 +259,18 @@ object LexStreams {
     }
   }
 
+  /** The arrival drain. Manifests on BOTH fold trees (the e2z/e72
+    * discipline): a pinned text-index read needs the postings prefix AND
+    * the doc-length prefix — statistics at version k are part of the
+    * version. */
   private[graft] def drain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { drainBody(s, d, work) }
-
-  private def drainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val segs = work.resolve("segs")
-    val lens = work.resolve("lens")
-    val q = docsArrivalStream(s, d, nBuckets = 4)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // manifests on BOTH fold trees (the e2z/e72 discipline): a
-        // pinned text-index read needs the postings prefix AND the
-        // doc-length prefix — statistics at version k are part of the
-        // version. Compaction spares manifest-referenced dirs.
-        EventStreams.maybeCompactFolds(s, segs, id, df => df,
-          spare = SnapshotFolds.retainedRefs(segs))
-        EventStreams.maybeCompactFolds(s, lens, id, df => df,
-          spare = SnapshotFolds.retainedRefs(lens))
-        foldBatch(df, id, work)
-        SnapshotFolds.writeManifest(segs, id)
-        SnapshotFolds.writeManifest(lens, id)
+    StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
+      Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
+          Seq(Drain.Tree("segs", segSchema), Drain.Tree("lens", lensSchema))) {
+        foldBatch(_, _, work)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   private def foldDirs(root: java.nio.file.Path): Seq[String] =
     if (java.nio.file.Files.isDirectory(root))
@@ -445,9 +383,7 @@ object LexStreams {
     * the BASE corpus, every scoring statistic from the WHOLE corpus. */
   def e35fPostingsFold(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35f", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35f", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     probe(s, dir, work)
@@ -480,9 +416,7 @@ object LexStreams {
     * build cost — paid on MEASURED segment mass instead of a timer. */
   def e35gMergeGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35g", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35g", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     maybeMerge(s, dir, work) // lifecycle contract; no-op unless tripped
@@ -556,9 +490,7 @@ object LexStreams {
     * current-stats score of a pinned posting set is a hash miss. */
   def e35zLexSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35z", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35z", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     probeAtSnapshot(s, dir, work, DeclaredLexSnap)
@@ -589,9 +521,7 @@ object LexStreams {
     * segments vs 1 for SCALE.md. */
   def e35tTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35t", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35t", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
     EventStreams.maybeTierMerge(s, work.resolve("segs"))
@@ -612,67 +542,6 @@ object LexStreams {
 
   private[graft] def tombPred(id: org.apache.spark.sql.Column) =
     id % TombMod === TombRes && id < TombBound
-
-  /** CDC staging for the delete lifecycle: the 4 arrival buckets of
-    * [[docsArrivalStream]] plus 2 DELETE buckets — CDC-style delete
-    * records (key present, payload NULL), split by doc_id < 24 /
-    * ≥ 24 so deletes land as two separate micro-batches (4 and 5) and
-    * a snapshot can pin BETWEEN them. */
-  private[graft] def cdcDocsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = cdcLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"c1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"cdc-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"cdc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"cdc-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalDocBound * i / nArr
-          val hi = ArrivalDocBound * (i + 1) / nArr
-          stage(i, raw.where(col("doc_id") >= lo && col("doc_id") < hi))
-        }
-        // delete records: key present, payload NULL (the CDC shape)
-        val dels = raw.where(tombPred(col("doc_id")))
-          .select(col("doc_id"),
-            lit(null).cast("string").as("text"),
-            lit(null).cast("string").as("lang"),
-            lit(null).cast("string").as("source"),
-            lit(null).cast("long").as("n_chars"))
-        stage(nArr, dels.where(col("doc_id") < 24))
-        stage(nArr + 1, dels.where(col("doc_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One CDC micro-batch fold: upserts (payload present) take the
     * ordinary [[foldBatch]] path; delete records resolve their doc's
@@ -769,34 +638,19 @@ object LexStreams {
     }
   }
 
+  /** The CDC drain; `maxBytes` is the bounded-batch guard's bound,
+    * applied to the staged landing. */
   private[graft] def cdcDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { cdcDrainBody(s, d, work) }
-
-  private def cdcDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val trees = Seq("segs", "lens", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val root = foldBaseDir(d)
-    val bounded = boundedLanding(cdcLanding(d))
-    val q = cdcDocsStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        cdcFoldBatch(s, df, id, work, root, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
+      work: java.nio.file.Path,
+      maxBytes: Long = StreamTune.BoundedLandingBytes): Unit =
+    StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
+      val root = foldBaseDir(d)
+      Drain.manifestedLanding(s, cdcLanding(s, d), work, Seq(
+          Drain.Tree("segs", segSchema), Drain.Tree("lens", lensSchema),
+          Drain.Tree("tombs", tombSchema)), maxBytes) {
+        cdcFoldBatch(s, _, _, work, root, _)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   /** The TOMBSTONE-AWARE probe: live postings = (base ∪ segments)
     * ANTI-JOINED against the broadcast tombstone set; df for the query
@@ -878,9 +732,7 @@ object LexStreams {
     * the corpus until the merge the lifecycle was already paying. */
   def e35dLexTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35d", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35d", dir, "-4")
     DocStreams.deleteTree(work)
     cdcDrain(s, dir, work)
     tombProbe(s, dir, work)
@@ -909,65 +761,6 @@ object LexStreams {
     * recomputes from the same declared transform. */
   private[graft] def updatedText(text: org.apache.spark.sql.Column) =
     concat(text, lit(" "), text)
-
-  /** CDC-U staging: the 4 arrival buckets (original text) plus 2
-    * UPDATE buckets — re-arrivals of the declared update set carrying
-    * the NEW payload, split by doc_id < 24 / ≥ 24 so updates land as
-    * two separate micro-batches (4 and 5) and a snapshot can pin
-    * BETWEEN them (batch-4 updates applied, batch-5 docs still at
-    * their original version). */
-  private[graft] def cdcUpsertDocsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "documents.parquet")
-    val landing = upsertLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"u1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"upd-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(docsSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"upsert bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"upd-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalDocBound * i / nArr
-          val hi = ArrivalDocBound * (i + 1) / nArr
-          stage(i, raw.where(col("doc_id") >= lo && col("doc_id") < hi))
-        }
-        // re-arrivals with the NEW payload (n_chars rides unchanged —
-        // the fold never reads it; text is the indexed payload)
-        val upds = raw.where(updPred(col("doc_id")))
-          .withColumn("text", updatedText(col("text")))
-        stage(nArr, upds.where(col("doc_id") < 24))
-        stage(nArr + 1, upds.where(col("doc_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
 
   /** One UPSERT micro-batch fold — Lucene's updateDocument = DELETE
     * any prior version of the key, then ADD the new one, atomically
@@ -1097,32 +890,14 @@ object LexStreams {
 
   private[graft] def upsertDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "documents.parquet")) { upsertDrainBody(s, d, work) }
-
-  private def upsertDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val trees = Seq("segs", "lens", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val root = foldBaseDir(d)
-    val bounded = boundedLanding(upsertLanding(d))
-    val q = cdcUpsertDocsStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        upsertFoldBatch(s, df, id, work, root, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
+    StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
+      val root = foldBaseDir(d)
+      Drain.manifestedLanding(s, upsertLanding(s, d), work, Seq(
+          Drain.Tree("segs", segVerSchema), Drain.Tree("lens", lensVerSchema),
+          Drain.Tree("tombs", tombSchema))) {
+        upsertFoldBatch(s, _, _, work, root, _)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   /** The VERSION-AWARE probe: live postings = (base at ver −1 ∪
     * segments) anti-joined against the broadcast tombstone set on
@@ -1244,7 +1019,7 @@ object LexStreams {
     val tombDirs = foldDirs(work.resolve("tombs"))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
-      else s.read.parquet(tombDirs: _*)).distinct()
+      else versionedTombs(s, tombDirs)).distinct()
     val t = tombs.select(col("doc_id").as("t_doc"), col("upto"))
     def liveOf(rows: DataFrame): DataFrame =
       rows.join(broadcast(t),
@@ -1319,9 +1094,7 @@ object LexStreams {
     * document (spec-pinned: merged-base probe ≡ the live probe). */
   def e35uLexUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35u", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e35u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertDrain(s, dir, work)
     upsertProbe(s, dir, work)

@@ -125,25 +125,12 @@ object SnapshotFolds {
     * plus one manifest write per batch (after its fold lands — the
     * manifest names only durable dirs) and retention-aware cleanup. */
   private[graft] def e72Drain(s: SparkSession, dir: String,
-      work: Path): Unit = {
-    val partials = work.resolve("partials")
-    val delta = EventStreams.eventsStreamBucketed(s, dir, nBuckets = 4)
-      .where(col("ts") >=
-        lit(graft.ops.EventOps.e63Boundary).cast("timestamp"))
-    val q = delta.writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        EventStreams.maybeCompactFolds(s, partials, id,
-          EventStreams.e63sMerge, spare = retainedRefs(partials))
-        EventStreams.e63sFoldBatch(df, id, work)
-        writeManifest(partials, id)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+      work: Path): Unit =
+    Drain.manifested(s, EventStreams.postBoundaryDelta(s, dir), work,
+        Seq(Drain.Tree("partials", EventStreams.partialsSchema)),
+        EventStreams.e63sMerge) {
+      EventStreams.e63sFoldBatch(_, _, work)
+    }
 
   /** E72: READ-AT-SNAPSHOT over the manifested fold. Drains the
     * 4-bucket post-boundary delta (batches 0..3; the batch-3 step also
@@ -157,9 +144,7 @@ object SnapshotFolds {
     * deterministic time-range buckets. */
   def e72SnapshotRead(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e72", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e72", dir, "-4")
     // fresh fold per invocation (the e6s stance): a leftover checkpoint
     // would resume a finished stream and fold nothing
     DocStreams.deleteTree(work)

@@ -82,6 +82,29 @@ object StreamTune {
       }.getOrElse(0L)
     }.sum
 
+  /** BOUNDED-BATCH GUARD (r15 verdict "what's wrong" #1 / ask #5): the
+    * driver-side key collects in the CDC fold paths are O(|batch|) rows
+    * on the driver — fine for the declared CDC fixtures (bounded by
+    * declaration), unacceptable for a production trigger carrying
+    * millions of keys. The guard is decided from file METADATA before
+    * any job runs: a staged landing whose total compressed bytes stay
+    * under this bound (with maxFilesPerTrigger=1, an upper bound on any
+    * one trigger) takes the fused driver-collect paths; a larger
+    * landing falls back to the fully distributed forms (LexStreamSpec
+    * and E2fStreamSpec pin fallback ≡ bounded row equality). */
+  val BoundedLandingBytes: Long =
+    sys.env.get("SPARK_GRAFT_CDC_COLLECT_MAX_BYTES")
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .filter(_ > 0)
+      .getOrElse(32L << 20)
+
+  /** Whether a STAGED landing fits the bounded-batch guard — pass the
+    * path staging returned ([[Drain.manifestedLanding]] does), never a
+    * path that may not be staged yet. */
+  private[graft] def boundedLanding(landing: java.nio.file.Path,
+      maxBytes: Long = BoundedLandingBytes): Boolean =
+    sourceBytes(landing) <= maxBytes
+
   /** Run `body` (which must both START and fully DRAIN its streaming
     * queries) with the shuffle width sized to `bytes`; the session's
     * configured width is restored on every exit path. The conf must be

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.ops.SimOps
 import graft.sources.IvfServe
+import graft.util.{PathKeys, Staged}
 
 /** INCREMENTAL MAINTENANCE of the trained IVF layout (r11 verdict ask
   * #3): e6s grows the LSH band index per micro-batch, but nothing
@@ -55,80 +56,48 @@ object VecStreams {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** Row schemas of the fold trees: cell folds (`ver` only where the
+    * upsert lifecycle stamps it) and tombstones — every read of a fold
+    * tree uses these, never footer inference. */
+  private[graft] val foldSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("label", IntegerType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("cell", IntegerType)))
+  private val foldVerSchema: StructType =
+    StructType(foldSchema.fields :+ StructField("ver", LongType))
+  private val tombSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("upto", LongType)))
+
   private[graft] def foldBaseDir(d: String): String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
-      s"/embeddings_ivf_fold/${graft.util.PathKeys.keyedName(d)}"
+    PathKeys.fixtureDir("embeddings_ivf_fold", d)
+
+  private def embSrc(d: String): java.nio.file.Path =
+    java.nio.file.Paths.get(d, "embeddings.parquet")
 
   /** One-time base build: train on vec_id ≥ [[ArrivalBound]] only —
     * the corpus that existed before the arrivals — and persist
     * centroids + base lists (the [[IvfServe]] build leg). */
-  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = synchronized {
-    import java.nio.file.{Files, Paths}
-    val srcPath = Paths.get(d, "embeddings.parquet")
-    val sig = s"f4:k=${IvfServe.K}:b=$ArrivalBound:" + // f4: PQ codes encode residuals
-      s"${Files.size(srcPath)}:${Files.getLastModifiedTime(srcPath).toMillis}"
+  private[graft] def ensureFoldBase(s: SparkSession, d: String): Unit = {
     val root = foldBaseDir(d)
-    val marker = Paths.get(root, "_STAGED_SIG")
-    val stale = !Files.exists(marker) ||
-      new String(Files.readAllBytes(marker), "UTF-8") != sig
-    if (stale) {
-      DocStreams.deleteTree(Paths.get(root))
+    // f4: PQ codes encode residuals
+    Staged.ensure(java.nio.file.Paths.get(root), Staged.sourceSig(embSrc(d),
+        s"f4:k=${IvfServe.K}:b=$ArrivalBound:")) {
       IvfServe.buildTrainedLayout(s, root,
         IvfServe.corpusView(s, d).where(col("vec_id") >= ArrivalBound))
-      Files.write(marker, sig.getBytes("UTF-8"))
     }
   }
 
-  /** Bucketed staging for the ARRIVING vectors: vec_id <
+  /** Bucketed landing of the ARRIVING vectors: vec_id <
     * [[ArrivalBound]] split into `nBuckets` contiguous-range files
-    * with staggered mtimes (the docsStreamBucketed protocol). */
-  private[graft] def vecStreamBucketed(s: SparkSession, dir: String,
-      nBuckets: Int): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-bucketed",
-      graft.util.PathKeys.keyedName(dir) + s"-$nBuckets")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val bucketsPresent = (0 until nBuckets)
-        .forall(i => Files.exists(landing.resolve(f"vecs-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !bucketsPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-          .where(col("vec_id") < ArrivalBound)
-        val tmp = landing.resolve("_tmp")
-        (0 until nBuckets).foreach { i =>
-          val lo = ArrivalBound * i / nBuckets
-          val hi = ArrivalBound * (i + 1) / nBuckets
-          raw.where(col("vec_id") >= lo && col("vec_id") < hi)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"vecs-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
+    * (the [[graft.util.Staged.landing]] protocol). */
+  private[graft] def arrivalLanding(s: SparkSession, dir: String,
+      nBuckets: Int): Drain.Landing = Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-vecs-bucketed", dir, s"-$nBuckets"),
+      Staged.sourceSig(embSrc(dir)), Staged.partNames("vecs", nBuckets)) {
+      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
+      (i: Int) => raw.where(
+        Staged.rangePart(col("vec_id"), 0L, ArrivalBound, i, nBuckets))
+    }, embSchema)
 
   /** One micro-batch fold: assign the batch under the FROZEN trained
     * centroids, write to its own overwrite dir — exposed so the
@@ -141,39 +110,22 @@ object VecStreams {
       .write.mode("overwrite")
       .parquet(work.resolve(s"folds/batch=$id").toString)
 
+  /** The arrival drain. Concatenation is the re-merge: fold rows are a
+    * vec_id-keyed set, so compaction relocates and never re-aggregates.
+    * Every batch stamps a manifest of the live read set (r13 ask #5 —
+    * the e72 discipline on the VECTOR folds): "probe the index as of
+    * batch k" stays answerable after compaction for the retention
+    * window, which is the reproducibility a training run needs when its
+    * eval set was retrieved at a pinned index version. */
   private[graft] def e2fDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) { e2fDrainBody(s, d, work) }
-
-  private def e2fDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val foldRoot = work.resolve("folds")
-    val q = vecStreamBucketed(s, d, nBuckets = 4)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        // concatenation as the re-merge: fold rows are a vec_id-keyed
-        // set, so compaction relocates and never re-aggregates. Covered
-        // dirs a retained snapshot manifest still references are SPARED
-        // from cleanup, and every batch stamps a manifest of the live
-        // read set (r13 ask #5 — the e72 discipline on the VECTOR
-        // folds): "probe the index as of batch k" stays answerable
-        // after compaction for the retention window, which is the
-        // reproducibility a training run needs when its eval set was
-        // retrieved at a pinned index version.
-        EventStreams.maybeCompactFolds(s, foldRoot, id, df => df,
-          spare = SnapshotFolds.retainedRefs(foldRoot))
-        e2fFoldBatch(df, id, cents, work)
-        SnapshotFolds.writeManifest(foldRoot, id)
+    StreamTune.withDrainWidthFrom(s, embSrc(d)) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
+          Seq(Drain.Tree("folds", foldSchema))) {
+        e2fFoldBatch(_, _, cents, work)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   /** The probe's scored candidate relation (pre-top-k) — exposed so
     * E2fStreamSpec can assert ARRIVAL VISIBILITY exactly: a folded
@@ -265,7 +217,7 @@ object VecStreams {
     val all =
       if (foldDirs.isEmpty) base
       else base.unionByName(
-        s.read.parquet(foldDirs: _*)
+        s.read.schema(foldSchema).parquet(foldDirs: _*)
           .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*))
     all
       .select(col("vec_id").as("cand_id"), col("cell"),
@@ -288,9 +240,7 @@ object VecStreams {
     * replay with the base/arrival split (see ivfServeOracleSql). */
   def e2fIvfFoldStream(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2f", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2f", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     e2fProbe(s, dir, work)
@@ -333,9 +283,7 @@ object VecStreams {
     * the gate is paying it on MEASURED drift instead of on a timer. */
   def e2gDriftGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2g", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2g", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     maybeRestage(s, dir, work) // the lifecycle contract; no-op unless tripped
@@ -355,7 +303,7 @@ object VecStreams {
         EventStreams.foldDirsToRead(foldRoot)
       else Seq.empty[String]
     require(foldDirs.nonEmpty, s"drift gate needs folded arrivals under $foldRoot")
-    val arr = s.read.parquet(foldDirs: _*)
+    val arr = s.read.schema(foldSchema).parquet(foldDirs: _*)
       .groupBy("cell").agg(count(lit(1)).as("n_arr"))
     val cells = base.join(arr, Seq("cell"), "full_outer")
       .select(col("cell"),
@@ -414,9 +362,7 @@ object VecStreams {
     * the retention window, never history. */
   def e2zFoldSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2z", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2z", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     SimOps.topK(candidatesAtSnapshot(s, dir, work, DeclaredVecSnap), 3)
@@ -459,69 +405,22 @@ object VecStreams {
   private[graft] def vecTombPred(id: org.apache.spark.sql.Column) =
     id % LexStreams.TombMod === LexStreams.TombRes && id < LexStreams.TombBound
 
-  /** Landing of the CDC vector stream — shared by the stager and the
-    * drain's bounded-batch guard. */
-  private[graft] def vecCdcLanding(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-cdc", graft.util.PathKeys.keyedName(dir) + "-4")
-
-  /** CDC staging: the 4 arrival buckets plus 2 DELETE buckets (key
-    * present, embedding NULL — the CDC delete record), split by
-    * vec_id < 24 / ≥ 24 so deletes land as batches 4 and 5 and a
-    * snapshot can pin between them. */
-  private[graft] def cdcVecStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = vecCdcLanding(dir)
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"c1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"cdc-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec cdc bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"cdc-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalBound * i / nArr
-          val hi = ArrivalBound * (i + 1) / nArr
-          stage(i, raw.where(col("vec_id") >= lo && col("vec_id") < hi))
-        }
-        val dels = raw.where(vecTombPred(col("vec_id")))
-          .select(col("vec_id"),
-            lit(null).cast("array<float>").as("embedding"),
-            lit(null).cast("int").as("label"))
-        stage(nArr, dels.where(col("vec_id") < 24))
-        stage(nArr + 1, dels.where(col("vec_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
+  /** CDC landing: the 4 arrival buckets plus 2 DELETE buckets (key
+    * present, embedding NULL — the CDC delete record), landing as
+    * batches 4 and 5 so a snapshot can pin between them
+    * ([[Drain.cdcPart]]). */
+  private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
+    Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-vecs-cdc", dir, "-4"),
+      Staged.sourceSig(embSrc(dir), "c1:"),
+      Staged.partNames("cdc", Drain.CdcParts)) {
+      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
+      val dels = raw.where(vecTombPred(col("vec_id")))
+        .select(col("vec_id"),
+          lit(null).cast("array<float>").as("embedding"),
+          lit(null).cast("int").as("label"))
+      Drain.cdcPart(raw, dels, "vec_id", ArrivalBound)
+    }, embSchema)
 
   /** One CDC micro-batch fold: upserts assign under the frozen
     * quantizer ([[e2fFoldBatch]]); delete records land as a tombstone
@@ -571,32 +470,13 @@ object VecStreams {
 
   private[graft] def cdcVecDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) { cdcVecDrainBody(s, d, work) }
-
-  private def cdcVecDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val trees = Seq("folds", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val bounded = LexStreams.boundedLanding(vecCdcLanding(d))
-    val q = cdcVecStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        cdcVecFoldBatch(df, id, cents, work, bounded)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
+    StreamTune.withDrainWidthFrom(s, embSrc(d)) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      Drain.manifestedLanding(s, cdcLanding(s, d), work, Seq(
+          Drain.Tree("folds", foldSchema), Drain.Tree("tombs", tombSchema))) {
+        cdcVecFoldBatch(_, _, cents, work, _)
       }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
+    }
 
   /** The live-docs candidate relation: the e2f probe's scored rows
     * anti-joined against the broadcast tombstone set (deduped by
@@ -606,9 +486,9 @@ object VecStreams {
   private[graft] def tombCandidatesWithDirs(s: SparkSession, d: String,
       foldDirsIn: Seq[String], tombDirs: Seq[String]): DataFrame =
     // a DELETE is an upsert without a co-shipped new version: the
-    // version-less delete trees normalize to ver 0 / upto +∞ inside
-    // the shared version-aware relation (the LexStreams discipline)
-    upsertCandidatesWithDirs(s, d, foldDirsIn, tombDirs)
+    // version-less delete folds read as ver 0 inside the shared
+    // version-aware relation (the LexStreams discipline)
+    upsertCandidatesWithDirs(s, d, foldDirsIn, tombDirs, versioned = false)
 
   private def treeDirs(work: java.nio.file.Path, tree: String): Seq[String] = {
     val t = work.resolve(tree)
@@ -623,7 +503,7 @@ object VecStreams {
     * version-less delete trees itself). */
   private[graft] def tombCandidatesAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame =
-    upsertCandidatesAtSnapshot(s, d, work, snap)
+    upsertCandidatesAtSnapshot(s, d, work, snap, versioned = false)
 
   /** Restage RECONCILIATION: retrain the full layout over (base ∪
     * arrivals) − tombstones — deleted vectors physically absent from
@@ -634,7 +514,7 @@ object VecStreams {
     val tombDirs = treeDirs(work, "tombs")
     val tombIds =
       if (tombDirs.isEmpty) Array.empty[Long]
-      else s.read.parquet(tombDirs: _*).select("vec_id").distinct()
+      else versionedTombs(s, tombDirs).select("vec_id").distinct()
         .collect().map(_.getLong(0)).sorted
     val dst = work.resolve("restaged")
     DocStreams.deleteTree(dst)
@@ -666,9 +546,7 @@ object VecStreams {
     * restage the lifecycle was already paying. */
   def e2dVecTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2d", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2d", dir, "-4")
     DocStreams.deleteTree(work)
     cdcVecDrain(s, dir, work)
     SimOps.topK(tombCandidatesWithDirs(s, dir,
@@ -694,62 +572,18 @@ object VecStreams {
   private[graft] def updatedVec(v: org.apache.spark.sql.Column) =
     transform(v, x => -x)
 
-  /** CDC-U staging: the 4 arrival buckets (original embeddings) plus
-    * 2 UPDATE buckets re-arriving the declared set with the NEW
-    * payload, split by vec_id < 24 / ≥ 24 (batches 4 and 5) so a
-    * snapshot can pin between them. */
-  private[graft] def cdcUpsertVecStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val nArr = 4
-    val src = Paths.get(dir, "embeddings.parquet")
-    val landing = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-vecs-upsert", graft.util.PathKeys.keyedName(dir) + s"-$nArr")
-    synchronized {
-      val marker = landing.resolve("_STAGED")
-      val sig = s"u1:${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
-      val nFiles = nArr + 2
-      val filesPresent = (0 until nFiles)
-        .forall(i => Files.exists(landing.resolve(f"upd-$i%03d.parquet")))
-      val stale = !Files.exists(marker) || !filesPresent ||
-        new String(Files.readAllBytes(marker), "UTF-8") != sig
-      if (stale) {
-        if (Files.exists(landing)) DocStreams.deleteTree(landing)
-        Files.createDirectories(landing)
-        val raw = s.read.schema(embSchema).parquet(src.toString)
-        val tmp = landing.resolve("_tmp")
-        def stage(i: Int, rows: DataFrame): Unit = {
-          rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Using.resource(Files.list(tmp)) { st =>
-            st.iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error(s"vec upsert bucket $i produced no parquet part"))
-          }
-          val dst = landing.resolve(f"upd-$i%03d.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1_000_000_000_000L + i * 60_000L))
-        }
-        (0 until nArr).foreach { i =>
-          val lo = ArrivalBound * i / nArr
-          val hi = ArrivalBound * (i + 1) / nArr
-          stage(i, raw.where(col("vec_id") >= lo && col("vec_id") < hi))
-        }
-        val upds = raw.where(vecUpdPred(col("vec_id")))
-          .withColumn("embedding", updatedVec(col("embedding")))
-        stage(nArr, upds.where(col("vec_id") < 24))
-        stage(nArr + 1, upds.where(col("vec_id") >= 24))
-        DocStreams.deleteTree(tmp)
-        Files.write(marker, sig.getBytes("UTF-8"))
-      }
-    }
-    s.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing.toString)
-  }
+  /** CDC-U landing: the 4 arrival buckets (original embeddings) plus 2
+    * UPDATE buckets re-arriving the declared set with the NEW payload,
+    * landing as batches 4 and 5 so a snapshot can pin between them. */
+  private[graft] def upsertLanding(s: SparkSession, dir: String): Drain.Landing =
+    Drain.Landing(Staged.landing(
+      PathKeys.fixturePath("stream-vecs-upsert", dir, "-4"),
+      Staged.sourceSig(embSrc(dir), "u1:"),
+      Staged.partNames("upd", Drain.CdcParts)) {
+      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
+      Drain.cdcPart(raw, raw.where(vecUpdPred(col("vec_id")))
+        .withColumn("embedding", updatedVec(col("embedding"))), "vec_id", ArrivalBound)
+    }, embSchema)
 
   /** One UPSERT micro-batch fold — updateDocument on the ANN index:
     * every incoming key tombstones UNCONDITIONALLY as `(vec_id,
@@ -774,45 +608,38 @@ object VecStreams {
 
   private[graft] def upsertVecDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s,
-      java.nio.file.Paths.get(d, "embeddings.parquet")) {
-      upsertVecDrainBody(s, d, work)
+    StreamTune.withDrainWidthFrom(s, embSrc(d)) {
+      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
+      Drain.manifested(s, upsertLanding(s, d).stream(s), work, Seq(
+          Drain.Tree("folds", foldVerSchema), Drain.Tree("tombs", tombSchema))) {
+        upsertVecFoldBatch(_, _, cents, work)
+      }
     }
 
-  private def upsertVecDrainBody(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit = {
-    val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-    val trees = Seq("folds", "tombs").map(work.resolve)
-    trees.foreach(java.nio.file.Files.createDirectories(_))
-    val q = cdcUpsertVecStream(s, d)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        trees.foreach { t =>
-          EventStreams.maybeCompactFolds(s, t, id, df => df,
-            spare = SnapshotFolds.retainedRefs(t))
-        }
-        upsertVecFoldBatch(df, id, cents, work)
-        trees.foreach(SnapshotFolds.writeManifest(_, id))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      StreamBusy.addQuery(q)
-    } finally q.stop()
-  }
-
   /** The read-side normalization that lets ONE relation serve both the
-    * delete and the upsert lifecycle (the LexStreams discipline): fold
-    * trees written without `ver` read as ver 0; tombstones without
-    * `upto` read as +∞ (a delete kills every version of its key). */
-  private def versionedFolds(s: SparkSession, dirs: Seq[String]): DataFrame = {
-    val raw = s.read.parquet(dirs: _*)
-    if (raw.columns.contains("ver")) raw
-    else raw.withColumn("ver", lit(0L))
-  }
+    * delete and the upsert lifecycle (the LexStreams discipline): the
+    * delete lifecycle's fold trees carry no `ver` and read as ver 0 —
+    * older than any batch-stamped tombstone; the upsert lifecycle's
+    * carry it. Both read with their explicit schema (no footer-inference
+    * job); the caller names the lifecycle, so the constant ver 0 stays
+    * visible to the optimizer, which folds `0 < upto` into the tombstone
+    * scan. */
+  private def versionedFolds(s: SparkSession, dirs: Seq[String],
+      versioned: Boolean): DataFrame =
+    if (versioned) s.read.schema(foldVerSchema).parquet(dirs: _*)
+    else s.read.schema(foldSchema).parquet(dirs: _*).withColumn("ver", lit(0L))
 
-  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame = {
+  /** Tombstones written without `upto` (pre-upto delete trees) read as
+    * +∞: a delete kills every version of its key. */
+  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
+    s.read.schema(tombSchema).parquet(dirs: _*)
+      .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
+
+  /** The PROBE's tombstone read keeps footer inference: a plain `upto`
+    * column lets the optimizer fold the anti-join's `ver < upto` bound
+    * into the tombstone scan's pushed filters (the e2d/e2u plan dumps
+    * pin that shape), which [[versionedTombs]]' coalesce would block. */
+  private def probeTombs(s: SparkSession, dirs: Seq[String]): DataFrame = {
     val raw = s.read.parquet(dirs: _*)
     if (raw.columns.contains("upto")) raw
     else raw.withColumn("upto", lit(Long.MaxValue))
@@ -823,9 +650,11 @@ object VecStreams {
     * `vec_id match AND ver < upto` — a superseded version dies, the
     * version shipped with the tombstone's own batch survives. Queries
     * route under the frozen centroids from the ORIGINAL embeddings
-    * (the request owns its vector — the e2d stance). */
+    * (the request owns its vector — the e2d stance). `versioned` names
+    * the lifecycle that wrote the folds (false: the delete lifecycle). */
   private[graft] def upsertCandidatesWithDirs(s: SparkSession, d: String,
-      foldDirsIn: Seq[String], tombDirs: Seq[String]): DataFrame = {
+      foldDirsIn: Seq[String], tombDirs: Seq[String],
+      versioned: Boolean = true): DataFrame = {
     import s.implicits._
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
@@ -836,11 +665,11 @@ object VecStreams {
     val all =
       if (foldDirsIn.isEmpty) base
       else base.unionByName(
-        versionedFolds(s, foldDirsIn)
+        versionedFolds(s, foldDirsIn, versioned)
           .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      else versionedTombs(s, tombDirs).select("vec_id", "upto")).distinct()
+      else probeTombs(s, tombDirs).select("vec_id", "upto")).distinct()
     val t = tombs.select(col("vec_id").as("t_vec"), col("upto"))
     val live = all.join(broadcast(t),
       all("vec_id") === t("t_vec") && all("ver") < t("upto"), "left_anti")
@@ -858,12 +687,13 @@ object VecStreams {
     * through their `snap` manifests — a vector updated at batch k
     * still serves its OLD version at snapshots < k. */
   private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame = {
+      work: java.nio.file.Path, snap: Long,
+      versioned: Boolean = true): DataFrame = {
     def pinned(tree: String) = {
       val t = work.resolve(tree)
       SnapshotFolds.readManifest(t, snap).map(n => t.resolve(n).toString)
     }
-    upsertCandidatesWithDirs(s, d, pinned("folds"), pinned("tombs"))
+    upsertCandidatesWithDirs(s, d, pinned("folds"), pinned("tombs"), versioned)
   }
 
   /** Restage reconciliation FROM THE INDEX ITSELF: the updated
@@ -883,11 +713,11 @@ object VecStreams {
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("ver", lit(-1L))
     val all = if (foldDirsIn.isEmpty) base
-      else base.unionByName(s.read.parquet(foldDirsIn: _*)
+      else base.unionByName(versionedFolds(s, foldDirsIn, versioned = true)
         .select("vec_id", "label", "embedding", "ver"))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      else s.read.parquet(tombDirs: _*)).distinct()
+      else versionedTombs(s, tombDirs)).distinct()
     val t = tombs.select(col("vec_id").as("t_vec"), col("upto"))
     val live = all.join(broadcast(t),
       all("vec_id") === t("t_vec") && all("ver") < t("upto"), "left_anti")
@@ -926,9 +756,7 @@ object VecStreams {
     * already paying ([[restageFromIndex]], spec-pinned). */
   def e2uVecUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2u", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertVecDrain(s, dir, work)
     SimOps.topK(upsertCandidatesWithDirs(s, dir,
@@ -958,9 +786,7 @@ object VecStreams {
     * overhead (listing + cell filter per dir) at O(TierFanout). */
   def e2tmVecTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2tm", graft.util.PathKeys.keyedName(dir) + "-4")
+    val work = PathKeys.fixturePath("stream-e2tm", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     EventStreams.maybeTierMerge(s, work.resolve("folds"))

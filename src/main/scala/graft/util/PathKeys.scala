@@ -11,4 +11,24 @@ object PathKeys {
   /** `<basename>-<key>`: collision-free, still human-readable. */
   def keyedName(dir: String): String =
     s"${java.nio.file.Paths.get(dir).getFileName}-${pathKey(dir)}"
+
+  /** The ONE read of the fixture root every staged layout, landing,
+    * drain work dir and checkpoint lives under: `GRAFT_FIXTURE_DIR`, else
+    * `target/fixtures` under the working directory (the checkout root
+    * for sbt runs and tests). Read per call, so a process that sets it
+    * before first use is honored everywhere. */
+  def fixtureRoot: String =
+    sys.env.getOrElse("GRAFT_FIXTURE_DIR",
+      java.nio.file.Paths.get("target", "fixtures").toAbsolutePath.toString)
+
+  /** `<fixtureRoot>/<kind>/<keyedName(dir)>` as a plain string join —
+    * the form the layout/state dirs have always been spelled in. */
+  def fixtureDir(kind: String, dir: String): String =
+    s"$fixtureRoot/$kind/${keyedName(dir)}"
+
+  /** `<fixtureRoot>/<kind>/<keyedName(dir)><suffix>` as a Path — the
+    * form the landings and drain work dirs have always been spelled in. */
+  def fixturePath(kind: String, dir: String,
+      suffix: String = ""): java.nio.file.Path =
+    java.nio.file.Paths.get(fixtureRoot, kind, keyedName(dir) + suffix)
 }

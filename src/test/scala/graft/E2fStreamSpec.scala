@@ -76,7 +76,8 @@ class E2fStreamSpec extends AnyFunSuite {
       // 8 single-vector batches with the drain's compaction cadence
       val arr = arrivals().where(col("vec_id") < 8)
       (0 until 8).foreach { i =>
-        EventStreams.maybeCompactFolds(spark, work.resolve("folds"), i.toLong, df => df)
+        EventStreams.maybeCompactFolds(spark, work.resolve("folds"), i.toLong,
+          VecStreams.foldSchema, df => df)
         VecStreams.e2fFoldBatch(arr.where(col("vec_id") === i), i.toLong, cs, work)
       }
       val dirs = EventStreams.foldDirsToRead(work.resolve("folds"))

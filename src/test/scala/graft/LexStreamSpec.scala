@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.LexStreams
+import scala.jdk.CollectionConverters._
 
 /** e35f — incremental postings maintenance (the Lucene segment model).
   * Claims: a document folded in batch N is scoreable after batch N
@@ -554,5 +555,42 @@ class LexStreamSpec extends AnyFunSuite {
       assert(tombs(wE) == tombs(wF), "upsert tombstone rows diverged")
     } finally { graft.streaming.DocStreams.deleteTree(wE)
       graft.streaming.DocStreams.deleteTree(wF) }
+  }
+
+  test("the bounded-landing guard reads the RESTAGED landing, not the missing one") {
+    // ADVICE #1 at the root: the guard must be decided from the landing
+    // staging returned. With the landing deleted, the pre-staging bytes
+    // are 0 — any bound would pass and the driver-collect path would
+    // run over a restaged landing of any size. A bound below the
+    // restaged bytes must route every trigger onto the distributed form.
+    LexStreams.ensureFoldBase(spark, sf)
+    val (wBounded, wFallback) = (freshWork(), freshWork())
+    val descs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    try {
+      LexStreams.cdcDrain(spark, sf, wBounded)
+      val landing = LexStreams.cdcLanding(spark, sf).path
+      graft.streaming.DocStreams.deleteTree(landing)
+      assert(!java.nio.file.Files.exists(landing))
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        LexStreams.cdcDrain(spark, sf, wFallback, maxBytes = 1L)
+        Thread.sleep(500) // let the listener bus deliver the job starts
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val seen = descs.asScala.toSet
+      assert(java.nio.file.Files.exists(landing), "the drain must restage its landing")
+      assert(!seen.exists(_.endsWith(": classify collect")),
+        s"a landing over the bound must not take the driver-collect path: $seen")
+      assert(seen.contains("lexfold 0: lens fold"),
+        s"the distributed lens fold must have run: $seen")
+      assert(LexStreams.tombProbe(spark, sf, wFallback).collect().map(_.toSeq).toSeq ==
+        LexStreams.tombProbe(spark, sf, wBounded).collect().map(_.toSeq).toSeq,
+        "the distributed fallback must serve the bounded run's rows")
+    } finally { graft.streaming.DocStreams.deleteTree(wBounded)
+      graft.streaming.DocStreams.deleteTree(wFallback) }
   }
 }
