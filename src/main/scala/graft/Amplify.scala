@@ -64,8 +64,8 @@ object Amplify {
       s"unknown flag(s) ${unknown.mkString(", ")} — " +
         "usage: Amplify <srcDir> <dstDir> [factor] [--perturb] [--eps=E] " +
         "[--tables=a,b] [--extend-time]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.builder()
+      .master(s"local[${GraftSession.cores(32)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -161,6 +161,10 @@ object BenchStats {
   *    tail capture).
   */
 object Bench {
+  /** Testdata dir the suite (and KeyProbe) runs on. */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   /** Evidence-chain guard (r8: BENCH_r08.json's captured tail opened
     * mid-stack-trace beside rc:0 — most plausibly a dead first attempt
     * concatenated with a successful rerun, but nothing in the artifact
@@ -187,19 +191,9 @@ object Bench {
   }
 
   private def runSuite(attemptId: String): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // e2pq refine-fetch In-list pushdown — IvfServe.InFilterThresholdPin
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.sources.IvfServe.InFilterThresholdPin.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.sfDir
+    val cpus = GraftSession.cores()
+    val spark = GraftSession.local(cpus)
     // Evidence-chain hygiene (r9 ask: no unexplained [error] lines in the
     // captured tail): every StreamingQuery.stop() cancels its run's job
     // group AFTER graft.streaming.Drain finished it, so the DAGScheduler
@@ -235,7 +229,7 @@ object Bench {
     // it; GRAFT_CHECKPOINT_DIR still wins for explicit placement. Only a
     // dir the bench itself chose is cleaned up at exit — an explicit env
     // path may be shared with another process and is never deleted here.
-    val explicitCkpt = sys.env.get("GRAFT_CHECKPOINT_DIR")
+    val explicitCkpt = graft.ops.ClusterOps.explicitCheckpointDir
     val ckptDir: String = explicitCkpt.orElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench-ckpt")
@@ -276,16 +270,18 @@ object Bench {
       // recompute).
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      // Reliable-checkpoint leftovers (the CC loops' rdd-N dirs) are
-      // never reclaimed by Spark (cleanCheckpoints defaults false, and
-      // enabling it would put the cleanup at GC-arbitrary points INSIDE
-      // later timed windows — the exact r11 hazard). The r13 5-pass
-      // diag probe measured the growth: +10 files per pass, unbounded
-      // in count even though ~0 MB at sf0.1 — and the dir lives on
-      // tmpfs, where growth steals the same RAM the executors use.
-      // Every run rebuilds its plan from scratch (the contract above),
-      // so prior runs' checkpoint data is garbage by construction:
-      // delete it here, outside the timed window.
+      // Reliable-checkpoint leftovers (the CC loops' rdd-N dirs): the
+      // session's cleanCheckpoints (GraftSession.configure) reclaims
+      // them only when the ContextCleaner's GC-driven sweep reaches
+      // their RDDs — at arbitrary points INSIDE later timed windows, the
+      // exact r11 hazard. The r13 5-pass diag probe measured the growth
+      // without any reclaim: +10 files per pass, unbounded in count even
+      // though ~0 MB at sf0.1 — and the dir lives on tmpfs, where growth
+      // steals the same RAM the executors use. Every run rebuilds its
+      // plan from scratch (the contract above), so prior runs'
+      // checkpoint data is garbage by construction: delete it here,
+      // outside the timed window, which leaves the cleaner's later
+      // delete of the same dir a no-op.
       scala.util.Try {
         import scala.jdk.CollectionConverters._
         val root = java.nio.file.Paths.get(ckptDir)

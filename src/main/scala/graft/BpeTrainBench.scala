@@ -27,15 +27,7 @@ object BpeTrainBench {
         case "e48c" => graft.ops.CurationOps.e48cBpeDeltaN
         case other => sys.error(s"unknown trainer '$other' (e48b|e48c)")
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores())
     // one warm pass (reader/codegen caches), then one timed pass per count
     trainer(spark, sfDir, 2).collect()
     val timed: Seq[(Int, Double)] = counts.toSeq.map { m =>

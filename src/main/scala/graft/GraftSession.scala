@@ -15,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   *
   * On a cluster, use `GraftSession.configure(builder)` with your own
   * master/deploy settings — only engine-relevant confs are applied.
-  */
+  *
+  * Every session the project's own mains and specs open comes from here
+  * (`local`, or `builder` where a main sets its own master), so they all
+  * run under the one engine configuration `configure` defines. */
 object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =
@@ -30,10 +33,22 @@ object GraftSession {
       .config("spark.sql.parquet.pushdown.inFilterThreshold",
         graft.sources.IvfServe.InFilterThresholdPin.toString)
 
+  /** A fresh builder with [[configure]] applied, for callers that set
+    * their own master and partitioning. */
+  def builder(): SparkSession.Builder = configure(SparkSession.builder())
+
+  /** Local core count for a main: `SPARK_GRAFT_CPUS` when it is a
+    * positive integer, else `default`. */
+  def cores(default: Int = Runtime.getRuntime.availableProcessors()): Int =
+    sys.env.get("SPARK_GRAFT_CPUS")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+      .filter(_ >= 1)
+      .getOrElse(default)
+
   def local(
       cores: Int = Runtime.getRuntime.availableProcessors(),
       ui: Boolean = false): SparkSession = {
-    val s = configure(SparkSession.builder())
+    val s = builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", ui.toString)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Per-key job profiler (r16 optimization round, guide §1): runs the
@@ -9,25 +8,15 @@ import org.apache.spark.scheduler._
   * description — the measurement the local-mode bench can't show
   * without a UI. Usage:
   *
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=... \
   *     sbt "runMain graft.KeyProbe e35u_lex_upsert e16_dedup_clusters"
   *
   * Diagnostic only — never part of the bench/verify contract. */
 object KeyProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: KeyProbe <queryName> [more...]")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.sources.IvfServe.InFilterThresholdPin.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Bench.sfDir
+    val spark = GraftSession.local(GraftSession.cores())
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite)
       spark.sparkContext.setCheckpointDir("/dev/shm/graft-keyprobe-ckpt")

@@ -54,15 +54,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("docs/plans")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // e2pq refine-fetch In-list pushdown — IvfServe.InFilterThresholdPin
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.sources.IvfServe.InFilterThresholdPin.toString)
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     // keep declared results lazy: materializeAndRelease would otherwise
     // collapse e61/e64-style keys to a `Scan ExistingRDD` stub and the

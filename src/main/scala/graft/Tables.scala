@@ -107,10 +107,6 @@ object Tables {
     *     right back to ~1 partition. An explicit numPartitions is a
     *     user-pinned width AQE respects. */
   def spreadIfNarrow(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    // bench-probe hook: the no-spread arm of the width sweep (SCALE.md)
-    // — checked BEFORE the splits probe so the excluded arm also skips
-    // the parquet footer reads the probe pays (r10 advice)
-    if (sys.env.contains("GRAFT_NO_SPREAD")) return df
     val sc = df.sparkSession.sparkContext
     val target = math.max(2, sc.defaultParallelism / 2)
     val (splits, rows) = effectiveSplits(df, target)
@@ -139,10 +135,9 @@ object Tables {
 
   /** Per-task row budget for the staging spread — the measured optimum
     * of the e6/e44 width sweep above (512 ⇒ 10 tasks at 5k rows, full
-    * width from ~16k rows up). Env override is a bench-probe hook only
-    * (the width sweeps in SCALE.md use it); production never sets it. */
-  private val SpreadRowsPerTask =
-    sys.env.get("GRAFT_SPREAD_ROWS_PER_TASK").map(_.toLong).getOrElse(512L)
+    * width from ~16k rows up); SCALE.md's staging-spread table records
+    * every arm of that sweep, including no spread at all. */
+  private val SpreadRowsPerTask = 512L
 
   /** (row groups, total rows) feeding `df` — the row-group count
     * decided only far enough against `target`, the row count summed

@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // e2pq refine-fetch In-list pushdown — IvfServe.InFilterThresholdPin
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.sources.IvfServe.InFilterThresholdPin.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores(4))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=a,b,c restricts the dump to named queries
     // (iteration aid, same contract as the bench's BENCH_ONLY; the

@@ -7,12 +7,12 @@ import graft.Tables._
 /** Dedup endgame + event-funnel analytics. */
 object ClusterOps {
 
-  /** Iteration cap for e16's label propagation — far above any real
-    * near-dup cluster diameter; the convergence guard throws loudly if
-    * it is ever hit. Overridable via system property so the failure
-    * path (checkpoint cleanup on a non-converged run) is testable. */
-  def MaxCcIters: Int =
-    sys.props.get("graft.e16.maxIters").map(_.toInt).getOrElse(100)
+  /** Default iteration cap for e16's label propagation — far above any
+    * real near-dup cluster diameter; the convergence guard throws loudly
+    * if it is ever hit. The `maxIters` parameter of
+    * [[componentsWithStats]] lowers it to exercise the failure path
+    * (checkpoint cleanup on a non-converged run). */
+  val MaxCcIters: Int = 100
 
   /** Reliable checkpoint location for iterative queries. `checkpoint()`
     * (vs `localCheckpoint()`) writes blocks to this directory — an
@@ -22,12 +22,15 @@ object ClusterOps {
     * making the loss unrecoverable). Override via GRAFT_CHECKPOINT_DIR. */
   def ensureCheckpointDir(s: SparkSession): String = synchronized {
     s.sparkContext.getCheckpointDir.getOrElse {
-      val dir = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",
+      val dir = explicitCheckpointDir.getOrElse(
         graft.util.PathKeys.fixtureRoot + "/checkpoints")
       s.sparkContext.setCheckpointDir(dir)
       s.sparkContext.getCheckpointDir.get
     }
   }
+
+  /** The checkpoint location a deployment set explicitly, if any. */
+  def explicitCheckpointDir: Option[String] = sys.env.get("GRAFT_CHECKPOINT_DIR")
 
   /** Checkpoint files backing a checkpointed DataFrame (empty when the
     * plan isn't a checkpoint scan — cleanup is strictly best-effort). */
@@ -68,7 +71,7 @@ object ClusterOps {
     * with a loud failure. At 100 TB the same loop runs unchanged —
     * state is two (node, label) columns, each step shuffles by node id,
     * and state is RELIABLY checkpointed on a SCALE-ADAPTIVE cadence
-    * (see the ckptEvery derivation in [[componentsWithStats]]: every
+    * (see the cadence derivation in [[componentsWithStats]]: every
     * round at loop width 1 where a KB-sized snapshot is free and keeps
     * each round's plan leaf-rooted, every 3rd round on wide graphs
     * where the per-round durable write was the dominant decade-2 cost;
@@ -81,8 +84,11 @@ object ClusterOps {
     * the number of DURABLE label snapshots written — the loop runs
     * eagerly (each round materializes cache or checkpoint), so both are
     * known by the time the labeled DataFrame is returned. Exposed for
-    * DedupClusterSpec's round-count and write-cadence assertions. */
-  private[graft] def e16WithStats(s: SparkSession, d: String): (DataFrame, Int, Int) = {
+    * DedupClusterSpec's round-count and write-cadence assertions;
+    * `maxIters`/`ckptEvery` pass through to [[componentsWithStats]]. */
+  private[graft] def e16WithStats(s: SparkSession, d: String,
+      maxIters: Int = MaxCcIters,
+      ckptEvery: Option[Int] = None): (DataFrame, Int, Int) = {
     // exact-duplicate pairs: same normalized content hash (the one
     // definition shared with e1TextDedup), as a posting-list aggregation
     // + partition-local double-explode — one scan of documents, no
@@ -97,7 +103,8 @@ object ClusterOps {
     val (nearPairsFull, e8Caches) = SimOps.e8NgramJaccardWithCaches(s, d)
     val nearPairs = nearPairsFull.select("d1", "d2")
     val undirected = exactPairs.unionByName(nearPairs).distinct()
-    val (labeled, iter, snapshots) = componentsWithStats(s, undirected, e8Caches)
+    val (labeled, iter, snapshots) =
+      componentsWithStats(s, undirected, e8Caches, maxIters, ckptEvery)
     (labeled.orderBy("doc_id"), iter, snapshots)
   }
 
@@ -108,16 +115,18 @@ object ClusterOps {
     * node that appears in a pair, rounds to converge, durable label
     * snapshots written). `relCaches` are the caller's persisted
     * sub-relations backing `undirected`; they are released as soon as
-    * the edge set is durably checkpointed. */
+    * the edge set is durably checkpointed. `maxIters` caps the rounds;
+    * `ckptEvery` pins the durable-snapshot cadence (None derives it
+    * from the graph's loop width, see below). Both are checked before
+    * any job runs. */
   private[graft] def componentsWithStats(
       s: SparkSession, undirected: DataFrame,
-      relCaches: Seq[DataFrame]): (DataFrame, Int, Int) = {
-    var segT0 = System.nanoTime()
-    def seg(tag: String): Unit = if (sys.env.contains("GRAFT_E16_DEBUG")) {
-      System.err.println(
-        f"[e16] seg $tag ${(System.nanoTime() - segT0) / 1e9}%.2f s")
-      segT0 = System.nanoTime()
-    }
+      relCaches: Seq[DataFrame],
+      maxIters: Int = MaxCcIters,
+      ckptEvery: Option[Int] = None): (DataFrame, Int, Int) = {
+    require(maxIters >= 1 && ckptEvery.forall(_ >= 1),
+      s"componentsWithStats: maxIters ($maxIters) and ckptEvery " +
+        s"(${ckptEvery.getOrElse("derived")}) must be >= 1")
     ensureCheckpointDir(s)
     // The edge set is probed by every iteration: reliable checkpoint —
     // durable files AND a truncated logical plan, so each round's analysis
@@ -143,7 +152,6 @@ object ClusterOps {
     relCaches.foreach(_.unpersist(blocking = false))
     edgesCache.unpersist(blocking = false)
     val nEdges = obsChanged(obsE)
-    seg("edges")
 
     // The LOOP's shuffle width is sized to the GRAPH, not the corpus: the
     // pair graph is orders of magnitude smaller than the document table
@@ -192,11 +200,10 @@ object ClusterOps {
     //
     // The convergence count keeps riding the round's single action
     // either way (checkpoint, or a noop-sink write that materializes
-    // the cache). Overridable for the cadence spec via the
-    // graft.e16.ckptEvery system property.
+    // the cache). The `ckptEvery` parameter pins the cadence instead
+    // (the cadence spec's wide-regime check).
     val CkptEveryWide = 3
-    val ckptEvery = sys.props.get("graft.e16.ckptEvery").map(_.toInt)
-      .getOrElse(if (loopParts == 1) 1 else CkptEveryWide)
+    val cadence = ckptEvery.getOrElse(if (loopParts == 1) 1 else CkptEveryWide)
     var heldCaches: List[DataFrame] = Nil // persisted rounds since last snapshot
     var lastCkpt: Seq[String] = Seq.empty // current durable snapshot's files
     var snapshots = 0 // durable label writes (the cadence the spec pins)
@@ -223,7 +230,7 @@ object ClusterOps {
       lastCkpt = checkpointFiles(labels)
       var frontier = labels
       changed = obsChanged(obs0)
-    // Round state: every ckptEvery-th round goes through a RELIABLE
+    // Round state: every `cadence`-th round goes through a RELIABLE
     // checkpoint (durable files — executor loss recovers, the reason
     // localCheckpoint was dropped — and a truncated logical plan);
     // rounds in between persist to memory/disk cache, materialized by a
@@ -235,7 +242,7 @@ object ClusterOps {
     // per round, no separate convergence job. The ==0 convergence test
     // is robust even if the checkpoint's internal write re-runs the
     // plan and double-counts the accumulator (0 doubles to 0).
-      while (changed > 0 && iter < MaxCcIters) {
+      while (changed > 0 && iter < maxIters) {
         val msgs = edgesLoop
           .join(frontier, edgesLoop("b") === frontier("node"))
           .groupBy(col("a")).agg(min(col("lbl")).as("nbl"))
@@ -264,8 +271,7 @@ object ClusterOps {
         heldCaches = nextCache :: heldCaches
         val observed = nextCache.observe(obs,
           sum(when(col("lbl") =!= col("old"), 1L).otherwise(0L)).as("changed"))
-        val tAct0 = System.nanoTime()
-        if ((iter + 1) % ckptEvery == 0) {
+        if ((iter + 1) % cadence == 0) {
           val next = observed.checkpoint()
           snapshots += 1
           frontier = next.where(col("lbl") =!= col("old")).select("node", "lbl")
@@ -288,12 +294,8 @@ object ClusterOps {
           frontier = nextCache.where(col("lbl") =!= col("old")).select("node", "lbl")
           labels = nextCache.drop("old") // nextCache already in heldCaches
         }
-        val tAct1 = System.nanoTime()
         changed = obsChanged(obs) // reported by the round's action above
         iter += 1
-        if (sys.env.contains("GRAFT_E16_DEBUG"))
-          System.err.println(f"[e16] round $iter changed=$changed " +
-            f"act=${(tAct1 - tAct0) / 1e9}%.3f obs=${(System.nanoTime() - tAct1) / 1e9}%.3f")
       }
       // diameter-bound exceeded: labels would be silently wrong vs the
       // exact recursive-CTE oracle — fail loudly instead (inside the try
@@ -331,7 +333,6 @@ object ClusterOps {
         deleteFiles(s, lastCkpt)
       }
     }
-    seg("loop")
     val sized = labels
       .withColumn("cluster_id", col("lbl")).drop("lbl")
       .withColumn("cluster_size",

@@ -1906,11 +1906,10 @@ object CurationOps {
       // exact corpus count and the CMS bound contract is unchanged).
       // The filter is map-side, BEFORE the groupBy exchange: the gate's
       // vocab-sized aggregation ships 1/16 of the vocabulary, the
-      // scale-relevant cost of keeping an exact gate at all (measured
-      // beside the full gate in SCALE.md).
-      val gateInput = // bench-probe hook: full-vocab gate arm (SCALE.md)
-        if (sys.env.contains("GRAFT_E54_FULLGATE")) bg
-        else if (xxMembership) // e54x: the production membership hash
+      // scale-relevant cost of keeping an exact gate at all (SCALE.md's
+      // e54 table records it beside the full-vocab gate).
+      val gateInput =
+        if (xxMembership) // e54x: the production membership hash
           bg.where(pmod(xxhash64(concat(lit("cms:"), col("bg"))), lit(16L)) === 0)
         else bg.where(
           conv(substring(md5(concat(lit("cms:"), col("bg"))), 1, 8), 16, 10)

@@ -1091,14 +1091,13 @@ object SimOps {
     * plan — the e65 literal-codebook stance), so scoring is ONE
     * map-side scan with zero pair rows and zero exchanges, bit-exact
     * to the pair form (round is monotone, so round(max raw) equals
-    * max(round per pair); E49KernelSpec pins it). The pair-at-a-time
-    * arm stays callable (GRAFT_E49_BRUTE) for the bench comparison. */
+    * max(round per pair); E49KernelSpec pins it against the
+    * pair-at-a-time form, [[e49BruteMaxCos]]; SCALE.md's e49 table
+    * records both forms' seconds per decade. */
   def e49SemanticDecon(s: SparkSession, d: String): DataFrame = {
     val e = vectors(graft.Tables.spreadIfNarrow(embeddings(s, d), col("vec_id")))
     val benchMember = col("vec_id") % 97 === 0 && col("vec_id") < 100000L
-    val maxCos = // bench-probe hook: pair-at-a-time arm for SCALE.md deltas
-      if (sys.env.contains("GRAFT_E49_BRUTE")) e49BruteMaxCos(e, benchMember)
-      else e49FusedMaxCos(e, benchMember)
+    val maxCos = e49FusedMaxCos(e, benchMember)
     val bar = maxCos.agg(
       round(expr("percentile(max_cos, 0.99)"), 6).as("p99"))
     maxCos.crossJoin(broadcast(bar))
@@ -1115,9 +1114,8 @@ object SimOps {
   /** The r10 pair-at-a-time max-cosine scan — every (vector, bench)
     * pair is a join row paying a full fused cosine plus aggregation
     * machinery. Kept as the semantics authority: E49KernelSpec pins
-    * the fused-kernel path to these exact rows, and the
-    * GRAFT_E49_BRUTE bench arm measures the before/after in
-    * SCALE.md. */
+    * the fused-kernel path to these exact rows; SCALE.md's e49 table
+    * records its seconds beside the kernel's. */
   private[graft] def e49BruteMaxCos(e: DataFrame, benchMember: Column): DataFrame = {
     val bench = e.where(benchMember)
       .select(col("vec_id").as("b_id"), col("v").as("bv"))

@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object OrdMain {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("ord-scraper")
       .config("spark.sql.shuffle.partitions",

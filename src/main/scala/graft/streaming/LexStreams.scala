@@ -517,8 +517,8 @@ object LexStreams {
     * 100 TB path: a tier merge costs O(live segment bytes) — orders of
     * magnitude under the base rebuild — and caps the probe's
     * per-segment overhead (listing + term filter + df merge per dir)
-    * at O(TierFanout); LexTierBench measures the probe cost at 16
-    * segments vs 1 for SCALE.md. */
+    * at O(TierFanout); SCALE.md's e35t section records the probe cost
+    * at 16 and 64 segments vs 1. */
   def e35tTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
     val work = PathKeys.fixturePath("stream-e35t", dir, "-4")

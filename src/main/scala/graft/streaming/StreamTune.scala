@@ -19,14 +19,13 @@ import org.apache.spark.sql.SparkSession
   * whose per-interval state outgrows its executors.
   *
   * The drain width is therefore derived from the landing's size:
-  * `ceil(bytes / SPARK_GRAFT_STREAM_PART_BYTES)` (default 512 KiB of
-  * compressed landing per partition — [[DefaultPartBytes]], the
-  * measured knee; see its scaladoc) clamped to [1, session width]. Local fixtures (≤ 2 MB)
-  * get width 1 — the honest width for kilobytes of state; a landing
-  * grows its width linearly until the session's own configuration caps
-  * it, so a cluster session never narrows below what its operator
-  * chose for batch work. The env override is the deployment knob that
-  * actually matters at scale (target state bytes per partition).
+  * `ceil(bytes / DefaultPartBytes)` (512 KiB of compressed landing per
+  * partition — the measured knee; see its scaladoc) clamped to
+  * [1, session width]. Local fixtures (≤ 2 MB) get width 1 — the
+  * honest width for kilobytes of state; a landing grows its width
+  * linearly until the session's own configuration caps it, so a
+  * cluster session never narrows below what its operator chose for
+  * batch work.
   *
   * Scope discipline: the width is set on the session for the drain's
   * duration and RESTORED in a finally (the e16 loop-width precedent —
@@ -51,15 +50,9 @@ object StreamTune {
     * cost, not work. */
   val DefaultPartBytes: Long = 512L << 10
 
-  private[graft] def targetPartBytes: Long =
-    sys.env.get("SPARK_GRAFT_STREAM_PART_BYTES")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(DefaultPartBytes)
-
   /** ceil(bytes / target) clamped to [1, sessionWidth]. */
   private[graft] def widthFor(bytes: Long, sessionWidth: Int,
-      target: Long = targetPartBytes): Int = {
+      target: Long = DefaultPartBytes): Int = {
     val need = (math.max(0L, bytes) + target - 1) / target
     math.max(1L, math.min(sessionWidth.toLong, need)).toInt
   }
@@ -92,11 +85,7 @@ object StreamTune {
     * one trigger) takes the fused driver-collect paths; a larger
     * landing falls back to the fully distributed forms (LexStreamSpec
     * and E2fStreamSpec pin fallback ≡ bounded row equality). */
-  val BoundedLandingBytes: Long =
-    sys.env.get("SPARK_GRAFT_CDC_COLLECT_MAX_BYTES")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(32L << 20)
+  val BoundedLandingBytes: Long = 32L << 20
 
   /** Whether a STAGED landing fits the bounded-batch guard — pass the
     * path staging returned ([[Drain.manifestedLanding]] does), never a
@@ -141,7 +130,7 @@ object StreamTune {
     * band derivation serializing at ~4 s per trigger. The spread fires
     * only when one trigger carries at least [[SpreadMinParts]]
     * partitions' worth of landing bytes (the same
-    * [[targetPartBytes]] unit the drain width derives from), keyed
+    * [[DefaultPartBytes]] unit the drain width derives from), keyed
     * deterministically (task-retry-safe, guide §2.5) — so tiny local
     * fixtures keep their exchange-free single-task plans and a real
     * ingest parallelizes its per-row work. */
@@ -150,7 +139,7 @@ object StreamTune {
   private[graft] def spreadBatchIfWide(df: org.apache.spark.sql.DataFrame,
       key: org.apache.spark.sql.Column,
       bytesPerTrigger: Long): org.apache.spark.sql.DataFrame =
-    if (bytesPerTrigger / targetPartBytes >= SpreadMinParts) {
+    if (bytesPerTrigger / DefaultPartBytes >= SpreadMinParts) {
       // EXPLICIT partition count, derived from the per-trigger bytes:
       // a bare repartition(key) resolves to spark.sql.shuffle.partitions
       // but AQE then coalesces the small exchange back to one partition

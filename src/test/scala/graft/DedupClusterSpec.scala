@@ -88,17 +88,36 @@ class DedupClusterSpec extends AnyFunSuite {
     // WIDE regime (loopParts > 1) must keep the r5→r6 fix — durable
     // label snapshots every 3rd round, NOT every round, because the
     // per-round checkpoint I/O grows with the graph (e16 sf10a 39.8 s).
-    // Pin it through the explicit override the derivation honors.
-    System.setProperty("graft.e16.ckptEvery", "3")
+    // Pin it through the cadence parameter the derivation honors.
+    val (df, rounds, snapshots) =
+      ClusterOps.e16WithStats(spark, fixtureDir, ckptEvery = Some(3))
+    df.write.format("noop").mode("overwrite").save()
+    // snapshots: init + every 3rd round + possibly a terminal one —
+    // rounds+1 writes means the cadence parameter was ignored
+    val maxSnaps = rounds / 3 + 3
+    assert(snapshots <= maxSnaps && snapshots < rounds + 1,
+      s"expected ≤$maxSnaps durable label writes for $rounds rounds, got $snapshots")
+  }
+
+  test("a cadence or iteration cap below 1 is rejected before any job runs") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("d1", "d2") // local: no job to build
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        synchronized { jobs += 1 }
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val (df, rounds, snapshots) = ClusterOps.e16WithStats(spark, fixtureDir)
-      df.write.format("noop").mode("overwrite").save()
-      // snapshots: init + every 3rd round + possibly a terminal one —
-      // rounds+1 writes means the cadence override was ignored
-      val maxSnaps = rounds / 3 + 3
-      assert(snapshots <= maxSnaps && snapshots < rounds + 1,
-        s"expected ≤$maxSnaps durable label writes for $rounds rounds, got $snapshots")
-    } finally System.clearProperty("graft.e16.ckptEvery")
+      intercept[IllegalArgumentException] {
+        ClusterOps.componentsWithStats(spark, pairs, Nil, ckptEvery = Some(0))
+      }
+      intercept[IllegalArgumentException] {
+        ClusterOps.componentsWithStats(spark, pairs, Nil, maxIters = 0)
+      }
+      Thread.sleep(500) // let the listener bus deliver any queued job start
+      assert(jobs == 0, s"invalid loop parameters must fail before any job, $jobs ran")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a failed (non-converged) run leaks no checkpoint snapshots") {
@@ -111,12 +130,9 @@ class DedupClusterSpec extends AnyFunSuite {
         .filter(p => p.getFileName.toString.startsWith("rdd-"))
         .map(_.toString).toSet
     val before = snapshots()
-    System.setProperty("graft.e16.maxIters", "1")
-    try {
-      intercept[IllegalStateException] {
-        ClusterOps.e16DedupClusters(spark, fixtureDir).count()
-      }
-    } finally System.clearProperty("graft.e16.maxIters")
+    intercept[IllegalStateException] {
+      ClusterOps.e16WithStats(spark, fixtureDir, maxIters = 1)._1.count()
+    }
     val leaked = snapshots() -- before
     assert(leaked.isEmpty,
       s"non-converged run left checkpoint snapshots behind: $leaked")

@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `processAllAvailable` belongs to the drain runner,
   *    `streaming/Drain.scala`;
   *  - the fixture-root read (`GRAFT_FIXTURE_DIR`) belongs to
-  *    `util/PathKeys.scala`.
+  *    `util/PathKeys.scala`;
+  *  - session construction (`SparkSession.builder`) and the core-count
+  *    read (`SPARK_GRAFT_CPUS`) belong to the session factory,
+  *    `GraftSession.scala`.
   *
   * The scan covers code and comments alike: a hand-copied protocol
   * usually arrives with the comment that explained the original. */
@@ -34,7 +37,9 @@ class SingleOwnerSpec extends AnyFunSuite {
   Seq(
     "_STAGED" -> "graft/util/Staged.scala",
     "processAllAvailable" -> "graft/streaming/Drain.scala",
-    "GRAFT_FIXTURE_DIR" -> "graft/util/PathKeys.scala"
+    "GRAFT_FIXTURE_DIR" -> "graft/util/PathKeys.scala",
+    "SparkSession.builder" -> "graft/GraftSession.scala",
+    "SPARK_GRAFT_CPUS" -> "graft/GraftSession.scala"
   ).foreach { case (token, owner) =>
     test(s"`$token` appears only in $owner") {
       assert(owners(token) == Set(owner),

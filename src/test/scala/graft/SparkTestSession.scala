@@ -5,15 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole suite. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    // the engine configuration every main runs under, plus two
+    // test-only confs: the app name and the forced-spill threshold
+    val s = GraftSession.builder()
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // e2pq refine-fetch In-list pushdown — IvfServe.InFilterThresholdPin
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        graft.sources.IvfServe.InFilterThresholdPin.toString)
+      .appName("graft-test")
       // force Spark's external sorters onto their real spill path once a
       // task holds >16k rows (core conf, fixed at context creation) — lets
       // TopKOperatorSpec prove the sort-based final survives actual

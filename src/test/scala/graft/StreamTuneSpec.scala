@@ -57,7 +57,7 @@ class StreamTuneSpec extends AnyFunSuite {
         "width-1 drains must run their foreachBatch jobs without AQE")
     }
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe0)
-    StreamTune.withDrainWidth(spark, 100L * StreamTune.targetPartBytes) {
+    StreamTune.withDrainWidth(spark, 100L * StreamTune.DefaultPartBytes) {
       assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe0,
         "wide drains keep AQE (coalescing/skew handling)")
     }
@@ -68,7 +68,7 @@ class StreamTuneSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-    val t = StreamTune.targetPartBytes
+    val t = StreamTune.DefaultPartBytes
     // under the bar: the plan must be returned UNCHANGED (no exchange)
     val narrow = StreamTune.spreadBatchIfWide(df, org.apache.spark.sql.functions.col("doc_id"), t)
     assert(narrow.queryExecution.logical eq df.queryExecution.logical,
