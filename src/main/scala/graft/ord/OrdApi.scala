@@ -1,7 +1,9 @@
 package graft.ord
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's five user-facing scrape modes
   * (`/root/reference/web_scrpaer_2.py:291-334,509-527`: all /
@@ -12,10 +14,26 @@ import org.apache.spark.sql.functions._
   * Range semantics are the reference's exactly: 1-based, end-inclusive,
   * clamped (`web_scrpaer_2.py:283-286` for datasets, `425-429` for
   * reactions) — pinned by OrdApiSpec. Dataset order is the catalog's
-  * (file, dataset_id) order; reaction order is stored arrival order
+  * (file, stored position) order; reaction order is stored arrival order
   * (`rx_pos`), both made explicit so results are deterministic.
+  *
+  * The golden corpus ships five files with OVERLAPPING dataset ids (the
+  * same dataset appears in e.g. `_three` and the v2 file), so every mode
+  * takes an optional corpus (file) scope.
+  *
+  * Each mode is one Spark job and [[saveFormatted]] two (pinned by
+  * OrdApiJobBudgetSpec): the requests are small, so their cost is jobs
+  * and planning, not bytes.
   */
-object OrdApi {
+class OrdApi private[graft] (nested: SparkSession => String) {
+
+  /** The nested rows of the parquet at `nested`, scoped to one file when
+    * asked. The declared schema spares the footer-reading job that
+    * schema inference runs on every read. */
+  private def datasets(s: SparkSession, corpus: Option[String]): DataFrame = {
+    val all = s.read.schema(OrdApi.schema).parquet(nested(s))
+    corpus.fold(all)(f => all.where(col("file") === f))
+  }
 
   /** One row per reaction, with positional metadata for range slicing.
     * Dataset position follows CATALOG order on both axes: files in
@@ -25,40 +43,42 @@ object OrdApi {
     * key order (the reference's scrape-arrival order, `ds_pos` in the
     * model). When a corpus scope is given, numbering is WITHIN that
     * corpus — "dataset 2 of file X", which is what a range over a
-    * scoped catalog means. */
-  private def catalog(
-      s: SparkSession, corpus: Option[String] = None): DataFrame = {
-    OrdFixtures.ensure(s)
-    import org.apache.spark.sql.expressions.Window
+    * scoped catalog means.
+    *
+    * Only the three reaction leaves the modes return are read (nested
+    * pruning through `arrays_zip`), and reactions are exploded after
+    * numbering, so an empty dataset still takes its catalog number.
+    * `coalesce(1)` costs nothing: a window without `partitionBy` already
+    * numbers every row in one task, and the single partition now reaches
+    * it without an exchange — and satisfies each mode's global `orderBy`
+    * without one — so a request is one job. */
+  private def catalog(s: SparkSession, corpus: Option[String]): DataFrame = {
     val fileIdx = element_at(
       typedlit(OrdFixtures.files.zipWithIndex.toMap), col("file"))
-    val base = s.read.parquet(OrdFixtures.nestedPath)
-    val ds = corpus.fold(base)(f => base.where(col("file") === f))
+    datasets(s, corpus)
+      .select(col("file"), col("dataset_id"), col("ds_pos"),
+        arrays_zip(col("reactions.rx_pos"), col("reactions.reaction_id"),
+          col("reactions.success")).as("rx"))
+      .coalesce(1)
       .withColumn("ds_pos", // 1-based over (catalog file order, stored order)
         row_number().over(Window.orderBy(fileIdx, col("ds_pos"))))
-    ds.select(col("file"), col("dataset_id"), col("ds_pos"),
-        explode(col("reactions")).as("rx"))
+      .select(col("file"), col("dataset_id"), col("ds_pos"),
+        explode(col("rx")).as("rx"))
       .select(col("file"), col("dataset_id"), col("ds_pos"),
         (col("rx.rx_pos") + 1).as("rx_pos1"), // 1-based like the reference's UI
         col("rx.reaction_id").as("reaction_id"),
         col("rx.success").as("success"))
   }
 
-  /** Mode 1: everything. */
-  def allReactions(s: SparkSession): DataFrame =
-    catalog(s).orderBy("ds_pos", "rx_pos1")
-
-  /** The golden corpus ships five files with OVERLAPPING dataset ids
-    * (the same dataset appears in e.g. `_three` and the v2 file), so
-    * id-addressed modes take an optional corpus (file) scope. */
-  private def scoped(s: SparkSession, corpus: Option[String]): DataFrame =
-    catalog(s, corpus)
+  /** Mode 1: everything (within the corpus, numbered within it). */
+  def allReactions(s: SparkSession, corpus: Option[String] = None): DataFrame =
+    catalog(s, corpus).orderBy("ds_pos", "rx_pos1")
 
   /** Mode 2: specific datasets by id (web_scrpaer_2.py:301-311). */
   def specificDatasets(
       s: SparkSession, ids: Seq[String],
       corpus: Option[String] = None): DataFrame =
-    scoped(s, corpus).where(col("dataset_id").isin(ids: _*))
+    catalog(s, corpus).where(col("dataset_id").isin(ids: _*))
       .orderBy("ds_pos", "rx_pos1")
 
   /** Mode 3: uniform range — datasets [dsStart, dsEnd] and, within each,
@@ -72,18 +92,17 @@ object OrdApi {
         col("rx_pos1").between(math.max(rxStart, 1), rxEnd))
       .orderBy("ds_pos", "rx_pos1")
 
-  /** Mode 4: per-dataset custom ranges (web_scrpaer_2.py:313-326). */
+  /** Mode 4: per-dataset custom ranges (web_scrpaer_2.py:313-326). Each
+    * dataset's bounds come from a literal map; an id absent from it
+    * gets null bounds and no rows. */
   def customRanges(
       s: SparkSession, ranges: Map[String, (Int, Int)],
       corpus: Option[String] = None): DataFrame = {
-    import s.implicits._
-    val dim = ranges.toSeq.map { case (id, (a, b)) => (id, math.max(a, 1), b) }
-      .toDF("dataset_id", "r_start", "r_end")
-    scoped(s, corpus)
-      .join(broadcast(dim), "dataset_id")
-      .where(col("rx_pos1").between(col("r_start"), col("r_end")))
-      .select(col("file"), col("dataset_id"), col("ds_pos"),
-        col("rx_pos1"), col("reaction_id"), col("success"))
+    val bounds = element_at(
+      typedlit(ranges.map { case (id, (a, b)) => id -> (math.max(a, 1), b) }),
+      col("dataset_id"))
+    catalog(s, corpus)
+      .where(col("rx_pos1").between(bounds("_1"), bounds("_2")))
       .orderBy("ds_pos", "rx_pos1")
   }
 
@@ -91,8 +110,9 @@ object OrdApi {
   def singleTarget(
       s: SparkSession, datasetId: String, rxIndex: Int,
       corpus: Option[String] = None): DataFrame =
-    scoped(s, corpus)
+    catalog(s, corpus)
       .where(col("dataset_id") === datasetId && col("rx_pos1") === rxIndex)
+      .orderBy("ds_pos", "rx_pos1")
 
   /** The reference's SAVE step (`json.dump(data, f, indent=2,
     * ensure_ascii=False)`, web_scrpaer_2.py:545-548): write the selected
@@ -103,7 +123,58 @@ object OrdApi {
     * Driver-side by design: this is where a curated, already-small
     * result leaves the cluster — the reference's output files are ≤650 KB.
     * Bulk exports belong to the distributed sink
-    * (OrdPipeline.ordS6Sink / DataFrameWriter). */
+    * (OrdPipeline.ordS6Sink / DataFrameWriter). Two jobs: the row-cap
+    * guard, then the collect; datasets are put in (file, ds_pos) order
+    * on the driver, which the guard has already bounded. */
+  def saveFormatted(
+      s: SparkSession, path: String,
+      corpus: Option[String] = None, ids: Seq[String] = Nil): Unit = {
+    import s.implicits._
+    val scoped = datasets(s, corpus)
+    val df =
+      if (ids.isEmpty) scoped else scoped.where(col("dataset_id").isin(ids: _*))
+    // this sink collect()s to the driver by design (single pretty-printed
+    // golden file); pointing it at an amplified fixture must fail fast
+    // with a clear message, not OOM the driver. Per-partition sums folded
+    // on the driver: one job, no exchange, and only `rx_pos` is read.
+    val totalRx = df
+      .select(coalesce(size(col("reactions.rx_pos")), lit(0)).cast("long"))
+      .as[Long].rdd.fold(0L)(_ + _)
+    val cap = OrdApi.saveMaxRows
+    if (totalRx > cap)
+      throw new IllegalArgumentException(
+        s"saveFormatted: selection has $totalRx reactions, above the " +
+          s"driver-side cap of $cap (this sink collects to the " +
+          "driver for a single formatted JSON file). Narrow the selection " +
+          "with corpus/ids, raise -Dgraft.ord.saveMaxRows if the driver " +
+          "heap allows, or use the distributed sink (OrdPipeline.ordS6Sink).")
+    val selected = df.as[OrdDataset].collect().toSeq.sortBy(d => (d.file, d.ds_pos))
+    // the output document is a map keyed by dataset_id — the same id from
+    // two source files cannot be represented (renderFile would silently
+    // keep only the last); fail loudly instead of losing data
+    val dupes = selected.groupBy(_.dataset_id).filter(_._2.size > 1)
+    if (dupes.nonEmpty)
+      throw new IllegalArgumentException(
+        "saveFormatted: dataset_id(s) appear in multiple source files and " +
+          s"would collide in one JSON document: ${dupes.keys.mkString(", ")} — " +
+          "scope with corpus=Some(file) or disjoint ids")
+    OrdJson.writeFile(path, selected)
+  }
+}
+
+/** The API over the golden-derived fixture (`OrdFixtures.nestedPath`),
+  * which the first request of a process stages. */
+object OrdApi extends OrdApi(s => {
+  OrdFixtures.ensure(s)
+  OrdFixtures.nestedPath
+}) {
+
+  private val schema: StructType = Encoders.product[OrdDataset].schema
+
+  /** The same modes and SAVE step over any nested parquet with the
+    * fixture's schema, read as it is (nothing staged). */
+  private[graft] def over(nestedPath: String): OrdApi = new OrdApi(_ => nestedPath)
+
   /** Driver-materialization guard for [[saveFormatted]]: max reaction
     * rows it will `collect()`. Overridable via `-Dgraft.ord.saveMaxRows=N`
     * for a host that KNOWS its driver heap; the default comfortably
@@ -112,37 +183,4 @@ object OrdApi {
     sys.props.get("graft.ord.saveMaxRows")
       .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       .getOrElse(200_000L)
-
-  def saveFormatted(
-      s: SparkSession, path: String,
-      corpus: Option[String] = None, ids: Seq[String] = Nil): Unit = {
-    OrdFixtures.ensure(s)
-    import s.implicits._
-    var df = s.read.parquet(OrdFixtures.nestedPath)
-    corpus.foreach(f => df = df.where(col("file") === f))
-    if (ids.nonEmpty) df = df.where(col("dataset_id").isin(ids: _*))
-    // this sink collect()s to the driver by design (single pretty-printed
-    // golden file); pointing it at an amplified fixture must fail fast
-    // with a clear message, not OOM the driver
-    val rxRow = df.agg(sum(size(col("reactions")))).head()
-    val totalRx = if (rxRow.isNullAt(0)) 0L else rxRow.getLong(0)
-    if (totalRx > saveMaxRows)
-      throw new IllegalArgumentException(
-        s"saveFormatted: selection has $totalRx reactions, above the " +
-          s"driver-side cap of $saveMaxRows (this sink collects to the " +
-          "driver for a single formatted JSON file). Narrow the selection " +
-          "with corpus/ids, raise -Dgraft.ord.saveMaxRows if the driver " +
-          "heap allows, or use the distributed sink (OrdPipeline.ordS6Sink).")
-    val datasets = df.orderBy("file", "ds_pos").as[OrdDataset].collect().toSeq
-    // the output document is a map keyed by dataset_id — the same id from
-    // two source files cannot be represented (renderFile would silently
-    // keep only the last); fail loudly instead of losing data
-    val dupes = datasets.groupBy(_.dataset_id).filter(_._2.size > 1)
-    if (dupes.nonEmpty)
-      throw new IllegalArgumentException(
-        "saveFormatted: dataset_id(s) appear in multiple source files and " +
-          s"would collide in one JSON document: ${dupes.keys.mkString(", ")} — " +
-          "scope with corpus=Some(file) or disjoint ids")
-    OrdJson.writeFile(path, datasets)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ord
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Executable CLI over [[OrdApi]] — the reference's interactive scraper
   * configuration (`/root/reference/web_scrpaer_2.py:291-334,509-527`)
@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   3|range    dsStart dsEnd rxStart rxEnd
   *   4|custom   id=start-end[,id=start-end...]
   *   5|single   dsIndex [rxIndex]            (reference default rx = 1)
-  * Options: --corpus <golden-file>   scope id-addressed modes to a file
+  * Options: --corpus <golden-file>   scope every mode to a file (datasets
+  *                                   numbered within it)
   *          --save <path>            write the byte-exact formatted JSON
   *          --out <dir>              write result rows as TSV (distributed)
   * }}}
@@ -38,10 +39,11 @@ object OrdMain {
   }
 
   /** Testable core: parses argv (or prompts via `readLine` when argv is
-    * empty, mirroring web_scrpaer_2.py:291-334), runs the mode, prints a
-    * row summary, and honors --save/--out. */
+    * empty, mirroring web_scrpaer_2.py:291-334), runs the mode on `api`,
+    * prints a row summary, and honors --save/--out. */
   private[graft] def run(
-      s: SparkSession, argv: Seq[String], readLine: () => String): Unit = {
+      s: SparkSession, argv: Seq[String], readLine: () => String,
+      api: OrdApi = OrdApi): Unit = {
     val (flags, pos) = parseFlags(argv)
     val mode = pos.headOption.getOrElse(prompt(readLine,
       "Enter mode (1-5): "))
@@ -52,8 +54,8 @@ object OrdMain {
         val b = pos.lift(2).orElse(ask(readLine,
           "End dataset index (1-based, Enter for All): "))
         (a, b) match {
-          case (None, None) => scopedAll(s, flags.get("corpus"))
-          case _ => OrdApi.uniformRange(s, a.fold(1)(_.toInt),
+          case (None, None) => api.allReactions(s, flags.get("corpus"))
+          case _ => api.uniformRange(s, a.fold(1)(_.toInt),
             b.fold(Int.MaxValue)(_.toInt), 1, Int.MaxValue,
             flags.get("corpus"))
         }
@@ -61,12 +63,12 @@ object OrdMain {
         val ids = pos.lift(1).getOrElse(prompt(readLine,
           "Enter dataset IDs (comma-separated): "))
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        OrdApi.specificDatasets(s, ids, flags.get("corpus"))
+        api.specificDatasets(s, ids, flags.get("corpus"))
       case "3" | "range" =>
         def arg(i: Int, q: String): Int =
           pos.lift(i).orElse(ask(readLine, q)).fold(
             if (i % 2 == 1) 1 else Int.MaxValue)(_.toInt)
-        OrdApi.uniformRange(s,
+        api.uniformRange(s,
           arg(1, "Start dataset index: "), arg(2, "End dataset index: "),
           arg(3, "Start reaction index: "), arg(4, "End reaction index: "),
           flags.get("corpus"))
@@ -77,17 +79,17 @@ object OrdMain {
           val Array(a, b) = r.split("-")
           id.trim -> (a.trim.toInt, b.trim.toInt)
         }.toMap
-        OrdApi.customRanges(s, ranges, flags.get("corpus"))
+        api.customRanges(s, ranges, flags.get("corpus"))
       case "5" | "single" =>
         val d = pos.lift(1).getOrElse(prompt(readLine,
           "Enter Dataset Index (e.g., 50): ")).toInt
         val r = pos.lift(2).orElse(ask(readLine,
           "Enter Reaction Index (e.g., 1): ")).fold(1)(_.toInt)
         // the reference's degenerate range
-        OrdApi.uniformRange(s, d, d, r, r, flags.get("corpus"))
+        api.uniformRange(s, d, d, r, r, flags.get("corpus"))
       case other =>
         System.err.println(s"unknown mode '$other', defaulting to all")
-        scopedAll(s, flags.get("corpus"))
+        api.allReactions(s, flags.get("corpus"))
     }
     val rows = df.collect() // curated golden-scale result, ≤ a few hundred rows
     println(s"ROWS=${rows.length}")
@@ -102,15 +104,10 @@ object OrdMain {
       // mode touched (byte-exact writer; collides loudly on dup ids)
       val ids = rows.map(r =>
         r.getString(r.fieldIndex("dataset_id"))).distinct.toSeq
-      OrdApi.saveFormatted(s, path, flags.get("corpus"), ids)
+      api.saveFormatted(s, path, flags.get("corpus"), ids)
       println(s"SAVED=$path")
     }
   }
-
-  private def scopedAll(s: SparkSession, corpus: Option[String]): DataFrame =
-    corpus.fold(OrdApi.allReactions(s))(f =>
-      OrdApi.allReactions(s).where(org.apache.spark.sql.functions
-        .col("file") === f))
 
   private def parseFlags(
       argv: Seq[String]): (Map[String, String], Seq[String]) = {
