@@ -271,11 +271,8 @@ object RetrievalOps {
     graft.streaming.DocStreams.deleteTree(vecWork)
     LexStreams.drain(s, d, lexWork)
     VecStreams.e2fDrain(s, d, vecWork)
-    def pinned(work: java.nio.file.Path, tree: String): Seq[String] = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, DeclaredHybridSnap)
-        .map(n => t.resolve(n).toString)
-    }
+    def pinned(work: java.nio.file.Path, tree: String): Seq[String] =
+      SnapshotFolds.pinnedDirs(work.resolve(tree), DeclaredHybridSnap)
     fuseAtDirs(s, d, pinned(lexWork, "segs"), pinned(lexWork, "lens"),
       pinned(vecWork, "folds"))
       .withColumn("snapshot_id", lit(DeclaredHybridSnap))

@@ -165,7 +165,8 @@ object LexStreams {
 
   /** CDC landing for the delete lifecycle: the 4 arrival buckets plus 2
     * DELETE buckets — CDC-style delete records (key present, payload
-    * NULL), landing as micro-batches 4 and 5 ([[Drain.cdcPart]]). */
+    * NULL), landing as micro-batches 4 and 5 ([[Drain.cdcPart]]) and
+    * drained through the upsert verb ([[upsertDrain]]). */
   private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
     Drain.Landing(Staged.landing(
       PathKeys.fixturePath("stream-docs-cdc", dir, "-4"),
@@ -225,6 +226,8 @@ object LexStreams {
   /** One micro-batch fold: tokenize the BATCH's rows map-side, append
     * its postings segment and its doc-length fold (both overwrite-keyed
     * by batch id — replay-idempotent). Exposed for the replay spec.
+    * `ver` stamps both folds with the upsert lifecycle's version column
+    * ([[upsertFoldBatch]]); the append lifecycle writes them ver-less.
     *
     * When the caller already holds the batch's (doc_id, dl) rows from
     * its one bounded collect (`lensRows`), the lens fold is written
@@ -233,19 +236,21 @@ object LexStreams {
     * write is then the trigger's only distributed scan. */
   private[graft] def foldBatch(df: DataFrame, id: Long,
       work: java.nio.file.Path,
-      lensRows: Option[Seq[(Long, Int)]] = None): Unit = {
+      lensRows: Option[Seq[(Long, Int)]] = None,
+      ver: Option[Long] = None): Unit = {
     val s = df.sparkSession
+    val stamp = ver.map(lit(_).as("ver")).toSeq
     val toks = graft.ops.SimOps.tokensArr
     val withLen = df.select(col("doc_id"), toks.as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
     lensRows match {
       case Some(rows) =>
         labeled(s, s"lexfold $id: lens fold (driver rows)") {
-          writeLensLocal(s, rows, None, work.resolve(s"lens/batch=$id"))
+          writeLensLocal(s, rows, ver, work.resolve(s"lens/batch=$id"))
         }
       case None =>
         labeled(s, s"lexfold $id: lens fold") {
-          withLen.select(col("doc_id"), col("dl"))
+          withLen.select(Seq(col("doc_id"), col("dl")) ++ stamp: _*)
             .write.mode("overwrite")
             .parquet(work.resolve(s"lens/batch=$id").toString)
         }
@@ -253,7 +258,7 @@ object LexStreams {
     labeled(s, s"lexfold $id: postings segment") {
       withLen.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
         .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+        .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++ stamp: _*)
         .write.mode("overwrite")
         .parquet(work.resolve(s"segs/batch=$id").toString)
     }
@@ -272,18 +277,13 @@ object LexStreams {
       }
     }
 
-  private def foldDirs(root: java.nio.file.Path): Seq[String] =
-    if (java.nio.file.Files.isDirectory(root))
-      EventStreams.foldDirsToRead(root)
-    else Seq.empty[String]
-
   /** The probe over base + segments: frozen queries, pruned base scan,
     * term-filtered segments, ADDITIVE df/stats merge, top-5. Exposed
     * pre-drain so the visibility spec can probe between folds. */
   private[graft] def probe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithDirs(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")))
+    probeWithDirs(s, foldBaseDir(d), SnapshotFolds.liveDirs(work.resolve("segs")),
+      SnapshotFolds.liveDirs(work.resolve("lens")))
 
   /** Base-only probe against an ARBITRARY layout root — the merge spec
     * probes the merged base (no segments) through this. */
@@ -293,13 +293,10 @@ object LexStreams {
   /** The probe AT a pinned snapshot: both fold trees resolved through
     * their `snap` manifests instead of the current read set. */
   private[graft] def probeAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame = {
-    val segs = work.resolve("segs")
-    val lens = work.resolve("lens")
+      work: java.nio.file.Path, snap: Long): DataFrame =
     probeWithDirs(s, foldBaseDir(d),
-      SnapshotFolds.readManifest(segs, snap).map(n => segs.resolve(n).toString),
-      SnapshotFolds.readManifest(lens, snap).map(n => lens.resolve(n).toString))
-  }
+      SnapshotFolds.pinnedDirs(work.resolve("segs"), snap),
+      SnapshotFolds.pinnedDirs(work.resolve("lens"), snap))
 
   /** The merged (postings, df, stats) relations of base + the given
     * segment/lens dirs, pruned to `terms` — ONE definition for the
@@ -430,8 +427,8 @@ object LexStreams {
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats").select("n_docs")
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .agg(count(lit(1)).as("n_base_postings"))
-    val lensDirs = foldDirs(work.resolve("lens"))
-    val segDirs = foldDirs(work.resolve("segs"))
+    val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
+    val segDirs = SnapshotFolds.liveDirs(work.resolve("segs"))
     require(segDirs.nonEmpty, s"merge gate needs folded segments under $work")
     val arrDocs = s.read.schema(lensSchema).parquet(lensDirs: _*)
       .agg(count(lit(1)).as("n_arr_docs"))
@@ -543,182 +540,21 @@ object LexStreams {
   private[graft] def tombPred(id: org.apache.spark.sql.Column) =
     id % TombMod === TombRes && id < TombBound
 
-  /** One CDC micro-batch fold: upserts (payload present) take the
-    * ordinary [[foldBatch]] path; delete records resolve their doc's
-    * dl against the lens dim ∪ lens folds (a pushed bounded In — the
-    * write-time cost that keeps the PROBE free of any doc-dim access)
-    * and land as a tombstone fold `(doc_id, dl, upto=batchId)`. The
-    * batch-bounded `upto` — not +∞ — is Lucene's delete semantics
-    * exactly: a delete kills the versions OLDER than it, so a doc
-    * RE-ADDED after its delete lives again (spec-pinned through the
-    * shared version-aware probe; pre-upto trees still normalize to +∞
-    * at read). Empty sides write nothing — deterministic under
-    * replay, and an all-delete batch cannot leave schema-less dirs. */
-  private[graft] def cdcFoldBatch(s: SparkSession, df: DataFrame, id: Long,
-      work: java.nio.file.Path, baseRoot: String,
-      bounded: Boolean = true): Unit = {
-    // The lens-dim lookup shared by both paths: resolve the deleting
-    // docs' dl against base lens ∪ lens folds and keep only LIVE priors
-    // (deleting a DEAD doc is a no-op — Lucene: the delete term only
-    // matches live docs; without this, a doc deleted in two batches
-    // would land two upto-distinct tombstones and its statistics weight
-    // would subtract twice). `restrict` narrows to the batch's delete
-    // keys — a pushed In on the bounded path, a semi-join on the
-    // distributed fallback.
-    def livePriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = foldDirs(work.resolve("lens"))
-      val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
-        .withColumn("ver", lit(-1L))
-      val allLens = if (lensDirs.isEmpty) baseLens
-        else baseLens.unionByName(
-          s.read.schema(lensSchema).parquet(lensDirs: _*)
-            .withColumn("ver", lit(0L)))
-      val restricted = restrict(allLens)
-      val tombDirs = foldDirs(work.resolve("tombs"))
-      val live = if (tombDirs.isEmpty) restricted else {
-        val t = versionedTombs(s, tombDirs)
-          .select(col("doc_id").as("t_doc"), col("upto"))
-        restricted.join(broadcast(t),
-          restricted("doc_id") === t("t_doc") && restricted("ver") < t("upto"),
-          "left_anti")
-      }
-      live.select(col("doc_id"), col("dl"), lit(id).as("upto"))
-    }
-    if (bounded) {
-      // ONE bounded collect classifies the batch (r15 optimization
-      // round; was an isEmpty probe + a separate delete-id collect —
-      // two extra jobs per micro-batch): a CDC batch's keys are bounded
-      // by declaration (enforced by the landing-bytes guard since r16),
-      // and only (doc_id, tombstone?) crosses the driver, never the
-      // text payload.
-      val keyed = labeled(s, s"cdc $id: classify collect") {
-        df.select(col("doc_id"), col("text").isNull.as("del"),
-            when(col("text").isNull, lit(0))
-              .otherwise(size(graft.ops.SimOps.tokensArr)).as("dl"))
-          .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2)))
-      }
-      val ups = df.where(col("text").isNotNull)
-      // the classify collect already tokenized the upsert rows map-side:
-      // their (doc_id, dl) pairs feed the lens fold as driver rows, so
-      // the trigger's only distributed scan is the postings write (r16)
-      if (keyed.exists(!_._2))
-        foldBatch(ups, id, work,
-          lensRows = Some(keyed.collect { case (d, false, l) => (d, l) }.toSeq))
-      val delIds = keyed.collect { case (id0, true, _) => id0 }.sorted
-      if (delIds.nonEmpty) {
-        val rows = livePriors(
-          _.where(col("doc_id").isin(delIds.map(Long.box): _*)))
-        // the live-prior relation is ≤ |delIds| rows by construction:
-        // collect once and write the local rows — the isEmpty-then-write
-        // form executed the whole bounded lookup plan twice per batch
-        val collected = labeled(s, s"cdc $id: live-prior lookup") { rows.collect() }
-        if (collected.nonEmpty)
-          labeled(s, s"cdc $id: tombstone fold (driver rows)") {
-            s.createDataFrame(java.util.Arrays.asList(collected: _*), rows.schema)
-              .coalesce(1).write.mode("overwrite")
-              .parquet(work.resolve(s"tombs/batch=$id").toString)
-          }
-      }
-    } else {
-      // DISTRIBUTED FALLBACK (r15 verdict ask #5): no driver collect
-      // anywhere — classification via isEmpty probes, the delete-key
-      // restriction as a semi-join, and the tombstone write guarded by
-      // a second execution of the bounded lookup (the pre-r15 shape:
-      // two extra jobs per trigger, paid only on batches too large to
-      // collect). Row-identical to the bounded path (spec-pinned).
-      val ups = df.where(col("text").isNotNull)
-      if (!ups.isEmpty) foldBatch(ups, id, work)
-      val delKeys = df.where(col("text").isNull).select("doc_id")
-      if (!delKeys.isEmpty) {
-        val rows = livePriors(_.join(delKeys, Seq("doc_id"), "left_semi"))
-        if (!rows.isEmpty)
-          rows.coalesce(1).write.mode("overwrite")
-            .parquet(work.resolve(s"tombs/batch=$id").toString)
-      }
-    }
-  }
-
-  /** The CDC drain; `maxBytes` is the bounded-batch guard's bound,
-    * applied to the staged landing. */
-  private[graft] def cdcDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path,
-      maxBytes: Long = StreamTune.BoundedLandingBytes): Unit =
-    StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
-      val root = foldBaseDir(d)
-      Drain.manifestedLanding(s, cdcLanding(s, d), work, Seq(
-          Drain.Tree("segs", segSchema), Drain.Tree("lens", lensSchema),
-          Drain.Tree("tombs", tombSchema)), maxBytes) {
-        cdcFoldBatch(s, _, _, work, root, _)
-      }
-    }
-
-  /** The TOMBSTONE-AWARE probe: live postings = (base ∪ segments)
-    * ANTI-JOINED against the broadcast tombstone set; df for the query
-    * terms COUNTS THE LIVE POSTING ROWS the scan already reads (the
-    * one statistic the stale base df dim can no longer supply once a
-    * delete lands); n_docs/sum_dl merge ADDITIVELY with the tombstone
-    * rows entering NEGATED — base + arrivals − deletes in one bounded
-    * aggregate. Tombstones dedup by doc_id at read (a doc deleted in
-    * two batches subtracts once). */
-  private[graft] def probeWithTombs(s: SparkSession, root: String,
-      segDirs: Seq[String], lensDirs: Seq[String],
-      tombDirs: Seq[String]): DataFrame =
-    // a DELETE is an upsert without a co-shipped new version: the
-    // version-less delete trees normalize to ver 0 / upto +∞ inside
-    // the shared version-aware probe (0 < +∞ kills every version —
-    // exactly the blind anti-join this function used to spell out)
-    probeWithVersions(s, root, segDirs, lensDirs, tombDirs)
-
-  private[graft] def tombProbe(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame =
-    probeWithTombs(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")), foldDirs(work.resolve("tombs")))
-
-  /** The tombstone probe AT a pinned snapshot: all THREE fold trees
-    * resolve through their `snap` manifests — a doc deleted at batch k
-    * stays visible (and keeps its statistics weight) at snapshots < k,
-    * because the pinned tombstone set simply does not contain it yet.
-    * Same pinning as the upsert lifecycle's (one definition — the
-    * probe normalizes the version-less delete trees itself). */
-  private[graft] def tombProbeAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame =
-    upsertProbeAtSnapshot(s, d, work, snap)
-
-  /** Merge RECONCILIATION: rebuild the base over (base ∪ arrivals) −
-    * tombstones — the Lucene merge that physically drops deleted rows
-    * and re-derives every statistic (and the query set) over the live
-    * corpus. The tombstone folds this reconciled base absorbs would be
-    * deleted with the covered segments in a real lifecycle step. */
-  private[graft] def mergeIntoBaseLive(s: SparkSession, d: String,
-      work: java.nio.file.Path): java.nio.file.Path = {
-    val tombDirs = foldDirs(work.resolve("tombs"))
-    val tombIds =
-      if (tombDirs.isEmpty) Array.empty[Long]
-      else s.read.schema(tombSchema).parquet(tombDirs: _*)
-        .select("doc_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-    val dst = work.resolve("merged")
-    DocStreams.deleteTree(dst)
-    val docs = graft.Tables.spreadIfNarrow(graft.Tables.documents(s, d),
-      col("doc_id"))
-    buildBaseLayout(s, dst.toString,
-      if (tombIds.isEmpty) docs
-      else docs.where(!col("doc_id").isin(tombIds.map(Long.box): _*)))
-    dst
-  }
-
   /** E35d: TOMBSTONE DELETES in the text-index lifecycle (r15 verdict
     * ask #1 — the one production verb the append-only segments lacked:
     * dedup keepers, PII scrubs, and takedowns REMOVE documents). The
     * CDC drain replays 4 arrival batches then 2 DELETE batches
     * ([[tombPred]]: docs 3, 10 among the arrivals; 17, 24, 31, 38, 45
-    * in the base); each delete lands as a live-docs tombstone fold
-    * `(doc_id, dl)` beside the segments — Lucene's deletions file —
-    * honored at probe ([[probeWithTombs]]: anti-join, live df, negated
-    * stats), RECONCILED at merge ([[mergeIntoBaseLive]], spec-pinned
-    * physical absence), and PINNED by the snapshot manifests (a doc
-    * deleted at batch k stays visible at snapshots < k — spec-pinned
-    * through [[tombProbeAtSnapshot]]).
+    * in the base) through the ONE mutation verb, [[upsertFoldBatch]]: a
+    * delete is an upsert without a co-shipped new version, so each
+    * delete record tombstones its doc's latest live prior as
+    * `(doc_id, dl, upto=batch)` beside the segments — Lucene's
+    * deletions file — and folds nothing. The tombstones are honored at
+    * probe ([[probeWithVersions]]: anti-join, live df, negated stats),
+    * RECONCILED at merge ([[mergeIndexLive]], spec-pinned physical
+    * absence), and PINNED by the snapshot manifests (a doc deleted at
+    * batch k stays visible at snapshots < k — spec-pinned through
+    * [[upsertProbeAtSnapshot]]).
     *
     * The DuckDB oracle recomputes BM25 over (corpus − tombstones) with
     * the query set still frozen on the FULL pre-delete base — so a
@@ -734,8 +570,8 @@ object LexStreams {
     ensureFoldBase(s, dir)
     val work = PathKeys.fixturePath("stream-e35d", dir, "-4")
     DocStreams.deleteTree(work)
-    cdcDrain(s, dir, work)
-    tombProbe(s, dir, work)
+    upsertDrain(s, dir, work, cdcLanding(s, dir))
+    upsertProbe(s, dir, work)
   }
 
   // ───────────────────────── upserts (e35u) ───────────────────────────
@@ -764,32 +600,34 @@ object LexStreams {
 
   /** One UPSERT micro-batch fold — Lucene's updateDocument = DELETE
     * any prior version of the key, then ADD the new one, atomically
-    * within the batch:
+    * within the batch. The ONE mutation verb of the text index: a CDC
+    * delete record (`text` NULL) is an upsert without a new version.
     *
-    *  1. resolve each incoming doc's LATEST PRIOR version (base lens
-    *     dim at ver −1 ∪ the lens folds, max-ver row per doc — a
+    *  1. resolve each incoming doc's LATEST LIVE PRIOR version (base
+    *     lens dim at ver −1 ∪ the lens folds, max-ver row per doc — a
     *     pushed bounded In over the batch's ids) and tombstone it as
     *     `(doc_id, dl, upto=batchId)`: the tombstone kills exactly the
     *     versions OLDER than this batch (`ver < upto`), never the row
-    *     set it ships with. A first-time arrival resolves no prior and
-    *     writes no tombstone — adds and updates are ONE verb, exactly
-    *     updateDocument;
-    *  2. fold the new version's postings segment and lens rows, each
-    *     stamped `ver = batchId` (base rows read as ver −1).
+    *     set it ships with. A first-time arrival — or a delete of a key
+    *     that is already dead — resolves no prior and writes no
+    *     tombstone: adds, updates and deletes are ONE verb;
+    *  2. fold the new versions (the rows whose `text` is present) with
+    *     [[foldBatch]], stamped `ver = batchId`. An all-delete batch
+    *     folds nothing, so it cannot leave empty fold dirs.
     *
     * Prior-resolution safety: the lookup filters `ver < id`, so it
     * sees the PRE-batch read set even when this batch's own folds are
-    * already on disk (a crashed earlier attempt — or, since r16, the
-    * bounded fast path, which writes the lens fold before the lookup).
-    * Replay idempotence is spec-pinned.
+    * already on disk (a crashed earlier attempt). Lens folds written
+    * without `ver` (the append lifecycle's [[foldBatch]]) read as ver 0,
+    * the [[versionedSegs]] normalization. Replay idempotence is
+    * spec-pinned.
     *
-    * Bounded batches (the landing-bytes guard) run: one (doc_id, dl)
-    * collect (the map-side tokenize rides the collect the old shape
-    * already paid for ids alone) → local lens write → pushed-In prior
-    * lookup → local tombstone write → postings write — ONE distributed
-    * scan per trigger. Unbounded batches take the fully distributed
+    * Bounded batches (the landing-bytes guard) run: one (doc_id,
+    * delete?, dl) collect → pushed-In prior lookup → local tombstone
+    * write → local lens write → postings write — ONE distributed scan
+    * per trigger. Unbounded batches take the fully distributed
     * fallback: no driver collect anywhere (semi-join prior restriction,
-    * isEmpty-guarded tombstone write), row-identical by spec. */
+    * isEmpty-guarded writes), row-identical by spec. */
   private[graft] def upsertFoldBatch(s: SparkSession, df: DataFrame, id: Long,
       work: java.nio.file.Path, baseRoot: String,
       bounded: Boolean = true): Unit = {
@@ -797,18 +635,17 @@ object LexStreams {
     // (`ver < id`); `restrict` narrows to the batch's keys — pushed In
     // on the bounded path, semi-join on the fallback. The prior must be
     // LIVE: updateDocument's delete term matches live docs only —
-    // re-adding a DELETED key must not tombstone the dead version
-    // again, or its statistics weight would subtract twice (the
-    // delete-then-re-add double-subtract, spec-pinned).
+    // re-adding (or re-deleting) a DELETED key must not tombstone the
+    // dead version again, or its statistics weight would subtract twice
+    // (the delete-then-re-add double-subtract, spec-pinned).
     def latestPriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = foldDirs(work.resolve("lens"))
+      val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
       val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
         .withColumn("ver", lit(-1L))
       val allLens = if (lensDirs.isEmpty) baseLens
-        else baseLens.unionByName(
-          s.read.schema(lensVerSchema).parquet(lensDirs: _*))
+        else baseLens.unionByName(versionedLens(s, lensDirs))
       val preBatch = restrict(allLens).where(col("ver") < id)
-      val tombDirs = foldDirs(work.resolve("tombs"))
+      val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
       val live = if (tombDirs.isEmpty) preBatch else {
         val t = versionedTombs(s, tombDirs)
           .select(col("doc_id").as("t_doc"), col("upto"))
@@ -822,25 +659,20 @@ object LexStreams {
         .where(col("rn") === 1)
         .select(col("doc_id"), col("dl"), lit(id).as("upto"))
     }
-    val toks = graft.ops.SimOps.tokensArr
-    val withLen = df.select(col("doc_id"), toks.as("w"))
-      .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
+    val tombDst = work.resolve(s"tombs/batch=$id").toString
+    val ups = df.where(col("text").isNotNull)
     if (bounded) {
-      // The batch's one bounded collect now carries (doc_id, dl) — the
-      // map-side tokenize rides the collect the old shape already paid
-      // for the ids alone, and the lens fold is then written from
-      // driver rows instead of a second scan+tokenize+write job (r16,
-      // verdict ask #1): per trigger, the postings segment is the only
-      // distributed scan left.
-      val collected = labeled(s, s"upsert $id: ids+dl collect") {
-        df.select(col("doc_id"), size(toks).as("dl"))
-          .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      // ONE bounded collect classifies the batch and carries each new
+      // version's dl (the map-side tokenize rides the collect); only
+      // (doc_id, delete?, dl) crosses the driver, never the text
+      val keyed = labeled(s, s"upsert $id: classify collect") {
+        df.select(col("doc_id"), col("text").isNull.as("del"),
+            when(col("text").isNull, lit(0))
+              .otherwise(size(graft.ops.SimOps.tokensArr)).as("dl"))
+          .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2))).toSeq
       }
-      if (collected.isEmpty) return
-      labeled(s, s"upsert $id: lens fold (driver rows)") {
-        writeLensLocal(s, collected, Some(id), work.resolve(s"lens/batch=$id"))
-      }
-      val ids = collected.map(_._1).sorted
+      if (keyed.isEmpty) return
+      val ids = keyed.map(_._1).distinct.sorted
       val priorRel = latestPriors(
         _.where(col("doc_id").isin(ids.map(Long.box): _*)))
       // ≤ |ids| rows by construction: collect once and write the
@@ -852,49 +684,36 @@ object LexStreams {
       if (priors.nonEmpty)
         labeled(s, s"upsert $id: tombstone fold (driver rows)") {
           s.createDataFrame(java.util.Arrays.asList(priors: _*), priorRel.schema)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(work.resolve(s"tombs/batch=$id").toString)
+            .coalesce(1).write.mode("overwrite").parquet(tombDst)
         }
-      labeled(s, s"upsert $id: postings segment") {
-        withLen.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-          .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-          .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-            lit(id).as("ver"))
-          .write.mode("overwrite")
-          .parquet(work.resolve(s"segs/batch=$id").toString)
-      }
+      val lensRows = keyed.collect { case (d, false, l) => (d, l) }
+      if (lensRows.nonEmpty)
+        foldBatch(ups, id, work, Some(lensRows), ver = Some(id))
     } else {
       // DISTRIBUTED FALLBACK (r15 verdict ask #5): no driver collect —
       // the prior restriction is a semi-join against the batch keys and
-      // the tombstone write is isEmpty-guarded (re-executes the bounded
-      // lookup, paid only on batches too large to collect). Priors
-      // resolve BEFORE the folds land, the pre-r16 order (the `ver <
-      // id` filter makes either order correct; this one keeps the
-      // fallback byte-identical to the pre-r16 shape).
+      // every write is isEmpty-guarded (re-executes its bounded plan,
+      // paid only on batches too large to collect)
       val priorRel = latestPriors(
         _.join(df.select("doc_id"), Seq("doc_id"), "left_semi"))
       if (!priorRel.isEmpty)
-        priorRel.coalesce(1).write.mode("overwrite")
-          .parquet(work.resolve(s"tombs/batch=$id").toString)
-      withLen.select(col("doc_id"), col("dl"), lit(id).as("ver"))
-        .write.mode("overwrite")
-        .parquet(work.resolve(s"lens/batch=$id").toString)
-      withLen.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-        .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-          lit(id).as("ver"))
-        .write.mode("overwrite")
-        .parquet(work.resolve(s"segs/batch=$id").toString)
+        priorRel.coalesce(1).write.mode("overwrite").parquet(tombDst)
+      if (!ups.isEmpty) foldBatch(ups, id, work, ver = Some(id))
     }
   }
 
+  /** The manifested drain of a CDC landing through [[upsertFoldBatch]]
+    * — e35u's update landing and e35d's delete landing alike;
+    * `maxBytes` is the bounded-batch guard's bound, applied to the
+    * staged landing. */
   private[graft] def upsertDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
+      work: java.nio.file.Path, landing: Drain.Landing,
+      maxBytes: Long = StreamTune.BoundedLandingBytes): Unit =
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
       val root = foldBaseDir(d)
-      Drain.manifestedLanding(s, upsertLanding(s, d), work, Seq(
+      Drain.manifestedLanding(s, landing, work, Seq(
           Drain.Tree("segs", segVerSchema), Drain.Tree("lens", lensVerSchema),
-          Drain.Tree("tombs", tombSchema))) {
+          Drain.Tree("tombs", tombSchema)), maxBytes) {
         upsertFoldBatch(s, _, _, work, root, _)
       }
     }
@@ -911,10 +730,10 @@ object LexStreams {
     * version at the latest dl.
     *
     * Version-LESS trees normalize at read ([[versionedSegs]] /
-    * [[versionedTombs]]): the delete lifecycle's segments read as
-    * ver 0 and its tombstones as upto +∞ — a delete is an upsert
-    * without a co-shipped new version, so ONE probe serves both
-    * verbs. */
+    * [[versionedTombs]]): folds written without a version (the append
+    * lifecycle's [[foldBatch]]) read as ver 0 and tombstones without a
+    * bound as upto +∞, so ONE probe serves every tree this object
+    * writes — e35u's updates and e35d's deletes alike. */
   private[graft] def probeWithVersions(s: SparkSession, root: String,
       segDirs: Seq[String], lensDirs: Seq[String],
       tombDirs: Seq[String]): DataFrame = {
@@ -962,48 +781,50 @@ object LexStreams {
       .withColumn("contrib", LexIndex.bm25Contrib))
   }
 
-  /** The read-side normalization that lets ONE probe serve both the
-    * delete and the upsert lifecycle: a segment tree written without
-    * `ver` (the delete/append folds) reads as ver 0 — older than any
-    * batch-stamped tombstone, newer only than the base's −1. */
+  /** The read-side normalization that lets ONE probe, prior lookup and
+    * merge serve every fold tree: a segment tree written without `ver`
+    * (the append folds) reads as ver 0 — older than any batch-stamped
+    * tombstone, newer only than the base's −1. */
   private def versionedSegs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    // explicit schema: a ver-less tree (the delete/append folds) reads
-    // the missing column as null — coalesce IS the normalization, and
-    // the footer-inference job the schema-less read paid is gone (r16)
+    // explicit schema: a ver-less tree reads the missing column as
+    // null — coalesce IS the normalization, and the footer-inference
+    // job the schema-less read paid is gone (r16)
     s.read.schema(segVerSchema).parquet(dirs: _*)
       .withColumn("ver", coalesce(col("ver"), lit(0L)))
 
-  /** Tombstones without `upto` (the delete lifecycle) read as +∞: a
-    * delete kills every version of its key — an upsert without a
-    * co-shipped new version. */
+  /** [[versionedSegs]]' normalization on the lens folds. */
+  private def versionedLens(s: SparkSession, dirs: Seq[String]): DataFrame =
+    s.read.schema(lensVerSchema).parquet(dirs: _*)
+      .withColumn("ver", coalesce(col("ver"), lit(0L)))
+
+  /** Tombstones without `upto` read as +∞: such a tombstone kills every
+    * version of its key. */
   private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
     s.read.schema(tombSchema).parquet(dirs: _*)
       .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
 
   private[graft] def upsertProbe(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame =
-    probeWithVersions(s, foldBaseDir(d), foldDirs(work.resolve("segs")),
-      foldDirs(work.resolve("lens")), foldDirs(work.resolve("tombs")))
+      work: java.nio.file.Path): DataFrame = {
+    def live(tree: String) = SnapshotFolds.liveDirs(work.resolve(tree))
+    probeWithVersions(s, foldBaseDir(d), live("segs"), live("lens"), live("tombs"))
+  }
 
   /** The version-aware probe AT a pinned snapshot: all three fold
-    * trees resolve through their `snap` manifests — a doc updated at
-    * batch k still serves its OLD version (and its old statistics
-    * weight) at snapshots < k. */
+    * trees resolve through their `snap` manifests — a doc updated (or
+    * deleted) at batch k still serves its OLD version (and its old
+    * statistics weight) at snapshots < k. */
   private[graft] def upsertProbeAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame = {
-    def pinned(tree: String) = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, snap).map(n => t.resolve(n).toString)
-    }
+    def pinned(tree: String) = SnapshotFolds.pinnedDirs(work.resolve(tree), snap)
     probeWithVersions(s, foldBaseDir(d), pinned("segs"), pinned("lens"),
       pinned("tombs"))
   }
 
-  /** Merge reconciliation FROM THE INDEX ITSELF: the updated text
-    * exists only in the stream (the source table still carries the
-    * original), so — unlike [[mergeIntoBaseLive]], which re-reads the
-    * corpus — the upsert merge assembles the new base layout from the
-    * LIVE INDEX ROWS directly: live postings (all terms; the
+  /** Merge reconciliation FROM THE INDEX ITSELF — the one merge of the
+    * mutation lifecycle (e35u's updates, e35d's deletes): the updated
+    * text exists only in the stream (the source table still carries
+    * the original), so the merge assembles the new base layout from the
+    * LIVE INDEX ROWS directly instead of re-reading the corpus: live postings (all terms; the
     * version-aware anti-join at full width), df re-counted from them,
     * stats/lens from the live lens rows, the frozen query set copied
     * forward. Exactly Lucene's segment merge: postings concatenate and
@@ -1014,9 +835,9 @@ object LexStreams {
     val root = foldBaseDir(d)
     val dst = work.resolve("merged")
     DocStreams.deleteTree(dst)
-    val segDirs = foldDirs(work.resolve("segs"))
-    val lensDirs = foldDirs(work.resolve("lens"))
-    val tombDirs = foldDirs(work.resolve("tombs"))
+    val segDirs = SnapshotFolds.liveDirs(work.resolve("segs"))
+    val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
+    val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
       else versionedTombs(s, tombDirs)).distinct()
@@ -1029,17 +850,15 @@ object LexStreams {
       .select(col("term"), col("doc_id"), col("tf"), col("dl"),
         lit(-1L).as("ver"))
     val post = liveOf(if (segDirs.isEmpty) basePost
-      else basePost.unionByName(
-        s.read.schema(segVerSchema).parquet(segDirs: _*)
-          .select("term", "doc_id", "tf", "dl", "ver")))
+      else basePost.unionByName(versionedSegs(s, segDirs)
+        .select("term", "doc_id", "tf", "dl", "ver")))
       .select("term", "doc_id", "tf", "dl")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val baseLens = s.read.schema(lensSchema).parquet(s"$root/lens")
         .withColumn("ver", lit(-1L))
       val lens = liveOf(if (lensDirs.isEmpty) baseLens
-        else baseLens.unionByName(
-          s.read.schema(lensVerSchema).parquet(lensDirs: _*)))
+        else baseLens.unionByName(versionedLens(s, lensDirs)))
         .select("doc_id", "dl")
       lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .coalesce(1).write.mode(SaveMode.Overwrite)
@@ -1096,7 +915,7 @@ object LexStreams {
     ensureFoldBase(s, dir)
     val work = PathKeys.fixturePath("stream-e35u", dir, "-4")
     DocStreams.deleteTree(work)
-    upsertDrain(s, dir, work)
+    upsertDrain(s, dir, work, upsertLanding(s, dir))
     upsertProbe(s, dir, work)
   }
 }

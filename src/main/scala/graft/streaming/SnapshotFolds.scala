@@ -106,6 +106,18 @@ object SnapshotFolds {
     else dirs.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
   }
 
+  /** The CURRENT read set of a fold tree — [[EventStreams.foldDirsToRead]],
+    * empty while the tree does not exist yet (a probe before the first
+    * batch, or a tree its lifecycle never wrote). With [[pinnedDirs]],
+    * the one pair of read sets every fold-layout probe takes. */
+  private[graft] def liveDirs(root: Path): Seq[String] =
+    if (Files.isDirectory(root)) EventStreams.foldDirsToRead(root) else Nil
+
+  /** The read set snapshot `snap` pinned, as paths under `root` (fails
+    * loudly when the manifest expired — [[readManifest]]). */
+  private[graft] def pinnedDirs(root: Path, snap: Long): Seq[String] =
+    readManifest(root, snap).map(root.resolve(_).toString)
+
   /** Every dir name a RETAINED manifest references — the compaction
     * cleanup's spare set. */
   private[graft] def retainedRefs(root: Path): Set[String] =
@@ -116,10 +128,8 @@ object SnapshotFolds {
     * the batch prefix ≤ snap (spec-pinned), regardless of any
     * compaction or later batch that landed since. */
   private[graft] def readAtSnapshot(s: SparkSession, root: Path,
-      snap: Long): DataFrame = {
-    val dirs = readManifest(root, snap).map(root.resolve(_).toString)
-    EventStreams.e63sMerge(s.read.parquet(dirs: _*))
-  }
+      snap: Long): DataFrame =
+    EventStreams.e63sMerge(s.read.parquet(pinnedDirs(root, snap): _*))
 
   /** The e63s drain with manifests: identical fold + compaction calls,
     * plus one manifest write per batch (after its fold lands — the

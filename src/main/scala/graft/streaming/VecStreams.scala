@@ -167,14 +167,9 @@ object VecStreams {
     * recall through its probe knob while reading fewer candidates
     * than one drift-fattened frozen cell. */
   private[graft] def multiprobeCandidatesAt(s: SparkSession, root: String,
-      foldRootOpt: Option[java.nio.file.Path], d: String, nprobe: Int): DataFrame = {
-    val foldDirsIn = foldRootOpt.toSeq.flatMap { foldRoot =>
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
-    }
-    multiprobeCandidatesWithDirs(s, root, foldDirsIn, d, nprobe)
-  }
+      foldRootOpt: Option[java.nio.file.Path], d: String, nprobe: Int): DataFrame =
+    multiprobeCandidatesWithDirs(s, root,
+      foldRootOpt.toSeq.flatMap(SnapshotFolds.liveDirs), d, nprobe)
 
   /** The multiprobe scored relation against an EXPLICIT fold-dir list
     * and a declared query-id bound — e71v probes the pinned manifest
@@ -195,16 +190,11 @@ object VecStreams {
 
   private def scoredAgainst(s: SparkSession, root: String,
       foldRootOpt: Option[java.nio.file.Path], q: DataFrame,
-      cells: Seq[Int]): DataFrame = {
+      cells: Seq[Int]): DataFrame =
     // a probe BEFORE the first arrival batch: base-only (the dir does
     // not exist yet — the e63sResult empty-delta convention)
-    val foldDirs = foldRootOpt.toSeq.flatMap { foldRoot =>
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
-    }
-    scoredWithDirs(s, root, foldDirs, q, cells)
-  }
+    scoredWithDirs(s, root, foldRootOpt.toSeq.flatMap(SnapshotFolds.liveDirs),
+      q, cells)
 
   /** The probe's scored relation against an EXPLICIT fold-dir list —
     * the current read set ([[scoredAgainst]]) or a snapshot manifest's
@@ -298,10 +288,7 @@ object VecStreams {
     val base = s.read.parquet(s"$root/lists")
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
     val foldRoot = work.resolve("folds")
-    val foldDirs =
-      if (java.nio.file.Files.isDirectory(foldRoot))
-        EventStreams.foldDirsToRead(foldRoot)
-      else Seq.empty[String]
+    val foldDirs = SnapshotFolds.liveDirs(foldRoot)
     require(foldDirs.nonEmpty, s"drift gate needs folded arrivals under $foldRoot")
     val arr = s.read.schema(foldSchema).parquet(foldDirs: _*)
       .groupBy("cell").agg(count(lit(1)).as("n_arr"))
@@ -375,10 +362,8 @@ object VecStreams {
       work: java.nio.file.Path, snap: Long): DataFrame = {
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
-    val foldRoot = work.resolve("folds")
-    val dirs = SnapshotFolds.readManifest(foldRoot, snap)
-      .map(n => foldRoot.resolve(n).toString)
-    scoredWithDirs(s, root, dirs, q, cells)
+    scoredWithDirs(s, root, SnapshotFolds.pinnedDirs(work.resolve("folds"), snap),
+      q, cells)
   }
 
   /** The rebuild leg: retrain the full layout (coarse quantizer AND
@@ -408,7 +393,8 @@ object VecStreams {
   /** CDC landing: the 4 arrival buckets plus 2 DELETE buckets (key
     * present, embedding NULL — the CDC delete record), landing as
     * batches 4 and 5 so a snapshot can pin between them
-    * ([[Drain.cdcPart]]). */
+    * ([[Drain.cdcPart]]) and drained through the upsert verb
+    * ([[upsertVecDrain]]). */
   private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
     Drain.Landing(Staged.landing(
       PathKeys.fixturePath("stream-vecs-cdc", dir, "-4"),
@@ -422,115 +408,14 @@ object VecStreams {
       Drain.cdcPart(raw, dels, "vec_id", ArrivalBound)
     }, embSchema)
 
-  /** One CDC micro-batch fold: upserts assign under the frozen
-    * quantizer ([[e2fFoldBatch]]); delete records land as a tombstone
-    * fold `(vec_id, upto=batchId)` — no payload to resolve (an ANN
-    * index has no per-doc statistics to roll back, unlike BM25's dl).
-    * The batch-bounded `upto` is Lucene's delete semantics: a delete
-    * kills versions OLDER than it, so a re-added key lives again
-    * (pre-upto trees normalize to +∞ at read). Empty sides write
-    * nothing — deterministic under replay. */
-  private[graft] def cdcVecFoldBatch(df: DataFrame, id: Long,
-      cents: Seq[(Int, Seq[Double])], work: java.nio.file.Path,
-      bounded: Boolean = true): Unit = {
-    if (bounded) {
-      // ONE bounded collect classifies the batch (r15 optimization
-      // round; was two isEmpty probes — two extra jobs per micro-batch,
-      // one of which re-ran the delete projection for the write): CDC
-      // keys are bounded by declaration (enforced by the landing-bytes
-      // guard since r16) and only (vec_id, tombstone?) crosses the
-      // driver, never the embedding payload.
-      val keyed = df.select(col("vec_id"), col("embedding").isNull.as("del"))
-        .collect().map(r => (r.getLong(0), r.getBoolean(1)))
-      if (keyed.exists(!_._2))
-        e2fFoldBatch(df.where(col("embedding").isNotNull), id, cents, work)
-      val delIds = keyed.collect { case (v, true) => v }.sorted
-      if (delIds.nonEmpty) {
-        val s = df.sparkSession
-        import s.implicits._
-        delIds.toSeq.map((_, id)).toDF("vec_id", "upto")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(work.resolve(s"tombs/batch=$id").toString)
-      }
-    } else {
-      // DISTRIBUTED FALLBACK (r15 verdict ask #5): no driver collect —
-      // isEmpty classification probes and a distributed tombstone write
-      // (the pre-r15 shape: two extra jobs per trigger, paid only on
-      // batches too large to collect). Row-identical to the bounded
-      // path (spec-pinned).
-      val ups = df.where(col("embedding").isNotNull)
-      if (!ups.isEmpty) e2fFoldBatch(ups, id, cents, work)
-      val dels = df.where(col("embedding").isNull)
-        .select(col("vec_id"), lit(id).as("upto"))
-      if (!dels.isEmpty)
-        dels.coalesce(1).write.mode("overwrite")
-          .parquet(work.resolve(s"tombs/batch=$id").toString)
-    }
-  }
-
-  private[graft] def cdcVecDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, embSrc(d)) {
-      val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-      Drain.manifestedLanding(s, cdcLanding(s, d), work, Seq(
-          Drain.Tree("folds", foldSchema), Drain.Tree("tombs", tombSchema))) {
-        cdcVecFoldBatch(_, _, cents, work, _)
-      }
-    }
-
-  /** The live-docs candidate relation: the e2f probe's scored rows
-    * anti-joined against the broadcast tombstone set (deduped by
-    * vec_id at read — a vector deleted in two batches drops once).
-    * Exposed with explicit dir lists so the pinned-snapshot probe and
-    * the spec share one definition. */
-  private[graft] def tombCandidatesWithDirs(s: SparkSession, d: String,
-      foldDirsIn: Seq[String], tombDirs: Seq[String]): DataFrame =
-    // a DELETE is an upsert without a co-shipped new version: the
-    // version-less delete folds read as ver 0 inside the shared
-    // version-aware relation (the LexStreams discipline)
-    upsertCandidatesWithDirs(s, d, foldDirsIn, tombDirs, versioned = false)
-
-  private def treeDirs(work: java.nio.file.Path, tree: String): Seq[String] = {
-    val t = work.resolve(tree)
-    if (java.nio.file.Files.isDirectory(t)) EventStreams.foldDirsToRead(t)
-    else Seq.empty[String]
-  }
-
-  /** The tombstone probe AT a pinned snapshot: BOTH trees resolve
-    * through their manifests — a vector deleted at batch k stays a
-    * candidate at snapshots < k. Same pinning as the upsert
-    * lifecycle's (one definition — the relation normalizes the
-    * version-less delete trees itself). */
-  private[graft] def tombCandidatesAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame =
-    upsertCandidatesAtSnapshot(s, d, work, snap, versioned = false)
-
-  /** Restage RECONCILIATION: retrain the full layout over (base ∪
-    * arrivals) − tombstones — deleted vectors physically absent from
-    * the rebuilt lists, the e2g restage discipline carrying the
-    * live-docs set. */
-  private[graft] def restageLive(s: SparkSession, d: String,
-      work: java.nio.file.Path): java.nio.file.Path = {
-    val tombDirs = treeDirs(work, "tombs")
-    val tombIds =
-      if (tombDirs.isEmpty) Array.empty[Long]
-      else versionedTombs(s, tombDirs).select("vec_id").distinct()
-        .collect().map(_.getLong(0)).sorted
-    val dst = work.resolve("restaged")
-    DocStreams.deleteTree(dst)
-    val corpus = IvfServe.corpusView(s, d)
-    IvfServe.buildTrainedLayout(s, dst.toString,
-      if (tombIds.isEmpty) corpus
-      else corpus.where(!col("vec_id").isin(tombIds.map(Long.box): _*)))
-    dst
-  }
-
   /** E2d: TOMBSTONE DELETES in the vector-index lifecycle (r15 verdict
     * ask #1, vector half). The CDC drain replays the 4 arrival batches
-    * then 2 DELETE batches; each delete lands as a live-docs tombstone
-    * fold `(vec_id)` beside the vector folds, honored at probe (one
-    * broadcast anti-join against the bounded set — the Lucene live-docs
-    * bitmap as a relation), RECONCILED at restage ([[restageLive]],
+    * then 2 DELETE batches through the ONE mutation verb,
+    * [[upsertVecFoldBatch]] — a delete is an upsert without a new
+    * version: each delete lands as a tombstone `(vec_id, upto=batch)`
+    * beside the vector folds, honored at probe (one broadcast anti-join
+    * against the bounded set — the Lucene live-docs bitmap as a
+    * relation), RECONCILED at restage ([[restageFromIndex]],
     * spec-pinned physical absence), and PINNED by the snapshot
     * manifests (deleted at batch k ⇒ still a candidate at snapshots
     * < k — spec-pinned). The quantizer stays frozen: deletes change
@@ -548,9 +433,8 @@ object VecStreams {
     ensureFoldBase(s, dir)
     val work = PathKeys.fixturePath("stream-e2d", dir, "-4")
     DocStreams.deleteTree(work)
-    cdcVecDrain(s, dir, work)
-    SimOps.topK(tombCandidatesWithDirs(s, dir,
-      treeDirs(work, "folds"), treeDirs(work, "tombs")), 3)
+    upsertVecDrain(s, dir, work, cdcLanding(s, dir))
+    upsertProbe(s, dir, work)
   }
 
   // ───────────────────────── upserts (e2u) ────────────────────────────
@@ -585,76 +469,69 @@ object VecStreams {
         .withColumn("embedding", updatedVec(col("embedding"))), "vec_id", ArrivalBound)
     }, embSchema)
 
-  /** One UPSERT micro-batch fold — updateDocument on the ANN index:
-    * every incoming key tombstones UNCONDITIONALLY as `(vec_id,
-    * upto=batch)` (Lucene buffers delete terms without checking
-    * existence; a first-time arrival's tombstone kills nothing — the
-    * anti-join `ver < upto` only ever retires rows that exist), and
-    * the new version assigns under the FROZEN quantizer, stamped
-    * `ver = batch` (base lists read as ver −1). Unlike the text side,
-    * no prior lookup is needed at all: an ANN tombstone carries no
-    * per-doc statistics to roll back (BM25's dl has no analogue). */
+  /** One UPSERT micro-batch fold — updateDocument on the ANN index, and
+    * its ONE mutation verb (a CDC delete record, `embedding` NULL, is an
+    * upsert without a new version): every incoming key tombstones
+    * UNCONDITIONALLY as `(vec_id, upto=batch)` (Lucene buffers delete
+    * terms without checking existence; a first-time arrival's
+    * tombstone kills nothing — the anti-join `ver < upto` only ever
+    * retires rows that exist), and the new versions — the rows with an
+    * embedding — assign under the FROZEN quantizer, stamped
+    * `ver = batch` (base lists read as ver −1). The text index's verb
+    * ([[LexStreams.upsertFoldBatch]]) looks up each key's live prior to
+    * roll back its dl; this one needs no lookup: an ANN tombstone
+    * carries no per-doc statistics (BM25's dl has no analogue), so a
+    * tombstone on a key with no live version is harmless. */
   private[graft] def upsertVecFoldBatch(df: DataFrame, id: Long,
       cents: Seq[(Int, Seq[Double])], work: java.nio.file.Path): Unit = {
     df.select(col("vec_id"), lit(id).as("upto"))
       .write.mode("overwrite")
       .parquet(work.resolve(s"tombs/batch=$id").toString)
-    df.select(col("vec_id"), col("label"), col("embedding"),
+    df.where(col("embedding").isNotNull)
+      .select(col("vec_id"), col("label"), col("embedding"),
         SimOps.bestCentroid(col("embedding").cast("array<double>"), cents)
           .getField("cid").as("cell"), lit(id).as("ver"))
       .write.mode("overwrite")
       .parquet(work.resolve(s"folds/batch=$id").toString)
   }
 
+  /** The manifested drain of a CDC landing through
+    * [[upsertVecFoldBatch]] — e2u's update landing and e2d's delete
+    * landing alike. */
   private[graft] def upsertVecDrain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
+      work: java.nio.file.Path, landing: Drain.Landing): Unit =
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-      Drain.manifested(s, upsertLanding(s, d).stream(s), work, Seq(
+      Drain.manifested(s, landing.stream(s), work, Seq(
           Drain.Tree("folds", foldVerSchema), Drain.Tree("tombs", tombSchema))) {
         upsertVecFoldBatch(_, _, cents, work)
       }
     }
 
-  /** The read-side normalization that lets ONE relation serve both the
-    * delete and the upsert lifecycle (the LexStreams discipline): the
-    * delete lifecycle's fold trees carry no `ver` and read as ver 0 —
-    * older than any batch-stamped tombstone; the upsert lifecycle's
-    * carry it. Both read with their explicit schema (no footer-inference
-    * job); the caller names the lifecycle, so the constant ver 0 stays
-    * visible to the optimizer, which folds `0 < upto` into the tombstone
-    * scan. */
-  private def versionedFolds(s: SparkSession, dirs: Seq[String],
-      versioned: Boolean): DataFrame =
-    if (versioned) s.read.schema(foldVerSchema).parquet(dirs: _*)
-    else s.read.schema(foldSchema).parquet(dirs: _*).withColumn("ver", lit(0L))
+  /** The read-side normalization that lets ONE relation serve every
+    * fold tree (the LexStreams discipline): folds written without `ver`
+    * (the append lifecycle's [[e2fFoldBatch]]) read as ver 0 — older
+    * than any batch-stamped tombstone, newer only than the base's −1.
+    * Explicit schema: the missing column reads as null, and no
+    * footer-inference job runs. */
+  private def versionedFolds(s: SparkSession, dirs: Seq[String]): DataFrame =
+    s.read.schema(foldVerSchema).parquet(dirs: _*)
+      .withColumn("ver", coalesce(col("ver"), lit(0L)))
 
-  /** Tombstones written without `upto` (pre-upto delete trees) read as
-    * +∞: a delete kills every version of its key. */
+  /** Tombstones written without `upto` read as +∞: such a tombstone
+    * kills every version of its key. */
   private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
     s.read.schema(tombSchema).parquet(dirs: _*)
       .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
-
-  /** The PROBE's tombstone read keeps footer inference: a plain `upto`
-    * column lets the optimizer fold the anti-join's `ver < upto` bound
-    * into the tombstone scan's pushed filters (the e2d/e2u plan dumps
-    * pin that shape), which [[versionedTombs]]' coalesce would block. */
-  private def probeTombs(s: SparkSession, dirs: Seq[String]): DataFrame = {
-    val raw = s.read.parquet(dirs: _*)
-    if (raw.columns.contains("upto")) raw
-    else raw.withColumn("upto", lit(Long.MaxValue))
-  }
 
   /** The VERSION-AWARE scored relation: candidates = (base lists at
     * ver −1 ∪ folds) anti-joined against the broadcast tombstones on
     * `vec_id match AND ver < upto` — a superseded version dies, the
     * version shipped with the tombstone's own batch survives. Queries
     * route under the frozen centroids from the ORIGINAL embeddings
-    * (the request owns its vector — the e2d stance). `versioned` names
-    * the lifecycle that wrote the folds (false: the delete lifecycle). */
+    * (the request owns its vector — the e2d stance). */
   private[graft] def upsertCandidatesWithDirs(s: SparkSession, d: String,
-      foldDirsIn: Seq[String], tombDirs: Seq[String],
-      versioned: Boolean = true): DataFrame = {
+      foldDirsIn: Seq[String], tombDirs: Seq[String]): DataFrame = {
     import s.implicits._
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
@@ -665,11 +542,11 @@ object VecStreams {
     val all =
       if (foldDirsIn.isEmpty) base
       else base.unionByName(
-        versionedFolds(s, foldDirsIn, versioned)
+        versionedFolds(s, foldDirsIn)
           .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      else probeTombs(s, tombDirs).select("vec_id", "upto")).distinct()
+      else versionedTombs(s, tombDirs)).distinct()
     val t = tombs.select(col("vec_id").as("t_vec"), col("upto"))
     val live = all.join(broadcast(t),
       all("vec_id") === t("t_vec") && all("ver") < t("upto"), "left_anti")
@@ -683,20 +560,25 @@ object VecStreams {
           .as("cos_sim"))
   }
 
-  /** The version-aware probe AT a pinned snapshot: both trees resolve
-    * through their `snap` manifests — a vector updated at batch k
-    * still serves its OLD version at snapshots < k. */
-  private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long,
-      versioned: Boolean = true): DataFrame = {
-    def pinned(tree: String) = {
-      val t = work.resolve(tree)
-      SnapshotFolds.readManifest(t, snap).map(n => t.resolve(n).toString)
-    }
-    upsertCandidatesWithDirs(s, d, pinned("folds"), pinned("tombs"), versioned)
-  }
+  /** The version-aware top-3 over the current read set of both trees
+    * — e2u's and e2d's declared rows. */
+  private[graft] def upsertProbe(s: SparkSession, d: String,
+      work: java.nio.file.Path): DataFrame =
+    SimOps.topK(upsertCandidatesWithDirs(s, d,
+      SnapshotFolds.liveDirs(work.resolve("folds")),
+      SnapshotFolds.liveDirs(work.resolve("tombs"))), 3)
 
-  /** Restage reconciliation FROM THE INDEX ITSELF: the updated
+  /** The version-aware probe AT a pinned snapshot: both trees resolve
+    * through their `snap` manifests — a vector updated (or deleted) at
+    * batch k still serves its OLD version at snapshots < k. */
+  private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
+      work: java.nio.file.Path, snap: Long): DataFrame =
+    upsertCandidatesWithDirs(s, d,
+      SnapshotFolds.pinnedDirs(work.resolve("folds"), snap),
+      SnapshotFolds.pinnedDirs(work.resolve("tombs"), snap))
+
+  /** Restage reconciliation FROM THE INDEX ITSELF — the one restage of
+    * the mutation lifecycle (e2u's updates, e2d's deletes): the updated
     * embeddings exist only in the stream (the source table still
     * carries the originals), so the upsert restage retrains the full
     * layout over the LIVE INDEX ROWS — (base lists ∪ folds) with
@@ -707,13 +589,13 @@ object VecStreams {
       work: java.nio.file.Path): java.nio.file.Path = {
     import s.implicits._
     val root = foldBaseDir(d)
-    val foldDirsIn = treeDirs(work, "folds")
-    val tombDirs = treeDirs(work, "tombs")
+    val foldDirsIn = SnapshotFolds.liveDirs(work.resolve("folds"))
+    val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
     val base = s.read.parquet(s"$root/lists")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("ver", lit(-1L))
     val all = if (foldDirsIn.isEmpty) base
-      else base.unionByName(versionedFolds(s, foldDirsIn, versioned = true)
+      else base.unionByName(versionedFolds(s, foldDirsIn)
         .select("vec_id", "label", "embedding", "ver"))
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Long)].toDF("vec_id", "upto")
@@ -758,9 +640,8 @@ object VecStreams {
     ensureFoldBase(s, dir)
     val work = PathKeys.fixturePath("stream-e2u", dir, "-4")
     DocStreams.deleteTree(work)
-    upsertVecDrain(s, dir, work)
-    SimOps.topK(upsertCandidatesWithDirs(s, dir,
-      treeDirs(work, "folds"), treeDirs(work, "tombs")), 3)
+    upsertVecDrain(s, dir, work, upsertLanding(s, dir))
+    upsertProbe(s, dir, work)
   }
 
   // ───────────────────────── tiered fold merge (e2tm) ─────────────────

@@ -35,7 +35,7 @@ class AqeSkewSpec extends AnyFunSuite {
       // hot entity actually has. Rewritten EVERY run (~1 s) — an
       // existence gate would silently pin the test to a stale
       // distribution after the generator expression changes.
-      val fixDir = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures") +
+      val fixDir = graft.util.PathKeys.fixtureRoot +
         "/skewed_fact"
       spark.range(200000)
         .select((col("id") % 1000).cast("int").as("noise"),

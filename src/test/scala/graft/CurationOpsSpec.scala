@@ -227,9 +227,7 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(total == graft.Tables.documents(spark, sf).count(),
       "admitted + rejected must partition the corpus")
     // verdict parity: the drained per-doc flags equal the batch rule set
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e10s", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e10s", sf, "-4")
     val drained = graft.streaming.DocStreams.drainedGate(spark, work)
       .select("doc_id", "passes_repetition")
     val batch = CurationOps.repetitionMetrics(graft.Tables.documents(spark, sf))
@@ -245,9 +243,7 @@ class CurationOpsSpec extends AnyFunSuite {
     val work = base.resolve("work")
     Files.createDirectories(landing)
     graft.streaming.DocStreams.docsStreamBucketed(spark, sf, 4) // ensure staging
-    val staged = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+    val staged = graft.util.PathKeys.fixturePath("stream-docs-bucketed", sf, "-4")
     val parts = Files.list(staged)
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .sorted().toArray.map(_.asInstanceOf[java.nio.file.Path])

@@ -20,7 +20,7 @@ class DedupClusterSpec extends AnyFunSuite {
     * chain-adjacent: one component of diameter 9), plus a 5-doc
     * exact-duplicate clique, plus 3 singletons that must not appear. */
   private lazy val fixtureDir: String = {
-    val dir = "/root/repo/target/fixtures/test-e16chain"
+    val dir = s"${graft.util.PathKeys.fixtureRoot}/test-e16chain"
     val chain = (0 until 10).map { i =>
       val toks = (4 * i until 4 * i + 12).map(t => f"tok$t%03d")
       (100L + i, toks.mkString(" "), "en", "chain", toks.mkString(" ").length.toLong)

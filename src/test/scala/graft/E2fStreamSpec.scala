@@ -120,9 +120,7 @@ class E2fStreamSpec extends AnyFunSuite {
       assert(declared.forall(_.last == VecStreams.DeclaredVecSnap))
       // SURVIVAL: the drain's work dir now holds a compact=2 covering
       // batches 0..2, yet the pinned dirs must still resolve
-      val work = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e2z", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.PathKeys.fixturePath("stream-e2z", sf, "-4")
       val foldRoot = work.resolve("folds")
       assert(java.nio.file.Files.isDirectory(foldRoot.resolve("compact=2")),
         "batch 3 must have compacted the earlier batches")
@@ -169,13 +167,13 @@ class E2fStreamSpec extends AnyFunSuite {
         .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
       VecStreams.e2fFoldBatch(q0, 0L, cs, work)
       def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
-      val before = SimOps.topK(VecStreams.tombCandidatesWithDirs(
+      val before = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
           spark, sf, dirs("folds"), Nil), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(before.head.getLong(2) == 999999L && before.head.getDouble(3) == 1.0)
       Seq(999999L).toDF("vec_id")
         .write.parquet(work.resolve("tombs/batch=1").toString)
-      val after = SimOps.topK(VecStreams.tombCandidatesWithDirs(
+      val after = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
           spark, sf, dirs("folds"), dirs("tombs")), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
@@ -191,11 +189,9 @@ class E2fStreamSpec extends AnyFunSuite {
     assert(declared.nonEmpty)
     assert(!declared.exists(r => tombIds(r(2).asInstanceOf[Long])),
       "no tombstoned vector may be served")
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2d", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e2d", sf, "-4")
     def cands(snap: Long) =
-      VecStreams.tombCandidatesAtSnapshot(spark, sf, work, snap)
+      VecStreams.upsertCandidatesAtSnapshot(spark, sf, work, snap)
         .collect().map(_.toSeq).toSet
     // snapshot 3 = pre-delete; snapshot 4 = batch-4 deletes only;
     // snapshot 5 = all. The fold content is identical across the three
@@ -214,7 +210,7 @@ class E2fStreamSpec extends AnyFunSuite {
     assert(cur.exists(_(0) == 3L), "deleted vec 3 must still query")
     // RESTAGE RECONCILIATION: the rebuilt lists physically drop the
     // tombstoned vectors
-    val restaged = VecStreams.restageLive(spark, sf, work)
+    val restaged = VecStreams.restageFromIndex(spark, sf, work)
     val lists = spark.read.parquet(restaged.resolve("lists").toString)
     assert(lists.where(col("vec_id").isin(tombIds.toSeq.map(Long.box): _*))
       .count() == 0, "restage must physically drop tombstoned vectors")
@@ -229,44 +225,15 @@ class E2fStreamSpec extends AnyFunSuite {
       VecStreams.e2fFoldBatch(arrivals(), 0L, cs, work)
       val del = Seq((3L, null.asInstanceOf[Array[Float]], null.asInstanceOf[java.lang.Integer]))
         .toDF("vec_id", "embedding", "label")
-      VecStreams.cdcVecFoldBatch(del, 1L, cs, work)
+      VecStreams.upsertVecFoldBatch(del, 1L, cs, work)
       def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
-      def probed() = SimOps.topK(VecStreams.tombCandidatesWithDirs(
+      def probed() = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
           spark, sf, dirs("folds"), dirs("tombs")), 3)
         .collect().map(_.toSeq).toSeq
       val once = probed()
-      VecStreams.cdcVecFoldBatch(del, 1L, cs, work)
+      VecStreams.upsertVecFoldBatch(del, 1L, cs, work)
       assert(probed() == once, "a replayed delete batch must overwrite, never stack")
     } finally graft.streaming.DocStreams.deleteTree(work)
-  }
-
-  test("e2d: the unbounded-batch fallback is row-identical to the bounded path") {
-    // the landing-bytes guard (r15 verdict ask #5) on the vector CDC
-    // fold: oversized batches classify via isEmpty probes and write
-    // tombstones distributed — same rows as the bounded collect path
-    val cs = cents()
-    val (wA, wB) = (freshWork(), freshWork())
-    try {
-      import spark.implicits._
-      val del = Seq((3L, null.asInstanceOf[Array[Float]], null.asInstanceOf[java.lang.Integer]))
-        .toDF("vec_id", "embedding", "label")
-      for ((w, b) <- Seq((wA, true), (wB, false))) {
-        VecStreams.cdcVecFoldBatch(arrivals(), 0L, cs, w, bounded = b)
-        VecStreams.cdcVecFoldBatch(del, 1L, cs, w, bounded = b)
-      }
-      def probed(w: java.nio.file.Path) = {
-        def dirs(t: String) = EventStreams.foldDirsToRead(w.resolve(t))
-        SimOps.topK(VecStreams.tombCandidatesWithDirs(
-            spark, sf, dirs("folds"), dirs("tombs")), 3)
-          .collect().map(_.toSeq).toSeq
-      }
-      assert(probed(wA) == probed(wB), "cdcVecFoldBatch fallback diverged")
-      def tombs(w: java.nio.file.Path) = spark.read
-        .parquet(w.resolve("tombs/batch=1").toString)
-        .collect().map(_.toSeq).toSet
-      assert(tombs(wA) == tombs(wB), "vec tombstone rows diverged")
-    } finally { graft.streaming.DocStreams.deleteTree(wA)
-      graft.streaming.DocStreams.deleteTree(wB) }
   }
 
   test("e2u: an upsert supersedes the prior version — the new vector serves, the old never does") {
@@ -333,9 +300,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val declared = VecStreams.e2uVecUpsert(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(declared.nonEmpty)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e2u", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e2u", sf, "-4")
     // snapshot 3 — before any update batch — equals the e2f
     // append-lifecycle rows exactly
     val pre = graft.ops.SimOps.topK(
@@ -393,9 +358,7 @@ class E2fStreamSpec extends AnyFunSuite {
           "drift-gated restage retrains the base)")
       // the read set collapsed to ONE dir; pinned snapshots keep
       // resolving (manifest-referenced dirs were spared)
-      val work = Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e2tm", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.PathKeys.fixturePath("stream-e2tm", sf, "-4")
       val t = work.resolve("folds")
       val dirs = EventStreams.foldDirsToRead(t)
       assert(dirs.size == 1, s"fold read set must collapse to one dir: $dirs")
@@ -405,5 +368,53 @@ class E2fStreamSpec extends AnyFunSuite {
       pinned.foreach(n => assert(Files.isDirectory(t.resolve(n)),
         s"tier merge must spare manifest-referenced dir $n"))
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
+  }
+
+  test("a CDC update record supersedes its key's live version and a delete " +
+      "record drops its key — through the verb the e2d drain runs") {
+    // A CDC batch re-arrives one base key and one earlier arrival
+    // (embedding negated); the next deletes a third key. All three are
+    // chosen among the probe's candidates, so a stale version or an
+    // undeleted key would show.
+    val cs = cents()
+    val (work, ref) = (freshWork(), freshWork())
+    try {
+      def cands(w: java.nio.file.Path) = VecStreams.upsertCandidatesWithDirs(spark, sf,
+          graft.streaming.SnapshotFolds.liveDirs(w.resolve("folds")),
+          graft.streaming.SnapshotFolds.liveDirs(w.resolve("tombs")))
+        .collect().map(_.toSeq).toSet
+      def candId(r: Seq[Any]) = r(1).asInstanceOf[Long]
+      VecStreams.upsertVecFoldBatch(arrivals(), 0L, cs, work)
+      val pre = cands(work)
+      val (arrIds, baseIds) = pre.map(candId).toSeq.sorted
+        .partition(_ < VecStreams.ArrivalBound)
+      assert(arrIds.size >= 2 && baseIds.nonEmpty, s"too few candidates: $pre")
+      val reArrived = Set(baseIds.head, arrIds.head)
+      val gone = arrIds(1)
+      val upd = Tables.embeddings(spark, sf)
+        .where(col("vec_id").isin(reArrived.toSeq.map(Long.box): _*))
+        .withColumn("embedding", VecStreams.updatedVec(col("embedding")))
+      VecStreams.upsertVecFoldBatch(upd, 1L, cs, work)
+      val del = Tables.embeddings(spark, sf).where(col("vec_id") === gone)
+        .select(col("vec_id"), lit(null).cast("array<float>").as("embedding"),
+          lit(null).cast("int").as("label"))
+      VecStreams.upsertVecFoldBatch(del, 2L, cs, work)
+      val post = cands(work)
+      // the new versions' rows: the probe over the new versions alone
+      // (the base key's old row still comes from the base lists there,
+      // and is exactly the stale row the index held before the update)
+      VecStreams.e2fFoldBatch(upd, 0L, cs, ref)
+      val stale = pre.filter(r => reArrived(candId(r)))
+      val fresh = cands(ref).filter(r => reArrived(candId(r))) -- stale
+      assert(post.filter(r => reArrived(candId(r))) == fresh,
+        "each re-arrived key must serve its new version only")
+      assert(!post.exists(r => candId(r) == gone), s"deleted vec $gone must not be served")
+      val others = (r: Seq[Any]) => !reArrived(candId(r)) && candId(r) != gone
+      assert(post.filter(others) == pre.filter(others),
+        "every other candidate must be untouched")
+    } finally {
+      graft.streaming.DocStreams.deleteTree(work)
+      graft.streaming.DocStreams.deleteTree(ref)
+    }
   }
 }

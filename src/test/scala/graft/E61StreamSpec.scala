@@ -27,9 +27,7 @@ class E61StreamSpec extends AnyFunSuite {
   test("set-valued state absorbs a true double-delivery (new batch id, same rows)") {
     import scala.jdk.CollectionConverters._
     EventOps.e61bEnsure(spark, sf)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e61s-spec", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e61s-spec", sf, "-4")
     def wipe(p: java.nio.file.Path): Unit =
       if (java.nio.file.Files.exists(p)) {
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -53,9 +51,7 @@ class E61StreamSpec extends AnyFunSuite {
     // id — would double-count in any sum-valued state; the distinct
     // union must not move a single bit
     val lastId = dirsOnce.last.stripPrefix("batch=").toLong
-    val landing = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+    val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-4")
     val replayed = spark.read.parquet(
         landing.resolve(f"events-$lastId%03d.parquet").toString)
       .where(col("ts") >= lit(EventOps.e63Boundary).cast("timestamp"))

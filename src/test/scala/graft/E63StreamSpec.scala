@@ -28,9 +28,7 @@ class E63StreamSpec extends AnyFunSuite {
   test("restart folds nothing twice; replayed batch id is idempotent") {
     import scala.jdk.CollectionConverters._
     EventOps.e63Ensure(spark, sf)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e63s-spec", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e63s-spec", sf, "-4")
     def wipe(p: java.nio.file.Path): Unit =
       if (java.nio.file.Files.exists(p)) {
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -58,9 +56,7 @@ class E63StreamSpec extends AnyFunSuite {
     // IS file events-i through the boundary filter. Overwrite-by-layout
     // must keep the drained state bit-identical.
     val lastId = dirsOnce.last.stripPrefix("batch=").toLong
-    val landing = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+    val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-4")
     val raw = spark.read.parquet(
         landing.resolve(f"events-$lastId%03d.parquet").toString)
       .where(col("ts") >= lit(EventOps.e63Boundary).cast("timestamp"))
@@ -73,9 +69,7 @@ class E63StreamSpec extends AnyFunSuite {
   test("compaction bounds the fold listing and keeps the drained state exact") {
     import scala.jdk.CollectionConverters._
     EventOps.e63Ensure(spark, sf)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e63s-compact-spec", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e63s-compact-spec", sf, "-4")
     def wipe(p: java.nio.file.Path): Unit =
       if (java.nio.file.Files.exists(p)) {
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -101,9 +95,7 @@ class E63StreamSpec extends AnyFunSuite {
     // the sum-valued double-count guard: a COMPACTED batch replayed
     // after a crash recreates its dir, but the `> c` read filter must
     // exclude it — the state stays exact even before the next cleanup
-    val landing = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+    val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-4")
     val old = spark.read.parquet(landing.resolve("events-000.parquet").toString)
       .where(col("ts") >= lit(EventOps.e63Boundary).cast("timestamp"))
     EventStreams.e63sFoldBatch(old, 0L, work)

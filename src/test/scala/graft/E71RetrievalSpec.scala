@@ -76,18 +76,15 @@ class E71RetrievalSpec extends AnyFunSuite {
       assert(rs.map(_.getInt(1)).sorted.toSeq == (1 to rs.length))
       assert(rs.forall(_.getLong(2) != q))
     }
-    val fixRoot = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures")
-    val key = graft.util.PathKeys.keyedName(sf)
-    val lexWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-lex", key + "-4")
-    val vecWork = java.nio.file.Paths.get(fixRoot, "stream-e71v-vec", key + "-4")
+    val lexWork = graft.util.PathKeys.fixturePath("stream-e71v-lex", sf, "-4")
+    val vecWork = graft.util.PathKeys.fixturePath("stream-e71v-vec", sf, "-4")
     // CONSISTENCY: the two manifests pin the SAME batch prefix —
     // batch-3 content (ids 12..15) is in the CURRENT read set of both
     // trees but in NEITHER pinned set
     for ((work, tree, idCol) <- Seq((lexWork, "segs", "doc_id"),
         (vecWork, "folds", "vec_id"))) {
       val t = work.resolve(tree)
-      val pinnedDirs = SnapshotFolds.readManifest(t, RetrievalOps.DeclaredHybridSnap)
-        .map(n => t.resolve(n).toString)
+      val pinnedDirs = SnapshotFolds.pinnedDirs(t, RetrievalOps.DeclaredHybridSnap)
       val pinnedLate = spark.read.parquet(pinnedDirs: _*)
         .where(org.apache.spark.sql.functions.col(idCol) >= 12 &&
           org.apache.spark.sql.functions.col(idCol) < 16).count()

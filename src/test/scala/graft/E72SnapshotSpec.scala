@@ -28,13 +28,9 @@ class E72SnapshotSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq
 
-  private val work = java.nio.file.Paths.get(
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-    "stream-e72-spec", graft.util.PathKeys.keyedName(sf) + "-4")
+  private val work = graft.util.PathKeys.fixturePath("stream-e72-spec", sf, "-4")
   private val partials = work.resolve("partials")
-  private val landing = java.nio.file.Paths.get(
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-    "stream-events-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+  private val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-4")
 
   private def wipe(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._

@@ -83,9 +83,7 @@ class LexStreamSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSeq
       assert(declared.nonEmpty)
       assert(declared.forall(_.last == LexStreams.DeclaredLexSnap))
-      val work = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e35z", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.PathKeys.fixturePath("stream-e35z", sf, "-4")
       // SURVIVAL: batch 3's step compacted batches 0..2 out of the
       // current read set of BOTH trees; the pinned dirs must resolve
       for (tree <- Seq("segs", "lens")) {
@@ -182,9 +180,7 @@ class LexStreamSpec extends AnyFunSuite {
           "mass-gated merge touches the base)")
       // the read set collapsed to ONE dir per tree; pinned snapshots
       // keep resolving (manifest-referenced dirs were spared)
-      val work = Paths.get(
-        sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-        "stream-e35t", graft.util.PathKeys.keyedName(sf) + "-4")
+      val work = graft.util.PathKeys.fixturePath("stream-e35t", sf, "-4")
       for (tree <- Seq("segs", "lens")) {
         val t = work.resolve(tree)
         val dirs = graft.streaming.EventStreams.foldDirsToRead(t)
@@ -210,7 +206,7 @@ class LexStreamSpec extends AnyFunSuite {
       LexStreams.foldBatch(doc, 0L, work)
       def segs() = graft.streaming.EventStreams.foldDirsToRead(work.resolve("segs"))
       def lens() = graft.streaming.EventStreams.foldDirsToRead(work.resolve("lens"))
-      val before = LexStreams.probeWithTombs(spark, LexStreams.foldBaseDir(sf),
+      val before = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(), Nil).where(col("qid") === 0).orderBy("rnk").collect()
       assert(before.head.getLong(2) == 999999L, s"plant must rank 1: ${before.toSeq}")
       // ... then a tombstone fold deletes it: it must vanish from the
@@ -220,13 +216,13 @@ class LexStreamSpec extends AnyFunSuite {
         .where(col("doc_id") === 999999L).collect().head.getInt(1)
       Seq((999999L, dl)).toDF("doc_id", "dl")
         .write.parquet(work.resolve("tombs/batch=1").toString)
-      val after = LexStreams.probeWithTombs(spark, LexStreams.foldBaseDir(sf),
+      val after = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(),
         graft.streaming.EventStreams.foldDirsToRead(work.resolve("tombs")))
         .where(col("qid") === 0).orderBy("rnk").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
         "a tombstoned doc must never be served")
-      val base = LexStreams.probeWithTombs(spark, LexStreams.foldBaseDir(sf),
+      val base = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         Nil, Nil, Nil).where(col("qid") === 0).orderBy("rnk").collect()
       assert(after.map(_.getLong(2)).toSeq == base.map(_.getLong(2)).toSeq,
         "with the only arrival tombstoned, the ranked docs are the base's")
@@ -241,18 +237,16 @@ class LexStreamSpec extends AnyFunSuite {
     assert(declared.nonEmpty)
     assert(!declared.exists(r => tombIds(r.getLong(2))),
       "no tombstoned doc may be served")
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35d", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e35d", sf, "-4")
     // PINNED PRE-DELETE VISIBILITY: snapshot 3 (before any delete
     // batch) must equal the one-shot fold of ALL arrivals with NO
     // tombstones — deleted docs still candidates, still counted
     val oneShot = freshWork()
     try {
       LexStreams.foldBatch(arrivals(), 0L, oneShot)
-      val pre = LexStreams.tombProbeAtSnapshot(spark, sf, work, 3L)
+      val pre = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 3L)
         .collect().map(_.toSeq).toSeq
-      val manual = LexStreams.probeWithTombs(spark, LexStreams.foldBaseDir(sf),
+      val manual = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         graft.streaming.EventStreams.foldDirsToRead(oneShot.resolve("segs")),
         graft.streaming.EventStreams.foldDirsToRead(oneShot.resolve("lens")), Nil)
         .collect().map(_.toSeq).toSeq
@@ -260,16 +254,16 @@ class LexStreamSpec extends AnyFunSuite {
         "snapshot 3 must reproduce the pre-delete truth exactly")
       // MID-DELETE SNAPSHOT: at snapshot 4 only batch 4's deletes
       // (ids < 24) apply — batch 5's are visible and weighted
-      val mid = LexStreams.tombProbeAtSnapshot(spark, sf, work, 4L)
+      val mid = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 4L)
         .collect().map(_.toSeq).toSeq
-      val cur = LexStreams.tombProbe(spark, sf, work)
+      val cur = LexStreams.upsertProbe(spark, sf, work)
         .collect().map(_.toSeq).toSeq
       assert(mid != pre, "batch-4 deletes must already bite at snapshot 4")
       assert(mid != cur, "batch-5 deletes must NOT bite yet at snapshot 4")
       assert(cur == declared.map(_.toSeq).toSeq)
       // MERGE RECONCILIATION: the rebuilt base physically drops the
       // tombstoned rows and re-derives the statistics over live docs
-      val merged = LexStreams.mergeIntoBaseLive(spark, sf, work)
+      val merged = LexStreams.mergeIndexLive(spark, sf, work)
       val mergedPost = spark.read.parquet(merged.resolve("postings").toString)
       assert(mergedPost.where(col("doc_id").isin(tombIds.toSeq.map(Long.box): _*))
         .count() == 0, "merge must physically drop tombstoned postings")
@@ -289,10 +283,10 @@ class LexStreamSpec extends AnyFunSuite {
       val del = Seq((3L, null.asInstanceOf[String], null.asInstanceOf[String],
         null.asInstanceOf[String], null.asInstanceOf[java.lang.Long]))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
-      LexStreams.cdcFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
-      def probed() = LexStreams.tombProbe(spark, sf, work).collect().map(_.toSeq).toSeq
+      LexStreams.upsertFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
+      def probed() = LexStreams.upsertProbe(spark, sf, work).collect().map(_.toSeq).toSeq
       val once = probed()
-      LexStreams.cdcFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
+      LexStreams.upsertFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
       assert(probed() == once, "a replayed delete batch must overwrite, never stack")
     } finally graft.streaming.DocStreams.deleteTree(work)
   }
@@ -363,7 +357,7 @@ class LexStreamSpec extends AnyFunSuite {
         .where(col("doc_id") === 999999L).collect().head.getInt(1)
       Seq((999999L, dl)).toDF("doc_id", "dl")
         .write.parquet(delWork.resolve("tombs-del/batch=1").toString)
-      val deleted = LexStreams.probeWithTombs(spark, root,
+      val deleted = LexStreams.probeWithVersions(spark, root,
         dirs(delWork, "segs"), dirs(delWork, "lens"),
         graft.streaming.EventStreams.foldDirsToRead(delWork.resolve("tombs-del")))
         .where(col("qid") === 0).orderBy("rnk").collect()
@@ -449,9 +443,7 @@ class LexStreamSpec extends AnyFunSuite {
     val declared = LexStreams.e35uLexUpsert(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(declared.nonEmpty)
-    val work = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-e35u", graft.util.PathKeys.keyedName(sf) + "-4")
+    val work = graft.util.PathKeys.fixturePath("stream-e35u", sf, "-4")
     // snapshot 3 — before any update batch — must equal the e35f
     // append-lifecycle rows exactly: until an update arrives, the
     // upsert lifecycle IS the append lifecycle
@@ -496,8 +488,9 @@ class LexStreamSpec extends AnyFunSuite {
   test("unbounded-batch fallback paths are row-identical to the bounded forms") {
     // the landing-bytes guard (r15 verdict ask #5) routes oversized CDC
     // batches onto fully distributed forms (no driver collect); this
-    // pins fallback ≡ bounded on every fold verb — fold, CDC delete,
-    // upsert — by comparing the probes over the resulting fold trees.
+    // pins fallback ≡ bounded on both fold verbs — append fold, and the
+    // upsert verb that also carries CDC deletes — by comparing the
+    // probes over the resulting fold trees.
     LexStreams.ensureFoldBase(spark, sf)
     val root = LexStreams.foldBaseDir(sf)
     def probeRows(work: java.nio.file.Path): Seq[Seq[Any]] =
@@ -518,41 +511,31 @@ class LexStreamSpec extends AnyFunSuite {
       assert(lens(wA) == lens(wB), "lens fold rows diverged")
     } finally { graft.streaming.DocStreams.deleteTree(wA)
       graft.streaming.DocStreams.deleteTree(wB) }
-    // 2. CDC delete verb (e35d's): arrivals then a delete batch
+    // 2. the upsert verb (e35u's and e35d's): arrivals, then a
+    //    re-arrival of doc 9, then a CDC delete batch
     import spark.implicits._
+    val upd = Tables.documents(spark, sf).where(col("doc_id") === 9L)
+      .withColumn("text", LexStreams.updatedText(col("text")))
     val del = Seq((3L, null: String, null: String, null: String, null: java.lang.Long))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars").cast("long"))
-    val (wC, wD) = (freshWork(), freshWork())
-    try {
-      LexStreams.cdcFoldBatch(spark, arrivals(), 0L, wC, root, bounded = true)
-      LexStreams.cdcFoldBatch(spark, del, 1L, wC, root, bounded = true)
-      LexStreams.cdcFoldBatch(spark, arrivals(), 0L, wD, root, bounded = false)
-      LexStreams.cdcFoldBatch(spark, del, 1L, wD, root, bounded = false)
-      assert(LexStreams.tombProbe(spark, sf, wC).collect().map(_.toSeq).toSeq ==
-        LexStreams.tombProbe(spark, sf, wD).collect().map(_.toSeq).toSeq,
-        "cdcFoldBatch fallback diverged")
-      def tombs(w: java.nio.file.Path) = spark.read
-        .parquet(w.resolve("tombs/batch=1").toString)
-        .collect().map(_.toSeq).toSet
-      assert(tombs(wC) == tombs(wD), "tombstone fold rows diverged")
-    } finally { graft.streaming.DocStreams.deleteTree(wC)
-      graft.streaming.DocStreams.deleteTree(wD) }
-    // 3. upsert verb (e35u's): arrivals then a re-arrival of doc 9
-    val upd = Tables.documents(spark, sf).where(col("doc_id") === 9L)
-      .withColumn("text", LexStreams.updatedText(col("text")))
     val (wE, wF) = (freshWork(), freshWork())
     try {
-      LexStreams.upsertFoldBatch(spark, arrivals(), 0L, wE, root, bounded = true)
-      LexStreams.upsertFoldBatch(spark, upd, 1L, wE, root, bounded = true)
-      LexStreams.upsertFoldBatch(spark, arrivals(), 0L, wF, root, bounded = false)
-      LexStreams.upsertFoldBatch(spark, upd, 1L, wF, root, bounded = false)
+      for ((w, b) <- Seq((wE, true), (wF, false))) {
+        LexStreams.upsertFoldBatch(spark, arrivals(), 0L, w, root, bounded = b)
+        LexStreams.upsertFoldBatch(spark, upd, 1L, w, root, bounded = b)
+        LexStreams.upsertFoldBatch(spark, del, 2L, w, root, bounded = b)
+      }
       assert(probeRows(wE) == probeRows(wF), "upsertFoldBatch fallback diverged")
-      def tombs(w: java.nio.file.Path) = spark.read
-        .parquet(w.resolve("tombs/batch=1").toString)
+      def tombs(w: java.nio.file.Path, id: Long) = spark.read
+        .parquet(w.resolve(s"tombs/batch=$id").toString)
         .collect().map(_.toSeq).toSet
-      assert(tombs(wE) == tombs(wF), "upsert tombstone rows diverged")
+      for (id <- Seq(1L, 2L))
+        assert(tombs(wE, id) == tombs(wF, id), s"upsert tombstone rows diverged at $id")
+      assert(Seq(wE, wF).forall(w =>
+          !java.nio.file.Files.exists(w.resolve("segs/batch=2"))),
+        "an all-delete batch must fold no segment")
     } finally { graft.streaming.DocStreams.deleteTree(wE)
       graft.streaming.DocStreams.deleteTree(wF) }
   }
@@ -572,13 +555,16 @@ class LexStreamSpec extends AnyFunSuite {
           .foreach(descs.add)
     }
     try {
-      LexStreams.cdcDrain(spark, sf, wBounded)
+      LexStreams.upsertDrain(spark, sf, wBounded, LexStreams.cdcLanding(spark, sf))
       val landing = LexStreams.cdcLanding(spark, sf).path
       graft.streaming.DocStreams.deleteTree(landing)
       assert(!java.nio.file.Files.exists(landing))
       spark.sparkContext.addSparkListener(listener)
       try {
-        LexStreams.cdcDrain(spark, sf, wFallback, maxBytes = 1L)
+        // a `Landing` exists only once staged: the call restages it,
+        // and the guard reads the restaged bytes
+        LexStreams.upsertDrain(spark, sf, wFallback,
+          LexStreams.cdcLanding(spark, sf), maxBytes = 1L)
         Thread.sleep(500) // let the listener bus deliver the job starts
       } finally spark.sparkContext.removeSparkListener(listener)
       val seen = descs.asScala.toSet
@@ -587,10 +573,61 @@ class LexStreamSpec extends AnyFunSuite {
         s"a landing over the bound must not take the driver-collect path: $seen")
       assert(seen.contains("lexfold 0: lens fold"),
         s"the distributed lens fold must have run: $seen")
-      assert(LexStreams.tombProbe(spark, sf, wFallback).collect().map(_.toSeq).toSeq ==
-        LexStreams.tombProbe(spark, sf, wBounded).collect().map(_.toSeq).toSeq,
+      assert(LexStreams.upsertProbe(spark, sf, wFallback).collect().map(_.toSeq).toSeq ==
+        LexStreams.upsertProbe(spark, sf, wBounded).collect().map(_.toSeq).toSeq,
         "the distributed fallback must serve the bounded run's rows")
     } finally { graft.streaming.DocStreams.deleteTree(wBounded)
       graft.streaming.DocStreams.deleteTree(wFallback) }
+  }
+
+  test("a CDC update record supersedes its key's live version and a delete " +
+      "record drops its key — through the verb the e35d drain runs") {
+    // A CDC batch re-arrives one base key (17) and one earlier arrival
+    // (9); the next deletes a third key. After each, the index must
+    // serve exactly the BM25 answer over the corpus at that point: a
+    // base built over it, with the fold base's frozen query set.
+    LexStreams.ensureFoldBase(spark, sf)
+    val root = LexStreams.foldBaseDir(sf)
+    val (work, truth) = (freshWork(), freshWork())
+    try {
+      val docs = Tables.documents(spark, sf)
+      val reArrived = Seq(17L, 9L).map(Long.box)
+      val updated = docs.withColumn("text",
+        when(col("doc_id").isin(reArrived: _*), LexStreams.updatedText(col("text")))
+          .otherwise(col("text")))
+      def truthRows(corpus: org.apache.spark.sql.DataFrame) = {
+        graft.streaming.DocStreams.deleteTree(truth)
+        LexStreams.buildBaseLayout(spark, truth.toString, corpus)
+        spark.read.parquet(s"$root/queries").write.mode("overwrite")
+          .parquet(truth.resolve("queries").toString)
+        LexStreams.probeBaseOnly(spark, truth.toString).collect().map(_.toSeq).toSeq
+      }
+      def served() = LexStreams.upsertProbe(spark, sf, work).collect().map(_.toSeq).toSeq
+      def mergedDocs() = spark.read
+        .parquet(LexStreams.mergeIndexLive(spark, sf, work).resolve("stats").toString)
+        .head().getLong(0)
+      LexStreams.upsertFoldBatch(spark, arrivals(), 0L, work, root)
+      LexStreams.upsertFoldBatch(spark,
+        updated.where(col("doc_id").isin(reArrived: _*)), 1L, work, root)
+      val afterUpdate = truthRows(updated)
+      assert(served() == afterUpdate,
+        "each re-arrived key must serve its new version only")
+      assert(mergedDocs() == docs.count(), "an update must not add a document")
+      // delete a doc the index serves now, neither re-arrived key
+      val gone = afterUpdate.map(_(2).asInstanceOf[Long])
+        .find(id => !reArrived.contains(Long.box(id))).get
+      import spark.implicits._
+      val del = Seq((gone, null: String, null: String, null: String, null: java.lang.Long))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      LexStreams.upsertFoldBatch(spark, del, 2L, work, root)
+      val afterDelete = served()
+      assert(!afterDelete.exists(_(2) == gone), s"deleted doc $gone must not be served")
+      assert(afterDelete == truthRows(updated.where(col("doc_id") =!= gone)),
+        "after the delete the index must serve the remaining corpus exactly")
+      assert(mergedDocs() == docs.count() - 1, "a delete must remove one document")
+    } finally {
+      graft.streaming.DocStreams.deleteTree(work)
+      graft.streaming.DocStreams.deleteTree(truth)
+    }
   }
 }

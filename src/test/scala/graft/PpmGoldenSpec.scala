@@ -16,9 +16,7 @@ class PpmGoldenSpec extends AnyFunSuite {
     Array.tabulate(w * h * 3)(i => ((id * 131 + i * 7) % 256).toByte)
 
   test("decodePpmFrames parses golden .ppm files from the binaryFile source") {
-    val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "ppm-golden")
+    val dir = java.nio.file.Paths.get(graft.util.PathKeys.fixtureRoot, "ppm-golden")
     java.nio.file.Files.createDirectories(dir)
     // known geometries spanning the sampler's cases (h < 4 and h > 4),
     // pixel bytes over the FULL 0-255 range (no ASCII-safety crutch)
@@ -72,9 +70,7 @@ class PpmGoldenSpec extends AnyFunSuite {
   }
 
   test("resizePpm halves golden .ppm files: geometry, gather, checksum, feature") {
-    val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "ppm-golden-resize")
+    val dir = java.nio.file.Paths.get(graft.util.PathKeys.fixtureRoot, "ppm-golden-resize")
     java.nio.file.Files.createDirectories(dir)
     // odd and even dimensions: the halving truncates, the gather must
     // never read past a row

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `processAllAvailable` belongs to the drain runner,
   *    `streaming/Drain.scala`;
   *  - the fixture-root read (`GRAFT_FIXTURE_DIR`) belongs to
-  *    `util/PathKeys.scala`;
+  *    `util/PathKeys.scala` — in `src/test/scala` too, so every spec
+  *    resolves its fixture paths through `PathKeys` (this spec, which
+  *    names the token, is exempt);
   *  - session construction (`SparkSession.builder`) and the core-count
   *    read (`SPARK_GRAFT_CPUS`) belong to the session factory,
   *    `GraftSession.scala`.
@@ -23,26 +25,34 @@ import org.scalatest.funsuite.AnyFunSuite
   * usually arrives with the comment that explained the original. */
 class SingleOwnerSpec extends AnyFunSuite {
   private val mainRoot = Paths.get("src/main/scala")
+  private val testRoot = Paths.get("src/test/scala")
 
-  private lazy val sources: Seq[(String, String)] = {
-    require(Files.isDirectory(mainRoot), s"run from the repo root: $mainRoot missing")
-    scala.util.Using.resource(Files.walk(mainRoot)) { st =>
+  /** `(path relative to root, text)` of every Scala file under root. */
+  private def scalaFiles(root: java.nio.file.Path): Seq[(String, String)] = {
+    require(Files.isDirectory(root), s"run from the repo root: $root missing")
+    scala.util.Using.resource(Files.walk(root)) { st =>
       st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    }.map(p => (mainRoot.relativize(p).toString, Files.readString(p)))
+    }.map(p => (root.relativize(p).toString, Files.readString(p)))
   }
 
-  private def owners(token: String): Set[String] =
-    sources.collect { case (f, text) if text.contains(token) => f }.toSet
+  private lazy val sources = scalaFiles(mainRoot)
+  private lazy val testSources = scalaFiles(testRoot)
+    .filterNot(_._1 == "graft/SingleOwnerSpec.scala")
+    .map { case (f, text) => (s"$testRoot/$f", text) }
+
+  private def owners(token: String, withTests: Boolean): Set[String] =
+    (sources ++ (if (withTests) testSources else Nil))
+      .collect { case (f, text) if text.contains(token) => f }.toSet
 
   Seq(
-    "_STAGED" -> "graft/util/Staged.scala",
-    "processAllAvailable" -> "graft/streaming/Drain.scala",
-    "GRAFT_FIXTURE_DIR" -> "graft/util/PathKeys.scala",
-    "SparkSession.builder" -> "graft/GraftSession.scala",
-    "SPARK_GRAFT_CPUS" -> "graft/GraftSession.scala"
-  ).foreach { case (token, owner) =>
+    ("_STAGED", "graft/util/Staged.scala", false),
+    ("processAllAvailable", "graft/streaming/Drain.scala", false),
+    ("GRAFT_FIXTURE_DIR", "graft/util/PathKeys.scala", true),
+    ("SparkSession.builder", "graft/GraftSession.scala", false),
+    ("SPARK_GRAFT_CPUS", "graft/GraftSession.scala", false)
+  ).foreach { case (token, owner, withTests) =>
     test(s"`$token` appears only in $owner") {
-      assert(owners(token) == Set(owner),
+      assert(owners(token, withTests) == Set(owner),
         s"`$token` must live in $owner alone — route the new site through it")
     }
   }

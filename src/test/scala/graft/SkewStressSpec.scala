@@ -22,7 +22,7 @@ class SkewStressSpec extends AnyFunSuite {
   private val ClusterPairs = ClusterSize * (ClusterSize - 1) / 2 // 190
 
   private lazy val fixtureDir: String = {
-    val dir = "/root/repo/target/fixtures/test-skew"
+    val dir = s"${graft.util.PathKeys.fixtureRoot}/test-skew"
     val dupText = (0 until 30).map(t => f"dup$t%03d").mkString(" ")
     val cluster = (0 until ClusterSize).map { i =>
       (1000L + i, dupText, "en", "hot", dupText.length.toLong)

@@ -59,9 +59,7 @@ class StreamBoundedDedupSpec extends AnyFunSuite {
     // watermark (memory sinks can't recover append checkpoints, so the
     // sink is the idempotent foreachBatch parquet pattern).
     EventStreams.eventsStreamBucketed(spark, sf, 6)
-    val stagedDir = Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed", graft.util.PathKeys.keyedName(sf) + "-6")
+    val stagedDir = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-6")
     val staged = scala.util.Using.resource(Files.list(stagedDir)) { st =>
       st.iterator().asScala
         .filter(_.getFileName.toString.startsWith("events-")).toSeq

@@ -76,9 +76,7 @@ class StreamLeftJoinSpec extends AnyFunSuite {
     * landing under target/fixtures). */
   private def cleanup(dir: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-events-bucketed", graft.util.PathKeys.keyedName(dir) + "-6")
+    val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", dir, "-6")
     Seq(java.nio.file.Paths.get(dir), landing).foreach { root =>
       if (java.nio.file.Files.exists(root))
         scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>

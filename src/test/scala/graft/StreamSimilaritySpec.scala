@@ -52,9 +52,7 @@ class StreamSimilaritySpec extends AnyFunSuite {
     // the staged bucket files (created once by the declared pipeline's
     // staging) arrive in two phases with a STOP between them
     DocStreams.docsStreamBucketed(spark, sf, 4) // ensure staging exists
-    val staged = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed", graft.util.PathKeys.keyedName(sf) + "-4")
+    val staged = graft.util.PathKeys.fixturePath("stream-docs-bucketed", sf, "-4")
     val parts = Files.list(staged)
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .sorted().toArray.map(_.asInstanceOf[java.nio.file.Path])
@@ -117,9 +115,7 @@ class StreamSimilaritySpec extends AnyFunSuite {
     // 7 buckets → with CompactEvery=3 the drain compacts twice (at
     // batches 3 and 6), including once on each side of the restart
     DocStreams.docsStreamBucketed(spark, sf, 7)
-    val staged = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "stream-docs-bucketed", graft.util.PathKeys.keyedName(sf) + "-7")
+    val staged = graft.util.PathKeys.fixturePath("stream-docs-bucketed", sf, "-7")
     val parts = Files.list(staged)
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .sorted().toArray.map(_.asInstanceOf[java.nio.file.Path])

@@ -39,9 +39,7 @@ class WavGoldenSpec extends AnyFunSuite {
   }
 
   test("decodeWavMeta parses golden .wav files from the binaryFile source") {
-    val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/target/fixtures"),
-      "wav-golden")
+    val dir = java.nio.file.Paths.get(graft.util.PathKeys.fixtureRoot, "wav-golden")
     java.nio.file.Files.createDirectories(dir)
     //                   id  ch  rate  bits  n    fmtSize
     val golden = Seq(
