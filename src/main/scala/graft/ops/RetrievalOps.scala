@@ -262,7 +262,7 @@ object RetrievalOps {
     * 100 TB path: two manifest reads + the two pinned-leg probes e35f/
     * e2f already price; fusion joins two ≤ NQueries×LegK relations. */
   def e71vHybridAtSnapshot(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.{LexStreams, SnapshotFolds, VecStreams}
+    import graft.streaming.{LexStreams, VecStreams}
     LexStreams.ensureFoldBase(s, d)
     VecStreams.ensureFoldBase(s, d)
     val lexWork = graft.util.PathKeys.fixturePath("stream-e71v-lex", d, "-4")
@@ -271,10 +271,9 @@ object RetrievalOps {
     graft.streaming.DocStreams.deleteTree(vecWork)
     LexStreams.drain(s, d, lexWork)
     VecStreams.e2fDrain(s, d, vecWork)
-    def pinned(work: java.nio.file.Path, tree: String): Seq[String] =
-      SnapshotFolds.pinnedDirs(work.resolve(tree), DeclaredHybridSnap)
-    fuseAtDirs(s, d, pinned(lexWork, "segs"), pinned(lexWork, "lens"),
-      pinned(vecWork, "folds"))
+    fuseAtDirs(s, d, LexStreams.segTree(lexWork).pinned(DeclaredHybridSnap),
+      LexStreams.lensTree(lexWork).pinned(DeclaredHybridSnap),
+      VecStreams.foldTree(vecWork).pinned(DeclaredHybridSnap))
       .withColumn("snapshot_id", lit(DeclaredHybridSnap))
   }
 

@@ -79,7 +79,6 @@ object OrdFixtures {
   def nestedPath: String = s"$fixtureDir/ord_nested_v2.parquet"
   def rawPath: String = s"$fixtureDir/ord_raw.parquet"
 
-  private val refDir = "/root/reference"
   // corpus catalog order — OrdApi's global dataset numbering follows
   // this declaration order, not an alphabetical re-sort of file names
   private[ord] val files = Seq(
@@ -103,7 +102,7 @@ object OrdFixtures {
   def parseAll(): (Seq[OrdDataset], Seq[OrdRaw]) = {
     val mapper = new ObjectMapper()
     val out = files.flatMap { f =>
-      val root = mapper.readTree(new File(s"$refDir/$f"))
+      val root = mapper.readTree(graft.util.PathKeys.golden(f).toFile)
       root.properties.asScala.toSeq.zipWithIndex.map { case (e, i) =>
         parseDataset(f, e.getKey, e.getValue, i)
       }

@@ -77,91 +77,6 @@ object DocStreams {
   private[graft] def deleteTree(root: java.nio.file.Path): Unit =
     Staged.deleteTree(root)
 
-  /** Number of uncompacted per-batch index dirs that triggers a merge
-    * into a single `compact=<c>` dir. Small enough that the declared
-    * 4-bucket ingest exercises the compaction path. */
-  private[graft] val CompactEvery = 3
-
-  private def listIndexDirs(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(java.nio.file.Files.list(root)) { st =>
-      st.iterator().asScala.toList
-    }
-  }
-
-  private def dirId(p: java.nio.file.Path, prefix: String): Option[Long] = {
-    val n = p.getFileName.toString
-    if (n.startsWith(prefix))
-      scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-    else None
-  }
-
-  /** Highest `compact=<c>` id under the index root, if any. A compact
-    * dir covers ALL batches ≤ c. */
-  private def latestCompact(root: java.nio.file.Path): Option[Long] = {
-    val ids = listIndexDirs(root).flatMap(dirId(_, "compact="))
-    if (ids.isEmpty) None else Some(ids.max)
-  }
-
-  /** Index directories a probe of batch `id` must read: the latest
-    * compact dir (strictly prior batches only — compaction always
-    * closes at some c ≤ id−1) plus the per-batch dirs in (c, id). A
-    * batch replayed after a restart must not probe its own earlier
-    * (possibly partial) index write, or within-batch pairs would
-    * double; batch dirs ≤ c are EXCLUDED even when their deletion
-    * hasn't happened yet (crash between rename and cleanup), so a
-    * half-finished compaction can never double-count. */
-  private def priorIndexDirs(root: java.nio.file.Path, id: Long): Seq[String] = {
-    val c = latestCompact(root).getOrElse(-1L)
-    val compacted =
-      if (c < 0) Nil else Seq(root.resolve(s"compact=$c").toString)
-    compacted ++ listIndexDirs(root)
-      .filter(p => dirId(p, "batch=").exists(b => b > c && b < id))
-      .map(_.toString)
-  }
-
-  /** Merge the uncompacted per-batch dirs STRICTLY BEFORE `id` into one
-    * `compact=<id-1>` dir when at least [[CompactEvery]] are pending —
-    * keeps per-batch probe listings O(CompactEvery) instead of
-    * O(batches), which is the difference between a day-long ingest and
-    * one that grinds to a halt listing its own index. Crash-safe by
-    * construction:
-    *
-    *  - the merged table is written to a `_tmp` dir and RENAMED into
-    *    place (atomic on a posix fs; the 100 TB analogue is a metadata
-    *    commit), so a probe never reads a partially-written compact dir;
-    *  - covered `batch=`/older `compact=` dirs are deleted only AFTER
-    *    the rename; if the crash lands between, [[priorIndexDirs]]'s
-    *    `> c` filter already excludes them, and the next compaction
-    *    pass re-attempts the cleanup;
-    *  - a replayed batch re-entering finds nothing pending (all ≤ c)
-    *    and skips — idempotent. */
-  private def maybeCompact(
-      s: SparkSession, root: java.nio.file.Path, id: Long): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val c0 = latestCompact(root).getOrElse(-1L)
-    val pending = listIndexDirs(root)
-      .filter(p => dirId(p, "batch=").exists(b => b > c0 && b < id))
-    // leftover dirs a crashed earlier cleanup abandoned (all covered by
-    // the current compact) — safe to remove on any pass
-    def cleanupCovered(c: Long): Unit = listIndexDirs(root)
-      .filter(p => dirId(p, "batch=").exists(_ <= c) ||
-        dirId(p, "compact=").exists(_ < c))
-      .foreach(deleteTree)
-    if (pending.size >= CompactEvery) {
-      val sources = (if (c0 < 0) Nil else Seq(root.resolve(s"compact=$c0")))
-        .++(pending).map(_.toString)
-      val tmp = root.resolve("_tmp-compact")
-      deleteTree(tmp)
-      s.read.schema(bandSchema).parquet(sources: _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val dst = root.resolve(s"compact=${id - 1}")
-      deleteTree(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      cleanupCovered(id - 1)
-    } else latestCompact(root).foreach(cleanupCovered)
-  }
-
   /** The INCREMENTAL ingest drain (r6 verdict ask #2): per micro-batch,
     * probe the arriving docs' per-row band rows against the index built
     * from all PRIOR batches plus the batch itself (within-batch pairs),
@@ -176,18 +91,16 @@ object DocStreams {
     * shared batch (within-batch, d_new < d_idx once).
     *
     * Scale note: accumulated per-batch dirs are periodically folded
-    * into a single `compact=<c>` dir ([[maybeCompact]] — atomic rename,
-    * crash-safe), so per-probe listings stay O([[CompactEvery]]) instead
-    * of O(batches); the 100 TB form is the same dataflow with the
-    * compact dir as an index table bucketed by (band, band_hash) — the
-    * probe join, the append, and the compaction commit are unchanged. */
+    * into a single `compact=<c>` dir ([[FoldTree.compactIfDue]] — atomic
+    * rename, crash-safe), so per-probe listings stay
+    * O([[FoldTree.CompactEvery]]) instead of O(batches); the 100 TB
+    * form is the same dataflow with the compact dir as an index table
+    * bucketed by (band, band_hash) — the probe join, the append, and
+    * the compaction commit are unchanged. */
   private[graft] def e6sIncrementalDrain(
       s: SparkSession, docsStream: DataFrame, work: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    val indexRoot = work.resolve("index")
-    val matchRoot = work.resolve("matches")
-    Files.createDirectories(indexRoot)
-    Files.createDirectories(matchRoot)
+    val index = FoldTree(work.resolve("index"), bandSchema)
+    val matches = FoldTree(work.resolve("matches"), matchSchema)
     Drain.foreachBatch(SimOps.perRowBands(docsStream).where(col("bh").isNotNull),
         work) { (df, id) =>
       // probed twice (self-pairs + index probe) and written once —
@@ -197,7 +110,7 @@ object DocStreams {
         // fold accumulated per-batch index dirs into one compact dir
         // BEFORE probing — compaction only ever covers batches ≤ id-1,
         // so a replayed batch still never sees its own rows
-        maybeCompact(s, indexRoot, id)
+        index.compactIfDue(s, id)
         val newSide = batch
           .select(col("doc_id").as("d_new"), col("band"), col("bh"))
         // within-batch collisions once per (pair, band): d_new < d_idx
@@ -205,10 +118,13 @@ object DocStreams {
             batch.select(col("doc_id").as("d_idx"), col("band"), col("bh")),
             Seq("band", "bh"))
           .where(col("d_new") < col("d_idx"))
-        val prior = priorIndexDirs(indexRoot, id)
-        val matches = (if (prior.isEmpty) within
+        // strictly prior batches only: a batch replayed after a restart
+        // must not probe its own earlier (possibly partial) index write,
+        // or within-batch pairs would double
+        val prior = index.readSet(before = id)
+        (if (prior.isEmpty) within
         else {
-          val idx = s.read.schema(bandSchema).parquet(prior: _*)
+          val idx = index.read(s, prior)
             .select(col("doc_id").as("d_idx"), col("band"), col("bh"))
           within.unionByName(
             newSide.join(idx, Seq("band", "bh"))
@@ -216,24 +132,22 @@ object DocStreams {
         })
           .select(least(col("d_new"), col("d_idx")).as("d1"),
             greatest(col("d_new"), col("d_idx")).as("d2"), col("band"))
-        matches.write.mode("overwrite")
-          .parquet(matchRoot.resolve(s"batch=$id").toString)
+          .write.mode("overwrite").parquet(matches.batch(id).toString)
         // index append AFTER the probe: the batch joins prior batches
         // only, never its own index rows
-        batch.write.mode("overwrite")
-          .parquet(indexRoot.resolve(s"batch=$id").toString)
+        batch.write.mode("overwrite").parquet(index.batch(id).toString)
       } finally batch.unpersist(blocking = false)
     }
   }
 
   /** All collision rows a drain (or a sequence of resumed drains over
-    * one work dir) emitted. Concrete batch dirs, not a glob — see
-    * [[batchDirs]]. */
+    * one work dir) emitted. Concrete batch dirs, not a `batch=*` glob:
+    * a zero-batch drain reads as empty instead of throwing, and Spark's
+    * FileStreamSink probe of every read path for `_spark_metadata` would
+    * WARN a full FileNotFoundException stack into the logs on a glob. */
   private[graft] def drainedMatches(s: SparkSession, work: java.nio.file.Path): DataFrame = {
-    val dirs = batchDirs(work.resolve("matches"))
-    if (dirs.nonEmpty) s.read.schema(matchSchema).parquet(dirs: _*)
-    else s.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), matchSchema)
+    val matches = FoldTree(work.resolve("matches"), matchSchema)
+    matches.read(s, matches.readSet())
   }
 
   /** E6s: STREAMING MinHash+LSH ingest with an INCREMENTALLY GROWN
@@ -278,54 +192,28 @@ object DocStreams {
     * over one work dir. */
   private[graft] def e10sGateDrain(
       s: SparkSession, docsStream: DataFrame, work: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    val admitted = work.resolve("admitted")
-    val dead = work.resolve("dead")
-    Files.createDirectories(admitted)
-    Files.createDirectories(dead)
     val flagged = graft.ops.CurationOps.repetitionMetrics(docsStream)
       .select(col("doc_id"), col("source"), col("passes_repetition"))
     Drain.foreachBatch(flagged, work) { (df, id) =>
       val b = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         b.where(col("passes_repetition"))
-          .write.mode("overwrite").parquet(admitted.resolve(s"batch=$id").toString)
+          .write.mode("overwrite").parquet(gateTree(work, "admitted").batch(id).toString)
         b.where(!col("passes_repetition"))
-          .write.mode("overwrite").parquet(dead.resolve(s"batch=$id").toString)
+          .write.mode("overwrite").parquet(gateTree(work, "dead").batch(id).toString)
       } finally b.unpersist(blocking = false)
     }
   }
 
-  /** The concrete `batch=N` directories under `root`, sorted. Passing
-    * these to the reader instead of a `batch=*` glob matters twice: a
-    * zero-batch drain yields an empty list (reading the glob would
-    * throw AnalysisException), and Spark's FileStreamSink probes every
-    * read path for a `_spark_metadata` dir — on a glob string that
-    * probe throws-and-WARNs a full FileNotFoundException stack into
-    * the harness logs, polluting the evidence chain (the r8 bench-
-    * artifact lesson: captured output must never carry a stack trace
-    * that isn't a failure). */
-  private def batchDirs(root: java.nio.file.Path): Seq[String] = {
-    import java.nio.file.Files
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val ds = Files.newDirectoryStream(root, "batch=*")
-      try {
-        val b = Seq.newBuilder[String]
-        ds.forEach(p => b += p.toString)
-        b.result().sorted
-      } finally ds.close()
-    }
-  }
+  private def gateTree(work: java.nio.file.Path, side: String): FoldTree =
+    FoldTree(work.resolve(side), gateSchema)
 
   /** All rows a gate drain routed, with their verdict — admitted and
     * dead-letter unioned back for aggregation or audit. */
   private[graft] def drainedGate(s: SparkSession, work: java.nio.file.Path): DataFrame = {
     def side(name: String): DataFrame = {
-      val dirs = batchDirs(work.resolve(name))
-      if (dirs.nonEmpty) s.read.schema(gateSchema).parquet(dirs: _*)
-      else s.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), gateSchema)
+      val t = gateTree(work, name)
+      t.read(s, t.readSet())
     }
     side("admitted").unionByName(side("dead"))
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -16,9 +16,10 @@ import org.apache.spark.sql.types.StructType
   *  - [[foreachBatch]] — per-batch folds into a work dir whose
   *    checkpoint lives at `work/ckpt` (restart-safe: the checkpoint owns
   *    offsets, the fold's `batch=<id>` overwrite owns idempotence);
-  *  - [[manifested]] — the index/snapshot lifecycle: per batch, compact
-  *    every fold tree (dirs a retained snapshot manifest references are
-  *    spared), fold, then stamp a manifest of each tree's live read set.
+  *  - [[manifested]] — the index/snapshot lifecycle over
+  *    [[FoldTree]]s: per batch, compact every tree (dirs a retained
+  *    snapshot manifest references are spared), fold, then stamp a
+  *    manifest of each tree's live read set.
   *    The lexical, vector and e72 lifecycles differ only in their fold
   *    functions and probes. */
 object Drain {
@@ -39,27 +40,17 @@ object Drain {
     run(stream.writeStream.foreachBatch(fold)
       .option("checkpointLocation", work.resolve("ckpt").toString))
 
-  /** A fold tree under a drain's work dir with its statically known row
-    * schema — compaction reads the tree with it, never by footer
-    * inference. */
-  final case class Tree(name: String, schema: StructType)
-
   /** The manifested-fold drain: every batch compacts each tree (via
     * `merge`; concatenation for keyed-set trees), runs `fold`, then
-    * writes each tree's snapshot manifest — after the fold, so a
+    * stamps each tree's snapshot manifest — after the fold, so a
     * manifest names only durable dirs. */
   def manifested(s: SparkSession, stream: DataFrame, work: Path,
-      trees: Seq[Tree], merge: DataFrame => DataFrame = identity)(
+      trees: Seq[FoldTree], merge: DataFrame => DataFrame = identity)(
       fold: (DataFrame, Long) => Unit): Unit = {
-    val roots = trees.map(t => (work.resolve(t.name), t.schema))
-    roots.foreach(r => Files.createDirectories(r._1))
     foreachBatch(stream, work) { (df, id) =>
-      roots.foreach { case (root, schema) =>
-        EventStreams.maybeCompactFolds(s, root, id, schema, merge,
-          spare = SnapshotFolds.retainedRefs(root))
-      }
+      trees.foreach(_.compactIfDue(s, id, merge))
       fold(df, id)
-      roots.foreach(r => SnapshotFolds.writeManifest(r._1, id))
+      trees.foreach(_.stamp(id))
     }
   }
 
@@ -79,7 +70,7 @@ object Drain {
     * read a missing or about-to-be-replaced landing. `fold` receives
     * the verdict. */
   def manifestedLanding(s: SparkSession, landing: Landing, work: Path,
-      trees: Seq[Tree], maxBytes: Long = StreamTune.BoundedLandingBytes)(
+      trees: Seq[FoldTree], maxBytes: Long = StreamTune.BoundedLandingBytes)(
       fold: (DataFrame, Long, Boolean) => Unit): Unit = {
     val bounded = StreamTune.boundedLanding(landing.path, maxBytes)
     manifested(s, landing.stream(s), work, trees)(fold(_, _, bounded))

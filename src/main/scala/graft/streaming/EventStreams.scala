@@ -481,9 +481,11 @@ object EventStreams {
   def streamEventsToParquet(s: SparkSession, dir: String, outDir: String): Long = {
     val ckpt = s"$outDir/_checkpoint"
     var batches = 0L
-    val q = eventsStream(s, dir).writeStream
+    val events = eventsStream(s, dir)
+    val sink = FoldTree(java.nio.file.Paths.get(outDir), events.schema)
+    val q = events.writeStream
       .foreachBatch { (df: DataFrame, id: Long) =>
-        df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        df.write.mode("overwrite").parquet(sink.batch(id).toString)
         batches += 1
       }
       .option("checkpointLocation", ckpt)
@@ -513,9 +515,9 @@ object EventStreams {
     * replay of a batch id leaves the result bit-identical.
     *
     * 100 TB path: per micro-batch work is O(batch) + a groups-sized
-    * write; the refresh read is O(state) + O([[RefreshCompactEvery]])
-    * fold dirs — [[maybeCompactFolds]] (the e6s compaction generalized
-    * to the refresh keys) merges pending batch dirs through the key's
+    * write; the refresh read is O(state) + O([[FoldTree.CompactEvery]])
+    * fold dirs — [[FoldTree.compactIfDue]] (the e6s compaction, shared
+    * by every fold tree) merges pending batch dirs through the key's
     * OWN re-merge, so listings stay bounded at any batch count and the
     * answer provably cannot move; nothing ever rescans the base. */
   def e63sStreamIncrAgg(s: SparkSession, dir: String): DataFrame = {
@@ -528,148 +530,18 @@ object EventStreams {
     e63sResult(s, dir, work)
   }
 
-  /** Uncompacted fold dirs that trigger a merge — small enough that
-    * the declared 4-bucket drains exercise the compaction path. */
-  private[graft] val RefreshCompactEvery = 3
-
-  private def foldDirId(p: java.nio.file.Path, prefix: String): Option[Long] = {
-    val n = p.getFileName.toString
-    if (n.startsWith(prefix))
-      scala.util.Try(n.stripPrefix(prefix).toLong).toOption
-    else None
-  }
-
-  private def listFoldDirs(root: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(java.nio.file.Files.list(root)) { st =>
-      st.iterator().asScala.toList
-    }
-  }
-
-  private def latestFoldCompact(root: java.nio.file.Path): Option[Long] = {
-    val ids = listFoldDirs(root).flatMap(foldDirId(_, "compact="))
-    if (ids.isEmpty) None else Some(ids.max)
-  }
-
-  /** Fold dirs a refresh read takes: the latest `compact=<c>` (covers
-    * every batch ≤ c) plus `batch=<b>` dirs with b > c — a replayed
-    * OLD batch recreating its dir after compaction is excluded, so a
-    * sum-valued state can never double-count a compacted fold. */
-  private[graft] def foldDirsToRead(root: java.nio.file.Path): Seq[String] = {
-    val c = latestFoldCompact(root).getOrElse(-1L)
-    val compacted =
-      if (c < 0) Nil else Seq(root.resolve(s"compact=$c").toString)
-    compacted ++ listFoldDirs(root)
-      .filter(p => foldDirId(p, "batch=").exists(_ > c))
-      .map(_.toString).sorted
-  }
-
-  /** The e6s index compaction generalized to the refresh folds (e63s
-    * day partials, e61s activity pairs): merge the pending per-batch
-    * dirs strictly before `id` into one `compact=<id-1>` via the
-    * key's OWN re-merge (algebraic re-aggregation / distinct — the
-    * same operation the result fold runs, so compaction can never
-    * change the answer), keeping refresh listings O(CompactEvery)
-    * instead of O(batches). Crash-safe exactly as e6s: tmp + atomic
-    * rename, covered dirs deleted only after, [[foldDirsToRead]]'s
-    * `> c` filter makes a half-finished cleanup harmless. The tree is
-    * read with its statically known row `schema` (the writer's), never
-    * by footer inference. */
-  private[graft] def maybeCompactFolds(s: SparkSession,
-      root: java.nio.file.Path, id: Long, schema: StructType,
-      merge: DataFrame => DataFrame,
-      spare: Set[String] = Set.empty): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    if (!Files.isDirectory(root)) return
-    val c0 = latestFoldCompact(root).getOrElse(-1L)
-    // `spare` (SnapshotFolds): covered dirs still referenced by a
-    // retained snapshot manifest are merged forward like any other —
-    // the CURRENT read set never includes them — but not deleted, so
-    // a pinned read-at-snapshot stays resolvable under compaction.
-    def cleanupCovered(c: Long): Unit = listFoldDirs(root)
-      .filter(p => foldDirId(p, "batch=").exists(_ <= c) ||
-        foldDirId(p, "compact=").exists(_ < c))
-      .filterNot(p => spare.contains(p.getFileName.toString))
-      .foreach(deleteTree)
-    val pending = listFoldDirs(root)
-      .filter(p => foldDirId(p, "batch=").exists(b => b > c0 && b < id))
-    if (pending.size >= RefreshCompactEvery) {
-      val sources = (if (c0 < 0) Nil else Seq(root.resolve(s"compact=$c0")))
-        .++(pending).map(_.toString)
-      val tmp = root.resolve("_tmp-compact")
-      deleteTree(tmp)
-      merge(s.read.schema(schema).parquet(sources: _*))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val dst = root.resolve(s"compact=${id - 1}")
-      deleteTree(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-      cleanupCovered(id - 1)
-    } else latestFoldCompact(root).foreach(cleanupCovered)
-  }
-
-  /** Read-set size above which [[maybeTierMerge]] collapses a fold
-    * tree — Lucene's tiered-policy fanout: probe cost grows with
-    * segment count (every segment pays its own listing, filter, and
-    * stats-merge term), so segments merge into ONE larger segment long
-    * before anything touches the base layout. */
-  val TierFanout = 1
-
-  /** SIZE-TIERED SEGMENT MERGE (r15 verdict ask #5, generalized to any
-    * fold tree — the text index's postings/lens trees via e35t, the
-    * vector index's cell folds via e2tm): collapse the tree's CURRENT
-    * read set into one `compact=<maxId>` dir — segments merge into a
-    * larger segment; the BASE LAYOUT IS NEVER TOUCHED (full base
-    * rebuilds stay with the mass/drift-gated merges). Same crash-safe
-    * protocol as the cadence compaction (tmp + atomic rename; covered
-    * dirs deleted only after, manifest-referenced dirs spared so
-    * pinned snapshots keep resolving), but unconditional on cadence:
-    * it merges EVERYTHING live, including the newest batch, which the
-    * `< id` cadence rule never covers. Valid only for trees whose rows
-    * are a keyed SET — concatenation is the re-merge, so a tier merge
-    * can never change the answer (spec-pinned row equality on both
-    * index families). */
-  private[graft] def tierMerge(s: SparkSession,
-      root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    if (!Files.isDirectory(root)) return
-    val dirs = foldDirsToRead(root)
-    if (dirs.size <= 1) return
-    val maxId = dirs.flatMap { p =>
-      val n = java.nio.file.Paths.get(p).getFileName.toString
-      scala.util.Try(n.dropWhile(!_.isDigit).toLong).toOption
-    }.max
-    val spare = SnapshotFolds.retainedRefs(root)
-    val tmp = root.resolve("_tmp-tier")
-    deleteTree(tmp)
-    s.read.parquet(dirs: _*).write.mode("overwrite").parquet(tmp.toString)
-    val dst = root.resolve(s"compact=$maxId")
-    deleteTree(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    dirs.map(java.nio.file.Paths.get(_))
-      .filterNot(p => p.getFileName.toString == s"compact=$maxId" ||
-        spare.contains(p.getFileName.toString))
-      .foreach(deleteTree)
-  }
-
-  /** The tier policy: merge when the read set exceeds [[TierFanout]]
-    * dirs. Returns whether a merge ran. */
-  private[graft] def maybeTierMerge(s: SparkSession,
-      root: java.nio.file.Path): Boolean = {
-    val trip = java.nio.file.Files.isDirectory(root) &&
-      foldDirsToRead(root).size > TierFanout
-    if (trip) tierMerge(s, root)
-    trip
-  }
-
-  /** Row schemas of the e63s/e72 day-partials tree ([[e63sFoldBatch]]
-    * over `EventOps.e63Partials`) and the e61s activity-pairs tree
-    * ([[e61sFoldBatch]]) — what compaction reads them with. */
-  private[graft] val partialsSchema: StructType = StructType(Seq(
-    StructField("event_type", StringType), StructField("d", DateType),
-    StructField("n", LongType), StructField("sum_cents", LongType),
-    StructField("min_cents", LongType), StructField("max_cents", LongType)))
-  private[graft] val pairsSchema: StructType = StructType(Seq(
-    StructField("user_id", LongType), StructField("wk", TimestampType)))
+  /** The e63s/e72 day-partials tree ([[e63sFoldBatch]] over
+    * `EventOps.e63Partials`) and the e61s activity-pairs tree
+    * ([[e61sFoldBatch]]) under a drain's work dir, with the row schemas
+    * their writers produce. */
+  private[graft] def partialsTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("partials"), StructType(Seq(
+      StructField("event_type", StringType), StructField("d", DateType),
+      StructField("n", LongType), StructField("sum_cents", LongType),
+      StructField("min_cents", LongType), StructField("max_cents", LongType))))
+  private[graft] def pairsTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("pairs"), StructType(Seq(
+      StructField("user_id", LongType), StructField("wk", TimestampType))))
 
   /** e63s's re-merge: batch partials back to day grain — algebraic, so
     * compacting is the same operation the result fold runs. */
@@ -686,8 +558,7 @@ object EventStreams {
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
       Drain.foreachBatch(postBoundaryDelta(s, dir), work) { (df, id) =>
-        maybeCompactFolds(s, work.resolve("partials"), id, partialsSchema,
-          e63sMerge)
+        partialsTree(work).compactIfDue(s, id, e63sMerge)
         e63sFoldBatch(df, id, work)
       }
     }
@@ -703,8 +574,7 @@ object EventStreams {
   private[graft] def e63sFoldBatch(df: DataFrame, id: Long,
       work: java.nio.file.Path): Unit =
     graft.ops.EventOps.e63Partials(df)
-      .write.mode("overwrite")
-      .parquet(work.resolve(s"partials/batch=$id").toString)
+      .write.mode("overwrite").parquet(partialsTree(work).batch(id).toString)
 
   /** state ∪ (compact + live batch partials, re-merged to day grain)
     * → e63's rollup. */
@@ -713,10 +583,11 @@ object EventStreams {
     val state = s.read.parquet(graft.ops.EventOps.e63StateDir(dir))
     // an EMPTY post-boundary delta drains zero batch dirs — degrade to
     // a state-only refresh instead of handing the reader no paths
-    val dirs = foldDirsToRead(work.resolve("partials"))
+    val partials = partialsTree(work)
+    val dirs = partials.readSet()
     val all =
       if (dirs.isEmpty) state
-      else state.unionByName(e63sMerge(s.read.parquet(dirs: _*)))
+      else state.unionByName(e63sMerge(partials.read(s, dirs)))
     graft.ops.EventOps.e63Rollup(all)
   }
 
@@ -737,8 +608,9 @@ object EventStreams {
     * leaves the matrix bit-identical.
     *
     * 100 TB path: per-batch work is O(batch) map-side + a pairs-sized
-    * distinct; the refresh reads O(state) + O([[RefreshCompactEvery]])
-    * fold dirs ([[maybeCompactFolds]] with `distinct` as the re-merge);
+    * distinct; the refresh reads O(state) + O([[FoldTree.CompactEvery]])
+    * fold dirs ([[FoldTree.compactIfDue]] with `distinct` as the
+    * re-merge);
     * the base is never rescanned. */
   def e61sStreamRetention(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e61bEnsure(s, dir)
@@ -752,8 +624,7 @@ object EventStreams {
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, evSrc(dir)) {
       Drain.foreachBatch(postBoundaryDelta(s, dir), work) { (df, id) =>
-        maybeCompactFolds(s, work.resolve("pairs"), id, pairsSchema,
-          _.distinct())
+        pairsTree(work).compactIfDue(s, id, _.distinct())
         e61sFoldBatch(df, id, work)
       }
     }
@@ -763,17 +634,17 @@ object EventStreams {
       work: java.nio.file.Path): Unit =
     df.select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
       .distinct()
-      .write.mode("overwrite")
-      .parquet(work.resolve(s"pairs/batch=$id").toString)
+      .write.mode("overwrite").parquet(pairsTree(work).batch(id).toString)
 
   private[graft] def e61sResult(s: SparkSession, dir: String,
       work: java.nio.file.Path): DataFrame = {
     val state = s.read.parquet(graft.ops.EventOps.e61bStateDir(dir))
     // empty delta → state-only refresh (the e63sResult convention)
-    val dirs = foldDirsToRead(work.resolve("pairs"))
+    val tree = pairsTree(work)
+    val dirs = tree.readSet()
     val pairs =
       if (dirs.isEmpty) state
-      else state.unionByName(s.read.parquet(dirs: _*))
+      else state.unionByName(tree.read(s, dirs))
     graft.ops.EventOps.retentionFromActivity(pairs.distinct())
   }
 

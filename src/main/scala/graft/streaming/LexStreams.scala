@@ -31,9 +31,9 @@ import graft.util.{PathKeys, Staged}
   *    score with), n_docs/avgdl from base (n_docs, sum_dl) + the lens
   *    folds. dl stays denormalized on posting rows — a document's
   *    length is immutable, so THAT denormalization survives arrivals;
-  *  - both fold trees compact via [[EventStreams.maybeCompactFolds]]
+  *  - both fold trees compact via [[FoldTree.compactIfDue]]
   *    with concatenation (rows are (doc, term)-keyed sets), so probe
-  *    listings stay O(RefreshCompactEvery), and a replayed batch id
+  *    listings stay O(FoldTree.CompactEvery), and a replayed batch id
   *    overwrites its own dirs (idempotence by layout).
   *
   * The declared key drains fresh (the e6s stance) and probes; the
@@ -198,6 +198,17 @@ object LexStreams {
         .withColumn("text", updatedText(col("text"))), "doc_id", ArrivalDocBound)
     }, docsSchema)
 
+  /** The text index's fold trees under a drain's work dir: postings
+    * segments, doc lengths and tombstones. The append lifecycle writes
+    * segments and lengths ver-less; the upsert lifecycle ([[upsertDrain]])
+    * stamps `ver` on both and reads them with the ver schemas. */
+  private[graft] def segTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("segs"), segSchema)
+  private[graft] def lensTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("lens"), lensSchema)
+  private[graft] def tombTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("tombs"), tombSchema)
+
   /** Write a lens fold from driver rows — the bounded-batch fast path
     * (the rows came off the batch's one bounded collect, so no second
     * scan+tokenize job runs). `ver` stamps the upsert lifecycle's
@@ -246,13 +257,13 @@ object LexStreams {
     lensRows match {
       case Some(rows) =>
         labeled(s, s"lexfold $id: lens fold (driver rows)") {
-          writeLensLocal(s, rows, ver, work.resolve(s"lens/batch=$id"))
+          writeLensLocal(s, rows, ver, lensTree(work).batch(id))
         }
       case None =>
         labeled(s, s"lexfold $id: lens fold") {
           withLen.select(Seq(col("doc_id"), col("dl")) ++ stamp: _*)
             .write.mode("overwrite")
-            .parquet(work.resolve(s"lens/batch=$id").toString)
+            .parquet(lensTree(work).batch(id).toString)
         }
     }
     labeled(s, s"lexfold $id: postings segment") {
@@ -260,7 +271,7 @@ object LexStreams {
         .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
         .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++ stamp: _*)
         .write.mode("overwrite")
-        .parquet(work.resolve(s"segs/batch=$id").toString)
+        .parquet(segTree(work).batch(id).toString)
     }
   }
 
@@ -272,7 +283,7 @@ object LexStreams {
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
       Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(Drain.Tree("segs", segSchema), Drain.Tree("lens", lensSchema))) {
+          Seq(segTree(work), lensTree(work))) {
         foldBatch(_, _, work)
       }
     }
@@ -282,8 +293,8 @@ object LexStreams {
     * pre-drain so the visibility spec can probe between folds. */
   private[graft] def probe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithDirs(s, foldBaseDir(d), SnapshotFolds.liveDirs(work.resolve("segs")),
-      SnapshotFolds.liveDirs(work.resolve("lens")))
+    probeWithDirs(s, foldBaseDir(d), segTree(work).readSet(),
+      lensTree(work).readSet())
 
   /** Base-only probe against an ARBITRARY layout root — the merge spec
     * probes the merged base (no segments) through this. */
@@ -295,8 +306,8 @@ object LexStreams {
   private[graft] def probeAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame =
     probeWithDirs(s, foldBaseDir(d),
-      SnapshotFolds.pinnedDirs(work.resolve("segs"), snap),
-      SnapshotFolds.pinnedDirs(work.resolve("lens"), snap))
+      segTree(work).pinned(snap),
+      lensTree(work).pinned(snap))
 
   /** The merged (postings, df, stats) relations of base + the given
     * segment/lens dirs, pruned to `terms` — ONE definition for the
@@ -427,8 +438,8 @@ object LexStreams {
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats").select("n_docs")
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .agg(count(lit(1)).as("n_base_postings"))
-    val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
-    val segDirs = SnapshotFolds.liveDirs(work.resolve("segs"))
+    val lensDirs = lensTree(work).readSet()
+    val segDirs = segTree(work).readSet()
     require(segDirs.nonEmpty, s"merge gate needs folded segments under $work")
     val arrDocs = s.read.schema(lensSchema).parquet(lensDirs: _*)
       .agg(count(lit(1)).as("n_arr_docs"))
@@ -499,12 +510,12 @@ object LexStreams {
   /** E35t: the TIERED-MERGE key — drain the arrival stream fresh, trip
     * the count-gated tier merge on both fold trees (the post-drain
     * read set is compact=2 + batch=3 — 2 dirs >
-    * [[EventStreams.TierFanout]]), then probe. The declared rows are
+    * [[FoldTree.TierFanout]]), then probe. The declared rows are
     * e35f's VERBATIM (oracle shared): a tier merge relocates segment
     * rows, never changes them — while the spec pins what the oracle
     * cannot see: the base dirs' mtimes are untouched and the read set
     * collapsed to ONE dir per tree. The merge itself is the generic
-    * fold-tree lifecycle op [[EventStreams.tierMerge]] (also applied to
+    * fold-tree lifecycle op [[FoldTree.tierMerge]] (also applied to
     * the vector folds by e2tm); the BASE IS NEVER TOUCHED — the full
     * base rebuild stays [[mergeIntoBase]]'s job, gated on posting MASS
     * by [[e35gMergeGate]], so the two gates form Lucene's tiered
@@ -521,8 +532,8 @@ object LexStreams {
     val work = PathKeys.fixturePath("stream-e35t", dir, "-4")
     DocStreams.deleteTree(work)
     drain(s, dir, work)
-    EventStreams.maybeTierMerge(s, work.resolve("segs"))
-    EventStreams.maybeTierMerge(s, work.resolve("lens"))
+    segTree(work).tierMerge(s)
+    lensTree(work).tierMerge(s)
     probe(s, dir, work)
   }
 
@@ -639,13 +650,13 @@ object LexStreams {
     // dead version again, or its statistics weight would subtract twice
     // (the delete-then-re-add double-subtract, spec-pinned).
     def latestPriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
+      val lensDirs = lensTree(work).readSet()
       val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
         .withColumn("ver", lit(-1L))
       val allLens = if (lensDirs.isEmpty) baseLens
         else baseLens.unionByName(versionedLens(s, lensDirs))
       val preBatch = restrict(allLens).where(col("ver") < id)
-      val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
+      val tombDirs = tombTree(work).readSet()
       val live = if (tombDirs.isEmpty) preBatch else {
         val t = versionedTombs(s, tombDirs)
           .select(col("doc_id").as("t_doc"), col("upto"))
@@ -659,7 +670,7 @@ object LexStreams {
         .where(col("rn") === 1)
         .select(col("doc_id"), col("dl"), lit(id).as("upto"))
     }
-    val tombDst = work.resolve(s"tombs/batch=$id").toString
+    val tombDst = tombTree(work).batch(id).toString
     val ups = df.where(col("text").isNotNull)
     if (bounded) {
       // ONE bounded collect classifies the batch and carries each new
@@ -712,8 +723,8 @@ object LexStreams {
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
       val root = foldBaseDir(d)
       Drain.manifestedLanding(s, landing, work, Seq(
-          Drain.Tree("segs", segVerSchema), Drain.Tree("lens", lensVerSchema),
-          Drain.Tree("tombs", tombSchema)), maxBytes) {
+          segTree(work).copy(schema = segVerSchema),
+          lensTree(work).copy(schema = lensVerSchema), tombTree(work)), maxBytes) {
         upsertFoldBatch(s, _, _, work, root, _)
       }
     }
@@ -805,8 +816,8 @@ object LexStreams {
 
   private[graft] def upsertProbe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame = {
-    def live(tree: String) = SnapshotFolds.liveDirs(work.resolve(tree))
-    probeWithVersions(s, foldBaseDir(d), live("segs"), live("lens"), live("tombs"))
+    probeWithVersions(s, foldBaseDir(d), segTree(work).readSet(),
+      lensTree(work).readSet(), tombTree(work).readSet())
   }
 
   /** The version-aware probe AT a pinned snapshot: all three fold
@@ -815,9 +826,8 @@ object LexStreams {
     * statistics weight) at snapshots < k. */
   private[graft] def upsertProbeAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame = {
-    def pinned(tree: String) = SnapshotFolds.pinnedDirs(work.resolve(tree), snap)
-    probeWithVersions(s, foldBaseDir(d), pinned("segs"), pinned("lens"),
-      pinned("tombs"))
+    probeWithVersions(s, foldBaseDir(d), segTree(work).pinned(snap),
+      lensTree(work).pinned(snap), tombTree(work).pinned(snap))
   }
 
   /** Merge reconciliation FROM THE INDEX ITSELF — the one merge of the
@@ -835,9 +845,9 @@ object LexStreams {
     val root = foldBaseDir(d)
     val dst = work.resolve("merged")
     DocStreams.deleteTree(dst)
-    val segDirs = SnapshotFolds.liveDirs(work.resolve("segs"))
-    val lensDirs = SnapshotFolds.liveDirs(work.resolve("lens"))
-    val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
+    val segDirs = segTree(work).readSet()
+    val lensDirs = lensTree(work).readSet()
+    val tombDirs = tombTree(work).readSet()
     val tombs = (if (tombDirs.isEmpty)
         Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
       else versionedTombs(s, tombDirs)).distinct()

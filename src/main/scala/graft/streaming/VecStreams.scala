@@ -26,11 +26,10 @@ import graft.util.{PathKeys, Staged}
   *    and appended as its own `batch=<id>` fold dir — a replayed id
   *    OVERWRITES its own dir, so at-least-once delivery cannot
   *    duplicate a vector (idempotence by layout, the e63s claim);
-  *  - accumulated fold dirs compact via
-  *    [[EventStreams.maybeCompactFolds]] with CONCATENATION as the
-  *    re-merge (the fold rows are a set keyed by vec_id — compaction
-  *    relocates, never re-aggregates), so probe listings stay
-  *    O(RefreshCompactEvery) instead of O(batches);
+  *  - accumulated fold dirs compact via [[FoldTree.compactIfDue]]
+  *    with CONCATENATION as the re-merge (the fold rows are a set keyed
+  *    by vec_id — compaction relocates, never re-aggregates), so probe
+  *    listings stay O(FoldTree.CompactEvery) instead of O(batches);
   *  - a PROBE reads base lists (partition-pruned to the query cells)
   *    + the compacted folds (cell-filtered) — a vector arriving in
   *    batch N is visible to any probe after batch N (E2fStreamSpec).
@@ -67,6 +66,15 @@ object VecStreams {
     StructType(foldSchema.fields :+ StructField("ver", LongType))
   private val tombSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType), StructField("upto", LongType)))
+
+  /** The vector index's fold trees under a drain's work dir: cell folds
+    * (ver-less for the append lifecycle; the upsert lifecycle
+    * ([[upsertVecDrain]]) reads them with [[foldVerSchema]]) and
+    * tombstones. */
+  private[graft] def foldTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("folds"), foldSchema)
+  private[graft] def tombTree(work: java.nio.file.Path): FoldTree =
+    FoldTree(work.resolve("tombs"), tombSchema)
 
   private[graft] def foldBaseDir(d: String): String =
     PathKeys.fixtureDir("embeddings_ivf_fold", d)
@@ -108,7 +116,7 @@ object VecStreams {
         SimOps.bestCentroid(col("embedding").cast("array<double>"), cents)
           .getField("cid").as("cell"))
       .write.mode("overwrite")
-      .parquet(work.resolve(s"folds/batch=$id").toString)
+      .parquet(foldTree(work).batch(id).toString)
 
   /** The arrival drain. Concatenation is the re-merge: fold rows are a
     * vec_id-keyed set, so compaction relocates and never re-aggregates.
@@ -122,7 +130,7 @@ object VecStreams {
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
       Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(Drain.Tree("folds", foldSchema))) {
+          Seq(foldTree(work))) {
         e2fFoldBatch(_, _, cents, work)
       }
     }
@@ -132,16 +140,12 @@ object VecStreams {
     * vector sharing a query's cell must appear here after its batch
     * lands (and not before), even when it misses the top-3. */
   private[graft] def e2fCandidates(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame =
-    candidatesAt(s, foldBaseDir(d), Some(work.resolve("folds")), d)
-
-  /** The same probe against ANY trained layout root (queries routed
-    * under THAT root's centroids) with optional fold dirs — the
-    * re-stage spec probes the rebuilt index through this. */
-  private[graft] def candidatesAt(s: SparkSession, root: String,
-      foldRootOpt: Option[java.nio.file.Path], d: String): DataFrame = {
+      work: java.nio.file.Path): DataFrame = {
+    val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
-    scoredAgainst(s, root, foldRootOpt, q, cells)
+    // a probe BEFORE the first arrival batch reads base-only: the tree
+    // does not exist yet, so its read set is empty
+    scoredWithDirs(s, root, foldTree(work).readSet(), q, cells)
   }
 
   /** The nprobe-1 query routing under `root`'s centroids — ONE
@@ -162,18 +166,12 @@ object VecStreams {
   }
 
   /** Multi-probe variant (the e2w knob against an arbitrary root) —
-    * queries routed driver-side to their `nprobe` nearest cells; the
-    * re-stage spec measures that a REBALANCED index serves the same
-    * recall through its probe knob while reading fewer candidates
-    * than one drift-fattened frozen cell. */
-  private[graft] def multiprobeCandidatesAt(s: SparkSession, root: String,
-      foldRootOpt: Option[java.nio.file.Path], d: String, nprobe: Int): DataFrame =
-    multiprobeCandidatesWithDirs(s, root,
-      foldRootOpt.toSeq.flatMap(SnapshotFolds.liveDirs), d, nprobe)
-
-  /** The multiprobe scored relation against an EXPLICIT fold-dir list
-    * and a declared query-id bound — e71v probes the pinned manifest
-    * set through this with queries vec_id < NQueries. */
+    * queries routed driver-side to their `nprobe` nearest cells, scored
+    * against an EXPLICIT fold-dir list with a declared query-id bound.
+    * e71v probes the pinned manifest set through this with queries
+    * vec_id < NQueries; the re-stage spec measures that a REBALANCED
+    * index serves the same recall through its probe knob while reading
+    * fewer candidates than one drift-fattened frozen cell. */
   private[graft] def multiprobeCandidatesWithDirs(s: SparkSession, root: String,
       foldDirsIn: Seq[String], d: String, nprobe: Int,
       qMax: Long = 8L): DataFrame = {
@@ -188,16 +186,8 @@ object VecStreams {
     scoredWithDirs(s, root, foldDirsIn, q, routed.map(_._3).distinct.sorted)
   }
 
-  private def scoredAgainst(s: SparkSession, root: String,
-      foldRootOpt: Option[java.nio.file.Path], q: DataFrame,
-      cells: Seq[Int]): DataFrame =
-    // a probe BEFORE the first arrival batch: base-only (the dir does
-    // not exist yet — the e63sResult empty-delta convention)
-    scoredWithDirs(s, root, foldRootOpt.toSeq.flatMap(SnapshotFolds.liveDirs),
-      q, cells)
-
   /** The probe's scored relation against an EXPLICIT fold-dir list —
-    * the current read set ([[scoredAgainst]]) or a snapshot manifest's
+    * the current read set ([[e2fCandidates]]) or a snapshot manifest's
     * pinned set ([[e2zFoldSnapshot]]). */
   private def scoredWithDirs(s: SparkSession, root: String,
       foldDirs: Seq[String], q: DataFrame, cells: Seq[Int]): DataFrame = {
@@ -287,10 +277,10 @@ object VecStreams {
     val root = foldBaseDir(d)
     val base = s.read.parquet(s"$root/lists")
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
-    val foldRoot = work.resolve("folds")
-    val foldDirs = SnapshotFolds.liveDirs(foldRoot)
-    require(foldDirs.nonEmpty, s"drift gate needs folded arrivals under $foldRoot")
-    val arr = s.read.schema(foldSchema).parquet(foldDirs: _*)
+    val folds = foldTree(work)
+    val foldDirs = folds.readSet()
+    require(foldDirs.nonEmpty, s"drift gate needs folded arrivals under ${folds.root}")
+    val arr = folds.read(s, foldDirs)
       .groupBy("cell").agg(count(lit(1)).as("n_arr"))
     val cells = base.join(arr, Seq("cell"), "full_outer")
       .select(col("cell"),
@@ -362,7 +352,7 @@ object VecStreams {
       work: java.nio.file.Path, snap: Long): DataFrame = {
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
-    scoredWithDirs(s, root, SnapshotFolds.pinnedDirs(work.resolve("folds"), snap),
+    scoredWithDirs(s, root, foldTree(work).pinned(snap),
       q, cells)
   }
 
@@ -486,13 +476,13 @@ object VecStreams {
       cents: Seq[(Int, Seq[Double])], work: java.nio.file.Path): Unit = {
     df.select(col("vec_id"), lit(id).as("upto"))
       .write.mode("overwrite")
-      .parquet(work.resolve(s"tombs/batch=$id").toString)
+      .parquet(tombTree(work).batch(id).toString)
     df.where(col("embedding").isNotNull)
       .select(col("vec_id"), col("label"), col("embedding"),
         SimOps.bestCentroid(col("embedding").cast("array<double>"), cents)
           .getField("cid").as("cell"), lit(id).as("ver"))
       .write.mode("overwrite")
-      .parquet(work.resolve(s"folds/batch=$id").toString)
+      .parquet(foldTree(work).batch(id).toString)
   }
 
   /** The manifested drain of a CDC landing through
@@ -502,8 +492,8 @@ object VecStreams {
       work: java.nio.file.Path, landing: Drain.Landing): Unit =
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-      Drain.manifested(s, landing.stream(s), work, Seq(
-          Drain.Tree("folds", foldVerSchema), Drain.Tree("tombs", tombSchema))) {
+      Drain.manifested(s, landing.stream(s), work,
+          Seq(foldTree(work).copy(schema = foldVerSchema), tombTree(work))) {
         upsertVecFoldBatch(_, _, cents, work)
       }
     }
@@ -565,8 +555,8 @@ object VecStreams {
   private[graft] def upsertProbe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
     SimOps.topK(upsertCandidatesWithDirs(s, d,
-      SnapshotFolds.liveDirs(work.resolve("folds")),
-      SnapshotFolds.liveDirs(work.resolve("tombs"))), 3)
+      foldTree(work).readSet(),
+      tombTree(work).readSet()), 3)
 
   /** The version-aware probe AT a pinned snapshot: both trees resolve
     * through their `snap` manifests — a vector updated (or deleted) at
@@ -574,8 +564,8 @@ object VecStreams {
   private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame =
     upsertCandidatesWithDirs(s, d,
-      SnapshotFolds.pinnedDirs(work.resolve("folds"), snap),
-      SnapshotFolds.pinnedDirs(work.resolve("tombs"), snap))
+      foldTree(work).pinned(snap),
+      tombTree(work).pinned(snap))
 
   /** Restage reconciliation FROM THE INDEX ITSELF — the one restage of
     * the mutation lifecycle (e2u's updates, e2d's deletes): the updated
@@ -589,8 +579,8 @@ object VecStreams {
       work: java.nio.file.Path): java.nio.file.Path = {
     import s.implicits._
     val root = foldBaseDir(d)
-    val foldDirsIn = SnapshotFolds.liveDirs(work.resolve("folds"))
-    val tombDirs = SnapshotFolds.liveDirs(work.resolve("tombs"))
+    val foldDirsIn = foldTree(work).readSet()
+    val tombDirs = tombTree(work).readSet()
     val base = s.read.parquet(s"$root/lists")
       .select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("ver", lit(-1L))
@@ -648,7 +638,7 @@ object VecStreams {
 
   /** E2tm: the SIZE-TIERED FOLD MERGE on the vector index — e35t's
     * count-gated tier policy applied to the cell folds (the generic
-    * [[EventStreams.tierMerge]]; fold rows are a vec_id-keyed set, so
+    * [[FoldTree.tierMerge]]; fold rows are a vec_id-keyed set, so
     * concatenation is the re-merge and the probe's answer cannot
     * change — the declared rows are e2f's VERBATIM, oracle shared).
     * The tier merge collapses the post-drain read set (compact=2 +
@@ -670,7 +660,7 @@ object VecStreams {
     val work = PathKeys.fixturePath("stream-e2tm", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
-    EventStreams.maybeTierMerge(s, work.resolve("folds"))
+    foldTree(work).tierMerge(s)
     e2fProbe(s, dir, work)
   }
 }

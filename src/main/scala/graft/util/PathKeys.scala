@@ -31,4 +31,21 @@ object PathKeys {
   def fixturePath(kind: String, dir: String,
       suffix: String = ""): java.nio.file.Path =
     java.nio.file.Paths.get(fixtureRoot, kind, keyedName(dir) + suffix)
+
+  /** Where the ORD golden JSON files live: read-only inputs the ORD
+    * fixtures parse and the ORD specs compare against byte for byte.
+    * A fixed location, not a knob — the goldens are never written,
+    * reconstructed or redirected. */
+  val goldenDir: String = "/root/reference"
+
+  /** The golden file `name` under [[goldenDir]]. A missing one fails
+    * with one message naming the file and the precondition, never with
+    * a bare read error deep inside a parser. */
+  def golden(name: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(goldenDir, name)
+    if (!java.nio.file.Files.isRegularFile(p))
+      throw new java.io.FileNotFoundException(s"ORD golden $p is missing: " +
+        s"the ORD fixtures and specs need the five golden JSON files in $goldenDir")
+    p
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SimOps
 import graft.sources.IvfServe
-import graft.streaming.{EventStreams, VecStreams}
+import graft.streaming.{FoldTree, VecStreams}
 
 /** e2f — incremental IVF maintenance (r11 verdict ask #3). Claims:
   * a vector folded in batch N is probe-visible after batch N (and a
@@ -76,12 +76,11 @@ class E2fStreamSpec extends AnyFunSuite {
       // 8 single-vector batches with the drain's compaction cadence
       val arr = arrivals().where(col("vec_id") < 8)
       (0 until 8).foreach { i =>
-        EventStreams.maybeCompactFolds(spark, work.resolve("folds"), i.toLong,
-          VecStreams.foldSchema, df => df)
+        VecStreams.foldTree(work).compactIfDue(spark, i.toLong)
         VecStreams.e2fFoldBatch(arr.where(col("vec_id") === i), i.toLong, cs, work)
       }
-      val dirs = EventStreams.foldDirsToRead(work.resolve("folds"))
-      assert(dirs.length <= EventStreams.RefreshCompactEvery + 1,
+      val dirs = VecStreams.foldTree(work).readSet()
+      assert(dirs.length <= FoldTree.CompactEvery + 1,
         s"fold listing must stay O(CompactEvery): $dirs")
       VecStreams.e2fFoldBatch(arr, 0L, cs, oneShot)
       val inc = VecStreams.e2fProbe(spark, sf, work)
@@ -124,7 +123,8 @@ class E2fStreamSpec extends AnyFunSuite {
       val foldRoot = work.resolve("folds")
       assert(java.nio.file.Files.isDirectory(foldRoot.resolve("compact=2")),
         "batch 3 must have compacted the earlier batches")
-      val pinned = graft.streaming.SnapshotFolds.readManifest(foldRoot, 2L)
+      val pinned = VecStreams.foldTree(work).pinned(2L)
+        .map(java.nio.file.Paths.get(_).getFileName.toString)
       assert(pinned == Seq("batch=0", "batch=1", "batch=2"), s"pinned: $pinned")
       pinned.foreach(n => assert(
         java.nio.file.Files.isDirectory(foldRoot.resolve(n)),
@@ -146,14 +146,14 @@ class E2fStreamSpec extends AnyFunSuite {
       assert(snapLate.count() == 0,
         "a pinned read must not see arrivals that landed after its snapshot")
       val curIds = spark.read.parquet(
-          EventStreams.foldDirsToRead(foldRoot): _*)
+          VecStreams.foldTree(work).readSet(): _*)
         .where(col("vec_id") >= 12 && col("vec_id") < VecStreams.ArrivalBound)
         .select("vec_id").distinct().collect().map(_.getLong(0)).sorted
       assert(curIds.toSeq == (12L until VecStreams.ArrivalBound),
         s"the current read set must carry batch 3's arrivals: ${curIds.toSeq}")
       // LOUD EXPIRY: snap 0 expired when snap 3 was written (Retain=3)
       val ex = intercept[IllegalArgumentException](
-        graft.streaming.SnapshotFolds.readManifest(foldRoot, 0L))
+        VecStreams.foldTree(work).pinned(0L))
       assert(ex.getMessage.contains("not resolvable"))
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
   }
@@ -166,15 +166,16 @@ class E2fStreamSpec extends AnyFunSuite {
       val q0 = Tables.embeddings(spark, sf).where(col("vec_id") === 0)
         .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
       VecStreams.e2fFoldBatch(q0, 0L, cs, work)
-      def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
+      def folds() = VecStreams.foldTree(work).readSet()
+      def tombs() = VecStreams.tombTree(work).readSet()
       val before = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
-          spark, sf, dirs("folds"), Nil), 3)
+          spark, sf, folds(), Nil), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(before.head.getLong(2) == 999999L && before.head.getDouble(3) == 1.0)
       Seq(999999L).toDF("vec_id")
         .write.parquet(work.resolve("tombs/batch=1").toString)
       val after = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
-          spark, sf, dirs("folds"), dirs("tombs")), 3)
+          spark, sf, folds(), tombs()), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
         "a tombstoned vector must never be served")
@@ -226,9 +227,10 @@ class E2fStreamSpec extends AnyFunSuite {
       val del = Seq((3L, null.asInstanceOf[Array[Float]], null.asInstanceOf[java.lang.Integer]))
         .toDF("vec_id", "embedding", "label")
       VecStreams.upsertVecFoldBatch(del, 1L, cs, work)
-      def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
+      def folds() = VecStreams.foldTree(work).readSet()
+      def tombs() = VecStreams.tombTree(work).readSet()
       def probed() = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
-          spark, sf, dirs("folds"), dirs("tombs")), 3)
+          spark, sf, folds(), tombs()), 3)
         .collect().map(_.toSeq).toSeq
       val once = probed()
       VecStreams.upsertVecFoldBatch(del, 1L, cs, work)
@@ -245,9 +247,10 @@ class E2fStreamSpec extends AnyFunSuite {
       val q0 = Tables.embeddings(spark, sf).where(col("vec_id") === 0)
         .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
       VecStreams.upsertVecFoldBatch(q0, 0L, cs, work)
-      def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
+      def folds() = VecStreams.foldTree(work).readSet()
+      def tombs() = VecStreams.tombTree(work).readSet()
       def cands() = VecStreams.upsertCandidatesWithDirs(
-        spark, sf, dirs("folds"), dirs("tombs"))
+        spark, sf, folds(), tombs())
         .where(col("cand_id") === 999999L).collect()
       val before = cands()
       assert(before.exists(r => r.getLong(0) == 0L && r.getDouble(2) == 1.0),
@@ -262,10 +265,10 @@ class E2fStreamSpec extends AnyFunSuite {
         s"the superseded version must never be served: ${after.toSeq}")
       // replay idempotence: re-folding the update batch changes nothing
       val probedOnce = VecStreams.upsertCandidatesWithDirs(
-        spark, sf, dirs("folds"), dirs("tombs")).collect().map(_.toSeq).toSeq
+        spark, sf, folds(), tombs()).collect().map(_.toSeq).toSeq
       VecStreams.upsertVecFoldBatch(v2, 1L, cs, work)
       val probedTwice = VecStreams.upsertCandidatesWithDirs(
-        spark, sf, dirs("folds"), dirs("tombs")).collect().map(_.toSeq).toSeq
+        spark, sf, folds(), tombs()).collect().map(_.toSeq).toSeq
       assert(probedOnce == probedTwice,
         "a replayed upsert batch must overwrite, never stack")
     } finally graft.streaming.DocStreams.deleteTree(work)
@@ -280,9 +283,10 @@ class E2fStreamSpec extends AnyFunSuite {
       val q0 = Tables.embeddings(spark, sf).where(col("vec_id") === 0)
         .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
       VecStreams.upsertVecFoldBatch(q0, 0L, cs, work)
-      def dirs(t: String) = EventStreams.foldDirsToRead(work.resolve(t))
+      def folds() = VecStreams.foldTree(work).readSet()
+      def tombs() = VecStreams.tombTree(work).readSet()
       def hit() = VecStreams.upsertCandidatesWithDirs(
-        spark, sf, dirs("folds"), dirs("tombs"))
+        spark, sf, folds(), tombs())
         .where(col("cand_id") === 999999L && col("cos_sim") === 1.0).count()
       assert(hit() == 1, "v1 must serve")
       // DELETE at batch 1 — upto bounds the kill at its own batch
@@ -359,13 +363,12 @@ class E2fStreamSpec extends AnyFunSuite {
       // the read set collapsed to ONE dir; pinned snapshots keep
       // resolving (manifest-referenced dirs were spared)
       val work = graft.util.PathKeys.fixturePath("stream-e2tm", sf, "-4")
-      val t = work.resolve("folds")
-      val dirs = EventStreams.foldDirsToRead(t)
+      val dirs = VecStreams.foldTree(work).readSet()
       assert(dirs.size == 1, s"fold read set must collapse to one dir: $dirs")
       assert(Paths.get(dirs.head).getFileName.toString == "compact=3")
-      val pinned = graft.streaming.SnapshotFolds.readManifest(t, 2L)
+      val pinned = VecStreams.foldTree(work).pinned(2L)
       assert(pinned.nonEmpty, "the batch-2 manifest must be retained")
-      pinned.foreach(n => assert(Files.isDirectory(t.resolve(n)),
+      pinned.foreach(n => assert(Files.isDirectory(Paths.get(n)),
         s"tier merge must spare manifest-referenced dir $n"))
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
   }
@@ -380,8 +383,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val (work, ref) = (freshWork(), freshWork())
     try {
       def cands(w: java.nio.file.Path) = VecStreams.upsertCandidatesWithDirs(spark, sf,
-          graft.streaming.SnapshotFolds.liveDirs(w.resolve("folds")),
-          graft.streaming.SnapshotFolds.liveDirs(w.resolve("tombs")))
+          VecStreams.foldTree(w).readSet(), VecStreams.tombTree(w).readSet())
         .collect().map(_.toSeq).toSet
       def candId(r: Seq[Any]) = r(1).asInstanceOf[Long]
       VecStreams.upsertVecFoldBatch(arrivals(), 0L, cs, work)

@@ -88,7 +88,7 @@ class E63StreamSpec extends AnyFunSuite {
     // compact=2 at batch 3's entry, so the listing is BOUNDED
     assert(dirs().exists(_.startsWith("compact=")),
       s"the 4-batch drain must exercise compaction: ${dirs()}")
-    assert(dirs().count(_.startsWith("batch=")) <= EventStreams.RefreshCompactEvery,
+    assert(dirs().count(_.startsWith("batch=")) <= graft.streaming.FoldTree.CompactEvery,
       s"live batch dirs must stay bounded: ${dirs()}")
     // compaction is the key's own re-merge, so the answer cannot move
     assert(once == rows(EventOps.e63IncrAgg(spark, sf)))

@@ -67,7 +67,7 @@ class E71RetrievalSpec extends AnyFunSuite {
   }
 
   test("e71v: both legs pinned at ONE version; post-snapshot arrivals on neither") {
-    import graft.streaming.{EventStreams, LexStreams, SnapshotFolds, VecStreams}
+    import graft.streaming.{LexStreams, VecStreams}
     val declared = RetrievalOps.e71vHybridAtSnapshot(spark, sf).collect()
     assert(declared.nonEmpty)
     assert(declared.forall(_.getLong(6) == RetrievalOps.DeclaredHybridSnap))
@@ -81,15 +81,15 @@ class E71RetrievalSpec extends AnyFunSuite {
     // CONSISTENCY: the two manifests pin the SAME batch prefix —
     // batch-3 content (ids 12..15) is in the CURRENT read set of both
     // trees but in NEITHER pinned set
-    for ((work, tree, idCol) <- Seq((lexWork, "segs", "doc_id"),
-        (vecWork, "folds", "vec_id"))) {
-      val t = work.resolve(tree)
-      val pinnedDirs = SnapshotFolds.pinnedDirs(t, RetrievalOps.DeclaredHybridSnap)
+    for ((t, idCol) <- Seq((LexStreams.segTree(lexWork), "doc_id"),
+        (VecStreams.foldTree(vecWork), "vec_id"))) {
+      val tree = t.root.getFileName
+      val pinnedDirs = t.pinned(RetrievalOps.DeclaredHybridSnap)
       val pinnedLate = spark.read.parquet(pinnedDirs: _*)
         .where(org.apache.spark.sql.functions.col(idCol) >= 12 &&
           org.apache.spark.sql.functions.col(idCol) < 16).count()
       assert(pinnedLate == 0, s"$tree: pinned set must exclude batch 3")
-      val curLate = spark.read.parquet(EventStreams.foldDirsToRead(t): _*)
+      val curLate = spark.read.parquet(t.readSet(): _*)
         .where(org.apache.spark.sql.functions.col(idCol) >= 12 &&
           org.apache.spark.sql.functions.col(idCol) < 16).count()
       assert(curLate > 0, s"$tree: current set must carry batch 3")
@@ -107,9 +107,9 @@ class E71RetrievalSpec extends AnyFunSuite {
           .where(col("vec_id") < 12), 0L,
         IvfServe.centroidsAt(spark, VecStreams.foldBaseDir(sf)), vecOne)
       val manual = RetrievalOps.fuseAtDirs(spark, sf,
-          EventStreams.foldDirsToRead(lexOne.resolve("segs")),
-          EventStreams.foldDirsToRead(lexOne.resolve("lens")),
-          EventStreams.foldDirsToRead(vecOne.resolve("folds")))
+          LexStreams.segTree(lexOne).readSet(),
+          LexStreams.lensTree(lexOne).readSet(),
+          VecStreams.foldTree(vecOne).readSet())
         .collect().map(_.toSeq).toSeq
       assert(declared.map(_.toSeq.dropRight(1)).toSeq == manual,
         "the pinned fused read must equal the one-shot prefix replay")

@@ -12,7 +12,7 @@ import graft.streaming.{EventStreams, SnapshotFolds}
   *      re-merged equals a one-shot fold of the batch prefix ≤ k
   *      (recomputed from the staged bucket files directly);
   *  (2) PINNED UNDER COMPACTION: batch 3's step compacts batches 0..2
-  *      out of the CURRENT read set (foldDirsToRead lists compact=2 +
+  *      out of the CURRENT read set (readSet lists compact=2 +
   *      batch=3 only), yet the covered dirs survive on disk because
   *      retained manifests reference them — so snapshot 2 still reads;
   *  (3) RETENTION EXPIRY: manifest 0 (older than the Retain=3 window)
@@ -29,7 +29,7 @@ class E72SnapshotSpec extends AnyFunSuite {
     df.collect().map(_.toSeq).toSeq
 
   private val work = graft.util.PathKeys.fixturePath("stream-e72-spec", sf, "-4")
-  private val partials = work.resolve("partials")
+  private val partials = EventStreams.partialsTree(work)
   private val landing = graft.util.PathKeys.fixturePath("stream-events-bucketed", sf, "-4")
 
   private def wipe(p: java.nio.file.Path): Unit = {
@@ -57,7 +57,7 @@ class E72SnapshotSpec extends AnyFunSuite {
 
   test("time travel: every retained snapshot equals its prefix fold") {
     drained
-    val snaps = SnapshotFolds.listSnaps(partials)
+    val snaps = partials.snaps
     assert(snaps == Seq(1L, 2L, 3L),
       s"4 batches at Retain=3 must retain exactly 1..3, got $snaps")
     snaps.foreach { k =>
@@ -72,10 +72,10 @@ class E72SnapshotSpec extends AnyFunSuite {
     drained
     import scala.jdk.CollectionConverters._
     val onDisk = scala.util.Using.resource(
-        java.nio.file.Files.list(partials)) { st =>
+        java.nio.file.Files.list(partials.root)) { st =>
       st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
     }
-    val current = EventStreams.foldDirsToRead(partials)
+    val current = partials.readSet()
       .map(p => java.nio.file.Paths.get(p).getFileName.toString).sorted
     assert(current == Seq("batch=3", "compact=2"),
       s"batch-3's compaction must own the current read set, got $current")
@@ -91,7 +91,7 @@ class E72SnapshotSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("retained"))
     import scala.jdk.CollectionConverters._
     val litter = scala.util.Using.resource(
-        java.nio.file.Files.list(partials.resolve("_manifests"))) { st =>
+        java.nio.file.Files.list(partials.root.resolve("_manifests"))) { st =>
       st.iterator().asScala.map(_.getFileName.toString)
         .filter(_.startsWith("_tmp")).toSeq
     }
@@ -100,7 +100,7 @@ class E72SnapshotSpec extends AnyFunSuite {
 
   test("a replayed batch id leaves every retained snapshot bit-identical") {
     drained
-    val before = SnapshotFolds.listSnaps(partials)
+    val before = partials.snaps
       .map(k => k -> rows(SnapshotFolds.readAtSnapshot(spark, partials, k)
         .orderBy("event_type", "d")))
     val raw = spark.read

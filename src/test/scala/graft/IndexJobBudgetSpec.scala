@@ -1,15 +1,18 @@
 package graft
 
-import graft.streaming.{LexStreams, VecStreams}
+import graft.streaming.{DocStreams, EventStreams, LexStreams, SnapshotFolds, VecStreams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budgets of the four drained index-mutation keys: one declared run
-  * (fresh drain of the six-batch CDC landing, then the probe, collected)
-  * counted with a listener. A first run stages the fold base and the
-  * landing, so the counted run pays only the drain and the probe. The
-  * deletes (e35d, e2d) and the updates (e35u, e2u) run through the same
-  * upsert verb per index. Budgets only ratchet down. */
+/** Job budgets of the drained fold-tree keys: one declared run (a fresh
+  * drain, then the result read, collected) counted with a listener. A
+  * first run stages the fold base, the state and the landing, so the
+  * counted run pays only the drain and the read. The index-mutation keys
+  * drain the six-batch CDC landing; their deletes (e35d, e2d) and updates
+  * (e35u, e2u) run through the same upsert verb per index. The other
+  * keys drain a four-batch landing through the same fold-tree protocol:
+  * the e6s ingest index, the e10s gate, the e63s/e61s/e72 refresh folds
+  * and the e35t/e2tm tier merges. Budgets only ratchet down. */
 class IndexJobBudgetSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
@@ -18,7 +21,14 @@ class IndexJobBudgetSpec extends AnyFunSuite {
     ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 44),
     ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 48),
     ("e2d_vec_tombstone", VecStreams.e2dVecTombstone, 32),
-    ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 32))
+    ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 32),
+    ("e6s_minhash_stream", DocStreams.e6sMinhashStream, 39),
+    ("e10s_quality_stream", DocStreams.e10sQualityStream, 12),
+    ("e63s_incr_stream", EventStreams.e63sStreamIncrAgg, 12),
+    ("e61s_retention_stream", EventStreams.e61sStreamRetention, 18),
+    ("e72_snapshot_read", SnapshotFolds.e72SnapshotRead, 12),
+    ("e35t_tier_merge", LexStreams.e35tTierMerge, 24),
+    ("e2tm_vec_tier_merge", VecStreams.e2tmVecTierMerge, 20))
 
   for ((key, run, budget) <- keys) test(s"$key: $budget jobs per declared run") {
     run(spark, sf).collect()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.LexStreams
+import graft.streaming.{FoldTree, LexStreams}
 import scala.jdk.CollectionConverters._
 
 /** e35f — incremental postings maintenance (the Lucene segment model).
@@ -16,6 +16,10 @@ import scala.jdk.CollectionConverters._
 class LexStreamSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
+
+  /** The tree at `root` — a listing or a manifest takes no schema. */
+  private def tree(root: java.nio.file.Path) =
+    FoldTree(root, new org.apache.spark.sql.types.StructType())
 
   private def freshWork(): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("e35f-spec")
@@ -86,14 +90,15 @@ class LexStreamSpec extends AnyFunSuite {
       val work = graft.util.PathKeys.fixturePath("stream-e35z", sf, "-4")
       // SURVIVAL: batch 3's step compacted batches 0..2 out of the
       // current read set of BOTH trees; the pinned dirs must resolve
-      for (tree <- Seq("segs", "lens")) {
-        val root = work.resolve(tree)
+      for (name <- Seq("segs", "lens")) {
+        val root = work.resolve(name)
         assert(java.nio.file.Files.isDirectory(root.resolve("compact=2")),
-          s"$tree: batch 3 must have compacted the earlier batches")
-        val pinned = graft.streaming.SnapshotFolds.readManifest(root, 2L)
-        assert(pinned == Seq("batch=0", "batch=1", "batch=2"), s"$tree: $pinned")
+          s"$name: batch 3 must have compacted the earlier batches")
+        val pinned = tree(root).pinned(2L)
+          .map(java.nio.file.Paths.get(_).getFileName.toString)
+        assert(pinned == Seq("batch=0", "batch=1", "batch=2"), s"$name: $pinned")
         pinned.foreach(n => assert(java.nio.file.Files.isDirectory(root.resolve(n)),
-          s"$tree: compaction must SPARE manifest-referenced dir $n"))
+          s"$name: compaction must SPARE manifest-referenced dir $n"))
       }
       // PREFIX EQUALITY incl. the stats rollback: the pinned probe
       // equals a one-shot fold of exactly the batch-prefix arrivals
@@ -109,7 +114,7 @@ class LexStreamSpec extends AnyFunSuite {
         "the current read set must score with post-snapshot statistics")
       // LOUD EXPIRY: snap 0 expired when snap 3 was written (Retain=3)
       val ex = intercept[IllegalArgumentException](
-        graft.streaming.SnapshotFolds.readManifest(work.resolve("segs"), 0L))
+        LexStreams.segTree(work).pinned(0L))
       assert(ex.getMessage.contains("not resolvable"))
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
   }
@@ -181,14 +186,14 @@ class LexStreamSpec extends AnyFunSuite {
       // the read set collapsed to ONE dir per tree; pinned snapshots
       // keep resolving (manifest-referenced dirs were spared)
       val work = graft.util.PathKeys.fixturePath("stream-e35t", sf, "-4")
-      for (tree <- Seq("segs", "lens")) {
-        val t = work.resolve(tree)
-        val dirs = graft.streaming.EventStreams.foldDirsToRead(t)
-        assert(dirs.size == 1, s"$tree read set must collapse to one dir: $dirs")
+      for (name <- Seq("segs", "lens")) {
+        val t = tree(work.resolve(name))
+        val dirs = t.readSet()
+        assert(dirs.size == 1, s"$name read set must collapse to one dir: $dirs")
         assert(Paths.get(dirs.head).getFileName.toString == "compact=3")
-        val pinned = graft.streaming.SnapshotFolds.readManifest(t, 2L)
-        pinned.foreach(n => assert(Files.isDirectory(t.resolve(n)),
-          s"$tree: tier merge must spare manifest-referenced dir $n"))
+        val pinned = t.pinned(2L)
+        pinned.foreach(n => assert(Files.isDirectory(Paths.get(n)),
+          s"$name: tier merge must spare manifest-referenced dir $n"))
       }
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
   }
@@ -204,8 +209,8 @@ class LexStreamSpec extends AnyFunSuite {
       val doc = Seq((999999L, text, "en", "t", 0L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       LexStreams.foldBatch(doc, 0L, work)
-      def segs() = graft.streaming.EventStreams.foldDirsToRead(work.resolve("segs"))
-      def lens() = graft.streaming.EventStreams.foldDirsToRead(work.resolve("lens"))
+      def segs() = LexStreams.segTree(work).readSet()
+      def lens() = LexStreams.lensTree(work).readSet()
       val before = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(), Nil).where(col("qid") === 0).orderBy("rnk").collect()
       assert(before.head.getLong(2) == 999999L, s"plant must rank 1: ${before.toSeq}")
@@ -218,7 +223,7 @@ class LexStreamSpec extends AnyFunSuite {
         .write.parquet(work.resolve("tombs/batch=1").toString)
       val after = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(),
-        graft.streaming.EventStreams.foldDirsToRead(work.resolve("tombs")))
+        LexStreams.tombTree(work).readSet())
         .where(col("qid") === 0).orderBy("rnk").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
         "a tombstoned doc must never be served")
@@ -247,8 +252,8 @@ class LexStreamSpec extends AnyFunSuite {
       val pre = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 3L)
         .collect().map(_.toSeq).toSeq
       val manual = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
-        graft.streaming.EventStreams.foldDirsToRead(oneShot.resolve("segs")),
-        graft.streaming.EventStreams.foldDirsToRead(oneShot.resolve("lens")), Nil)
+        LexStreams.segTree(oneShot).readSet(),
+        LexStreams.lensTree(oneShot).readSet(), Nil)
         .collect().map(_.toSeq).toSeq
       assert(pre == manual,
         "snapshot 3 must reproduce the pre-delete truth exactly")
@@ -329,12 +334,7 @@ class LexStreamSpec extends AnyFunSuite {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       LexStreams.upsertFoldBatch(spark, v1, 0L, work, root)
       // no prior resolved at batch 0 → no tombs dir exists yet
-      def dirs(w: java.nio.file.Path, t: String) = {
-        val p = w.resolve(t)
-        if (java.nio.file.Files.isDirectory(p))
-          graft.streaming.EventStreams.foldDirsToRead(p)
-        else Seq.empty[String]
-      }
+      def dirs(w: java.nio.file.Path, t: String) = tree(w.resolve(t)).readSet()
       def probed(w: java.nio.file.Path) =
         LexStreams.probeWithVersions(spark, root, dirs(w, "segs"),
           dirs(w, "lens"), dirs(w, "tombs"))
@@ -359,7 +359,7 @@ class LexStreamSpec extends AnyFunSuite {
         .write.parquet(delWork.resolve("tombs-del/batch=1").toString)
       val deleted = LexStreams.probeWithVersions(spark, root,
         dirs(delWork, "segs"), dirs(delWork, "lens"),
-        graft.streaming.EventStreams.foldDirsToRead(delWork.resolve("tombs-del")))
+        tree(delWork.resolve("tombs-del")).readSet())
         .where(col("qid") === 0).orderBy("rnk").collect()
       assert(after.map(_.getLong(2)).toSeq == deleted.map(_.getLong(2)).toSeq,
         "both verbs drop the plant from the ranking")
@@ -384,12 +384,7 @@ class LexStreamSpec extends AnyFunSuite {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       LexStreams.upsertFoldBatch(spark, doc, 0L, work, root)
       LexStreams.upsertFoldBatch(spark, doc, 0L, refWork, root)
-      def dirs(w: java.nio.file.Path, t: String) = {
-        val p = w.resolve(t)
-        if (java.nio.file.Files.isDirectory(p))
-          graft.streaming.EventStreams.foldDirsToRead(p)
-        else Seq.empty[String]
-      }
+      def dirs(w: java.nio.file.Path, t: String) = tree(w.resolve(t)).readSet()
       def probed(w: java.nio.file.Path) =
         LexStreams.probeWithVersions(spark, root, dirs(w, "segs"),
           dirs(w, "lens"), dirs(w, "tombs"))
@@ -428,7 +423,7 @@ class LexStreamSpec extends AnyFunSuite {
       val upd = arrivals().where(col("doc_id") === 9L)
         .withColumn("text", LexStreams.updatedText(col("text")))
       def dirs(t: String) =
-        graft.streaming.EventStreams.foldDirsToRead(work.resolve(t))
+        tree(work.resolve(t)).readSet()
       def probed() = LexStreams.probeWithVersions(spark, root, dirs("segs"),
         dirs("lens"), dirs("tombs")).collect().map(_.toSeq).toSeq
       LexStreams.upsertFoldBatch(spark, upd, 1L, work, root)

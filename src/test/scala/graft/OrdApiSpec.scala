@@ -56,7 +56,7 @@ class OrdApiSpec extends AnyFunSuite {
     OrdApi.saveFormatted(spark, tmp.toString, corpus = Some(f))
     assert(java.util.Arrays.equals(
       java.nio.file.Files.readAllBytes(tmp),
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"/root/reference/$f"))))
+      java.nio.file.Files.readAllBytes(graft.util.PathKeys.golden(f))))
     java.nio.file.Files.delete(tmp)
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ord.{OrdFixtures, OrdJson}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Byte-exact sink fidelity: the normalized model, rendered back through
   * OrdFixtures.renderFile + OrdJson's `json.dump(indent=2,
@@ -22,7 +22,7 @@ class OrdByteExactSpec extends AnyFunSuite {
     val (datasets, _) = OrdFixtures.parseAll()
     val byFile = datasets.groupBy(_.file) // groupBy preserves seq order
     files.foreach { f =>
-      val orig = Files.readAllBytes(Paths.get(s"/root/reference/$f"))
+      val orig = Files.readAllBytes(graft.util.PathKeys.golden(f))
       val regen = OrdJson.renderBytes(byFile(f))
       if (!java.util.Arrays.equals(regen, orig)) {
         val o = new String(orig, "UTF-8"); val r = new String(regen, "UTF-8")
@@ -41,7 +41,7 @@ class OrdByteExactSpec extends AnyFunSuite {
     OrdJson.writeFile(tmp.toString,
       datasets.filter(_.file == f))
     assert(java.util.Arrays.equals(
-      Files.readAllBytes(tmp), Files.readAllBytes(Paths.get(s"/root/reference/$f"))))
+      Files.readAllBytes(tmp), Files.readAllBytes(graft.util.PathKeys.golden(f))))
     Files.delete(tmp)
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ord.{OrdApi, OrdMain}
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** The CLI closes the reference's last uncovered surface: an executable
   * main over the five scrape modes (web_scrpaer_2.py:291-334,509-527).
@@ -77,7 +77,7 @@ class OrdMainSpec extends AnyFunSuite {
     assert(out.contains(s"SAVED=$tmp"))
     assert(java.util.Arrays.equals(
       Files.readAllBytes(tmp),
-      Files.readAllBytes(Paths.get(s"/root/reference/$corpus"))),
+      Files.readAllBytes(graft.util.PathKeys.golden(corpus))),
       s"saved document differs from golden $corpus")
     Files.delete(tmp)
   }

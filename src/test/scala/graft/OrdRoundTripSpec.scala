@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ord.OrdFixtures
 
-import java.io.File
 import scala.jdk.CollectionConverters._
 
 /** The lossless-model proof: parse every golden file into the
@@ -40,7 +39,7 @@ class OrdRoundTripSpec extends AnyFunSuite {
     val byFile = datasets.groupBy(_.file)
     assert(byFile.size == 5)
     for ((file, ds) <- byFile) {
-      val original = mapper.readTree(new File(s"/root/reference/$file"))
+      val original = mapper.readTree(graft.util.PathKeys.golden(file).toFile)
       val rebuilt = OrdFixtures.renderFile(mapper, ds)
       val d = diff(file, original, rebuilt)
       assert(d.isEmpty, d.getOrElse(""))

@@ -19,7 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    names the token, is exempt);
   *  - session construction (`SparkSession.builder`) and the core-count
   *    read (`SPARK_GRAFT_CPUS`) belong to the session factory,
-  *    `GraftSession.scala`.
+  *    `GraftSession.scala`;
+  *  - the fold-tree dir names (`"compact=`, `compact=$`, `batch=$`) and
+  *    the atomic rename (`ATOMIC_MOVE`) belong to the fold-tree owner,
+  *    `streaming/FoldTree.scala`;
+  *  - the ORD golden location (`"/root/reference`) belongs to
+  *    `util/PathKeys.scala` — in `src/test/scala` too.
   *
   * The scan covers code and comments alike: a hand-copied protocol
   * usually arrives with the comment that explained the original. */
@@ -49,7 +54,12 @@ class SingleOwnerSpec extends AnyFunSuite {
     ("processAllAvailable", "graft/streaming/Drain.scala", false),
     ("GRAFT_FIXTURE_DIR", "graft/util/PathKeys.scala", true),
     ("SparkSession.builder", "graft/GraftSession.scala", false),
-    ("SPARK_GRAFT_CPUS", "graft/GraftSession.scala", false)
+    ("SPARK_GRAFT_CPUS", "graft/GraftSession.scala", false),
+    ("\"compact=", "graft/streaming/FoldTree.scala", false),
+    ("compact=$", "graft/streaming/FoldTree.scala", false),
+    ("batch=$", "graft/streaming/FoldTree.scala", false),
+    ("ATOMIC_MOVE", "graft/streaming/FoldTree.scala", false),
+    ("\"/root/reference", "graft/util/PathKeys.scala", true)
   ).foreach { case (token, owner, withTests) =>
     test(s"`$token` appears only in $owner") {
       assert(owners(token, withTests) == Set(owner),

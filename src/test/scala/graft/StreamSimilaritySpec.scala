@@ -138,7 +138,7 @@ class StreamSimilaritySpec extends AnyFunSuite {
       st => st.iterator().asScala.map(_.getFileName.toString).toList }
     assert(dirs.exists(_.startsWith("compact=")),
       s"no compact dir materialized: $dirs")
-    assert(dirs.count(_.startsWith("batch=")) <= DocStreams.CompactEvery,
+    assert(dirs.count(_.startsWith("batch=")) <= graft.streaming.FoldTree.CompactEvery,
       s"uncompacted batch dirs exceed CompactEvery: $dirs")
 
     // semantics unchanged: exactly-once at the collision level, full

@@ -104,7 +104,7 @@ class VecDriftSpec extends AnyFunSuite {
       // candidates read — the COST restoration the gate exists for
       // (answers are exact either way)
       val after12 =
-        VecStreams.multiprobeCandidatesAt(spark, restagedRoot.toString, None, d, 12)
+        VecStreams.multiprobeCandidatesWithDirs(spark, restagedRoot.toString, Nil, d, 12)
       val candAfter = after12.count()
       val recAfter = recall(graft.ops.SimOps.topK(after12, 3).collect())
       info(f"drift ${maxDrift}%.3f tripped; arrival cells $arrCellsBefore, " +
