@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graft.Bridge
 
@@ -104,6 +104,11 @@ case class TopKPerKeyExec(
 
   override def outputOrdering: Seq[SortOrder] =
     if (partial) Nil else child.outputOrdering
+
+  // both phases only drop rows inside their partition, so the child's
+  // partitioning holds for the output: a per-key consumer above the
+  // final exec (a rank window on the same key) reuses its exchange
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override lazy val metrics = Map(
     "numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics

@@ -3,6 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.Tables
 import graft.util.Staged
@@ -75,6 +78,34 @@ object LexIndex {
   def serveDir(d: String): String =
     graft.util.PathKeys.fixtureDir("documents_lex_serve", d)
 
+  /** The declared schema of each serve-layout dir, exactly what
+    * [[buildIndex]] writes (LexIndexSpec pins each against the footer-
+    * inferred one), so no probe read pays a footer-inference job. The
+    * bucket-partitioned dirs list `tb` last, where inference puts the
+    * partition column. */
+  private[graft] val Layout: Map[String, StructType] = Map(
+    "stats" -> StructType(Seq(
+      StructField("n_docs", LongType), StructField("avgdl", DoubleType))),
+    "postings" -> StructType(Seq(
+      StructField("term", StringType), StructField("doc_id", LongType),
+      StructField("tf", LongType), StructField("df", LongType),
+      StructField("dl", IntegerType), StructField("source", StringType),
+      StructField("positions", ArrayType(IntegerType)),
+      StructField("tb", IntegerType))),
+    "dfreq" -> StructType(Seq(
+      StructField("term", StringType), StructField("df", LongType),
+      StructField("tb", IntegerType))),
+    "queries" -> StructType(Seq(
+      StructField("qid", IntegerType), StructField("term", StringType),
+      StructField("df", LongType))),
+    "qtf" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("term", StringType),
+      StructField("tf", LongType))))
+
+  /** One serve-layout dir, read with its declared schema. */
+  private def layout(s: SparkSession, d: String, dir: String): DataFrame =
+    s.read.schema(Layout(dir)).parquet(s"${serveDir(d)}/$dir")
+
   /** The term's bucket, DRIVER-SIDE — bit-parity with [[bucketCol]]
     * (crc32 over UTF-8 bytes is engine-independent, unlike Murmur3
     * `hash()` whose seed lives in Spark internals); pinned in
@@ -115,11 +146,25 @@ object LexIndex {
       .select((((col("r") - 20) / 4).cast("int")).as("qid"),
         col("term"), col("df"))
 
+  /** The IN-PLAN query lookup: a column that fans each posting row out
+    * to the query values holding its `term` —
+    * `explode(element_at(typedlit(term -> values), term))`, the
+    * OrdApi.customRanges pattern. The query set is bounded by
+    * declaration, so it rides in the plan as a literal map instead of
+    * a local relation broadcast into a join (a broadcast job per
+    * probe). A term no query holds maps to null and explodes to no
+    * row, as the inner join dropped it. */
+  private[graft] def queryLookup[V: TypeTag](queries: Seq[(V, String)]) =
+    explode(element_at(typedlit(queries.groupMap(_._2)(_._1)), col("term")))
+
   /** The shared BM25 ranking tail: per-(qid, doc) match count and 6-dp
     * rounded score over `contribRows` (qid, doc_id, contrib), then
     * bounded-heap top-5 and the declared output shape. One definition
     * for e35s and the e35f/e35z fold probes — the output contract
-    * (rounding, tie-break, k) cannot drift between them. */
+    * (rounding, tie-break, k) cannot drift between them. The rank
+    * window reuses the top-k exchange on qid, and the ordered tail
+    * (≤ 5 rows per query) sorts in one partition: no range exchange,
+    * no sampling job. */
   private[graft] def rankTop5(contribRows: DataFrame,
       extra: Seq[String] = Nil): DataFrame = {
     // `extra` columns are functionally dependent on doc_id (e35a's
@@ -134,7 +179,7 @@ object LexIndex {
         Window.partitionBy("qid").orderBy(col("score").desc, col("doc_id"))))
       .select((Seq("qid", "rnk", "doc_id") ++ extra ++
         Seq("n_match", "score")).map(col): _*)
-      .orderBy("qid", "rnk")
+      .coalesce(1).sortWithinPartitions("qid", "rnk")
   }
 
   /** One-time BUILD under the suite-wide staleness contract. */
@@ -206,7 +251,7 @@ object LexIndex {
 
   /** 1-row (n_docs, avgdl) — broadcast by every consumer. */
   private[graft] def stats(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${serveDir(d)}/stats")
+    layout(s, d, "stats")
 
   /** The PRUNED postings scan: bucket dirs via PartitionFilters, the
     * term In-list pushed into the parquet row groups of the buckets it
@@ -214,7 +259,7 @@ object LexIndex {
   private[graft] def postingsPruned(s: SparkSession, d: String,
       terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct.sorted
-    s.read.parquet(s"${serveDir(d)}/postings")
+    layout(s, d, "postings")
       .where(col("tb").isin(buckets.map(Int.box): _*))
       .where(col("term").isin(terms: _*))
   }
@@ -233,19 +278,21 @@ object LexIndex {
     * the e2v/e2i precedent) with the probe reading ONLY the query
     * terms' postings. The staged query set is collected (12 rows,
     * bounded by declaration), routed to its buckets driver-side, and
-    * re-entered broadcast; scoring is one pruned scan → per-(query,
-    * doc) partial aggregate → bounded-heap top-5. */
+    * looked up in-plan ([[queryLookup]]); scoring is one pruned scan →
+    * per-(query, doc) partial aggregate → bounded-heap top-5. */
   def e35sBm25Serve(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    import s.implicits._
-    val qrows = s.read.parquet(s"${serveDir(d)}/queries")
-      .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-    val q = qrows.toDF("qid", "term")
+    val qrows = servedQueries(s, d)
     rankTop5(postingsPruned(s, d, qrows.map(_._2).distinct.sorted)
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", queryLookup(qrows))
       .crossJoin(broadcast(stats(s, d)))
       .withColumn("contrib", bm25Contrib))
   }
+
+  /** The staged query set as (qid, term) — a 12-row collect. */
+  private def servedQueries(s: SparkSession, d: String): Seq[(Int, String)] =
+    layout(s, d, "queries").select("qid", "term")
+      .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
 
   /** Declared attribute predicate for [[e35aFilteredBm25]]. */
   val FilterSource = "src1"
@@ -269,13 +316,10 @@ object LexIndex {
     * buckets, not a join against a doc dim. */
   def e35aFilteredBm25(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    import s.implicits._
-    val qrows = s.read.parquet(s"${serveDir(d)}/queries")
-      .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-    val q = qrows.toDF("qid", "term")
+    val qrows = servedQueries(s, d)
     rankTop5(postingsPruned(s, d, qrows.map(_._2).distinct.sorted)
       .where(col("source") === FilterSource)
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", queryLookup(qrows))
       .crossJoin(broadcast(stats(s, d)))
       .withColumn("contrib", bm25Contrib), extra = Seq("source"))
   }
@@ -303,10 +347,8 @@ object LexIndex {
     * a VALUES relation (generated from [[AdhocQueries]] — no drift). */
   def e35qAdhocTerms(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    import s.implicits._
-    val q = AdhocQueries.toDF("qid", "term")
     rankTop5(postingsPruned(s, d, AdhocQueries.map(_._2).distinct.sorted)
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", queryLookup(AdhocQueries))
       .crossJoin(broadcast(stats(s, d)))
       .withColumn("contrib", bm25Contrib))
   }
@@ -349,16 +391,16 @@ object LexIndex {
     * LLM-pipeline extension axis' retrieval half. */
   def e35pPhraseQuery(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    import s.implicits._
-    val ph = PhraseQueries.toDF("qid", "t1", "t2")
     val pos = postingsPruned(s, d,
       PhraseQueries.flatMap(p => Seq(p._2, p._3)).distinct.sorted)
-    val lhs = pos.select(col("term").as("t1"), col("doc_id"),
-      col("positions").as("p1"), col("df").as("df1"), col("dl"))
+    // each first-term posting row looks up its (qid, second term) pairs
+    val lhs = pos
+      .withColumn("ph", queryLookup(PhraseQueries.map(p => ((p._1, p._3), p._2))))
+      .select(col("ph._1").as("qid"), col("ph._2").as("t2"), col("doc_id"),
+        col("positions").as("p1"), col("df").as("df1"), col("dl"))
     val rhs = pos.select(col("term").as("t2"), col("doc_id"),
       col("positions").as("p2"), col("df").as("df2"))
-    val matched = lhs.join(broadcast(ph), Seq("t1"))
-      .join(rhs, Seq("t2", "doc_id"))
+    val matched = lhs.join(rhs, Seq("t2", "doc_id"))
       .withColumn("ptf", size(array_intersect(
         transform(col("p1"), x => x + lit(1)), col("p2"))))
       .where(col("ptf") > 0)
@@ -409,18 +451,18 @@ object LexIndex {
     * regardless of how many terms match. */
   def e35wPrefixQuery(s: SparkSession, d: String): DataFrame = {
     ensure(s, d)
-    import s.implicits._
     // ≤ |PrefixQueries| vocab-dim scans, each ≤ MaxExpansion rows out —
-    // bounded by declaration, the expansion IS driver work in Lucene too
-    val expanded: Seq[(Int, String)] = PrefixQueries.flatMap { case (qid, p) =>
-      s.read.parquet(s"${serveDir(d)}/dfreq")
+    // bounded by declaration, the expansion IS driver work in Lucene too;
+    // the per-prefix top-terms legs union into one collect (one job)
+    val expanded: Seq[(Int, String)] = PrefixQueries.map { case (qid, p) =>
+      layout(s, d, "dfreq")
         .where(col("term").startsWith(p))
         .orderBy(col("df").desc, col("term")).limit(MaxExpansion)
-        .select("term").collect().map(r => (qid, r.getString(0))).toSeq
-    }
-    val q = expanded.toDF("qid", "term")
+        .select(lit(qid).as("qid"), col("term"))
+    }.reduce(_ unionAll _)
+      .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
     rankTop5(postingsPruned(s, d, expanded.map(_._2).distinct.sorted)
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", queryLookup(expanded))
       .crossJoin(broadcast(stats(s, d)))
       .withColumn("contrib", bm25Contrib))
   }
@@ -437,18 +479,16 @@ object LexIndex {
       nQueries: Long, qTerms: Int,
       sourceFilter: Option[String] = None): DataFrame = {
     ensure(s, d)
-    import s.implicits._
-    val qsel = s.read.parquet(s"${serveDir(d)}/qtf")
+    val qsel = layout(s, d, "qtf")
       .where(col("doc_id") < nQueries)
       .withColumn("r", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("tf").desc, col("term"))))
       .where(col("r") <= qTerms)
       .select(col("doc_id").as("q_id"), col("term"))
       .collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
-    val q = qsel.toDF("q_id", "term")
     val pruned = postingsPruned(s, d, qsel.map(_._2).distinct.sorted)
     sourceFilter.fold(pruned)(src => pruned.where(col("source") === src))
-      .join(broadcast(q), Seq("term"))
+      .withColumn("q_id", queryLookup(qsel))
       .where(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(stats(s, d)))
       .withColumn("contrib", bm25Contrib)

@@ -354,14 +354,12 @@ object LexStreams {
 
   private def probeWithDirs(s: SparkSession, root: String,
       segDirs: Seq[String], lensDirs: Seq[String]): DataFrame = {
-    import s.implicits._
     val qrows = s.read.schema(queriesSchema).parquet(s"$root/queries")
       .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-    val q = qrows.toDF("qid", "term")
     val (post, st) = mergedRelations(s, root, segDirs, lensDirs,
       qrows.map(_._2).distinct.sorted)
     LexIndex.rankTop5(post
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", LexIndex.queryLookup(qrows))
       .crossJoin(broadcast(st))
       .withColumn("contrib", LexIndex.bm25Contrib))
   }
@@ -374,11 +372,9 @@ object LexStreams {
   private[graft] def lexLegScoredAtDirs(s: SparkSession, d: String,
       segDirs: Seq[String], lensDirs: Seq[String],
       qpairs: Seq[(Long, String)]): DataFrame = {
-    import s.implicits._
-    val q = qpairs.toDF("q_id", "term")
     val (post, st) = mergedRelations(s, foldBaseDir(d), segDirs,
       lensDirs, qpairs.map(_._2).distinct.sorted)
-    post.join(broadcast(q), Seq("term"))
+    post.withColumn("q_id", LexIndex.queryLookup(qpairs))
       .where(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(st))
       .withColumn("contrib", LexIndex.bm25Contrib)
@@ -753,7 +749,6 @@ object LexStreams {
       .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
     val terms = qrows.map(_._2).distinct.sorted
     val buckets = terms.map(LexIndex.bucketOf).distinct.sorted
-    val q = qrows.toDF("qid", "term")
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .where(col("tb").isin(buckets.map(Int.box): _*))
       .where(col("term").isin(terms: _*))
@@ -787,7 +782,7 @@ object LexStreams {
       .agg(sum(col("n_docs")).as("n_docs"),
         (sum(col("sum_dl")) / sum(col("n_docs"))).as("avgdl"))
     LexIndex.rankTop5(postLive
-      .join(broadcast(q), Seq("term"))
+      .withColumn("qid", LexIndex.queryLookup(qrows))
       .crossJoin(broadcast(st))
       .withColumn("contrib", LexIndex.bm25Contrib))
   }

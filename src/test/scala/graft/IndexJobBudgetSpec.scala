@@ -18,8 +18,8 @@ class IndexJobBudgetSpec extends AnyFunSuite {
   private val sf = SparkTestSession.sf
 
   private val keys: Seq[(String, (SparkSession, String) => DataFrame, Int)] = Seq(
-    ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 44),
-    ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 48),
+    ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 40),
+    ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 44),
     ("e2d_vec_tombstone", VecStreams.e2dVecTombstone, 32),
     ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 32),
     ("e6s_minhash_stream", DocStreams.e6sMinhashStream, 39),
@@ -27,7 +27,7 @@ class IndexJobBudgetSpec extends AnyFunSuite {
     ("e63s_incr_stream", EventStreams.e63sStreamIncrAgg, 12),
     ("e61s_retention_stream", EventStreams.e61sStreamRetention, 18),
     ("e72_snapshot_read", SnapshotFolds.e72SnapshotRead, 12),
-    ("e35t_tier_merge", LexStreams.e35tTierMerge, 24),
+    ("e35t_tier_merge", LexStreams.e35tTierMerge, 20),
     ("e2tm_vec_tier_merge", VecStreams.e2tmVecTierMerge, 20))
 
   for ((key, run, budget) <- keys) test(s"$key: $budget jobs per declared run") {

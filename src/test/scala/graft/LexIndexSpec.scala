@@ -198,6 +198,17 @@ class LexIndexSpec extends AnyFunSuite {
       s"prefix must push into the dfreq scan: $expPlan")
   }
 
+  test("each serve-layout dir's declared schema equals its footer-inferred one") {
+    LexIndex.ensure(spark, sf)
+    val dirs = new java.io.File(LexIndex.serveDir(sf)).listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    assert(dirs == LexIndex.Layout.keySet, s"staged dirs $dirs")
+    for ((dir, declared) <- LexIndex.Layout) {
+      val inferred = spark.read.parquet(s"${LexIndex.serveDir(sf)}/$dir").schema
+      assert(inferred == declared, s"$dir: inferred ${inferred.treeString}")
+    }
+  }
+
   test("staleness: touching the source re-stages the index") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val tmp = Files.createTempDirectory("lex-stale")

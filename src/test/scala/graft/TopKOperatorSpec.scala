@@ -112,6 +112,37 @@ class TopKOperatorSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
+  test("a per-key window over the output reuses the top-k exchange (AQE)") {
+    // the final exec keeps its child's hash partitioning on the key and
+    // its (key, order) sort, so a rank window on the same key and order
+    // needs no second exchange and no second sort
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val rows = Seq.fill(4000)((rnd.nextInt(25).toLong, rnd.nextInt(50), rnd.nextInt(100000)))
+      val df = rows.toDF("key", "score", "tiebreak").repartition(6)
+      val w = Window.partitionBy("key").orderBy(col("score").desc, col("tiebreak"))
+      val ranked = TopKPerKey.topKPerKey(df, 3,
+          keys = Seq("key"), orderBy = Seq(("score", false), ("tiebreak", true)))
+        .withColumn("rn", row_number().over(w))
+      val got = ranked.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+      val nodes = PlanWalk.allNodes(ranked.queryExecution.executedPlan)
+      val iFinal = nodes.indexWhere {
+        case t: TopKPerKeyExec => !t.partial
+        case _ => false
+      }
+      assert(iFinal > 0, s"no TopKPerKeyFinal in ${ranked.queryExecution.executedPlan}")
+      val above = nodes.take(iFinal)
+        .filter(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+      assert(above.isEmpty,
+        s"exchange above TopKPerKeyFinal: ${ranked.queryExecution.executedPlan}")
+      val reference = df.withColumn("rn", row_number().over(w)).where(col("rn") <= 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+      assert(got.sorted.toSeq == reference.sorted.toSeq)
+      assert(got.nonEmpty)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("pathological key cardinality: every row its own key degenerates to identity") {
     val df = (1 to 20000).map(i => (i.toLong, i * 31 % 977)).toDF("key", "score")
       .repartition(8)

@@ -10,6 +10,7 @@ With jsonOut, also writes a CORRECTNESS-style per-query JSON report.
 """
 import json
 import sys
+import time
 
 import duckdb
 
@@ -110,15 +111,19 @@ def main(sf_dir, out_dir, json_out=None):
             report[name] = {"match": False, "problems": ["no spark result"]}
             n_fail += 1
             continue
+        t0 = time.monotonic()
         try:
             duck_df = con.sql(oracle[name]).df()
         except Exception as e:
             rollback()
-            print(f"[FAIL ] {name}: oracle SQL error: {str(e).splitlines()[0]}")
+            print(f"[FAIL ] {name}: oracle SQL error: {str(e).splitlines()[0]}"
+                  f" [oracle {time.monotonic() - t0:.2f} s]")
             report[name] = {"match": False,
                             "problems": [f"oracle SQL error: {str(e).splitlines()[0]}"]}
             n_fail += 1
             continue
+        # the oracle SQL's own elapsed time, so a slow oracle shows per key
+        took = f" [oracle {time.monotonic() - t0:.2f} s]"
         problems = []
         if sorted(spark_df.columns) != sorted(duck_df.columns):
             problems.append(
@@ -158,12 +163,12 @@ def main(sf_dir, out_dir, json_out=None):
                         f"value[{c}] {len(bad)} diffs, first@{i}: spark={a!r} duck={b!r}")
         if problems:
             n_fail += 1
-            print(f"[FAIL ] {name}: " + "; ".join(problems[:4]))
+            print(f"[FAIL ] {name}: " + "; ".join(problems[:4]) + took)
             report[name] = {"match": False, "rows": len(spark_df),
                             "problems": problems[:4]}
         else:
             n_pass += 1
-            print(f"[ok   ] {name} ({len(spark_df)} rows)")
+            print(f"[ok   ] {name} ({len(spark_df)} rows){took}")
             report[name] = {"match": True, "rows": len(spark_df)}
     print(f"\n{n_pass} pass, {n_fail} fail")
     if json_out:
