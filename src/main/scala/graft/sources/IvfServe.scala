@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
+  StructField, StructType}
 import graft.Tables
 import graft.ops.SimOps
 import graft.util.Staged
@@ -133,6 +135,20 @@ object IvfServe {
       .select(col("vec_id").as("q_id"), col("embedding"))
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/queries")
+
+  /** Row schema of the trained `lists` layout [[buildTrainedLayout]]
+    * writes: the vector, its label, the PQ codes c0..c(PqM−1), and the
+    * `cell` partition column, which a partitioned read places last. */
+  private[graft] val listsSchema: StructType = StructType(
+    Seq(StructField("vec_id", LongType), StructField("label", IntegerType),
+      StructField("embedding", ArrayType(FloatType))) ++
+      (0 until PqM).map(m => StructField(s"c$m", IntegerType)) :+
+      StructField("cell", IntegerType))
+
+  /** The trained `lists` under `root`, read with [[listsSchema]] (no
+    * footer-inference job). */
+  private[graft] def listsAt(s: SparkSession, root: String): DataFrame =
+    s.read.schema(listsSchema).parquet(s"$root/lists")
 
   /** The shared BUILD leg (also the e2f fold stream's base build over
     * a filtered corpus): train k centroids on `base`, persist them and

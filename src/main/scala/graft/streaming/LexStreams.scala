@@ -201,7 +201,8 @@ object LexStreams {
   /** The text index's fold trees under a drain's work dir: postings
     * segments, doc lengths and tombstones. The append lifecycle writes
     * segments and lengths ver-less; the upsert lifecycle ([[upsertDrain]])
-    * stamps `ver` on both and reads them with the ver schemas. */
+    * stamps `ver` on both. Reads that need the version use the ver
+    * schemas ([[Versioned]]). */
   private[graft] def segTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("segs"), segSchema)
   private[graft] def lensTree(work: java.nio.file.Path): FoldTree =
@@ -215,16 +216,9 @@ object LexStreams {
     * version column. */
   private def writeLensLocal(s: SparkSession, rows: Seq[(Long, Int)],
       ver: Option[Long], dst: java.nio.file.Path): Unit = {
-    val schema = StructType(
-      Seq(StructField("doc_id", LongType), StructField("dl", IntegerType)) ++
-        ver.map(_ => StructField("ver", LongType)))
-    val data: Seq[org.apache.spark.sql.Row] = rows.map { case (d, l) =>
-      ver match {
-        case Some(v) => org.apache.spark.sql.Row(d, l, v)
-        case None    => org.apache.spark.sql.Row(d, l)
-      }
-    }
-    s.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+    val data = rows.map { case (d, l) => org.apache.spark.sql.Row.fromSeq(Seq[Any](d, l) ++ ver) }
+    s.createDataFrame(java.util.Arrays.asList(data: _*),
+        if (ver.isEmpty) lensSchema else lensVerSchema)
       .coalesce(1).write.mode("overwrite").parquet(dst.toString)
   }
 
@@ -275,88 +269,93 @@ object LexStreams {
     }
   }
 
-  /** The arrival drain. Manifests on BOTH fold trees (the e2z/e72
+  /** The arrival drain. Manifests on all three fold trees (the e2z/e72
     * discipline): a pinned text-index read needs the postings prefix AND
     * the doc-length prefix — statistics at version k are part of the
-    * version. */
+    * version — and the tombstone tree, empty here, is stamped too, so a
+    * pinned probe resolves the trees of either lifecycle the same way. */
   private[graft] def drain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
       Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(segTree(work), lensTree(work))) {
+          Seq(segTree(work), lensTree(work), tombTree(work))) {
         foldBatch(_, _, work)
       }
     }
 
-  /** The probe over base + segments: frozen queries, pruned base scan,
-    * term-filtered segments, ADDITIVE df/stats merge, top-5. Exposed
-    * pre-drain so the visibility spec can probe between folds. */
+  /** The probe over the current read set of all three fold trees — every
+    * lifecycle's live probe (e35f/t appends, e35u updates, e35d deletes).
+    * Exposed pre-drain so the visibility spec can probe between folds. */
   private[graft] def probe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    probeWithDirs(s, foldBaseDir(d), segTree(work).readSet(),
-      lensTree(work).readSet())
+    probeAtDirs(s, foldBaseDir(d), segTree(work).readSet(),
+      lensTree(work).readSet(), tombTree(work).readSet())
 
-  /** Base-only probe against an ARBITRARY layout root — the merge spec
-    * probes the merged base (no segments) through this. */
-  private[graft] def probeBaseOnly(s: SparkSession, root: String): DataFrame =
-    probeWithDirs(s, root, Nil, Nil)
-
-  /** The probe AT a pinned snapshot: both fold trees resolved through
-    * their `snap` manifests instead of the current read set. */
+  /** The probe AT a pinned snapshot: all three fold trees resolve
+    * through their `snap` manifests — a doc updated (or deleted) at
+    * batch k still serves its OLD version (and its old statistics
+    * weight) at snapshots < k. */
   private[graft] def probeAtSnapshot(s: SparkSession, d: String,
       work: java.nio.file.Path, snap: Long): DataFrame =
-    probeWithDirs(s, foldBaseDir(d),
-      segTree(work).pinned(snap),
-      lensTree(work).pinned(snap))
+    probeAtDirs(s, foldBaseDir(d), segTree(work).pinned(snap),
+      lensTree(work).pinned(snap), tombTree(work).pinned(snap))
 
-  /** The merged (postings, df, stats) relations of base + the given
-    * segment/lens dirs, pruned to `terms` — ONE definition for the
-    * frozen-query probe, e71v's keyword leg, and anything else reading
-    * the fold layout at an explicit version:
+  /** The live (postings, stats) relations of base + the given segment,
+    * lens and tombstone dirs, pruned to `terms` — ONE definition for the
+    * frozen-query probe ([[probeAtDirs]]) and e71v's keyword leg
+    * ([[lexLegScoredAtDirs]]), read by the [[Versioned]] protocol:
     *
-    *  - postings: pruned base scan ∪ term-filtered segments;
-    *  - df = base df + Σ segment dfs, for the bounded query terms only
-    *    (the base-postings scan CANNOT carry df — it would be stale the
-    *    moment an arrival lands: the one denormalization an incremental
-    *    index must give up);
+    *  - postings: pruned base scan (ver −1) ∪ term-filtered segments,
+    *    minus the versions a tombstone retires;
+    *  - df: a WINDOW COUNT over those live posting rows (r16) — the base
+    *    dfreq dim's df equals the base posting-row count per term by
+    *    construction (one row per (doc, term)), so the merged pruned
+    *    relation carries the live df and the posting rows are scanned
+    *    ONCE (the base-postings scan cannot carry df: it would be stale
+    *    the moment an arrival lands);
     *  - stats: base (n_docs, sum_dl) + the lens folds (token-less
-    *    arrivals included — they have a lens row, no posting row). */
-  private def mergedRelations(s: SparkSession, root: String,
-      segDirs: Seq[String], lensDirs: Seq[String], terms: Seq[String])
-      : (DataFrame, DataFrame) = {
+    *    arrivals included — they have a lens row, no posting row), each
+    *    tombstone entering NEGATED — every new version adds (1, dl_new),
+    *    every tombstone retires exactly one prior (1, dl_old), so a doc
+    *    updated k times nets to one live version at the latest dl.
+    *
+    * With no tombstone dirs neither the anti-join nor the negated stats
+    * are planned: the probe is then the append probe, plan for plan. */
+  private def liveRelations(s: SparkSession, root: String,
+      segDirs: Seq[String], lensDirs: Seq[String], tombDirs: Seq[String],
+      terms: Seq[String]): (DataFrame, DataFrame) = {
     val buckets = terms.map(LexIndex.bucketOf).distinct.sorted
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .where(col("tb").isin(buckets.map(Int.box): _*))
-      .where(col("term").isin(terms: _*))
       .select("term", "doc_id", "tf", "dl")
-    val segPost = if (segDirs.isEmpty) None
-      else Some(s.read.schema(segSchema).parquet(segDirs: _*)
-        .where(col("term").isin(terms: _*))
-        .select("term", "doc_id", "tf", "dl"))
-    // df per term as a WINDOW COUNT over the posting rows the probe
-    // already reads (r16): the base dfreq dim's df equals the base
-    // posting-row count per term by construction (one row per
-    // (doc, term)), so base df + Σ segment dfs ≡ count(*) over the
-    // merged pruned relation — the dfreq read, its union and the
-    // re-aggregation (plus their jobs) are gone, and the posting rows
-    // are scanned ONCE instead of twice (df pass + scoring pass).
-    val post = segPost.fold(basePost)(basePost.unionByName(_))
+    val post = Versioned.rows(s, basePost, segVerSchema, segDirs,
+      _.where(col("term").isin(terms: _*)))
+    val tombs = Versioned.tombs(s, tombSchema, tombDirs)
+    val postLive = Versioned.live(post, tombs, "doc_id")
+      .select("term", "doc_id", "tf", "dl")
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("term")))
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats")
-    val st = (if (lensDirs.isEmpty) baseSt
+    val lensSide = if (lensDirs.isEmpty) baseSt
       else baseSt.unionByName(s.read.schema(lensSchema).parquet(lensDirs: _*)
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))))
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
+    val st = tombs.fold(lensSide)(t => lensSide.unionByName(
+        t.agg((-count(lit(1))).as("n_docs"),
+          (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl"))))
       .agg(sum(col("n_docs")).as("n_docs"),
         (sum(col("sum_dl")) / sum(col("n_docs"))).as("avgdl"))
-    (post, st)
+    (postLive, st)
   }
 
-  private def probeWithDirs(s: SparkSession, root: String,
-      segDirs: Seq[String], lensDirs: Seq[String]): DataFrame = {
+  /** The BM25 probe of the frozen query set over `root` + the given fold
+    * dirs, top-5 per query — the one probe of every lifecycle; with no
+    * dirs it probes the base (or a merged base) alone. */
+  private[graft] def probeAtDirs(s: SparkSession, root: String,
+      segDirs: Seq[String], lensDirs: Seq[String],
+      tombDirs: Seq[String]): DataFrame = {
     val qrows = s.read.schema(queriesSchema).parquet(s"$root/queries")
       .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-    val (post, st) = mergedRelations(s, root, segDirs, lensDirs,
+    val (post, st) = liveRelations(s, root, segDirs, lensDirs, tombDirs,
       qrows.map(_._2).distinct.sorted)
     LexIndex.rankTop5(post
       .withColumn("qid", LexIndex.queryLookup(qrows))
@@ -372,8 +371,8 @@ object LexStreams {
   private[graft] def lexLegScoredAtDirs(s: SparkSession, d: String,
       segDirs: Seq[String], lensDirs: Seq[String],
       qpairs: Seq[(Long, String)]): DataFrame = {
-    val (post, st) = mergedRelations(s, foldBaseDir(d), segDirs,
-      lensDirs, qpairs.map(_._2).distinct.sorted)
+    val (post, st) = liveRelations(s, foldBaseDir(d), segDirs,
+      lensDirs, Nil, qpairs.map(_._2).distinct.sorted)
     post.withColumn("q_id", LexIndex.queryLookup(qpairs))
       .where(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(st))
@@ -557,11 +556,11 @@ object LexStreams {
     * delete record tombstones its doc's latest live prior as
     * `(doc_id, dl, upto=batch)` beside the segments — Lucene's
     * deletions file — and folds nothing. The tombstones are honored at
-    * probe ([[probeWithVersions]]: anti-join, live df, negated stats),
+    * probe ([[probe]]: anti-join, live df, negated stats),
     * RECONCILED at merge ([[mergeIndexLive]], spec-pinned physical
     * absence), and PINNED by the snapshot manifests (a doc deleted at
     * batch k stays visible at snapshots < k — spec-pinned through
-    * [[upsertProbeAtSnapshot]]).
+    * [[probeAtSnapshot]]).
     *
     * The DuckDB oracle recomputes BM25 over (corpus − tombstones) with
     * the query set still frozen on the FULL pre-delete base — so a
@@ -578,7 +577,7 @@ object LexStreams {
     val work = PathKeys.fixturePath("stream-e35d", dir, "-4")
     DocStreams.deleteTree(work)
     upsertDrain(s, dir, work, cdcLanding(s, dir))
-    upsertProbe(s, dir, work)
+    probe(s, dir, work)
   }
 
   // ───────────────────────── upserts (e35u) ───────────────────────────
@@ -625,9 +624,8 @@ object LexStreams {
     * Prior-resolution safety: the lookup filters `ver < id`, so it
     * sees the PRE-batch read set even when this batch's own folds are
     * already on disk (a crashed earlier attempt). Lens folds written
-    * without `ver` (the append lifecycle's [[foldBatch]]) read as ver 0,
-    * the [[versionedSegs]] normalization. Replay idempotence is
-    * spec-pinned.
+    * without `ver` (the append lifecycle's [[foldBatch]]) read as ver 0
+    * ([[Versioned]]). Replay idempotence is spec-pinned.
     *
     * Bounded batches (the landing-bytes guard) run: one (doc_id,
     * delete?, dl) collect → pushed-In prior lookup → local tombstone
@@ -646,21 +644,11 @@ object LexStreams {
     // dead version again, or its statistics weight would subtract twice
     // (the delete-then-re-add double-subtract, spec-pinned).
     def latestPriors(restrict: DataFrame => DataFrame): DataFrame = {
-      val lensDirs = lensTree(work).readSet()
-      val baseLens = s.read.schema(lensSchema).parquet(s"$baseRoot/lens")
-        .withColumn("ver", lit(-1L))
-      val allLens = if (lensDirs.isEmpty) baseLens
-        else baseLens.unionByName(versionedLens(s, lensDirs))
-      val preBatch = restrict(allLens).where(col("ver") < id)
-      val tombDirs = tombTree(work).readSet()
-      val live = if (tombDirs.isEmpty) preBatch else {
-        val t = versionedTombs(s, tombDirs)
-          .select(col("doc_id").as("t_doc"), col("upto"))
-        preBatch.join(broadcast(t),
-          preBatch("doc_id") === t("t_doc") && preBatch("ver") < t("upto"),
-          "left_anti")
-      }
-      live
+      val allLens = Versioned.rows(s,
+        s.read.schema(lensSchema).parquet(s"$baseRoot/lens"), lensVerSchema,
+        lensTree(work).readSet())
+      Versioned.live(restrict(allLens).where(col("ver") < id),
+          Versioned.tombs(s, tombSchema, tombTree(work).readSet()), "doc_id")
         .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
           .Window.partitionBy("doc_id").orderBy(col("ver").desc)))
         .where(col("rn") === 1)
@@ -725,106 +713,6 @@ object LexStreams {
       }
     }
 
-  /** The VERSION-AWARE probe: live postings = (base at ver −1 ∪
-    * segments) anti-joined against the broadcast tombstone set on
-    * `doc_id match AND ver < upto` — a superseded version dies, the
-    * version that shipped WITH the tombstone's batch (and anything
-    * later) survives; df re-counts from the live posting rows the
-    * pruned scan already reads (the e35d discipline); n_docs/sum_dl
-    * merge additively with each tombstone entering NEGATED — every new
-    * version adds (1, dl_new), every tombstone retires exactly one
-    * prior (1, dl_old), so a doc updated k times nets to one live
-    * version at the latest dl.
-    *
-    * Version-LESS trees normalize at read ([[versionedSegs]] /
-    * [[versionedTombs]]): folds written without a version (the append
-    * lifecycle's [[foldBatch]]) read as ver 0 and tombstones without a
-    * bound as upto +∞, so ONE probe serves every tree this object
-    * writes — e35u's updates and e35d's deletes alike. */
-  private[graft] def probeWithVersions(s: SparkSession, root: String,
-      segDirs: Seq[String], lensDirs: Seq[String],
-      tombDirs: Seq[String]): DataFrame = {
-    import s.implicits._
-    val qrows = s.read.schema(queriesSchema).parquet(s"$root/queries")
-      .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-    val terms = qrows.map(_._2).distinct.sorted
-    val buckets = terms.map(LexIndex.bucketOf).distinct.sorted
-    val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
-      .where(col("tb").isin(buckets.map(Int.box): _*))
-      .where(col("term").isin(terms: _*))
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        lit(-1L).as("ver"))
-    val post = (if (segDirs.isEmpty) basePost
-      else basePost.unionByName(versionedSegs(s, segDirs)
-        .where(col("term").isin(terms: _*))
-        .select("term", "doc_id", "tf", "dl", "ver")))
-    val tombs = (if (tombDirs.isEmpty)
-        Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
-      else versionedTombs(s, tombDirs)).distinct()
-    val t = tombs.select(col("doc_id").as("t_doc"), col("upto"))
-    // live df as a window count over the live posting rows (r16): the
-    // rows are scanned once — the groupBy+broadcast-join form paid a
-    // second scan of the pruned relation plus a broadcast-build job
-    val postLive = post.join(broadcast(t),
-        post("doc_id") === t("t_doc") && post("ver") < t("upto"),
-        "left_anti")
-      .select("term", "doc_id", "tf", "dl")
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term")))
-    val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats")
-    val lensSide = if (lensDirs.isEmpty) baseSt
-      else baseSt.unionByName(
-        s.read.schema(lensSchema).parquet(lensDirs: _*)
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
-    val st = lensSide
-      .unionByName(tombs.agg((-count(lit(1))).as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0L))).as("sum_dl")))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        (sum(col("sum_dl")) / sum(col("n_docs"))).as("avgdl"))
-    LexIndex.rankTop5(postLive
-      .withColumn("qid", LexIndex.queryLookup(qrows))
-      .crossJoin(broadcast(st))
-      .withColumn("contrib", LexIndex.bm25Contrib))
-  }
-
-  /** The read-side normalization that lets ONE probe, prior lookup and
-    * merge serve every fold tree: a segment tree written without `ver`
-    * (the append folds) reads as ver 0 — older than any batch-stamped
-    * tombstone, newer only than the base's −1. */
-  private def versionedSegs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    // explicit schema: a ver-less tree reads the missing column as
-    // null — coalesce IS the normalization, and the footer-inference
-    // job the schema-less read paid is gone (r16)
-    s.read.schema(segVerSchema).parquet(dirs: _*)
-      .withColumn("ver", coalesce(col("ver"), lit(0L)))
-
-  /** [[versionedSegs]]' normalization on the lens folds. */
-  private def versionedLens(s: SparkSession, dirs: Seq[String]): DataFrame =
-    s.read.schema(lensVerSchema).parquet(dirs: _*)
-      .withColumn("ver", coalesce(col("ver"), lit(0L)))
-
-  /** Tombstones without `upto` read as +∞: such a tombstone kills every
-    * version of its key. */
-  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    s.read.schema(tombSchema).parquet(dirs: _*)
-      .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
-
-  private[graft] def upsertProbe(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame = {
-    probeWithVersions(s, foldBaseDir(d), segTree(work).readSet(),
-      lensTree(work).readSet(), tombTree(work).readSet())
-  }
-
-  /** The version-aware probe AT a pinned snapshot: all three fold
-    * trees resolve through their `snap` manifests — a doc updated (or
-    * deleted) at batch k still serves its OLD version (and its old
-    * statistics weight) at snapshots < k. */
-  private[graft] def upsertProbeAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame = {
-    probeWithVersions(s, foldBaseDir(d), segTree(work).pinned(snap),
-      lensTree(work).pinned(snap), tombTree(work).pinned(snap))
-  }
-
   /** Merge reconciliation FROM THE INDEX ITSELF — the one merge of the
     * mutation lifecycle (e35u's updates, e35d's deletes): the updated
     * text exists only in the stream (the source table still carries
@@ -836,34 +724,20 @@ object LexStreams {
     * deletes reconcile WITHOUT re-analyzing any document. */
   private[graft] def mergeIndexLive(s: SparkSession, d: String,
       work: java.nio.file.Path): java.nio.file.Path = {
-    import s.implicits._
     val root = foldBaseDir(d)
     val dst = work.resolve("merged")
     DocStreams.deleteTree(dst)
-    val segDirs = segTree(work).readSet()
-    val lensDirs = lensTree(work).readSet()
-    val tombDirs = tombTree(work).readSet()
-    val tombs = (if (tombDirs.isEmpty)
-        Seq.empty[(Long, Int, Long)].toDF("doc_id", "dl", "upto")
-      else versionedTombs(s, tombDirs)).distinct()
-    val t = tombs.select(col("doc_id").as("t_doc"), col("upto"))
-    def liveOf(rows: DataFrame): DataFrame =
-      rows.join(broadcast(t),
-        rows("doc_id") === t("t_doc") && rows("ver") < t("upto"),
-        "left_anti")
-    val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"),
-        lit(-1L).as("ver"))
-    val post = liveOf(if (segDirs.isEmpty) basePost
-      else basePost.unionByName(versionedSegs(s, segDirs)
-        .select("term", "doc_id", "tf", "dl", "ver")))
+    val tombs = Versioned.tombs(s, tombSchema, tombTree(work).readSet())
+    val post = Versioned.live(Versioned.rows(s,
+        s.read.schema(basePostSchema).parquet(s"$root/postings")
+          .select("term", "doc_id", "tf", "dl"),
+        segVerSchema, segTree(work).readSet()), tombs, "doc_id")
       .select("term", "doc_id", "tf", "dl")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val baseLens = s.read.schema(lensSchema).parquet(s"$root/lens")
-        .withColumn("ver", lit(-1L))
-      val lens = liveOf(if (lensDirs.isEmpty) baseLens
-        else baseLens.unionByName(versionedLens(s, lensDirs)))
+      val lens = Versioned.live(Versioned.rows(s,
+          s.read.schema(lensSchema).parquet(s"$root/lens"), lensVerSchema,
+          lensTree(work).readSet()), tombs, "doc_id")
         .select("doc_id", "dl")
       lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .coalesce(1).write.mode(SaveMode.Overwrite)
@@ -921,6 +795,6 @@ object LexStreams {
     val work = PathKeys.fixturePath("stream-e35u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertDrain(s, dir, work, upsertLanding(s, dir))
-    upsertProbe(s, dir, work)
+    probe(s, dir, work)
   }
 }

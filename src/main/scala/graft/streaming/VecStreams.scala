@@ -68,9 +68,9 @@ object VecStreams {
     StructField("vec_id", LongType), StructField("upto", LongType)))
 
   /** The vector index's fold trees under a drain's work dir: cell folds
-    * (ver-less for the append lifecycle; the upsert lifecycle
-    * ([[upsertVecDrain]]) reads them with [[foldVerSchema]]) and
-    * tombstones. */
+    * (ver-less for the append lifecycle, ver-stamped by the upsert
+    * lifecycle ([[upsertVecDrain]]); the probe reads both with
+    * [[foldVerSchema]]) and tombstones. */
   private[graft] def foldTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("folds"), foldSchema)
   private[graft] def tombTree(work: java.nio.file.Path): FoldTree =
@@ -124,28 +124,45 @@ object VecStreams {
     * the e72 discipline on the VECTOR folds): "probe the index as of
     * batch k" stays answerable after compaction for the retention
     * window, which is the reproducibility a training run needs when its
-    * eval set was retrieved at a pinned index version. */
+    * eval set was retrieved at a pinned index version. The tombstone
+    * tree, empty here, is stamped too, so a pinned probe resolves the
+    * trees of either lifecycle the same way. */
   private[graft] def e2fDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
       Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(foldTree(work))) {
+          Seq(foldTree(work), tombTree(work))) {
         e2fFoldBatch(_, _, cents, work)
       }
     }
 
-  /** The probe's scored candidate relation (pre-top-k) — exposed so
-    * E2fStreamSpec can assert ARRIVAL VISIBILITY exactly: a folded
-    * vector sharing a query's cell must appear here after its batch
-    * lands (and not before), even when it misses the top-3. */
-  private[graft] def e2fCandidates(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame = {
+  /** The probe's scored candidate relation (pre-top-k) over the current
+    * read set of both trees — exposed so E2fStreamSpec can assert
+    * ARRIVAL VISIBILITY exactly: a folded vector sharing a query's cell
+    * must appear here after its batch lands (and not before), even when
+    * it misses the top-3. A probe BEFORE the first batch reads
+    * base-only: the trees do not exist yet, so their read sets are
+    * empty. */
+  private[graft] def candidates(s: SparkSession, d: String,
+      work: java.nio.file.Path): DataFrame =
+    candidatesAtDirs(s, d, foldTree(work).readSet(), tombTree(work).readSet())
+
+  /** [[candidates]] against the dirs the RETAINED `snap` manifests of
+    * both trees pinned — a vector updated (or deleted) at batch k still
+    * serves its OLD version at snapshots < k. */
+  private[graft] def candidatesAtSnapshot(s: SparkSession, d: String,
+      work: java.nio.file.Path, snap: Long): DataFrame =
+    candidatesAtDirs(s, d, foldTree(work).pinned(snap), tombTree(work).pinned(snap))
+
+  /** The candidates of the declared queries (nprobe-1 routing under the
+    * fold base's frozen centroids) against EXPLICIT fold and tombstone
+    * dir lists. */
+  private[graft] def candidatesAtDirs(s: SparkSession, d: String,
+      foldDirs: Seq[String], tombDirs: Seq[String]): DataFrame = {
     val root = foldBaseDir(d)
     val (q, cells) = routedQueriesAt(s, root, d)
-    // a probe BEFORE the first arrival batch reads base-only: the tree
-    // does not exist yet, so its read set is empty
-    scoredWithDirs(s, root, foldTree(work).readSet(), q, cells)
+    scoredAtDirs(s, root, foldDirs, tombDirs, q, cells)
   }
 
   /** The nprobe-1 query routing under `root`'s centroids — ONE
@@ -183,23 +200,22 @@ object VecStreams {
     val routed = qRows.toSeq.flatMap { case (qid, qv) =>
       IvfServe.nearestCells(qv, cents, nprobe).map(c => (qid, qv.toSeq, c)) }
     val q = routed.toDF("q_id", "qv", "cell")
-    scoredWithDirs(s, root, foldDirsIn, q, routed.map(_._3).distinct.sorted)
+    scoredAtDirs(s, root, foldDirsIn, Nil, q, routed.map(_._3).distinct.sorted)
   }
 
-  /** The probe's scored relation against an EXPLICIT fold-dir list —
-    * the current read set ([[e2fCandidates]]) or a snapshot manifest's
-    * pinned set ([[e2zFoldSnapshot]]). */
-  private def scoredWithDirs(s: SparkSession, root: String,
-      foldDirs: Seq[String], q: DataFrame, cells: Seq[Int]): DataFrame = {
-    val cols = Seq("vec_id", "label", "embedding", "cell").map(col)
-    val base = s.read.parquet(s"$root/lists")
-      .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*)
-    val all =
-      if (foldDirs.isEmpty) base
-      else base.unionByName(
-        s.read.schema(foldSchema).parquet(foldDirs: _*)
-          .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*))
-    all
+  /** THE candidate relation of the vector index: (base lists at ver −1
+    * ∪ folds), both pruned to the routed `cells`, minus the versions a
+    * tombstone retires ([[Versioned]]: `vec_id` match AND `ver < upto`;
+    * no join is planned without tombstone dirs), scored against the
+    * routed queries `q`. Queries route from the ORIGINAL embeddings
+    * (the request owns its vector — the e2d stance). */
+  private def scoredAtDirs(s: SparkSession, root: String,
+      foldDirs: Seq[String], tombDirs: Seq[String], q: DataFrame,
+      cells: Seq[Int]): DataFrame = {
+    val all = Versioned.rows(s,
+      IvfServe.listsAt(s, root).select("vec_id", "embedding", "cell"),
+      foldVerSchema, foldDirs, _.where(col("cell").isin(cells.map(Int.box): _*)))
+    Versioned.live(all, Versioned.tombs(s, tombSchema, tombDirs), "vec_id")
       .select(col("vec_id").as("cand_id"), col("cell"),
         col("embedding").cast("array<double>").as("v"))
       .join(broadcast(q), Seq("cell"))
@@ -209,11 +225,11 @@ object VecStreams {
           .as("cos_sim"))
   }
 
-  /** The probe over base + folds: query cells under the frozen
-    * centroids, base lists partition-pruned, folds cell-filtered. */
-  private[graft] def e2fProbe(s: SparkSession, d: String,
+  /** The top-3 over [[candidates]] — every lifecycle's live probe (e2f/
+    * e2tm appends, e2u updates, e2d deletes). */
+  private[graft] def probe(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame =
-    SimOps.topK(e2fCandidates(s, d, work), 3)
+    SimOps.topK(candidates(s, d, work), 3)
 
   /** E2f: the declared fold-stream key — fresh drain per invocation
     * (the e6s stance), then the probe; oracle = the full trained-serve
@@ -223,7 +239,7 @@ object VecStreams {
     val work = PathKeys.fixturePath("stream-e2f", dir, "-4")
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
-    e2fProbe(s, dir, work)
+    probe(s, dir, work)
   }
 
   /** Occupancy-drift bar for [[e2gDriftGate]]: re-stage when some
@@ -275,7 +291,7 @@ object VecStreams {
   private[graft] def driftReport(s: SparkSession, d: String,
       work: java.nio.file.Path): DataFrame = {
     val root = foldBaseDir(d)
-    val base = s.read.parquet(s"$root/lists")
+    val base = IvfServe.listsAt(s, root)
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
     val folds = foldTree(work)
     val foldDirs = folds.readSet()
@@ -346,16 +362,6 @@ object VecStreams {
       .withColumn("snapshot_id", lit(DeclaredVecSnap))
   }
 
-  /** The e2f probe against the fold dirs a RETAINED manifest pinned,
-    * instead of the current read set. */
-  private[graft] def candidatesAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame = {
-    val root = foldBaseDir(d)
-    val (q, cells) = routedQueriesAt(s, root, d)
-    scoredWithDirs(s, root, foldTree(work).pinned(snap),
-      q, cells)
-  }
-
   /** The rebuild leg: retrain the full layout (coarse quantizer AND
     * PQ books) over base + arrivals — the e57/e63 refresh discipline
     * applied to the index itself. The frozen-quantizer fold protocol
@@ -424,7 +430,7 @@ object VecStreams {
     val work = PathKeys.fixturePath("stream-e2d", dir, "-4")
     DocStreams.deleteTree(work)
     upsertVecDrain(s, dir, work, cdcLanding(s, dir))
-    upsertProbe(s, dir, work)
+    probe(s, dir, work)
   }
 
   // ───────────────────────── upserts (e2u) ────────────────────────────
@@ -498,75 +504,6 @@ object VecStreams {
       }
     }
 
-  /** The read-side normalization that lets ONE relation serve every
-    * fold tree (the LexStreams discipline): folds written without `ver`
-    * (the append lifecycle's [[e2fFoldBatch]]) read as ver 0 — older
-    * than any batch-stamped tombstone, newer only than the base's −1.
-    * Explicit schema: the missing column reads as null, and no
-    * footer-inference job runs. */
-  private def versionedFolds(s: SparkSession, dirs: Seq[String]): DataFrame =
-    s.read.schema(foldVerSchema).parquet(dirs: _*)
-      .withColumn("ver", coalesce(col("ver"), lit(0L)))
-
-  /** Tombstones written without `upto` read as +∞: such a tombstone
-    * kills every version of its key. */
-  private def versionedTombs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    s.read.schema(tombSchema).parquet(dirs: _*)
-      .withColumn("upto", coalesce(col("upto"), lit(Long.MaxValue)))
-
-  /** The VERSION-AWARE scored relation: candidates = (base lists at
-    * ver −1 ∪ folds) anti-joined against the broadcast tombstones on
-    * `vec_id match AND ver < upto` — a superseded version dies, the
-    * version shipped with the tombstone's own batch survives. Queries
-    * route under the frozen centroids from the ORIGINAL embeddings
-    * (the request owns its vector — the e2d stance). */
-  private[graft] def upsertCandidatesWithDirs(s: SparkSession, d: String,
-      foldDirsIn: Seq[String], tombDirs: Seq[String]): DataFrame = {
-    import s.implicits._
-    val root = foldBaseDir(d)
-    val (q, cells) = routedQueriesAt(s, root, d)
-    val cols = Seq("vec_id", "label", "embedding", "cell", "ver").map(col)
-    val base = s.read.parquet(s"$root/lists")
-      .where(col("cell").isin(cells.map(Int.box): _*))
-      .withColumn("ver", lit(-1L)).select(cols: _*)
-    val all =
-      if (foldDirsIn.isEmpty) base
-      else base.unionByName(
-        versionedFolds(s, foldDirsIn)
-          .where(col("cell").isin(cells.map(Int.box): _*)).select(cols: _*))
-    val tombs = (if (tombDirs.isEmpty)
-        Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      else versionedTombs(s, tombDirs)).distinct()
-    val t = tombs.select(col("vec_id").as("t_vec"), col("upto"))
-    val live = all.join(broadcast(t),
-      all("vec_id") === t("t_vec") && all("ver") < t("upto"), "left_anti")
-    live
-      .select(col("vec_id").as("cand_id"), col("cell"),
-        col("embedding").cast("array<double>").as("v"))
-      .join(broadcast(q), Seq("cell"))
-      .where(col("cand_id") =!= col("q_id"))
-      .select(col("q_id"), col("cand_id"),
-        round(graft.functions.GraftFunctions.cosine(col("qv"), col("v")), 6)
-          .as("cos_sim"))
-  }
-
-  /** The version-aware top-3 over the current read set of both trees
-    * — e2u's and e2d's declared rows. */
-  private[graft] def upsertProbe(s: SparkSession, d: String,
-      work: java.nio.file.Path): DataFrame =
-    SimOps.topK(upsertCandidatesWithDirs(s, d,
-      foldTree(work).readSet(),
-      tombTree(work).readSet()), 3)
-
-  /** The version-aware probe AT a pinned snapshot: both trees resolve
-    * through their `snap` manifests — a vector updated (or deleted) at
-    * batch k still serves its OLD version at snapshots < k. */
-  private[graft] def upsertCandidatesAtSnapshot(s: SparkSession, d: String,
-      work: java.nio.file.Path, snap: Long): DataFrame =
-    upsertCandidatesWithDirs(s, d,
-      foldTree(work).pinned(snap),
-      tombTree(work).pinned(snap))
-
   /** Restage reconciliation FROM THE INDEX ITSELF — the one restage of
     * the mutation lifecycle (e2u's updates, e2d's deletes): the updated
     * embeddings exist only in the stream (the source table still
@@ -577,22 +514,11 @@ object VecStreams {
     * merge. */
   private[graft] def restageFromIndex(s: SparkSession, d: String,
       work: java.nio.file.Path): java.nio.file.Path = {
-    import s.implicits._
-    val root = foldBaseDir(d)
-    val foldDirsIn = foldTree(work).readSet()
-    val tombDirs = tombTree(work).readSet()
-    val base = s.read.parquet(s"$root/lists")
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .withColumn("ver", lit(-1L))
-    val all = if (foldDirsIn.isEmpty) base
-      else base.unionByName(versionedFolds(s, foldDirsIn)
-        .select("vec_id", "label", "embedding", "ver"))
-    val tombs = (if (tombDirs.isEmpty)
-        Seq.empty[(Long, Long)].toDF("vec_id", "upto")
-      else versionedTombs(s, tombDirs)).distinct()
-    val t = tombs.select(col("vec_id").as("t_vec"), col("upto"))
-    val live = all.join(broadcast(t),
-      all("vec_id") === t("t_vec") && all("ver") < t("upto"), "left_anti")
+    val all = Versioned.rows(s,
+      IvfServe.listsAt(s, foldBaseDir(d)).select("vec_id", "label", "embedding"),
+      foldVerSchema, foldTree(work).readSet())
+    val live = Versioned.live(all,
+        Versioned.tombs(s, tombSchema, tombTree(work).readSet()), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding"),
         col("embedding").cast("array<double>").as("v"))
     val dst = work.resolve("restaged")
@@ -631,7 +557,7 @@ object VecStreams {
     val work = PathKeys.fixturePath("stream-e2u", dir, "-4")
     DocStreams.deleteTree(work)
     upsertVecDrain(s, dir, work, upsertLanding(s, dir))
-    upsertProbe(s, dir, work)
+    probe(s, dir, work)
   }
 
   // ───────────────────────── tiered fold merge (e2tm) ─────────────────
@@ -661,6 +587,6 @@ object VecStreams {
     DocStreams.deleteTree(work)
     e2fDrain(s, dir, work)
     foldTree(work).tierMerge(s)
-    e2fProbe(s, dir, work)
+    probe(s, dir, work)
   }
 }

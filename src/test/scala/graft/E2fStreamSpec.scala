@@ -35,7 +35,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val work = freshWork()
     try {
       // BEFORE any fold: no arrival id can be a candidate
-      val before = VecStreams.e2fCandidates(spark, sf, work)
+      val before = VecStreams.candidates(spark, sf, work)
         .where(col("cand_id") < VecStreams.ArrivalBound).count()
       assert(before == 0, "base lists must not contain arrivals")
       // fold a synthetic exact near-duplicate of query 0 (same
@@ -46,7 +46,7 @@ class E2fStreamSpec extends AnyFunSuite {
       val q0 = Tables.embeddings(spark, sf).where(col("vec_id") === 0)
         .select(lit(999999L).as("vec_id"), col("label"), col("embedding"))
       VecStreams.e2fFoldBatch(q0, 0L, cs, work)
-      val top = VecStreams.e2fProbe(spark, sf, work)
+      val top = VecStreams.probe(spark, sf, work)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(top.head.getLong(2) == 999999L && top.head.getDouble(3) == 1.0,
         s"the folded near-dup must be q0's rank-1 neighbor: ${top.toSeq}")
@@ -58,10 +58,10 @@ class E2fStreamSpec extends AnyFunSuite {
     val work = freshWork()
     try {
       VecStreams.e2fFoldBatch(arrivals(), 0L, cs, work)
-      val once = VecStreams.e2fCandidates(spark, sf, work)
+      val once = VecStreams.candidates(spark, sf, work)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
       VecStreams.e2fFoldBatch(arrivals(), 0L, cs, work) // at-least-once replay
-      val twice = VecStreams.e2fCandidates(spark, sf, work)
+      val twice = VecStreams.candidates(spark, sf, work)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
       assert(once.nonEmpty || arrivals().count() == 0)
       assert(twice == once, "a replayed batch must overwrite, never append")
@@ -83,9 +83,9 @@ class E2fStreamSpec extends AnyFunSuite {
       assert(dirs.length <= FoldTree.CompactEvery + 1,
         s"fold listing must stay O(CompactEvery): $dirs")
       VecStreams.e2fFoldBatch(arr, 0L, cs, oneShot)
-      val inc = VecStreams.e2fProbe(spark, sf, work)
+      val inc = VecStreams.probe(spark, sf, work)
         .collect().map(_.toSeq).toSeq
-      val one = VecStreams.e2fProbe(spark, sf, oneShot)
+      val one = VecStreams.probe(spark, sf, oneShot)
         .collect().map(_.toSeq).toSeq
       assert(inc == one, "batch slicing + compaction must never change the answer")
     } finally {
@@ -101,7 +101,7 @@ class E2fStreamSpec extends AnyFunSuite {
       val declared = VecStreams.e2fIvfFoldStream(spark, sf)
         .collect().map(_.toSeq).toSeq
       VecStreams.e2fFoldBatch(arrivals(), 0L, cs, oneShot)
-      val manual = VecStreams.e2fProbe(spark, sf, oneShot)
+      val manual = VecStreams.probe(spark, sf, oneShot)
         .collect().map(_.toSeq).toSeq
       assert(declared.nonEmpty && declared == manual)
     } finally graft.streaming.DocStreams.deleteTree(oneShot)
@@ -132,7 +132,7 @@ class E2fStreamSpec extends AnyFunSuite {
       // PREFIX EQUALITY: the pinned probe equals a one-shot fold of
       // exactly the batch-prefix arrivals (vec_id < 12 — buckets 0..2)
       VecStreams.e2fFoldBatch(arrivals().where(col("vec_id") < 12), 0L, cs, oneShot)
-      val manual = VecStreams.e2fProbe(spark, sf, oneShot)
+      val manual = VecStreams.probe(spark, sf, oneShot)
         .collect().map(_.toSeq).toSeq
       assert(declared.map(_.dropRight(1)) == manual,
         "snapshot probe must equal the one-shot batch-prefix fold")
@@ -168,13 +168,13 @@ class E2fStreamSpec extends AnyFunSuite {
       VecStreams.e2fFoldBatch(q0, 0L, cs, work)
       def folds() = VecStreams.foldTree(work).readSet()
       def tombs() = VecStreams.tombTree(work).readSet()
-      val before = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
+      val before = SimOps.topK(VecStreams.candidatesAtDirs(
           spark, sf, folds(), Nil), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(before.head.getLong(2) == 999999L && before.head.getDouble(3) == 1.0)
       Seq(999999L).toDF("vec_id")
         .write.parquet(work.resolve("tombs/batch=1").toString)
-      val after = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
+      val after = SimOps.topK(VecStreams.candidatesAtDirs(
           spark, sf, folds(), tombs()), 3)
         .where(col("q_id") === 0).orderBy("rank").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
@@ -192,7 +192,7 @@ class E2fStreamSpec extends AnyFunSuite {
       "no tombstoned vector may be served")
     val work = graft.util.PathKeys.fixturePath("stream-e2d", sf, "-4")
     def cands(snap: Long) =
-      VecStreams.upsertCandidatesAtSnapshot(spark, sf, work, snap)
+      VecStreams.candidatesAtSnapshot(spark, sf, work, snap)
         .collect().map(_.toSeq).toSet
     // snapshot 3 = pre-delete; snapshot 4 = batch-4 deletes only;
     // snapshot 5 = all. The fold content is identical across the three
@@ -229,7 +229,7 @@ class E2fStreamSpec extends AnyFunSuite {
       VecStreams.upsertVecFoldBatch(del, 1L, cs, work)
       def folds() = VecStreams.foldTree(work).readSet()
       def tombs() = VecStreams.tombTree(work).readSet()
-      def probed() = SimOps.topK(VecStreams.upsertCandidatesWithDirs(
+      def probed() = SimOps.topK(VecStreams.candidatesAtDirs(
           spark, sf, folds(), tombs()), 3)
         .collect().map(_.toSeq).toSeq
       val once = probed()
@@ -249,7 +249,7 @@ class E2fStreamSpec extends AnyFunSuite {
       VecStreams.upsertVecFoldBatch(q0, 0L, cs, work)
       def folds() = VecStreams.foldTree(work).readSet()
       def tombs() = VecStreams.tombTree(work).readSet()
-      def cands() = VecStreams.upsertCandidatesWithDirs(
+      def cands() = VecStreams.candidatesAtDirs(
         spark, sf, folds(), tombs())
         .where(col("cand_id") === 999999L).collect()
       val before = cands()
@@ -264,10 +264,10 @@ class E2fStreamSpec extends AnyFunSuite {
       assert(!after.exists(r => r.getLong(0) == 0L && r.getDouble(2) == 1.0),
         s"the superseded version must never be served: ${after.toSeq}")
       // replay idempotence: re-folding the update batch changes nothing
-      val probedOnce = VecStreams.upsertCandidatesWithDirs(
+      val probedOnce = VecStreams.candidatesAtDirs(
         spark, sf, folds(), tombs()).collect().map(_.toSeq).toSeq
       VecStreams.upsertVecFoldBatch(v2, 1L, cs, work)
-      val probedTwice = VecStreams.upsertCandidatesWithDirs(
+      val probedTwice = VecStreams.candidatesAtDirs(
         spark, sf, folds(), tombs()).collect().map(_.toSeq).toSeq
       assert(probedOnce == probedTwice,
         "a replayed upsert batch must overwrite, never stack")
@@ -285,7 +285,7 @@ class E2fStreamSpec extends AnyFunSuite {
       VecStreams.upsertVecFoldBatch(q0, 0L, cs, work)
       def folds() = VecStreams.foldTree(work).readSet()
       def tombs() = VecStreams.tombTree(work).readSet()
-      def hit() = VecStreams.upsertCandidatesWithDirs(
+      def hit() = VecStreams.candidatesAtDirs(
         spark, sf, folds(), tombs())
         .where(col("cand_id") === 999999L && col("cos_sim") === 1.0).count()
       assert(hit() == 1, "v1 must serve")
@@ -308,7 +308,7 @@ class E2fStreamSpec extends AnyFunSuite {
     // snapshot 3 — before any update batch — equals the e2f
     // append-lifecycle rows exactly
     val pre = graft.ops.SimOps.topK(
-        VecStreams.upsertCandidatesAtSnapshot(spark, sf, work, 3L), 3)
+        VecStreams.candidatesAtSnapshot(spark, sf, work, 3L), 3)
       .collect().map(_.toSeq).toSeq
     val e2f = VecStreams.e2fIvfFoldStream(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -340,7 +340,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val oneShot = freshWork()
     try {
       VecStreams.e2fFoldBatch(arrivals(), 0L, cs, oneShot)
-      val reference = VecStreams.e2fProbe(spark, sf, oneShot)
+      val reference = VecStreams.probe(spark, sf, oneShot)
         .collect().map(_.toSeq).toSeq
       // base-list mtimes BEFORE the declared key runs
       val baseRoot = Paths.get(VecStreams.foldBaseDir(sf))
@@ -382,7 +382,7 @@ class E2fStreamSpec extends AnyFunSuite {
     val cs = cents()
     val (work, ref) = (freshWork(), freshWork())
     try {
-      def cands(w: java.nio.file.Path) = VecStreams.upsertCandidatesWithDirs(spark, sf,
+      def cands(w: java.nio.file.Path) = VecStreams.candidatesAtDirs(spark, sf,
           VecStreams.foldTree(w).readSet(), VecStreams.tombTree(w).readSet())
         .collect().map(_.toSeq).toSet
       def candId(r: Seq[Any]) = r(1).asInstanceOf[Long]

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.RetrievalOps
 import graft.streaming.{DocStreams, EventStreams, LexStreams, SnapshotFolds, VecStreams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * drain the six-batch CDC landing; their deletes (e35d, e2d) and updates
   * (e35u, e2u) run through the same upsert verb per index. The other
   * keys drain a four-batch landing through the same fold-tree protocol:
-  * the e6s ingest index, the e10s gate, the e63s/e61s/e72 refresh folds
-  * and the e35t/e2tm tier merges. Budgets only ratchet down. */
+  * the e6s ingest index, the e10s gate, the e63s/e61s/e72 refresh folds,
+  * the e35t/e2tm tier merges, the e35f/e2f append drains with their live
+  * probes, e35z/e2z probed at a pinned snapshot, and e71v, which drains
+  * both indexes and fuses their two pinned legs. Budgets only ratchet
+  * down. */
 class IndexJobBudgetSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
@@ -20,15 +24,20 @@ class IndexJobBudgetSpec extends AnyFunSuite {
   private val keys: Seq[(String, (SparkSession, String) => DataFrame, Int)] = Seq(
     ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 40),
     ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 44),
-    ("e2d_vec_tombstone", VecStreams.e2dVecTombstone, 32),
-    ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 32),
+    ("e2d_vec_tombstone", VecStreams.e2dVecTombstone, 31),
+    ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 31),
     ("e6s_minhash_stream", DocStreams.e6sMinhashStream, 39),
     ("e10s_quality_stream", DocStreams.e10sQualityStream, 12),
     ("e63s_incr_stream", EventStreams.e63sStreamIncrAgg, 12),
     ("e61s_retention_stream", EventStreams.e61sStreamRetention, 18),
     ("e72_snapshot_read", SnapshotFolds.e72SnapshotRead, 12),
     ("e35t_tier_merge", LexStreams.e35tTierMerge, 20),
-    ("e2tm_vec_tier_merge", VecStreams.e2tmVecTierMerge, 20))
+    ("e2tm_vec_tier_merge", VecStreams.e2tmVecTierMerge, 19),
+    ("e35f_postings_fold", LexStreams.e35fPostingsFold, 18),
+    ("e35z_lex_snapshot", LexStreams.e35zLexSnapshot, 18),
+    ("e2f_ivf_fold", VecStreams.e2fIvfFoldStream, 18),
+    ("e2z_fold_snapshot", VecStreams.e2zFoldSnapshot, 18),
+    ("e71v_hybrid_snapshot", RetrievalOps.e71vHybridAtSnapshot, 40))
 
   for ((key, run, budget) <- keys) test(s"$key: $budget jobs per declared run") {
     run(spark, sf).collect()

@@ -37,6 +37,15 @@ class IvfServeSpec extends AnyFunSuite {
     assert(df.collect().nonEmpty)
   }
 
+  test("the trained lists' declared schema equals their footer-inferred one") {
+    IvfServe.ensure(spark, sf)
+    graft.streaming.VecStreams.ensureFoldBase(spark, sf)
+    for (root <- Seq(IvfServe.serveDir(sf), graft.streaming.VecStreams.foldBaseDir(sf))) {
+      val inferred = spark.read.parquet(s"$root/lists").schema
+      assert(inferred == IvfServe.listsSchema, s"$root: inferred ${inferred.treeString}")
+    }
+  }
+
   test("e2w multiprobe: dirs ≤ queries × nprobe; candidate superset ⇒ recall never drops") {
     val p1 = IvfServe.probedCells(spark, sf, 1)
     val p4 = IvfServe.probedCells(spark, sf, IvfServe.NProbe)

@@ -148,7 +148,7 @@ class LexStreamSpec extends AnyFunSuite {
       // semantics — full-corpus statistics and the re-derived query
       // set — so its base-only probe must equal e35's declared rows
       val merged = LexStreams.mergeIntoBase(spark, sf, work)
-      val probed = LexStreams.probeBaseOnly(spark, merged.toString)
+      val probed = LexStreams.probeAtDirs(spark, merged.toString, Nil, Nil, Nil)
         .collect().map(_.toSeq).toSeq
       val e35 = graft.ops.CurationOps.e35Bm25Topk(spark, sf)
         .collect().map(_.toSeq).toSeq
@@ -211,7 +211,7 @@ class LexStreamSpec extends AnyFunSuite {
       LexStreams.foldBatch(doc, 0L, work)
       def segs() = LexStreams.segTree(work).readSet()
       def lens() = LexStreams.lensTree(work).readSet()
-      val before = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
+      val before = LexStreams.probeAtDirs(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(), Nil).where(col("qid") === 0).orderBy("rnk").collect()
       assert(before.head.getLong(2) == 999999L, s"plant must rank 1: ${before.toSeq}")
       // ... then a tombstone fold deletes it: it must vanish from the
@@ -221,13 +221,13 @@ class LexStreamSpec extends AnyFunSuite {
         .where(col("doc_id") === 999999L).collect().head.getInt(1)
       Seq((999999L, dl)).toDF("doc_id", "dl")
         .write.parquet(work.resolve("tombs/batch=1").toString)
-      val after = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
+      val after = LexStreams.probeAtDirs(spark, LexStreams.foldBaseDir(sf),
         segs(), lens(),
         LexStreams.tombTree(work).readSet())
         .where(col("qid") === 0).orderBy("rnk").collect()
       assert(!after.exists(_.getLong(2) == 999999L),
         "a tombstoned doc must never be served")
-      val base = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
+      val base = LexStreams.probeAtDirs(spark, LexStreams.foldBaseDir(sf),
         Nil, Nil, Nil).where(col("qid") === 0).orderBy("rnk").collect()
       assert(after.map(_.getLong(2)).toSeq == base.map(_.getLong(2)).toSeq,
         "with the only arrival tombstoned, the ranked docs are the base's")
@@ -249,9 +249,9 @@ class LexStreamSpec extends AnyFunSuite {
     val oneShot = freshWork()
     try {
       LexStreams.foldBatch(arrivals(), 0L, oneShot)
-      val pre = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 3L)
+      val pre = LexStreams.probeAtSnapshot(spark, sf, work, 3L)
         .collect().map(_.toSeq).toSeq
-      val manual = LexStreams.probeWithVersions(spark, LexStreams.foldBaseDir(sf),
+      val manual = LexStreams.probeAtDirs(spark, LexStreams.foldBaseDir(sf),
         LexStreams.segTree(oneShot).readSet(),
         LexStreams.lensTree(oneShot).readSet(), Nil)
         .collect().map(_.toSeq).toSeq
@@ -259,9 +259,9 @@ class LexStreamSpec extends AnyFunSuite {
         "snapshot 3 must reproduce the pre-delete truth exactly")
       // MID-DELETE SNAPSHOT: at snapshot 4 only batch 4's deletes
       // (ids < 24) apply — batch 5's are visible and weighted
-      val mid = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 4L)
+      val mid = LexStreams.probeAtSnapshot(spark, sf, work, 4L)
         .collect().map(_.toSeq).toSeq
-      val cur = LexStreams.upsertProbe(spark, sf, work)
+      val cur = LexStreams.probe(spark, sf, work)
         .collect().map(_.toSeq).toSeq
       assert(mid != pre, "batch-4 deletes must already bite at snapshot 4")
       assert(mid != cur, "batch-5 deletes must NOT bite yet at snapshot 4")
@@ -289,7 +289,7 @@ class LexStreamSpec extends AnyFunSuite {
         null.asInstanceOf[String], null.asInstanceOf[java.lang.Long]))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
       LexStreams.upsertFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
-      def probed() = LexStreams.upsertProbe(spark, sf, work).collect().map(_.toSeq).toSeq
+      def probed() = LexStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
       val once = probed()
       LexStreams.upsertFoldBatch(spark, del, 1L, work, LexStreams.foldBaseDir(sf))
       assert(probed() == once, "a replayed delete batch must overwrite, never stack")
@@ -336,7 +336,7 @@ class LexStreamSpec extends AnyFunSuite {
       // no prior resolved at batch 0 → no tombs dir exists yet
       def dirs(w: java.nio.file.Path, t: String) = tree(w.resolve(t)).readSet()
       def probed(w: java.nio.file.Path) =
-        LexStreams.probeWithVersions(spark, root, dirs(w, "segs"),
+        LexStreams.probeAtDirs(spark, root, dirs(w, "segs"),
           dirs(w, "lens"), dirs(w, "tombs"))
           .where(col("qid") === 0).orderBy("rnk").collect()
       val before = probed(work)
@@ -357,7 +357,7 @@ class LexStreamSpec extends AnyFunSuite {
         .where(col("doc_id") === 999999L).collect().head.getInt(1)
       Seq((999999L, dl)).toDF("doc_id", "dl")
         .write.parquet(delWork.resolve("tombs-del/batch=1").toString)
-      val deleted = LexStreams.probeWithVersions(spark, root,
+      val deleted = LexStreams.probeAtDirs(spark, root,
         dirs(delWork, "segs"), dirs(delWork, "lens"),
         tree(delWork.resolve("tombs-del")).readSet())
         .where(col("qid") === 0).orderBy("rnk").collect()
@@ -386,7 +386,7 @@ class LexStreamSpec extends AnyFunSuite {
       LexStreams.upsertFoldBatch(spark, doc, 0L, refWork, root)
       def dirs(w: java.nio.file.Path, t: String) = tree(w.resolve(t)).readSet()
       def probed(w: java.nio.file.Path) =
-        LexStreams.probeWithVersions(spark, root, dirs(w, "segs"),
+        LexStreams.probeAtDirs(spark, root, dirs(w, "segs"),
           dirs(w, "lens"), dirs(w, "tombs"))
           .where(col("qid") === 0).orderBy("rnk").collect()
       // DELETE at batch 1: a batch-bounded tombstone (upto = 1, the
@@ -424,7 +424,7 @@ class LexStreamSpec extends AnyFunSuite {
         .withColumn("text", LexStreams.updatedText(col("text")))
       def dirs(t: String) =
         tree(work.resolve(t)).readSet()
-      def probed() = LexStreams.probeWithVersions(spark, root, dirs("segs"),
+      def probed() = LexStreams.probeAtDirs(spark, root, dirs("segs"),
         dirs("lens"), dirs("tombs")).collect().map(_.toSeq).toSeq
       LexStreams.upsertFoldBatch(spark, upd, 1L, work, root)
       val once = probed()
@@ -442,7 +442,7 @@ class LexStreamSpec extends AnyFunSuite {
     // snapshot 3 — before any update batch — must equal the e35f
     // append-lifecycle rows exactly: until an update arrives, the
     // upsert lifecycle IS the append lifecycle
-    val pre = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 3L)
+    val pre = LexStreams.probeAtSnapshot(spark, sf, work, 3L)
       .collect().map(_.toSeq).toSeq
     val e35f = LexStreams.e35fPostingsFold(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -453,7 +453,7 @@ class LexStreamSpec extends AnyFunSuite {
     assert(declared != pre, "the update batches must change the served rows")
     // MID-UPDATE SNAPSHOT: at snapshot 4 only batch 4's updates
     // (doc_id < 24) apply — docs 25/29/33 still serve their original
-    val mid = LexStreams.upsertProbeAtSnapshot(spark, sf, work, 4L)
+    val mid = LexStreams.probeAtSnapshot(spark, sf, work, 4L)
       .collect().map(_.toSeq).toSeq
     assert(mid != pre, "batch-4 updates must already bite at snapshot 4")
     assert(mid != declared, "batch-5 updates must NOT bite yet at snapshot 4")
@@ -462,7 +462,7 @@ class LexStreamSpec extends AnyFunSuite {
     // the new versions (doc 17's merged dl = 2 × its original dl),
     // and counts every doc exactly once
     val merged = LexStreams.mergeIndexLive(spark, sf, work)
-    val probed = LexStreams.probeBaseOnly(spark, merged.toString)
+    val probed = LexStreams.probeAtDirs(spark, merged.toString, Nil, Nil, Nil)
       .collect().map(_.toSeq).toSeq
     assert(probed == declared,
       "the merged base must serve the upsert-lifecycle rows exactly")
@@ -489,7 +489,7 @@ class LexStreamSpec extends AnyFunSuite {
     LexStreams.ensureFoldBase(spark, sf)
     val root = LexStreams.foldBaseDir(sf)
     def probeRows(work: java.nio.file.Path): Seq[Seq[Any]] =
-      LexStreams.upsertProbe(spark, sf, work).collect().map(_.toSeq).toSeq
+      LexStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
     // 1. the driver-rows lens fold (the bounded fast path's write)
     //    must be row-identical to the distributed lens write
     val (wA, wB) = (freshWork(), freshWork())
@@ -568,8 +568,8 @@ class LexStreamSpec extends AnyFunSuite {
         s"a landing over the bound must not take the driver-collect path: $seen")
       assert(seen.contains("lexfold 0: lens fold"),
         s"the distributed lens fold must have run: $seen")
-      assert(LexStreams.upsertProbe(spark, sf, wFallback).collect().map(_.toSeq).toSeq ==
-        LexStreams.upsertProbe(spark, sf, wBounded).collect().map(_.toSeq).toSeq,
+      assert(LexStreams.probe(spark, sf, wFallback).collect().map(_.toSeq).toSeq ==
+        LexStreams.probe(spark, sf, wBounded).collect().map(_.toSeq).toSeq,
         "the distributed fallback must serve the bounded run's rows")
     } finally { graft.streaming.DocStreams.deleteTree(wBounded)
       graft.streaming.DocStreams.deleteTree(wFallback) }
@@ -595,9 +595,9 @@ class LexStreamSpec extends AnyFunSuite {
         LexStreams.buildBaseLayout(spark, truth.toString, corpus)
         spark.read.parquet(s"$root/queries").write.mode("overwrite")
           .parquet(truth.resolve("queries").toString)
-        LexStreams.probeBaseOnly(spark, truth.toString).collect().map(_.toSeq).toSeq
+        LexStreams.probeAtDirs(spark, truth.toString, Nil, Nil, Nil).collect().map(_.toSeq).toSeq
       }
-      def served() = LexStreams.upsertProbe(spark, sf, work).collect().map(_.toSeq).toSeq
+      def served() = LexStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
       def mergedDocs() = spark.read
         .parquet(LexStreams.mergeIndexLive(spark, sf, work).resolve("stats").toString)
         .head().getLong(0)

@@ -68,7 +68,7 @@ class VecDriftSpec extends AnyFunSuite {
       // probe cost/recall BEFORE: candidates for the drifted queries
       // (vec_id < 8 — arrivals by construction) through the frozen
       // layout + folds
-      val candBefore = VecStreams.e2fCandidates(spark, d, work).count()
+      val candBefore = VecStreams.candidates(spark, d, work).count()
       def exactTop3(): Map[Long, Set[Long]] = {
         val all = Tables.embeddings(spark, d)
           .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -89,7 +89,7 @@ class VecDriftSpec extends AnyFunSuite {
         byQ.map { case (q, rs) =>
           rs.map(_.getLong(2)).toSet.intersect(exact(q)).size / 3.0 }.sum / byQ.size
       }
-      val recBefore = recall(VecStreams.e2fProbe(spark, d, work).collect())
+      val recBefore = recall(VecStreams.probe(spark, d, work).collect())
       // RE-STAGE: retrain on base + folded arrivals, re-assign
       val restagedRoot = VecStreams.restageWithArrivals(spark, d, work)
       val asg = spark.read.parquet(s"$restagedRoot/lists")
