@@ -265,10 +265,8 @@ object RetrievalOps {
     import graft.streaming.{LexStreams, VecStreams}
     LexStreams.ensureFoldBase(s, d)
     VecStreams.ensureFoldBase(s, d)
-    val lexWork = graft.util.PathKeys.fixturePath("stream-e71v-lex", d, "-4")
-    val vecWork = graft.util.PathKeys.fixturePath("stream-e71v-vec", d, "-4")
-    graft.streaming.DocStreams.deleteTree(lexWork)
-    graft.streaming.DocStreams.deleteTree(vecWork)
+    val lexWork = graft.streaming.Drain.freshWork("stream-e71v-lex", d)
+    val vecWork = graft.streaming.Drain.freshWork("stream-e71v-vec", d)
     LexStreams.drain(s, d, lexWork)
     VecStreams.e2fDrain(s, d, vecWork)
     fuseAtDirs(s, d, LexStreams.segTree(lexWork).pinned(DeclaredHybridSnap),

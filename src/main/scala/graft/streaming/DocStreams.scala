@@ -219,8 +219,7 @@ object DocStreams {
   }
 
   def e10sQualityStream(s: SparkSession, dir: String): DataFrame = {
-    val work = PathKeys.fixturePath("stream-e10s", dir, "-4")
-    deleteTree(work)
+    val work = Drain.freshWork("stream-e10s", dir)
     val src = java.nio.file.Paths.get(dir, "documents.parquet")
     val perTrigger = StreamTune.sourceBytes(src) / 4
     StreamTune.withDrainWidthFrom(s, src) {
@@ -239,11 +238,9 @@ object DocStreams {
     val rel = SimOps.minhashRelations(s, dir,
       mh = (h, sh) => md5(concat(lit(s"$h:"), sh)),
       bandHash = (a, b) => md5(concat(a, b)))
-    val work = PathKeys.fixturePath("stream-e6s", dir, "-4")
-    // a fresh ingest per invocation: leftover checkpoint + index from a
-    // previous drain would resume an already-finished stream and emit
-    // nothing (the fixture-staleness analogue of drainToTable's wipe)
-    deleteTree(work)
+    // a fresh ingest per invocation (the fixture-staleness analogue of
+    // drainToTable's wipe)
+    val work = Drain.freshWork("stream-e6s", dir)
     val src = java.nio.file.Paths.get(dir, "documents.parquet")
     val perTrigger = StreamTune.sourceBytes(src) / 4
     StreamTune.withDrainWidthFrom(s, src) {

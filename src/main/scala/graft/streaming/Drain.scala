@@ -3,8 +3,11 @@ package graft.streaming
 import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
+
+import graft.util.{PathKeys, Staged}
 
 /** The ONE micro-batch drain lifecycle every drained stream runs:
   * start → drain everything available → record busy time → stop.
@@ -54,7 +57,7 @@ object Drain {
     }
   }
 
-  /** A staged landing — the path [[graft.util.Staged.landing]] returned
+  /** A staged landing — the path [[Staged.landing]] returned
     * — and the row schema its parts carry. */
   final case class Landing(path: Path, schema: StructType) {
 
@@ -76,18 +79,43 @@ object Drain {
     manifested(s, landing.stream(s), work, trees)(fold(_, _, bounded))
   }
 
-  /** The CDC landing shape shared by the text and vector lifecycles:
-    * parts 0..3 are the arrivals (`key` < `bound`, four contiguous
-    * ranges of `raw`); parts 4 and 5 are `changes` split at key 24, so
-    * the change records land as two micro-batches and a snapshot can
-    * pin between them. */
-  private[graft] val CdcParts = 6
+  /** The staged landing or drain work dir of `kind` over `dir`. */
+  private def fixture(kind: String, dir: String): Path =
+    PathKeys.fixturePath(kind, dir, "-4")
 
-  private[graft] def cdcPart(raw: DataFrame, changes: DataFrame, key: String,
-      bound: Long)(i: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    if (i < 4) raw.where(graft.util.Staged.rangePart(col(key), 0L, bound, i, 4))
-    else if (i == 4) changes.where(col(key) < 24)
-    else changes.where(col(key) >= 24)
+  /** A fresh drain work dir of `kind` over `dir` — emptied first, since
+    * a leftover checkpoint would resume a finished stream and fold
+    * nothing (every declared drain key runs fresh per invocation). */
+  def freshWork(kind: String, dir: String): Path = {
+    val work = fixture(kind, dir)
+    Staged.deleteTree(work)
+    work
+  }
+
+  /** Arrival buckets of an index landing: four contiguous key ranges. */
+  private val ArrivalParts = 4
+
+  /** The ONE landing shape of the text and vector index lifecycles,
+    * staged under [[Staged.landing]] with signature `tag` over `src`:
+    * parts 0..3 are the arrivals (`key` < `bound`, four contiguous
+    * ranges of `src`); with a `changes` relation (built from the same
+    * raw read) parts 4 and 5 are its records split at key 24, so the
+    * change records land as two micro-batches and a snapshot can pin
+    * between them. */
+  private[graft] def indexLanding(s: SparkSession, kind: String, dir: String,
+      src: Path, schema: StructType, key: String, bound: Long, tag: String,
+      prefix: String, changes: Option[DataFrame => DataFrame] = None): Landing = {
+    val parts = ArrivalParts + (if (changes.isEmpty) 0 else 2)
+    Landing(Staged.landing(fixture(kind, dir), Staged.sourceSig(src, tag),
+        Staged.partNames(prefix, parts)) {
+      val raw = s.read.schema(schema).parquet(src.toString)
+      val arrivals = (0 until ArrivalParts).map(i =>
+        raw.where(Staged.rangePart(col(key), 0L, bound, i, ArrivalParts)))
+      val changed = changes.toSeq.flatMap { f =>
+        val c = f(raw)
+        Seq(c.where(col(key) < 24), c.where(col(key) >= 24))
+      }
+      arrivals ++ changed
+    }, schema)
   }
 }

@@ -522,10 +522,7 @@ object EventStreams {
     * answer provably cannot move; nothing ever rescans the base. */
   def e63sStreamIncrAgg(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = PathKeys.fixturePath("stream-e63s", dir, "-4")
-    // fresh fold per invocation (the e6s stance): a leftover checkpoint
-    // would resume a finished stream and fold nothing
-    deleteTree(work)
+    val work = Drain.freshWork("stream-e63s", dir)
     e63sDrain(s, dir, work)
     e63sResult(s, dir, work)
   }
@@ -614,8 +611,7 @@ object EventStreams {
     * the base is never rescanned. */
   def e61sStreamRetention(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e61bEnsure(s, dir)
-    val work = PathKeys.fixturePath("stream-e61s", dir, "-4")
-    deleteTree(work) // fresh fold per invocation (the e6s stance)
+    val work = Drain.freshWork("stream-e61s", dir)
     e61sDrain(s, dir, work)
     e61sResult(s, dir, work)
   }

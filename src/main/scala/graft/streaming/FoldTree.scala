@@ -77,8 +77,7 @@ final case class FoldTree(root: Path, schema: StructType) {
   /** `dirs` of this tree as one relation, read with the tree's schema;
     * no dirs read as the empty relation. */
   def read(s: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else s.read.schema(schema).parquet(dirs: _*)
+    FoldTree.read(s, schema, dirs)
 
   /** Cadence compaction at the entry of batch `id`: when at least
     * [[FoldTree.CompactEvery]] batch dirs before `id` are pending, merge
@@ -194,6 +193,12 @@ object FoldTree {
   /** Snapshots that stay readable — dirs they reference are spared from
     * cleanup until their manifest expires. */
   val Retain = 3
+
+  /** Fold `dirs` read with their tree's row `schema` — the one fold
+    * read, also for dir lists resolved outside a tree's root. */
+  def read(s: SparkSession, schema: StructType, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else s.read.schema(schema).parquet(dirs: _*)
 
   private val Batch = "batch="
   private val Compact = "compact="

@@ -64,20 +64,20 @@ object LexStreams {
     * a schema-less `read.parquet` runs a footer-inference job before
     * the real one — at ~8 layout reads per trigger+probe that was a
     * quarter of the trigger's job count. The layouts are written by
-    * this object, so their schemas are statically known; `ver`/`upto`
-    * columns exist only where the writing lifecycle stamps them. */
-  private[graft] val lensSchema: StructType = StructType(Seq(
+    * this object, so their schemas are statically known. Every fold
+    * row carries its batch id as `ver`, so each fold tree has ONE
+    * schema; the base lens dim keeps its `(doc_id, dl)` layout. */
+  private val baseLensSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("dl", IntegerType)))
-  private[graft] val lensVerSchema: StructType =
-    StructType(lensSchema.fields :+ StructField("ver", LongType))
+  private val lensSchema: StructType =
+    StructType(baseLensSchema.fields :+ StructField("ver", LongType))
   private[graft] val tombSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("dl", IntegerType),
     StructField("upto", LongType)))
-  private[graft] val segSchema: StructType = StructType(Seq(
+  private val segSchema: StructType = StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
-    StructField("tf", LongType), StructField("dl", IntegerType)))
-  private[graft] val segVerSchema: StructType =
-    StructType(segSchema.fields :+ StructField("ver", LongType))
+    StructField("tf", LongType), StructField("dl", IntegerType),
+    StructField("ver", LongType)))
   private[graft] val basePostSchema: StructType = StructType(Seq(
     StructField("tb", IntegerType), StructField("term", StringType),
     StructField("doc_id", LongType), StructField("tf", LongType),
@@ -151,36 +151,29 @@ object LexStreams {
     } finally tf.unpersist(blocking = false)
   }
 
-  /** The three staged landings (the [[graft.util.Staged.landing]]
-    * protocol), each returned only once staged — the drains' bounded-batch
-    * guard reads these paths. */
-  private[graft] def arrivalLanding(s: SparkSession, dir: String,
-      nBuckets: Int): Drain.Landing = Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-docs-arrivals", dir, s"-$nBuckets"),
-      Staged.sourceSig(docsSrc(dir)), Staged.partNames("docs", nBuckets)) {
-      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
-      (i: Int) => raw.where(
-        Staged.rangePart(col("doc_id"), 0L, ArrivalDocBound, i, nBuckets))
-    }, docsSchema)
+  /** The three staged landings ([[Drain.indexLanding]]), each returned
+    * only once staged — the drains' bounded-batch guard reads these
+    * paths. The arrival landing: the 4 arrival buckets. */
+  private[graft] def arrivalLanding(s: SparkSession, dir: String): Drain.Landing =
+    landing(s, "stream-docs-arrivals", dir, "", "docs", None)
+
+  private def landing(s: SparkSession, kind: String, dir: String, tag: String,
+      prefix: String, changes: Option[DataFrame => DataFrame]): Drain.Landing =
+    Drain.indexLanding(s, kind, dir, docsSrc(dir), docsSchema, "doc_id",
+      ArrivalDocBound, tag, prefix, changes)
 
   /** CDC landing for the delete lifecycle: the 4 arrival buckets plus 2
     * DELETE buckets — CDC-style delete records (key present, payload
-    * NULL), landing as micro-batches 4 and 5 ([[Drain.cdcPart]]) and
-    * drained through the upsert verb ([[upsertDrain]]). */
+    * NULL), landing as micro-batches 4 and 5 and drained through the
+    * upsert verb ([[upsertDrain]]). */
   private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
-    Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-docs-cdc", dir, "-4"),
-      Staged.sourceSig(docsSrc(dir), "c1:"),
-      Staged.partNames("cdc", Drain.CdcParts)) {
-      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
-      val dels = raw.where(tombPred(col("doc_id")))
+    landing(s, "stream-docs-cdc", dir, "c1:", "cdc", Some(raw =>
+      raw.where(tombPred(col("doc_id")))
         .select(col("doc_id"),
           lit(null).cast("string").as("text"),
           lit(null).cast("string").as("lang"),
           lit(null).cast("string").as("source"),
-          lit(null).cast("long").as("n_chars"))
-      Drain.cdcPart(raw, dels, "doc_id", ArrivalDocBound)
-    }, docsSchema)
+          lit(null).cast("long").as("n_chars"))))
 
   /** CDC-U landing for the upsert lifecycle: the 4 arrival buckets
     * (original text) plus 2 UPDATE buckets — re-arrivals of the declared
@@ -189,20 +182,14 @@ object LexStreams {
     * snapshot can pin BETWEEN them (batch-4 updates applied, batch-5
     * docs still at their original version). */
   private[graft] def upsertLanding(s: SparkSession, dir: String): Drain.Landing =
-    Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-docs-upsert", dir, "-4"),
-      Staged.sourceSig(docsSrc(dir), "u1:"),
-      Staged.partNames("upd", Drain.CdcParts)) {
-      val raw = s.read.schema(docsSchema).parquet(docsSrc(dir).toString)
-      Drain.cdcPart(raw, raw.where(updPred(col("doc_id")))
-        .withColumn("text", updatedText(col("text"))), "doc_id", ArrivalDocBound)
-    }, docsSchema)
+    landing(s, "stream-docs-upsert", dir, "u1:", "upd", Some(raw =>
+      raw.where(updPred(col("doc_id")))
+        .withColumn("text", updatedText(col("text")))))
 
   /** The text index's fold trees under a drain's work dir: postings
-    * segments, doc lengths and tombstones. The append lifecycle writes
-    * segments and lengths ver-less; the upsert lifecycle ([[upsertDrain]])
-    * stamps `ver` on both. Reads that need the version use the ver
-    * schemas ([[Versioned]]). */
+    * segments, doc lengths and tombstones. Every segment and length row
+    * carries its batch id as `ver` ([[Versioned]]), whichever drain
+    * wrote it, so each tree has one schema. */
   private[graft] def segTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("segs"), segSchema)
   private[graft] def lensTree(work: java.nio.file.Path): FoldTree =
@@ -210,15 +197,19 @@ object LexStreams {
   private[graft] def tombTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("tombs"), tombSchema)
 
-  /** Write a lens fold from driver rows — the bounded-batch fast path
-    * (the rows came off the batch's one bounded collect, so no second
-    * scan+tokenize job runs). `ver` stamps the upsert lifecycle's
-    * version column. */
+  /** The trees both drains manifest: a pinned text-index read needs the
+    * postings prefix AND the doc-length prefix — statistics at version
+    * k are part of the version — and the tombstones. */
+  private def trees(work: java.nio.file.Path): Seq[FoldTree] =
+    Seq(segTree(work), lensTree(work), tombTree(work))
+
+  /** Write a lens fold from driver rows stamped `ver = id` — the
+    * bounded-batch fast path (the rows came off the batch's one bounded
+    * collect, so no second scan+tokenize job runs). */
   private def writeLensLocal(s: SparkSession, rows: Seq[(Long, Int)],
-      ver: Option[Long], dst: java.nio.file.Path): Unit = {
-    val data = rows.map { case (d, l) => org.apache.spark.sql.Row.fromSeq(Seq[Any](d, l) ++ ver) }
-    s.createDataFrame(java.util.Arrays.asList(data: _*),
-        if (ver.isEmpty) lensSchema else lensVerSchema)
+      id: Long, dst: java.nio.file.Path): Unit = {
+    val data = rows.map { case (d, l) => org.apache.spark.sql.Row(d, l, id) }
+    s.createDataFrame(java.util.Arrays.asList(data: _*), lensSchema)
       .coalesce(1).write.mode("overwrite").parquet(dst.toString)
   }
 
@@ -230,9 +221,8 @@ object LexStreams {
 
   /** One micro-batch fold: tokenize the BATCH's rows map-side, append
     * its postings segment and its doc-length fold (both overwrite-keyed
-    * by batch id — replay-idempotent). Exposed for the replay spec.
-    * `ver` stamps both folds with the upsert lifecycle's version column
-    * ([[upsertFoldBatch]]); the append lifecycle writes them ver-less.
+    * by batch id — replay-idempotent), every row stamped `ver = id`.
+    * Exposed for the replay spec.
     *
     * When the caller already holds the batch's (doc_id, dl) rows from
     * its one bounded collect (`lensRows`), the lens fold is written
@@ -241,21 +231,19 @@ object LexStreams {
     * write is then the trigger's only distributed scan. */
   private[graft] def foldBatch(df: DataFrame, id: Long,
       work: java.nio.file.Path,
-      lensRows: Option[Seq[(Long, Int)]] = None,
-      ver: Option[Long] = None): Unit = {
+      lensRows: Option[Seq[(Long, Int)]] = None): Unit = {
     val s = df.sparkSession
-    val stamp = ver.map(lit(_).as("ver")).toSeq
     val toks = graft.ops.SimOps.tokensArr
     val withLen = df.select(col("doc_id"), toks.as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
     lensRows match {
       case Some(rows) =>
         labeled(s, s"lexfold $id: lens fold (driver rows)") {
-          writeLensLocal(s, rows, ver, lensTree(work).batch(id))
+          writeLensLocal(s, rows, id, lensTree(work).batch(id))
         }
       case None =>
         labeled(s, s"lexfold $id: lens fold") {
-          withLen.select(Seq(col("doc_id"), col("dl")) ++ stamp: _*)
+          withLen.select(col("doc_id"), col("dl"), lit(id).as("ver"))
             .write.mode("overwrite")
             .parquet(lensTree(work).batch(id).toString)
         }
@@ -263,22 +251,19 @@ object LexStreams {
     labeled(s, s"lexfold $id: postings segment") {
       withLen.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
         .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-        .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++ stamp: _*)
+        .select(col("term"), col("doc_id"), col("tf"), col("dl"), lit(id).as("ver"))
         .write.mode("overwrite")
         .parquet(segTree(work).batch(id).toString)
     }
   }
 
   /** The arrival drain. Manifests on all three fold trees (the e2z/e72
-    * discipline): a pinned text-index read needs the postings prefix AND
-    * the doc-length prefix — statistics at version k are part of the
-    * version — and the tombstone tree, empty here, is stamped too, so a
+    * discipline); the tombstone tree, empty here, is stamped too, so a
     * pinned probe resolves the trees of either lifecycle the same way. */
   private[graft] def drain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
-      Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(segTree(work), lensTree(work), tombTree(work))) {
+      Drain.manifested(s, arrivalLanding(s, d).stream(s), work, trees(work)) {
         foldBatch(_, _, work)
       }
     }
@@ -328,7 +313,7 @@ object LexStreams {
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .where(col("tb").isin(buckets.map(Int.box): _*))
       .select("term", "doc_id", "tf", "dl")
-    val post = Versioned.rows(s, basePost, segVerSchema, segDirs,
+    val post = Versioned.rows(s, basePost, segSchema, segDirs,
       _.where(col("term").isin(terms: _*)))
     val tombs = Versioned.tombs(s, tombSchema, tombDirs)
     val postLive = Versioned.live(post, tombs, "doc_id")
@@ -337,7 +322,7 @@ object LexStreams {
         org.apache.spark.sql.expressions.Window.partitionBy("term")))
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats")
     val lensSide = if (lensDirs.isEmpty) baseSt
-      else baseSt.unionByName(s.read.schema(lensSchema).parquet(lensDirs: _*)
+      else baseSt.unionByName(FoldTree.read(s, lensSchema, lensDirs)
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
     val st = tombs.fold(lensSide)(t => lensSide.unionByName(
         t.agg((-count(lit(1))).as("n_docs"),
@@ -386,8 +371,7 @@ object LexStreams {
     * the BASE corpus, every scoring statistic from the WHOLE corpus. */
   def e35fPostingsFold(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35f", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35f", dir)
     drain(s, dir, work)
     probe(s, dir, work)
   }
@@ -419,8 +403,7 @@ object LexStreams {
     * build cost — paid on MEASURED segment mass instead of a timer. */
   def e35gMergeGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35g", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35g", dir)
     drain(s, dir, work)
     maybeMerge(s, dir, work) // lifecycle contract; no-op unless tripped
     mergeReport(s, dir, work)
@@ -433,12 +416,12 @@ object LexStreams {
     val baseSt = s.read.schema(statsSchema).parquet(s"$root/stats").select("n_docs")
     val basePost = s.read.schema(basePostSchema).parquet(s"$root/postings")
       .agg(count(lit(1)).as("n_base_postings"))
-    val lensDirs = lensTree(work).readSet()
-    val segDirs = segTree(work).readSet()
+    val (lens, segs) = (lensTree(work), segTree(work))
+    val segDirs = segs.readSet()
     require(segDirs.nonEmpty, s"merge gate needs folded segments under $work")
-    val arrDocs = s.read.schema(lensSchema).parquet(lensDirs: _*)
+    val arrDocs = lens.read(s, lens.readSet())
       .agg(count(lit(1)).as("n_arr_docs"))
-    val arrPost = s.read.schema(segSchema).parquet(segDirs: _*)
+    val arrPost = segs.read(s, segDirs)
       .agg(count(lit(1)).as("n_arr_postings"))
     baseSt.withColumnRenamed("n_docs", "n_base_docs")
       .crossJoin(broadcast(arrDocs))
@@ -493,8 +476,7 @@ object LexStreams {
     * current-stats score of a pinned posting set is a hash miss. */
   def e35zLexSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35z", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35z", dir)
     drain(s, dir, work)
     probeAtSnapshot(s, dir, work, DeclaredLexSnap)
       .withColumn("snapshot_id", lit(DeclaredLexSnap))
@@ -524,8 +506,7 @@ object LexStreams {
     * at 16 and 64 segments vs 1. */
   def e35tTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35t", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35t", dir)
     drain(s, dir, work)
     segTree(work).tierMerge(s)
     lensTree(work).tierMerge(s)
@@ -574,8 +555,7 @@ object LexStreams {
     * the corpus until the merge the lifecycle was already paying. */
   def e35dLexTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35d", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35d", dir)
     upsertDrain(s, dir, work, cdcLanding(s, dir))
     probe(s, dir, work)
   }
@@ -623,9 +603,8 @@ object LexStreams {
     *
     * Prior-resolution safety: the lookup filters `ver < id`, so it
     * sees the PRE-batch read set even when this batch's own folds are
-    * already on disk (a crashed earlier attempt). Lens folds written
-    * without `ver` (the append lifecycle's [[foldBatch]]) read as ver 0
-    * ([[Versioned]]). Replay idempotence is spec-pinned.
+    * already on disk (a crashed earlier attempt). Replay idempotence is
+    * spec-pinned.
     *
     * Bounded batches (the landing-bytes guard) run: one (doc_id,
     * delete?, dl) collect → pushed-In prior lookup → local tombstone
@@ -645,7 +624,7 @@ object LexStreams {
     // (the delete-then-re-add double-subtract, spec-pinned).
     def latestPriors(restrict: DataFrame => DataFrame): DataFrame = {
       val allLens = Versioned.rows(s,
-        s.read.schema(lensSchema).parquet(s"$baseRoot/lens"), lensVerSchema,
+        s.read.schema(baseLensSchema).parquet(s"$baseRoot/lens"), lensSchema,
         lensTree(work).readSet())
       Versioned.live(restrict(allLens).where(col("ver") < id),
           Versioned.tombs(s, tombSchema, tombTree(work).readSet()), "doc_id")
@@ -683,7 +662,7 @@ object LexStreams {
         }
       val lensRows = keyed.collect { case (d, false, l) => (d, l) }
       if (lensRows.nonEmpty)
-        foldBatch(ups, id, work, Some(lensRows), ver = Some(id))
+        foldBatch(ups, id, work, Some(lensRows))
     } else {
       // DISTRIBUTED FALLBACK (r15 verdict ask #5): no driver collect —
       // the prior restriction is a semi-join against the batch keys and
@@ -693,7 +672,7 @@ object LexStreams {
         _.join(df.select("doc_id"), Seq("doc_id"), "left_semi"))
       if (!priorRel.isEmpty)
         priorRel.coalesce(1).write.mode("overwrite").parquet(tombDst)
-      if (!ups.isEmpty) foldBatch(ups, id, work, ver = Some(id))
+      if (!ups.isEmpty) foldBatch(ups, id, work)
     }
   }
 
@@ -706,9 +685,7 @@ object LexStreams {
       maxBytes: Long = StreamTune.BoundedLandingBytes): Unit =
     StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
       val root = foldBaseDir(d)
-      Drain.manifestedLanding(s, landing, work, Seq(
-          segTree(work).copy(schema = segVerSchema),
-          lensTree(work).copy(schema = lensVerSchema), tombTree(work)), maxBytes) {
+      Drain.manifestedLanding(s, landing, work, trees(work), maxBytes) {
         upsertFoldBatch(s, _, _, work, root, _)
       }
     }
@@ -731,12 +708,12 @@ object LexStreams {
     val post = Versioned.live(Versioned.rows(s,
         s.read.schema(basePostSchema).parquet(s"$root/postings")
           .select("term", "doc_id", "tf", "dl"),
-        segVerSchema, segTree(work).readSet()), tombs, "doc_id")
+        segSchema, segTree(work).readSet()), tombs, "doc_id")
       .select("term", "doc_id", "tf", "dl")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val lens = Versioned.live(Versioned.rows(s,
-          s.read.schema(lensSchema).parquet(s"$root/lens"), lensVerSchema,
+          s.read.schema(baseLensSchema).parquet(s"$root/lens"), lensSchema,
           lensTree(work).readSet()), tombs, "doc_id")
         .select("doc_id", "dl")
       lens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
@@ -792,8 +769,7 @@ object LexStreams {
     * document (spec-pinned: merged-base probe ≡ the live probe). */
   def e35uLexUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e35u", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e35u", dir)
     upsertDrain(s, dir, work, upsertLanding(s, dir))
     probe(s, dir, work)
   }

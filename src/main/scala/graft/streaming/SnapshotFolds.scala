@@ -54,10 +54,7 @@ object SnapshotFolds {
     * deterministic time-range buckets. */
   def e72SnapshotRead(s: SparkSession, dir: String): DataFrame = {
     graft.ops.EventOps.e63Ensure(s, dir)
-    val work = graft.util.PathKeys.fixturePath("stream-e72", dir, "-4")
-    // fresh fold per invocation (the e6s stance): a leftover checkpoint
-    // would resume a finished stream and fold nothing
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e72", dir)
     StreamTune.withDrainWidthFrom(s,
       Paths.get(dir, "events.parquet")) { e72Drain(s, dir, work) }
     val state = s.read.parquet(graft.ops.EventOps.e63StateDir(dir))

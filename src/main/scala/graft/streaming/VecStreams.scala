@@ -55,26 +55,28 @@ object VecStreams {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** Row schemas of the fold trees: cell folds (`ver` only where the
-    * upsert lifecycle stamps it) and tombstones — every read of a fold
-    * tree uses these, never footer inference. */
-  private[graft] val foldSchema: StructType = StructType(Seq(
+  /** Row schemas of the fold trees: cell folds, every row stamped with
+    * its batch id as `ver` ([[Versioned]]), and tombstones — every read
+    * of a fold tree uses these, never footer inference. */
+  private val foldSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType), StructField("label", IntegerType),
     StructField("embedding", ArrayType(FloatType)),
-    StructField("cell", IntegerType)))
-  private val foldVerSchema: StructType =
-    StructType(foldSchema.fields :+ StructField("ver", LongType))
+    StructField("cell", IntegerType), StructField("ver", LongType)))
   private val tombSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType), StructField("upto", LongType)))
 
   /** The vector index's fold trees under a drain's work dir: cell folds
-    * (ver-less for the append lifecycle, ver-stamped by the upsert
-    * lifecycle ([[upsertVecDrain]]); the probe reads both with
-    * [[foldVerSchema]]) and tombstones. */
+    * and tombstones. */
   private[graft] def foldTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("folds"), foldSchema)
   private[graft] def tombTree(work: java.nio.file.Path): FoldTree =
     FoldTree(work.resolve("tombs"), tombSchema)
+
+  /** The trees both drains manifest; the append drain's tombstone tree
+    * stays empty and is stamped too, so a pinned probe resolves the
+    * trees of either lifecycle the same way. */
+  private def trees(work: java.nio.file.Path): Seq[FoldTree] =
+    Seq(foldTree(work), tombTree(work))
 
   private[graft] def foldBaseDir(d: String): String =
     PathKeys.fixtureDir("embeddings_ivf_fold", d)
@@ -95,26 +97,24 @@ object VecStreams {
     }
   }
 
-  /** Bucketed landing of the ARRIVING vectors: vec_id <
-    * [[ArrivalBound]] split into `nBuckets` contiguous-range files
-    * (the [[graft.util.Staged.landing]] protocol). */
-  private[graft] def arrivalLanding(s: SparkSession, dir: String,
-      nBuckets: Int): Drain.Landing = Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-vecs-bucketed", dir, s"-$nBuckets"),
-      Staged.sourceSig(embSrc(dir)), Staged.partNames("vecs", nBuckets)) {
-      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
-      (i: Int) => raw.where(
-        Staged.rangePart(col("vec_id"), 0L, ArrivalBound, i, nBuckets))
-    }, embSchema)
+  /** The three staged landings ([[Drain.indexLanding]]). The arrival
+    * landing: vec_id < [[ArrivalBound]] in 4 contiguous-range buckets. */
+  private[graft] def arrivalLanding(s: SparkSession, dir: String): Drain.Landing =
+    landing(s, "stream-vecs-bucketed", dir, "", "vecs", None)
+
+  private def landing(s: SparkSession, kind: String, dir: String, tag: String,
+      prefix: String, changes: Option[DataFrame => DataFrame]): Drain.Landing =
+    Drain.indexLanding(s, kind, dir, embSrc(dir), embSchema, "vec_id",
+      ArrivalBound, tag, prefix, changes)
 
   /** One micro-batch fold: assign the batch under the FROZEN trained
-    * centroids, write to its own overwrite dir — exposed so the
-    * restart spec can replay a duplicate id directly. */
+    * centroids, write to its own overwrite dir stamped `ver = id` —
+    * exposed so the restart spec can replay a duplicate id directly. */
   private[graft] def e2fFoldBatch(df: DataFrame, id: Long,
       cents: Seq[(Int, Seq[Double])], work: java.nio.file.Path): Unit =
     df.select(col("vec_id"), col("label"), col("embedding"),
         SimOps.bestCentroid(col("embedding").cast("array<double>"), cents)
-          .getField("cid").as("cell"))
+          .getField("cid").as("cell"), lit(id).as("ver"))
       .write.mode("overwrite")
       .parquet(foldTree(work).batch(id).toString)
 
@@ -124,15 +124,12 @@ object VecStreams {
     * the e72 discipline on the VECTOR folds): "probe the index as of
     * batch k" stays answerable after compaction for the retention
     * window, which is the reproducibility a training run needs when its
-    * eval set was retrieved at a pinned index version. The tombstone
-    * tree, empty here, is stamped too, so a pinned probe resolves the
-    * trees of either lifecycle the same way. */
+    * eval set was retrieved at a pinned index version. */
   private[graft] def e2fDrain(s: SparkSession, d: String,
       work: java.nio.file.Path): Unit =
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-      Drain.manifested(s, arrivalLanding(s, d, nBuckets = 4).stream(s), work,
-          Seq(foldTree(work), tombTree(work))) {
+      Drain.manifested(s, arrivalLanding(s, d).stream(s), work, trees(work)) {
         e2fFoldBatch(_, _, cents, work)
       }
     }
@@ -214,7 +211,7 @@ object VecStreams {
       cells: Seq[Int]): DataFrame = {
     val all = Versioned.rows(s,
       IvfServe.listsAt(s, root).select("vec_id", "embedding", "cell"),
-      foldVerSchema, foldDirs, _.where(col("cell").isin(cells.map(Int.box): _*)))
+      foldSchema, foldDirs, _.where(col("cell").isin(cells.map(Int.box): _*)))
     Versioned.live(all, Versioned.tombs(s, tombSchema, tombDirs), "vec_id")
       .select(col("vec_id").as("cand_id"), col("cell"),
         col("embedding").cast("array<double>").as("v"))
@@ -236,8 +233,7 @@ object VecStreams {
     * replay with the base/arrival split (see ivfServeOracleSql). */
   def e2fIvfFoldStream(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2f", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2f", dir)
     e2fDrain(s, dir, work)
     probe(s, dir, work)
   }
@@ -279,8 +275,7 @@ object VecStreams {
     * the gate is paying it on MEASURED drift instead of on a timer. */
   def e2gDriftGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2g", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2g", dir)
     e2fDrain(s, dir, work)
     maybeRestage(s, dir, work) // the lifecycle contract; no-op unless tripped
     driftReport(s, dir, work)
@@ -355,8 +350,7 @@ object VecStreams {
     * the retention window, never history. */
   def e2zFoldSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2z", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2z", dir)
     e2fDrain(s, dir, work)
     SimOps.topK(candidatesAtSnapshot(s, dir, work, DeclaredVecSnap), 3)
       .withColumn("snapshot_id", lit(DeclaredVecSnap))
@@ -388,21 +382,14 @@ object VecStreams {
 
   /** CDC landing: the 4 arrival buckets plus 2 DELETE buckets (key
     * present, embedding NULL — the CDC delete record), landing as
-    * batches 4 and 5 so a snapshot can pin between them
-    * ([[Drain.cdcPart]]) and drained through the upsert verb
-    * ([[upsertVecDrain]]). */
+    * batches 4 and 5 so a snapshot can pin between them, and drained
+    * through the upsert verb ([[upsertVecDrain]]). */
   private[graft] def cdcLanding(s: SparkSession, dir: String): Drain.Landing =
-    Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-vecs-cdc", dir, "-4"),
-      Staged.sourceSig(embSrc(dir), "c1:"),
-      Staged.partNames("cdc", Drain.CdcParts)) {
-      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
-      val dels = raw.where(vecTombPred(col("vec_id")))
+    landing(s, "stream-vecs-cdc", dir, "c1:", "cdc", Some(raw =>
+      raw.where(vecTombPred(col("vec_id")))
         .select(col("vec_id"),
           lit(null).cast("array<float>").as("embedding"),
-          lit(null).cast("int").as("label"))
-      Drain.cdcPart(raw, dels, "vec_id", ArrivalBound)
-    }, embSchema)
+          lit(null).cast("int").as("label"))))
 
   /** E2d: TOMBSTONE DELETES in the vector-index lifecycle (r15 verdict
     * ask #1, vector half). The CDC drain replays the 4 arrival batches
@@ -427,8 +414,7 @@ object VecStreams {
     * restage the lifecycle was already paying. */
   def e2dVecTombstone(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2d", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2d", dir)
     upsertVecDrain(s, dir, work, cdcLanding(s, dir))
     probe(s, dir, work)
   }
@@ -456,14 +442,9 @@ object VecStreams {
     * UPDATE buckets re-arriving the declared set with the NEW payload,
     * landing as batches 4 and 5 so a snapshot can pin between them. */
   private[graft] def upsertLanding(s: SparkSession, dir: String): Drain.Landing =
-    Drain.Landing(Staged.landing(
-      PathKeys.fixturePath("stream-vecs-upsert", dir, "-4"),
-      Staged.sourceSig(embSrc(dir), "u1:"),
-      Staged.partNames("upd", Drain.CdcParts)) {
-      val raw = s.read.schema(embSchema).parquet(embSrc(dir).toString)
-      Drain.cdcPart(raw, raw.where(vecUpdPred(col("vec_id")))
-        .withColumn("embedding", updatedVec(col("embedding"))), "vec_id", ArrivalBound)
-    }, embSchema)
+    landing(s, "stream-vecs-upsert", dir, "u1:", "upd", Some(raw =>
+      raw.where(vecUpdPred(col("vec_id")))
+        .withColumn("embedding", updatedVec(col("embedding")))))
 
   /** One UPSERT micro-batch fold — updateDocument on the ANN index, and
     * its ONE mutation verb (a CDC delete record, `embedding` NULL, is an
@@ -472,8 +453,8 @@ object VecStreams {
     * terms without checking existence; a first-time arrival's
     * tombstone kills nothing — the anti-join `ver < upto` only ever
     * retires rows that exist), and the new versions — the rows with an
-    * embedding — assign under the FROZEN quantizer, stamped
-    * `ver = batch` (base lists read as ver −1). The text index's verb
+    * embedding — fold through [[e2fFoldBatch]] (assigned under the
+    * FROZEN quantizer, stamped `ver = batch`). The text index's verb
     * ([[LexStreams.upsertFoldBatch]]) looks up each key's live prior to
     * roll back its dl; this one needs no lookup: an ANN tombstone
     * carries no per-doc statistics (BM25's dl has no analogue), so a
@@ -483,12 +464,7 @@ object VecStreams {
     df.select(col("vec_id"), lit(id).as("upto"))
       .write.mode("overwrite")
       .parquet(tombTree(work).batch(id).toString)
-    df.where(col("embedding").isNotNull)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        SimOps.bestCentroid(col("embedding").cast("array<double>"), cents)
-          .getField("cid").as("cell"), lit(id).as("ver"))
-      .write.mode("overwrite")
-      .parquet(foldTree(work).batch(id).toString)
+    e2fFoldBatch(df.where(col("embedding").isNotNull), id, cents, work)
   }
 
   /** The manifested drain of a CDC landing through
@@ -498,8 +474,7 @@ object VecStreams {
       work: java.nio.file.Path, landing: Drain.Landing): Unit =
     StreamTune.withDrainWidthFrom(s, embSrc(d)) {
       val cents = IvfServe.centroidsAt(s, foldBaseDir(d))
-      Drain.manifested(s, landing.stream(s), work,
-          Seq(foldTree(work).copy(schema = foldVerSchema), tombTree(work))) {
+      Drain.manifested(s, landing.stream(s), work, trees(work)) {
         upsertVecFoldBatch(_, _, cents, work)
       }
     }
@@ -516,7 +491,7 @@ object VecStreams {
       work: java.nio.file.Path): java.nio.file.Path = {
     val all = Versioned.rows(s,
       IvfServe.listsAt(s, foldBaseDir(d)).select("vec_id", "label", "embedding"),
-      foldVerSchema, foldTree(work).readSet())
+      foldSchema, foldTree(work).readSet())
     val live = Versioned.live(all,
         Versioned.tombs(s, tombSchema, tombTree(work).readSet()), "vec_id")
       .select(col("vec_id"), col("label"), col("embedding"),
@@ -554,8 +529,7 @@ object VecStreams {
     * already paying ([[restageFromIndex]], spec-pinned). */
   def e2uVecUpsert(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2u", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2u", dir)
     upsertVecDrain(s, dir, work, upsertLanding(s, dir))
     probe(s, dir, work)
   }
@@ -583,8 +557,7 @@ object VecStreams {
     * overhead (listing + cell filter per dir) at O(TierFanout). */
   def e2tmVecTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
-    val work = PathKeys.fixturePath("stream-e2tm", dir, "-4")
-    DocStreams.deleteTree(work)
+    val work = Drain.freshWork("stream-e2tm", dir)
     e2fDrain(s, dir, work)
     foldTree(work).tierMerge(s)
     probe(s, dir, work)

@@ -5,25 +5,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The version protocol the text and vector index lifecycles read by.
-  * An index row carries `ver`: the base reads as −1, a fold as its
-  * batch id, and a fold written without one (the append drains) as 0 —
-  * older than any batch-stamped tombstone, newer only than the base. A
-  * tombstone `(key, upto)` retires the versions of its key older than
-  * `upto` (the version shipped with the tombstone's own batch
-  * survives); one written without `upto` retires them all. So ONE read
-  * serves every tree either lifecycle writes, and over a tombstone-free
-  * read set it plans exactly the append read. */
+  * An index row carries `ver`: the base reads as −1, a fold row as the
+  * id of the batch that wrote it — every drain stamps it, so each fold
+  * tree has one schema. A tombstone `(key, upto)` retires the versions
+  * of its key older than `upto` (the version shipped with the
+  * tombstone's own batch survives); one written without `upto` retires
+  * them all. So ONE read serves every tree either lifecycle writes, and
+  * over a tombstone-free read set it plans exactly the append read. */
 private[graft] object Versioned {
 
-  /** `base` at ver −1 ∪ the fold `dirs` read with `verSchema`, each side
-    * narrowed by `narrow` and projected to `base`'s columns plus `ver`. */
-  def rows(s: SparkSession, base: DataFrame, verSchema: StructType,
+  /** `base` at ver −1 ∪ the fold `dirs` read with their tree's
+    * `schema` ([[FoldTree.read]]), each side narrowed by `narrow` and
+    * projected to `base`'s columns plus `ver`. */
+  def rows(s: SparkSession, base: DataFrame, schema: StructType,
       dirs: Seq[String], narrow: DataFrame => DataFrame = identity): DataFrame = {
     val cols = (base.columns :+ "ver").map(col)
     val b = narrow(base).withColumn("ver", lit(-1L)).select(cols: _*)
     if (dirs.isEmpty) b
-    else b.unionByName(narrow(s.read.schema(verSchema).parquet(dirs: _*)
-      .withColumn("ver", coalesce(col("ver"), lit(0L)))).select(cols: _*))
+    else b.unionByName(narrow(FoldTree.read(s, schema, dirs)).select(cols: _*))
   }
 
   /** The tombstones in `dirs`, deduplicated; `None` for no dirs — the

@@ -419,4 +419,22 @@ class E2fStreamSpec extends AnyFunSuite {
       graft.streaming.DocStreams.deleteTree(ref)
     }
   }
+
+  test("e2u: a tier merge through the tree accessors keeps the upsert answer") {
+    // The merge rewrites the folds with the accessors' schema; one
+    // without `ver` drops every version, and the tombstones then retire
+    // the wrong rows (or none).
+    VecStreams.ensureFoldBase(spark, sf)
+    val work = freshWork()
+    try {
+      VecStreams.upsertVecDrain(spark, sf, work, VecStreams.upsertLanding(spark, sf))
+      def probed() = VecStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
+      val before = probed()
+      val trees = Seq(VecStreams.foldTree(work), VecStreams.tombTree(work))
+      assert(trees.forall(_.readSet().size > FoldTree.TierFanout))
+      trees.foreach(_.tierMerge(spark))
+      assert(trees.forall(_.readSet().size == 1), "every tree must have merged")
+      assert(probed() == before, "a tier merge must never change the answer")
+    } finally graft.streaming.DocStreams.deleteTree(work)
+  }
 }

@@ -625,4 +625,23 @@ class LexStreamSpec extends AnyFunSuite {
       graft.streaming.DocStreams.deleteTree(truth)
     }
   }
+
+  test("e35u: a tier merge through the tree accessors keeps the upsert answer") {
+    // The merge rewrites the folds with the accessors' schema; one
+    // without `ver` drops every version, and the tombstones then retire
+    // the wrong rows (or none).
+    LexStreams.ensureFoldBase(spark, sf)
+    val work = freshWork()
+    try {
+      LexStreams.upsertDrain(spark, sf, work, LexStreams.upsertLanding(spark, sf))
+      def probed() = LexStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
+      val before = probed()
+      val trees = Seq(LexStreams.segTree(work), LexStreams.lensTree(work),
+        LexStreams.tombTree(work))
+      assert(trees.forall(_.readSet().size > FoldTree.TierFanout))
+      trees.foreach(_.tierMerge(spark))
+      assert(trees.forall(_.readSet().size == 1), "every tree must have merged")
+      assert(probed() == before, "a tier merge must never change the answer")
+    } finally graft.streaming.DocStreams.deleteTree(work)
+  }
 }

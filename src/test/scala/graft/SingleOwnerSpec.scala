@@ -23,6 +23,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the fold-tree dir names (`"compact=`, `compact=$`, `batch=$`) and
   *    the atomic rename (`ATOMIC_MOVE`) belong to the fold-tree owner,
   *    `streaming/FoldTree.scala`;
+  *  - the `"-4")` suffix of the drain work dirs and index landings
+  *    belongs to the drain owner, `streaming/Drain.scala`;
   *  - the ORD golden location (`"/root/reference`) belongs to
   *    `util/PathKeys.scala` — in `src/test/scala` too.
   *
@@ -59,6 +61,7 @@ class SingleOwnerSpec extends AnyFunSuite {
     ("compact=$", "graft/streaming/FoldTree.scala", false),
     ("batch=$", "graft/streaming/FoldTree.scala", false),
     ("ATOMIC_MOVE", "graft/streaming/FoldTree.scala", false),
+    ("\"-4\")", "graft/streaming/Drain.scala", false),
     ("\"/root/reference", "graft/util/PathKeys.scala", true)
   ).foreach { case (token, owner, withTests) =>
     test(s"`$token` appears only in $owner") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
@@ -8,7 +12,7 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{LexStreams, VecStreams}
+import graft.streaming.{FoldTree, LexStreams, VecStreams}
 
 /** A probe over a tombstone-free read set plans like a probe that never
   * had tombstones: no left-anti join, and no broadcast over a local
@@ -54,5 +58,27 @@ class TombstoneFreePlanSpec extends AnyFunSuite {
     assertTombstoneFree(VecStreams.e2zFoldSnapshot(spark, sf), "e2z")
     assert(antiJoins(VecStreams.e2uVecUpsert(spark, sf)).nonEmpty,
       "e2u's read set has tombstones")
+  }
+
+  test("every fold dir of the declared runs has exactly its tree's schema") {
+    // footer inference over each batch/compact dir, spared dirs included:
+    // one format per tree, whichever lifecycle wrote it
+    def assertOneFormat(tree: FoldTree): Unit = {
+      val dirs = scala.util.Using.resource(Files.list(tree.root))(
+        _.iterator().asScala.toList.filterNot(_.getFileName.toString.startsWith("_")))
+      assert(dirs.nonEmpty, s"no fold dirs under ${tree.root}")
+      dirs.foreach(d => assert(spark.read.parquet(d.toString).schema == tree.schema,
+        s"$d does not carry its tree's schema"))
+    }
+    def work(key: String) = graft.util.PathKeys.fixturePath(s"stream-$key", sf, "-4")
+    LexStreams.e35fPostingsFold(spark, sf)
+    LexStreams.e35uLexUpsert(spark, sf)
+    Seq("e35f", "e35u").map(work).foreach { w =>
+      assertOneFormat(LexStreams.segTree(w))
+      assertOneFormat(LexStreams.lensTree(w))
+    }
+    VecStreams.e2fIvfFoldStream(spark, sf)
+    VecStreams.e2uVecUpsert(spark, sf)
+    Seq("e2f", "e2u").map(work).foreach(w => assertOneFormat(VecStreams.foldTree(w)))
   }
 }
