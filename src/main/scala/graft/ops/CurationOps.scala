@@ -1704,14 +1704,14 @@ object CurationOps {
           // bytes being stored anyway) cross the sizing exchange.
           val affectedParts = math.max(1L, math.min(
             s.sparkContext.defaultParallelism.toLong, nOcc / 50000L)).toInt
-          s.sparkContext.setJobDescription(s"e48c merge $k: affected fragment")
-          val affected = liveCorpus.where(col("str").contains(pat))
-            .select(col("doc_id"), col("str").as("strOld"),
-              org.apache.spark.sql.functions.replace(col("str"),
-                lit(pat), lit(rep)).as("str"))
-            .repartition(affectedParts)
-            .localCheckpoint(true)
-          s.sparkContext.setJobDescription(null)
+          val affected = graft.util.Jobs.labeled(s, s"e48c merge $k: affected fragment") {
+            liveCorpus.where(col("str").contains(pat))
+              .select(col("doc_id"), col("str").as("strOld"),
+                org.apache.spark.sql.functions.replace(col("str"),
+                  lit(pat), lit(rep)).as("str"))
+              .repartition(affectedParts)
+              .localCheckpoint(true)
+          }
           fragments.indices.foreach(i => laterPats(i) += pat)
           fragments += affected
           laterPats += scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1728,12 +1728,12 @@ object CurationOps {
             .select(explode(concat(
               sp(col("wOld"), -1L), sp(col("wNew"), 1L))).as("q"))
             .select(col("q.a").as("a"), col("q.b").as("b"), col("q.n").as("n"))
-          s.sparkContext.setJobDescription(s"e48c merge $k: pair-state fold")
-          val pNext = p.unionByName(signedDelta)
-            .groupBy("a", "b").agg(sum("n").as("n"))
-            .where(col("n") =!= 0)
-            .localCheckpoint(true)
-          s.sparkContext.setJobDescription(null)
+          val pNext = graft.util.Jobs.labeled(s, s"e48c merge $k: pair-state fold") {
+            p.unionByName(signedDelta)
+              .groupBy("a", "b").agg(sum("n").as("n"))
+              .where(col("n") =!= 0)
+              .localCheckpoint(true)
+          }
           retired += p
           p = pNext
         }

@@ -267,7 +267,7 @@ object RetrievalOps {
     VecStreams.ensureFoldBase(s, d)
     val lexWork = graft.streaming.Drain.freshWork("stream-e71v-lex", d)
     val vecWork = graft.streaming.Drain.freshWork("stream-e71v-vec", d)
-    LexStreams.drain(s, d, lexWork)
+    LexStreams.upsertDrain(s, d, lexWork, LexStreams.arrivalLanding(s, d))
     VecStreams.e2fDrain(s, d, vecWork)
     fuseAtDirs(s, d, LexStreams.segTree(lexWork).pinned(DeclaredHybridSnap),
       LexStreams.lensTree(lexWork).pinned(DeclaredHybridSnap),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
-import graft.util.{PathKeys, Staged}
+import graft.util.{Jobs, PathKeys, Staged}
 
 /** The ONE micro-batch drain lifecycle every drained stream runs:
   * start → drain everything available → record busy time → stop.
@@ -51,7 +51,9 @@ object Drain {
       trees: Seq[FoldTree], merge: DataFrame => DataFrame = identity)(
       fold: (DataFrame, Long) => Unit): Unit = {
     foreachBatch(stream, work) { (df, id) =>
-      trees.foreach(_.compactIfDue(s, id, merge))
+      Jobs.labeled(s, s"batch $id: compaction") {
+        trees.foreach(_.compactIfDue(s, id, merge))
+      }
       fold(df, id)
       trees.foreach(_.stamp(id))
     }
@@ -106,8 +108,8 @@ object Drain {
       src: Path, schema: StructType, key: String, bound: Long, tag: String,
       prefix: String, changes: Option[DataFrame => DataFrame] = None): Landing = {
     val parts = ArrivalParts + (if (changes.isEmpty) 0 else 2)
-    Landing(Staged.landing(fixture(kind, dir), Staged.sourceSig(src, tag),
-        Staged.partNames(prefix, parts)) {
+    Landing(Jobs.labeled(s, "landing staging")(Staged.landing(fixture(kind, dir),
+        Staged.sourceSig(src, tag), Staged.partNames(prefix, parts)) {
       val raw = s.read.schema(schema).parquet(src.toString)
       val arrivals = (0 until ArrivalParts).map(i =>
         raw.where(Staged.rangePart(col(key), 0L, bound, i, ArrivalParts)))
@@ -116,6 +118,6 @@ object Drain {
         Seq(c.where(col(key) < 24), c.where(col(key) >= 24))
       }
       arrivals ++ changed
-    }, schema)
+    }), schema)
   }
 }

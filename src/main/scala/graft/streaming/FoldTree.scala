@@ -6,8 +6,17 @@ import java.nio.file.StandardCopyOption.ATOMIC_MOVE
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.statistics.LongStatistics
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 
 import graft.util.Staged.deleteTree
 
@@ -42,7 +51,9 @@ import graft.util.Staged.deleteTree
   *    bounds the spared storage at O(Retain) dirs, never O(history).
   *
   * Every read of the tree carries its statically known row `schema`
-  * (the writers'), never footer inference.
+  * (the writers'), never footer inference. A batch whose rows are
+  * already on the driver writes its dir through [[writeBatch]] — one
+  * parquet file, no Spark job — under the same overwrite contract.
   *
   * 100 TB path: the compact dir is an index table (bucketed by the
   * tree's key) behind a metadata commit; a manifest is O(live dirs)
@@ -72,6 +83,21 @@ final case class FoldTree(root: Path, schema: StructType) {
     (if (c < 0) Nil else Seq(root.resolve(s"compact=$c").toString)) ++
       dirs.filter(idOf(_, Batch).exists(b => b > c && b < before))
         .map(_.toString).sorted
+  }
+
+  /** Write driver `rows` (fields in the tree schema's order) as batch
+    * `id`'s dir: one parquet file written on the driver through
+    * parquet-hadoop — no Spark job — into `_tmp-batch=<id>`, then
+    * renamed into place, so a reader never sees a partial dir and a
+    * replayed id replaces its dir. A leftover tmp dir is neither a
+    * batch nor a compact dir, so no read set or manifest names it. */
+  def writeBatch(s: SparkSession, id: Long, rows: Seq[Row]): Unit = {
+    val tmp = root.resolve(s"_tmp-batch=$id")
+    deleteTree(tmp)
+    writeParquet(s, schema, tmp.resolve("part-00000.snappy.parquet"), rows)
+    val dst = batch(id)
+    deleteTree(dst)
+    Files.move(tmp, dst, ATOMIC_MOVE)
   }
 
   /** `dirs` of this tree as one relation, read with the tree's schema;
@@ -199,6 +225,66 @@ object FoldTree {
   def read(s: SparkSession, schema: StructType, dirs: Seq[String]): DataFrame =
     if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else s.read.schema(schema).parquet(dirs: _*)
+
+  /** The `[min, max]` of the long column `key` over the parquet files of
+    * `dir`, from their footer statistics — no Spark job. `None` means
+    * unknown: a missing dir, or a row group without statistics for
+    * `key`. A dir without rows has the empty range (min > max). */
+  def keyRange(s: SparkSession, dir: String, key: String): Option[(Long, Long)] = {
+    val d = Paths.get(dir)
+    if (!Files.isDirectory(d)) return None
+    val files = scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toList)
+      .filter { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }
+    val conf = s.sessionState.newHadoopConf()
+    val groups = files.iterator.flatMap { f =>
+      scala.util.Using.resource(ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(f.toUri), conf)))(_.getRowGroups.asScala.toList)
+    }
+    groups.foldLeft(Option((Long.MaxValue, Long.MinValue))) { (acc, g) =>
+      acc.flatMap { case (lo, hi) =>
+        g.getColumns.asScala.find(_.getPath.toDotString == key).map(_.getStatistics) match {
+          case Some(st: LongStatistics) if st.hasNonNullValue =>
+            Some((math.min(lo, st.getMin), math.max(hi, st.getMax)))
+          case _ if g.getRowCount == 0 => acc
+          case _ => None
+        }
+      }
+    }
+  }
+
+  /** `rows` as one snappy parquet file at `file`, written on the driver;
+    * every field optional, as Spark writes them. Long, int and string
+    * columns — the fold trees' types. */
+  private def writeParquet(s: SparkSession, schema: StructType, file: Path,
+      rows: Seq[Row]): Unit = {
+    val msg = new MessageType("spark_schema", schema.fields.toList.map[Type] { f =>
+      f.dataType match {
+        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
+        case IntegerType => Types.optional(PrimitiveTypeName.INT32).named(f.name)
+        case StringType => Types.optional(PrimitiveTypeName.BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case t => throw new IllegalArgumentException(s"no driver write for $t (${f.name})")
+      }
+    }.asJava)
+    val conf = s.sessionState.newHadoopConf()
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new HPath(file.toUri), conf))
+      .withType(msg).withConf(conf).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(msg)
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+        schema(i).dataType match {
+          case LongType => g.append(schema(i).name, r.getLong(i))
+          case IntegerType => g.append(schema(i).name, r.getInt(i))
+          case _ => g.append(schema(i).name, r.getString(i))
+        }
+      }
+      w.write(g)
+    } finally w.close()
+  }
 
   private val Batch = "batch="
   private val Compact = "compact="

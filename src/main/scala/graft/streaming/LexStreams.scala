@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.LexIndex
-import graft.util.{PathKeys, Staged}
+import graft.util.{Jobs, PathKeys, Staged}
 
 /** INCREMENTAL MAINTENANCE of the inverted text index — the Lucene
   * SEGMENT model, unasked sibling of e2f/e6s: [[LexIndex]] made BM25 a
@@ -42,8 +42,10 @@ import graft.util.{PathKeys, Staged}
   * doubled, or stale-df-scored arrival is a hash miss.
   *
   * 100 TB path: per-batch work is one map-side tokenize of the batch's
-  * own rows + two bounded appends (no corpus pass, no shuffle of
-  * anything corpus-sized); the probe adds O(segments since compaction)
+  * own rows + two appends (no corpus pass, no shuffle of anything
+  * corpus-sized) — written from the driver while the landing fits
+  * [[StreamTune.BoundedLandingBytes]], by distributed jobs above it
+  * ([[upsertFoldBatch]]); the probe adds O(segments since compaction)
   * small reads to e35s's pruned scan, and the df/stats merge touches
   * ≤ |query terms| + |segments| rows. A real deployment periodically
   * folds segments into the base (the compaction already modeled) —
@@ -106,10 +108,10 @@ object LexStreams {
     // lf3: +per-doc lens dim (tombstone dl resolution, e35d)
     Staged.ensure(java.nio.file.Paths.get(root), Staged.sourceSig(docsSrc(d),
         s"lf3:nb=${LexIndex.NBuckets}:b=$ArrivalDocBound:")) {
-      buildBaseLayout(s, root,
+      Jobs.labeled(s, "fold-base staging")(buildBaseLayout(s, root,
         graft.Tables.spreadIfNarrow(graft.Tables.documents(s, d),
             col("doc_id"))
-          .where(col("doc_id") >= ArrivalDocBound))
+          .where(col("doc_id") >= ArrivalDocBound)))
     }
   }
 
@@ -203,52 +205,23 @@ object LexStreams {
   private def trees(work: java.nio.file.Path): Seq[FoldTree] =
     Seq(segTree(work), lensTree(work), tombTree(work))
 
-  /** Write a lens fold from driver rows stamped `ver = id` — the
-    * bounded-batch fast path (the rows came off the batch's one bounded
-    * collect, so no second scan+tokenize job runs). */
-  private def writeLensLocal(s: SparkSession, rows: Seq[(Long, Int)],
-      id: Long, dst: java.nio.file.Path): Unit = {
-    val data = rows.map { case (d, l) => org.apache.spark.sql.Row(d, l, id) }
-    s.createDataFrame(java.util.Arrays.asList(data: _*), lensSchema)
-      .coalesce(1).write.mode("overwrite").parquet(dst.toString)
-  }
-
-  /** Label a job group for the UI/profiler (guide §1.5) around `body`. */
-  private def labeled[T](s: SparkSession, desc: String)(body: => T): T = {
-    s.sparkContext.setJobDescription(desc)
-    try body finally s.sparkContext.setJobDescription(null)
-  }
-
-  /** One micro-batch fold: tokenize the BATCH's rows map-side, append
-    * its postings segment and its doc-length fold (both overwrite-keyed
-    * by batch id — replay-idempotent), every row stamped `ver = id`.
-    * Exposed for the replay spec.
-    *
-    * When the caller already holds the batch's (doc_id, dl) rows from
-    * its one bounded collect (`lensRows`), the lens fold is written
-    * from those driver rows instead of a second scan+tokenize+write
-    * job — the r16 trigger-job fusion (verdict ask #1); the postings
-    * write is then the trigger's only distributed scan. */
+  /** One distributed micro-batch fold: tokenize the BATCH's rows
+    * map-side, append its postings segment and its doc-length fold (both
+    * overwrite-keyed by batch id — replay-idempotent), every row stamped
+    * `ver = id`. The upsert verb's fallback for batches over the
+    * bounded-landing guard; exposed for the replay specs. */
   private[graft] def foldBatch(df: DataFrame, id: Long,
-      work: java.nio.file.Path,
-      lensRows: Option[Seq[(Long, Int)]] = None): Unit = {
+      work: java.nio.file.Path): Unit = {
     val s = df.sparkSession
     val toks = graft.ops.SimOps.tokensArr
     val withLen = df.select(col("doc_id"), toks.as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("dl"))
-    lensRows match {
-      case Some(rows) =>
-        labeled(s, s"lexfold $id: lens fold (driver rows)") {
-          writeLensLocal(s, rows, id, lensTree(work).batch(id))
-        }
-      case None =>
-        labeled(s, s"lexfold $id: lens fold") {
-          withLen.select(col("doc_id"), col("dl"), lit(id).as("ver"))
-            .write.mode("overwrite")
-            .parquet(lensTree(work).batch(id).toString)
-        }
+    Jobs.labeled(s, s"lexfold $id: lens fold") {
+      withLen.select(col("doc_id"), col("dl"), lit(id).as("ver"))
+        .write.mode("overwrite")
+        .parquet(lensTree(work).batch(id).toString)
     }
-    labeled(s, s"lexfold $id: postings segment") {
+    Jobs.labeled(s, s"lexfold $id: postings segment") {
       withLen.select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
         .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
         .select(col("term"), col("doc_id"), col("tf"), col("dl"), lit(id).as("ver"))
@@ -256,17 +229,6 @@ object LexStreams {
         .parquet(segTree(work).batch(id).toString)
     }
   }
-
-  /** The arrival drain. Manifests on all three fold trees (the e2z/e72
-    * discipline); the tombstone tree, empty here, is stamped too, so a
-    * pinned probe resolves the trees of either lifecycle the same way. */
-  private[graft] def drain(s: SparkSession, d: String,
-      work: java.nio.file.Path): Unit =
-    StreamTune.withDrainWidthFrom(s, docsSrc(d)) {
-      Drain.manifested(s, arrivalLanding(s, d).stream(s), work, trees(work)) {
-        foldBatch(_, _, work)
-      }
-    }
 
   /** The probe over the current read set of all three fold trees — every
     * lifecycle's live probe (e35f/t appends, e35u updates, e35d deletes).
@@ -372,7 +334,7 @@ object LexStreams {
   def e35fPostingsFold(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
     val work = Drain.freshWork("stream-e35f", dir)
-    drain(s, dir, work)
+    upsertDrain(s, dir, work, arrivalLanding(s, dir))
     probe(s, dir, work)
   }
 
@@ -404,7 +366,7 @@ object LexStreams {
   def e35gMergeGate(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
     val work = Drain.freshWork("stream-e35g", dir)
-    drain(s, dir, work)
+    upsertDrain(s, dir, work, arrivalLanding(s, dir))
     maybeMerge(s, dir, work) // lifecycle contract; no-op unless tripped
     mergeReport(s, dir, work)
   }
@@ -477,7 +439,7 @@ object LexStreams {
   def e35zLexSnapshot(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
     val work = Drain.freshWork("stream-e35z", dir)
-    drain(s, dir, work)
+    upsertDrain(s, dir, work, arrivalLanding(s, dir))
     probeAtSnapshot(s, dir, work, DeclaredLexSnap)
       .withColumn("snapshot_id", lit(DeclaredLexSnap))
   }
@@ -507,7 +469,7 @@ object LexStreams {
   def e35tTierMerge(s: SparkSession, dir: String): DataFrame = {
     ensureFoldBase(s, dir)
     val work = Drain.freshWork("stream-e35t", dir)
-    drain(s, dir, work)
+    upsertDrain(s, dir, work, arrivalLanding(s, dir))
     segTree(work).tierMerge(s)
     lensTree(work).tierMerge(s)
     probe(s, dir, work)
@@ -549,16 +511,21 @@ object LexStreams {
     * stale base df, or failed to shrink n_docs/avgdl is a hash miss.
     *
     * 100 TB path: a tombstone fold is O(batch deletes) rows whose dl
-    * resolves via one pushed-In lookup at WRITE time; the probe adds
+    * resolves via one pushed-In lookup at WRITE time — skipped, with no
+    * job, when the lens footers' doc_id ranges rule every key out, and
+    * written from the driver under the bounded-landing guard (the
+    * batch's tokens cross the driver, bounded by
+    * [[StreamTune.BoundedLandingBytes]]); the probe adds
     * one broadcast anti-join against the bounded live-docs set and
     * re-counts df from posting rows it already reads; nothing rescans
     * the corpus until the merge the lifecycle was already paying. */
-  def e35dLexTombstone(s: SparkSession, dir: String): DataFrame = {
-    ensureFoldBase(s, dir)
-    val work = Drain.freshWork("stream-e35d", dir)
-    upsertDrain(s, dir, work, cdcLanding(s, dir))
-    probe(s, dir, work)
-  }
+  def e35dLexTombstone(s: SparkSession, dir: String): DataFrame =
+    Jobs.labeled(s, "e35d_lex_tombstone") {
+      ensureFoldBase(s, dir)
+      val work = Drain.freshWork("stream-e35d", dir)
+      upsertDrain(s, dir, work, cdcLanding(s, dir))
+      Jobs.labeled(s, "probe")(probe(s, dir, work))
+    }
 
   // ───────────────────────── upserts (e35u) ───────────────────────────
 
@@ -606,12 +573,21 @@ object LexStreams {
     * already on disk (a crashed earlier attempt). Replay idempotence is
     * spec-pinned.
     *
-    * Bounded batches (the landing-bytes guard) run: one (doc_id,
-    * delete?, dl) collect → pushed-In prior lookup → local tombstone
-    * write → local lens write → postings write — ONE distributed scan
-    * per trigger. Unbounded batches take the fully distributed
-    * fallback: no driver collect anywhere (semi-join prior restriction,
-    * isEmpty-guarded writes), row-identical by spec. */
+    * Bounded batches (the landing-bytes guard) run ONE Spark job per
+    * trigger plus the prior lookup when one can resolve: a collect of
+    * each row's (doc_id, delete?, tokens) — the text tokenized
+    * map-side by [[graft.ops.SimOps.tokensArr]], the only tokenizer;
+    * the tokens cross the driver, bounded with the landing by
+    * [[StreamTune.BoundedLandingBytes]] — from which the driver derives
+    * the lens, postings-segment and tombstone rows and writes each
+    * tree's dir itself ([[FoldTree.writeBatch]]). The pushed-In prior
+    * lookup runs only when some batch key falls inside the doc_id range
+    * a footer of the base lens dim or of a pre-batch lens dir records
+    * ([[FoldTree.keyRange]]; unknown forces it): exact, since a key
+    * outside every range has no lens row, so no prior — a first arrival
+    * costs the collect alone. Unbounded batches take the fully
+    * distributed fallback: no driver collect anywhere (semi-join prior
+    * restriction, isEmpty-guarded writes), row-identical by spec. */
   private[graft] def upsertFoldBatch(s: SparkSession, df: DataFrame, id: Long,
       work: java.nio.file.Path, baseRoot: String,
       bounded: Boolean = true): Unit = {
@@ -633,36 +609,39 @@ object LexStreams {
         .where(col("rn") === 1)
         .select(col("doc_id"), col("dl"), lit(id).as("upto"))
     }
-    val tombDst = tombTree(work).batch(id).toString
-    val ups = df.where(col("text").isNotNull)
     if (bounded) {
       // ONE bounded collect classifies the batch and carries each new
-      // version's dl (the map-side tokenize rides the collect); only
-      // (doc_id, delete?, dl) crosses the driver, never the text
-      val keyed = labeled(s, s"upsert $id: classify collect") {
+      // version's tokens (the map-side tokenize rides the collect): the
+      // batch's rows cross the driver once, as tokens, and every fold
+      // row derives from them there
+      val keyed = Jobs.labeled(s, s"upsert $id: classify collect") {
         df.select(col("doc_id"), col("text").isNull.as("del"),
-            when(col("text").isNull, lit(0))
-              .otherwise(size(graft.ops.SimOps.tokensArr)).as("dl"))
-          .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getInt(2))).toSeq
+            graft.ops.SimOps.tokensArr.as("w"))
+          .collect().map(r => (r.getLong(0),
+            if (r.getBoolean(1)) None else Some(r.getSeq[String](2)))).toSeq
       }
       if (keyed.isEmpty) return
       val ids = keyed.map(_._1).distinct.sorted
-      val priorRel = latestPriors(
-        _.where(col("doc_id").isin(ids.map(Long.box): _*)))
-      // ≤ |ids| rows by construction: collect once and write the
-      // local rows (r15 — the isEmpty-then-write form executed the
-      // bounded prior lookup twice per batch)
-      val priors = labeled(s, s"upsert $id: live-prior lookup") {
-        priorRel.collect()
-      }
-      if (priors.nonEmpty)
-        labeled(s, s"upsert $id: tombstone fold (driver rows)") {
-          s.createDataFrame(java.util.Arrays.asList(priors: _*), priorRel.schema)
-            .coalesce(1).write.mode("overwrite").parquet(tombDst)
+      val mayResolve = (s"$baseRoot/lens" +: lensTree(work).readSet(before = id))
+        .exists(FoldTree.keyRange(s, _, "doc_id")
+          .forall { case (lo, hi) => ids.exists(k => lo <= k && k <= hi) })
+      if (mayResolve) {
+        // ≤ |ids| rows by construction: collect once, write on the driver
+        val priors = Jobs.labeled(s, s"upsert $id: live-prior lookup") {
+          latestPriors(_.where(col("doc_id").isin(ids.map(Long.box): _*))).collect()
         }
-      val lensRows = keyed.collect { case (d, false, l) => (d, l) }
-      if (lensRows.nonEmpty)
-        foldBatch(ups, id, work, Some(lensRows))
+        if (priors.nonEmpty) tombTree(work).writeBatch(s, id, priors)
+      }
+      val ups = keyed.collect { case (d, Some(w)) => (d, w) }
+      if (ups.nonEmpty) {
+        lensTree(work).writeBatch(s, id, ups.map { case (d, w) => Row(d, w.size, id) })
+        // tf per (term, doc_id, dl) — the distributed fold's grouping
+        val postings = ups.flatMap { case (d, w) => w.map((_, d, w.size)) }
+          .groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+          .sortBy { case ((term, d, _), _) => (term, d) }
+        segTree(work).writeBatch(s, id,
+          postings.map { case ((term, d, dl), tf) => Row(term, d, tf, dl, id) })
+      }
     } else {
       // DISTRIBUTED FALLBACK (r15 verdict ask #5): no driver collect —
       // the prior restriction is a semi-join against the batch keys and
@@ -670,8 +649,9 @@ object LexStreams {
       // paid only on batches too large to collect)
       val priorRel = latestPriors(
         _.join(df.select("doc_id"), Seq("doc_id"), "left_semi"))
-      if (!priorRel.isEmpty)
-        priorRel.coalesce(1).write.mode("overwrite").parquet(tombDst)
+      if (!priorRel.isEmpty) priorRel.coalesce(1).write.mode("overwrite")
+        .parquet(tombTree(work).batch(id).toString)
+      val ups = df.where(col("text").isNotNull)
       if (!ups.isEmpty) foldBatch(ups, id, work)
     }
   }
@@ -762,15 +742,22 @@ object LexStreams {
     * hash miss.
     *
     * 100 TB path: an upsert batch costs one bounded-In prior lookup
-    * (doc_id-range-sharded lens dim) + two bounded appends; the probe
+    * (doc_id-range-sharded lens dim; skipped when the lens footers'
+    * doc_id ranges hold no batch key) + two appends. Under the
+    * bounded-landing guard the trigger's one collect carries each
+    * row's tokens — the text, tokenized, crosses the driver, bounded
+    * with the landing by [[StreamTune.BoundedLandingBytes]] — and the
+    * driver writes every fold; a larger landing folds through
+    * distributed jobs with no driver collect. The probe
     * adds one broadcast anti-join over the bounded tombstone set;
     * storage for superseded versions is reclaimed at the merge —
     * which [[mergeIndexLive]] performs WITHOUT re-analyzing a single
     * document (spec-pinned: merged-base probe ≡ the live probe). */
-  def e35uLexUpsert(s: SparkSession, dir: String): DataFrame = {
-    ensureFoldBase(s, dir)
-    val work = Drain.freshWork("stream-e35u", dir)
-    upsertDrain(s, dir, work, upsertLanding(s, dir))
-    probe(s, dir, work)
-  }
+  def e35uLexUpsert(s: SparkSession, dir: String): DataFrame =
+    Jobs.labeled(s, "e35u_lex_upsert") {
+      ensureFoldBase(s, dir)
+      val work = Drain.freshWork("stream-e35u", dir)
+      upsertDrain(s, dir, work, upsertLanding(s, dir))
+      Jobs.labeled(s, "probe")(probe(s, dir, work))
+    }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.FoldTree
@@ -155,6 +156,101 @@ class FoldTreeSpec extends AnyFunSuite {
       val before = onDisk(t)
       t.tierMerge(spark)
       assert(onDisk(t) == before)
+    }
+  }
+
+  /** A tree of the text index's row shape: long, int and string columns. */
+  private val rowSchema = StructType(Seq(StructField("k", LongType),
+    StructField("n", IntegerType), StructField("term", StringType)))
+
+  private def withRowTree(body: FoldTree => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-foldtree")
+    try body(FoldTree(root.resolve("t"), rowSchema))
+    finally graft.util.Staged.deleteTree(root)
+  }
+
+  private def rowsOf(t: FoldTree, dirs: Seq[String]): Set[Row] =
+    t.read(spark, dirs).collect().toSet
+
+  test("driver-row writes read back with the tree's schema") {
+    withRowTree { t =>
+      val rows = Seq(Row(3L, 7, "graft"), Row(-1L, 0, null), Row(9L, 2, "é"))
+      t.writeBatch(spark, 0L, rows)
+      assert(names(t.readSet()) == Seq("batch=0"))
+      assert(spark.read.parquet(t.batch(0L).toString).schema == rowSchema,
+        "the footer must carry the tree's schema")
+      assert(rowsOf(t, t.readSet()) == rows.toSet)
+      t.writeBatch(spark, 1L, Nil)
+      assert(names(t.readSet()) == Seq("batch=0", "batch=1"))
+      assert(rowsOf(t, t.readSet()) == rows.toSet, "an empty batch adds no row")
+    }
+  }
+
+  test("a replayed batch id replaces its dir, with no duplicate rows") {
+    withRowTree { t =>
+      t.writeBatch(spark, 2L, Seq(Row(1L, 1, "a"), Row(2L, 1, "b")))
+      t.writeBatch(spark, 2L, Seq(Row(1L, 1, "a")))
+      assert(t.read(spark, t.readSet()).count() == 1)
+      assert(rowsOf(t, t.readSet()) == Set(Row(1L, 1, "a")))
+    }
+  }
+
+  test("a leftover _tmp- dir never enters readSet() or a manifest") {
+    withRowTree { t =>
+      t.writeBatch(spark, 0L, Seq(Row(1L, 1, "a")))
+      // a write that crashed before its rename
+      val tmp = t.root.resolve("_tmp-" + t.batch(1L).getFileName)
+      Files.createDirectories(tmp)
+      val part = scala.util.Using.resource(Files.list(t.batch(0L)))(
+        _.filter(_.toString.endsWith(".parquet")).findFirst().get)
+      Files.copy(part, tmp.resolve("part-00000.parquet"))
+      assert(onDisk(t).contains(tmp.getFileName.toString))
+      assert(names(t.readSet()) == Seq("batch=0"))
+      t.stamp(0L)
+      assert(names(t.pinned(0L)) == Seq("batch=0"))
+      // the replayed write clears it and lands the batch whole
+      t.writeBatch(spark, 1L, Seq(Row(2L, 1, "b")))
+      assert(!Files.exists(tmp))
+      assert(names(t.readSet()) == Seq("batch=0", "batch=1"))
+    }
+  }
+
+  test("a dir's footer range equals its rows' min/max") {
+    withRowTree { t =>
+      t.writeBatch(spark, 0L, Seq(Row(42L, 1, "a"), Row(-7L, 1, "b"), Row(13L, 1, "c")))
+      assert(FoldTree.keyRange(spark, t.batch(0L).toString, "k") == Some((-7L, 42L)))
+      // a Spark-written dir of several files: the range spans them all
+      import spark.implicits._
+      val dir = t.root.resolve("spark-written").toString
+      Seq(5L, 900L, 17L, 64L).toDF("k").repartition(3).write.parquet(dir)
+      assert(FoldTree.keyRange(spark, dir, "k") == Some((5L, 900L)))
+      // a dir without rows has the empty range: no key lies inside it
+      t.writeBatch(spark, 1L, Nil)
+      FoldTree.keyRange(spark, t.batch(1L).toString, "k") match {
+        case Some((lo, hi)) => assert(lo > hi, s"expected the empty range: [$lo, $hi]")
+        case None => fail("an empty dir is known to hold no key")
+      }
+    }
+  }
+
+  test("a file without statistics gives unknown") {
+    withRowTree { t =>
+      val dir = t.root.resolve("no-stats")
+      val msg = org.apache.parquet.schema.Types.buildMessage()
+        .optional(org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+        .named("k").named("spark_schema")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(dir.resolve("part-00000.parquet").toUri))
+        .withType(msg).withStatisticsEnabled(false).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+        .newGroup().append("k", 5L))
+      finally w.close()
+      assert(spark.read.parquet(dir.toString).count() == 1)
+      assert(FoldTree.keyRange(spark, dir.toString, "k").isEmpty)
+      // so does a column the footer does not carry, and a missing dir
+      t.writeBatch(spark, 0L, Seq(Row(1L, 1, "a")))
+      assert(FoldTree.keyRange(spark, t.batch(0L).toString, "doc_id").isEmpty)
+      assert(FoldTree.keyRange(spark, t.root.resolve("absent").toString, "k").isEmpty)
     }
   }
 }

@@ -22,8 +22,8 @@ class IndexJobBudgetSpec extends AnyFunSuite {
   private val sf = SparkTestSession.sf
 
   private val keys: Seq[(String, (SparkSession, String) => DataFrame, Int)] = Seq(
-    ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 40),
-    ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 44),
+    ("e35d_lex_tombstone", LexStreams.e35dLexTombstone, 26),
+    ("e35u_lex_upsert", LexStreams.e35uLexUpsert, 26),
     ("e2d_vec_tombstone", VecStreams.e2dVecTombstone, 31),
     ("e2u_vec_upsert", VecStreams.e2uVecUpsert, 31),
     ("e6s_minhash_stream", DocStreams.e6sMinhashStream, 39),
@@ -31,13 +31,13 @@ class IndexJobBudgetSpec extends AnyFunSuite {
     ("e63s_incr_stream", EventStreams.e63sStreamIncrAgg, 12),
     ("e61s_retention_stream", EventStreams.e61sStreamRetention, 18),
     ("e72_snapshot_read", SnapshotFolds.e72SnapshotRead, 12),
-    ("e35t_tier_merge", LexStreams.e35tTierMerge, 20),
+    ("e35t_tier_merge", LexStreams.e35tTierMerge, 16),
     ("e2tm_vec_tier_merge", VecStreams.e2tmVecTierMerge, 19),
-    ("e35f_postings_fold", LexStreams.e35fPostingsFold, 18),
-    ("e35z_lex_snapshot", LexStreams.e35zLexSnapshot, 18),
+    ("e35f_postings_fold", LexStreams.e35fPostingsFold, 14),
+    ("e35z_lex_snapshot", LexStreams.e35zLexSnapshot, 14),
     ("e2f_ivf_fold", VecStreams.e2fIvfFoldStream, 18),
     ("e2z_fold_snapshot", VecStreams.e2zFoldSnapshot, 18),
-    ("e71v_hybrid_snapshot", RetrievalOps.e71vHybridAtSnapshot, 40))
+    ("e71v_hybrid_snapshot", RetrievalOps.e71vHybridAtSnapshot, 36))
 
   for ((key, run, budget) <- keys) test(s"$key: $budget jobs per declared run") {
     run(spark, sf).collect()

@@ -490,20 +490,18 @@ class LexStreamSpec extends AnyFunSuite {
     val root = LexStreams.foldBaseDir(sf)
     def probeRows(work: java.nio.file.Path): Seq[Seq[Any]] =
       LexStreams.probe(spark, sf, work).collect().map(_.toSeq).toSeq
-    // 1. the driver-rows lens fold (the bounded fast path's write)
-    //    must be row-identical to the distributed lens write
+    // 1. the driver-written folds (the bounded path's writes) must be
+    //    row-identical to the distributed lens and postings writes
     val (wA, wB) = (freshWork(), freshWork())
     try {
-      val rows = arrivals()
-        .select(col("doc_id"), size(graft.ops.SimOps.tokensArr).as("dl"))
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      LexStreams.foldBatch(arrivals(), 0L, wA, lensRows = Some(rows))
+      LexStreams.upsertFoldBatch(spark, arrivals(), 0L, wA, root)
       LexStreams.foldBatch(arrivals(), 0L, wB)
-      assert(probeRows(wA) == probeRows(wB), "foldBatch lens paths diverged")
-      def lens(w: java.nio.file.Path) = spark.read
-        .parquet(w.resolve("lens/batch=0").toString)
+      assert(probeRows(wA) == probeRows(wB), "driver-written folds diverged")
+      def fold(w: java.nio.file.Path, t: String) = spark.read
+        .parquet(w.resolve(s"$t/batch=0").toString)
         .collect().map(_.toSeq).toSet
-      assert(lens(wA) == lens(wB), "lens fold rows diverged")
+      for (t <- Seq("lens", "segs"))
+        assert(fold(wA, t) == fold(wB, t), s"$t fold rows diverged")
     } finally { graft.streaming.DocStreams.deleteTree(wA)
       graft.streaming.DocStreams.deleteTree(wB) }
     // 2. the upsert verb (e35u's and e35d's): arrivals, then a
@@ -643,5 +641,86 @@ class LexStreamSpec extends AnyFunSuite {
       assert(trees.forall(_.readSet().size == 1), "every tree must have merged")
       assert(probed() == before, "a tier merge must never change the answer")
     } finally graft.streaming.DocStreams.deleteTree(work)
+  }
+
+  test("a first-arrival bounded batch runs exactly 1 job and writes no tombstone") {
+    // every key of an arrival batch lies outside the base lens range
+    // (doc_id >= ArrivalDocBound) and outside each earlier batch's lens
+    // range, so the footers rule the prior lookup out: the classify
+    // collect is the trigger's only job, every fold written on the driver
+    LexStreams.ensureFoldBase(spark, sf)
+    val root = LexStreams.foldBaseDir(sf)
+    val work = freshWork()
+    try {
+      for ((lo, id) <- Seq((0L, 0L), (4L, 1L))) {
+        val batch = arrivals().where(col("doc_id") >= lo && col("doc_id") < lo + 4)
+        val (done, jobs) = SyntheticOrd.jobsOf(spark)(
+          LexStreams.upsertFoldBatch(spark, batch, id, work, root))
+        done.get
+        assert(jobs == 1, s"arrival batch $id ran $jobs jobs")
+        assert(LexStreams.segTree(work).readSet().size == id + 1)
+      }
+      assert(LexStreams.tombTree(work).readSet().isEmpty,
+        "a first arrival has no prior to tombstone")
+    } finally graft.streaming.DocStreams.deleteTree(work)
+  }
+
+  test("the footer-pruned lookup still resolves a base doc's update and a " +
+      "delete-then-re-add, row-identical to the distributed verb") {
+    // an update of base doc 17 and a delete, then re-add, of arrival 3:
+    // the driver-written tombstones and folds must equal the fallback's,
+    // which resolves every prior with no footer pruning
+    LexStreams.ensureFoldBase(spark, sf)
+    val root = LexStreams.foldBaseDir(sf)
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf)
+    val upd = docs.where(col("doc_id") === 17L)
+      .withColumn("text", LexStreams.updatedText(col("text")))
+    val del = Seq((3L, null: String, null: String, null: String, null: java.lang.Long))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val readd = docs.where(col("doc_id") === 3L)
+    val (wE, wF) = (freshWork(), freshWork())
+    try {
+      for ((w, b) <- Seq((wE, true), (wF, false))) {
+        LexStreams.upsertFoldBatch(spark, arrivals(), 0L, w, root, bounded = b)
+        LexStreams.upsertFoldBatch(spark, upd, 1L, w, root, bounded = b)
+        LexStreams.upsertFoldBatch(spark, del, 2L, w, root, bounded = b)
+        LexStreams.upsertFoldBatch(spark, readd, 3L, w, root, bounded = b)
+      }
+      def rows(w: java.nio.file.Path, dir: String) = {
+        val p = w.resolve(dir)
+        if (!java.nio.file.Files.exists(p)) Set.empty[Seq[Any]]
+        else spark.read.parquet(p.toString).collect().map(_.toSeq).toSet
+      }
+      val baseDl = spark.read.parquet(s"$root/lens").where(col("doc_id") === 17L)
+        .collect().head.getInt(1)
+      assert(rows(wE, "tombs/batch=1") == Set(Seq(17L, baseDl, 1L)),
+        "the update must tombstone the base version of doc 17")
+      assert(rows(wE, "tombs/batch=2").map(_.head) == Set(3L),
+        "the delete must tombstone arrival 3")
+      assert(rows(wE, "tombs/batch=3").isEmpty,
+        "the re-add finds no live prior and must not tombstone again")
+      for (t <- Seq("tombs", "lens", "segs"); id <- 0 to 3)
+        assert(rows(wE, s"$t/batch=$id") == rows(wF, s"$t/batch=$id"),
+          s"$t/batch=$id diverged from the distributed verb")
+      assert(LexStreams.probe(spark, sf, wE).collect().map(_.toSeq).toSeq ==
+        LexStreams.probe(spark, sf, wF).collect().map(_.toSeq).toSeq)
+    } finally { graft.streaming.DocStreams.deleteTree(wE)
+      graft.streaming.DocStreams.deleteTree(wF) }
+  }
+
+  test("every job of a cold e35u write is described e35u_lex_upsert:<phase>") {
+    // restage the fold base and the landing, so their jobs run in the write
+    graft.streaming.DocStreams.deleteTree(java.nio.file.Paths.get(LexStreams.foldBaseDir(sf)))
+    graft.streaming.DocStreams.deleteTree(LexStreams.upsertLanding(spark, sf).path)
+    val (done, descs) = SyntheticOrd.jobDescriptionsOf(spark)(
+      LexStreams.e35uLexUpsert(spark, sf))
+    done.get
+    val labels = descs.map(_.getOrElse("<none>"))
+    assert(labels.nonEmpty && labels.forall(_.startsWith("e35u_lex_upsert:")),
+      s"jobs without their key and phase: ${labels.filterNot(_.startsWith("e35u_lex_upsert:"))}")
+    for (phase <- Seq("fold-base staging", "landing staging", "batch 3: compaction",
+        "upsert 0: classify collect", "upsert 4: live-prior lookup", "probe"))
+      assert(labels.contains(s"e35u_lex_upsert:$phase"), s"no $phase job in $labels")
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** A small nested ORD fixture written to a temp dir, plus a plain-Scala
@@ -92,19 +92,27 @@ object SyntheticOrd {
       }
 
   /** Counts the Spark jobs `body` submits from this thread; a failure of
-    * `body` is returned, not thrown. A marker job submitted afterwards
-    * is delivered after every event of `body` (the listener bus is
-    * FIFO), so the count is complete when its start arrives. */
+    * `body` is returned, not thrown. */
   def jobsOf[T](spark: SparkSession)(body: => T): (Try[T], Int) = {
+    val (out, descriptions) = jobDescriptionsOf(spark)(body)
+    (out, descriptions.size)
+  }
+
+  /** The description of each Spark job `body` submits from this thread
+    * (and the threads it starts), in submission order — `None` for a
+    * job without one. A marker job submitted afterwards is delivered
+    * after every event of `body` (the listener bus is FIFO), so the list
+    * is complete when its start arrives. */
+  def jobDescriptionsOf[T](spark: SparkSession)(body: => T): (Try[T], Seq[Option[String]]) = {
     val sc = spark.sparkContext
     val key = "graft.test.jobBudget"
     val tag = UUID.randomUUID().toString
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[Option[String]]
     val marker = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).map(_.getProperty(key)).orNull match {
-          case `tag` => jobs.incrementAndGet()
+          case `tag` => jobs.add(Option(j.properties.getProperty("spark.job.description")))
           case m if m == s"$tag-end" => marker.countDown()
           case _ =>
         }
@@ -116,7 +124,7 @@ object SyntheticOrd {
       sc.setLocalProperty(key, s"$tag-end")
       sc.parallelize(Seq(1), 1).count()
       assert(marker.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)
